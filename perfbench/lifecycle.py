@@ -107,43 +107,30 @@ class DailyLifecycle:
     op = "run_job"
     sweeps = ("range_reads",)
     N_SERIES = 8
-    HISTORY = 5
-    RAW_KEEP = 4
-    M1_KEEP = 5
-    SETUP_REPS = 2
-    # ops per cycle: the JIT is still warming over the first jobs of a
-    # run, so every run measures the same positions in that warm-up
-    CYCLE_OPS = 4
+    HISTORY = 3
+    RAW_KEEP = 2
+    M1_KEEP = 3
+    # daily jobs run untimed after the history build, while the JIT is
+    # still compiling the job's hot paths
+    WARMUP_OPS = 1
 
     def __init__(self, ctx):
         self.ctx = ctx
         self.samples: list[dict] = []
 
-    def setup(self) -> list[float]:
-        """Builds the history ``SETUP_REPS`` times in fresh directories
-        (the first build also pays the JVM's warm-up) and keeps the last;
-        returns each build's wall time."""
+    def setup(self) -> None:
+        """Builds the first ``HISTORY`` days with one ``run_job``."""
         self.src = SourceDays(self.ctx, self.N_SERIES)
         self.counts = self.src.counts
+        self.store = _Store(self.ctx, self.ctx.work / "daily", self.N_SERIES,
+                            self.RAW_KEEP, self.M1_KEEP)
         for k in range(self.HISTORY):
-            self.src.day(k)
-        times = []
-        for rep in range(self.SETUP_REPS):
-            t0 = time.perf_counter()
-            store = _Store(self.ctx, self.ctx.work / f"daily{rep}", self.N_SERIES,
-                           self.RAW_KEEP, self.M1_KEEP)
-            for k in range(self.HISTORY):
-                store.land(self.src, k)
-            store.run_job(self.HISTORY - 1)
-            times.append(time.perf_counter() - t0)
-            if rep + 1 < self.SETUP_REPS:
-                shutil.rmtree(store.root)
-        self.store = store
+            self.store.land(self.src, k)
+        self.store.run_job(self.HISTORY - 1)
         self.next_day = self.HISTORY
-        return times
 
     def cycle(self) -> list:
-        return [self.op_once] * self.CYCLE_OPS
+        return [self.op_once]
 
     def op_once(self) -> list[dict]:
         k = self.next_day
@@ -215,9 +202,10 @@ class RangeReads:
     op = "query_range"
     sweeps = ()
     N_SERIES = 8
-    HISTORY = 7
-    COMPACTED = 3
+    HISTORY = 6
+    COMPACTED = 2
     LATE_BATCHES = 2
+    WARMUP_OPS = 0  # set-up ends with a warm-up read
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -251,13 +239,11 @@ class RangeReads:
             store.engine.ingest_late(delta, PIPELINE, store.out, batch_id=f"late{b}")
         return store
 
-    def setup(self) -> list[float]:
+    def setup(self) -> None:
         import pandas as pd
 
         self.src = SourceDays(self.ctx, self.N_SERIES)
-        t0 = time.perf_counter()
         store = self.store = self._build(self.ctx.work / "reads")
-        times = [time.perf_counter() - t0]
         self.hot = self.ctx.spark.read.parquet(str(store.raw)).drop("day")
         # the program-independent truth: every generated row, late ones too
         parts = [inputs.turn_rows(self.ctx.seed, k, self.N_SERIES).to_pandas() for k in range(self.HISTORY)]
@@ -267,7 +253,6 @@ class RangeReads:
         self.truth = truth
         self.pending: list[dict] = []  # the first read of each class
         noop(self._query(self._params("cold_edge")))  # warm-up: Python workers, codegen
-        return times
 
     # -- ops -------------------------------------------------------------------
     def _params(self, cls: str) -> dict:

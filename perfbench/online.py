@@ -37,16 +37,16 @@ class StreamEpochs:
     SERIES_PER_FILE = 4
     FILES_PER_DRAIN = 4
     WARMUP_FILES = 1
+    WARMUP_OPS = 0  # set-up drains the warm-up files
 
     def __init__(self, ctx):
         self.ctx = ctx
         self.samples: list[dict] = []
         self.files: list[tuple[Path, int, int]] = []  # (path, day, series group)
 
-    def setup(self) -> list[float]:
+    def setup(self) -> None:
         from rove_spark.plans.engine import Engine
 
-        t0 = time.perf_counter()
         self.src = self.ctx.work / "stream_src"
         self.src.mkdir(parents=True)
         self.out = self.ctx.work / "stream_store"
@@ -54,7 +54,6 @@ class StreamEpochs:
         self.engine = Engine(self.ctx.spark, pipeline_dir=self.ctx.repo / "pipelines")
         self.checks = [s.name for s in self.engine.pipelines[PIPELINE].steps]
         self._drain(self.WARMUP_FILES)  # Python workers, codegen, first epochs
-        return [time.perf_counter() - t0]
 
     def _transform(self, df):
         return self.engine.run_pipeline(df, PIPELINE, "text_len", "conv_id", ("ts",))
@@ -214,12 +213,10 @@ class ValidateSpatial:
     sweeps = ("stream_epochs",)
     N_STATIONS = 60
     WINDOW_STEPS = 6
-    CHECKED = 1
-    SETUP_REPS = 2
-    # the JIT keeps warming for a few requests after the service starts;
-    # timing starts after these, and every run times whole cycles
-    WARMUP_REQUESTS = 1
-    CYCLE_REQUESTS = 6
+    CHECKED = 2
+    # requests sent untimed after the service starts, while the JIT is
+    # still compiling the request's hot paths
+    WARMUP_OPS = 3
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -227,11 +224,12 @@ class ValidateSpatial:
         self.rng = np.random.default_rng([ctx.seed, 9])
         self.server = None
 
-    def setup(self) -> list[float]:
-        """Starts the service ``SETUP_REPS`` times (switch, engine, HTTP
-        server and one warm-up request; the first also pays the JVM's
-        warm-up), keeps the last and sends it ``WARMUP_REQUESTS`` more;
-        returns each start's wall time."""
+    def setup(self) -> None:
+        """Starts the service: switch, engine and HTTP server."""
+        from rove_spark.plans.engine import Engine
+        from rove_spark.service import RoveService, serve
+        from rove_spark.sources.switch import DataSwitch
+
         key = f"stations-s{self.ctx.seed}-n{self.N_STATIONS}-t{N_STEPS}"
         self.source = inputs.cached(
             self.ctx.cache, key,
@@ -241,23 +239,6 @@ class ValidateSpatial:
             ),
         )
         self.pending: list[dict] = []
-        self.server = None
-        times = []
-        for _ in range(self.SETUP_REPS):
-            t0 = time.perf_counter()
-            self.close()
-            self._start()
-            self._request(self._body())
-            times.append(time.perf_counter() - t0)
-        for _ in range(self.WARMUP_REQUESTS):
-            self._request(self._body())
-        return times
-
-    def _start(self) -> None:
-        from rove_spark.plans.engine import Engine
-        from rove_spark.service import RoveService, serve
-        from rove_spark.sources.switch import DataSwitch
-
         frame = self.ctx.spark.read.parquet(str(self.source))
         self.switch = DataSwitch()
         self.switch.register("stations", lambda: frame)
@@ -303,7 +284,7 @@ class ValidateSpatial:
         }
 
     def cycle(self) -> list:
-        return [self.op_once] * self.CYCLE_REQUESTS
+        return [self.op_once]
 
     def op_once(self) -> list[dict]:
         body = self._body()

@@ -12,12 +12,13 @@ JVM and waits for it, and prints one JSON object as the last line of
 standard output:
 
 - ``--trace 0``: the end-to-end metrics (``END_TO_END``);
-- ``--trace 1``: the per-layer metrics (``layers.per_layer_units``). The
-  run sets up once, then measures ``--seconds`` of cycles cut to their
-  first ``TRACED_OPS`` operations twice, untraced and then with every
-  layer wrapped in spans and Spark's event log on, and reports the
-  difference of each end-to-end metric between the two phases as
-  ``trace.overhead.<metric>``.
+- ``--trace 1``: the per-layer metrics (``layers.per_layer_units``). After
+  the same set-up and warm-up, it times untraced and traced operations
+  (every layer wrapped in spans, Spark's event log on) in the order
+  ``TRACED_ORDER``; ``trace.overhead.<metric>`` is each end-to-end metric
+  over the traced operations, with their probes' time taken out, minus
+  the same metric over the untraced ones. Then it runs the workload's
+  sweeps, every operation traced.
 
 A detailed report (host facts, samples, spans) is written under
 ``.perfbench_out/``. Workloads and metrics are described in README.md
@@ -29,6 +30,10 @@ from __future__ import annotations
 import time
 
 T_PROCESS = time.perf_counter()
+with open("/proc/stat") as _f:
+    # machine CPU counters at process start; set-up time is taken
+    # relative to them (see sparkenv.cpu_times)
+    STAT_PROCESS = _f.readline()
 
 import argparse  # noqa: E402
 import json  # noqa: E402
@@ -45,15 +50,23 @@ sys.path.insert(0, str(HERE))
 END_TO_END = {
     "setup_s": "s",
     "op_p50_s": "s",
-    "op_p75_s": "s",
     "turns_per_s": "turns/s",
     "peak_rss_mb": "MB",
 }
 HELD_OUT_SEED = 20261016  # reserved for confirming claims; never tuned on
 MAX_CONSECUTIVE_ERRORS = 3
-# operations per cycle in both phases of a traced run: probes make each
-# traced one several times slower, and the run must end within three minutes
-TRACED_OPS = 2
+# a run's loop ends after this many times --seconds of wall time, however
+# much of it the host stole
+MAX_STRETCH = 2.5
+# A traced run times untraced (A) and traced (B) operations in the order
+# A B B A, so that a steady drift over the JVM's warm-up cancels out of
+# their difference; it stops after A B when the first pair already took
+# MAX_STRETCH times --seconds. Its sweeps are skipped when the run is
+# already SWEEP_DEADLINE_S old, so that it ends within three minutes.
+TRACED_ORDER = (False, True, True, False)
+SWEEP_DEADLINE_S = 90.0
+# times in a sample besides its latency, scaled like it (stream epochs)
+OTHER_TIMES = ("drain_wall", "add_batch")
 
 
 @dataclass
@@ -73,35 +86,83 @@ def workloads() -> dict:
     return {w.name: w for w in (DailyLifecycle, RangeReads, StreamEpochs, ValidateSpatial)}
 
 
-def measure(wl, seconds: float, tracer=None, max_ops: int | None = None) -> list[dict]:
-    """Closed loop: whole cycles of the workload's operations until
-    ``seconds`` have passed (at least one cycle), each cut to its first
-    ``max_ops`` operations when given."""
-    samples: list[dict] = []
-    errors = 0
-    deadline = time.perf_counter() + seconds
-    while time.perf_counter() < deadline or not samples:
-        for op in wl.cycle()[:max_ops]:
-            t0 = time.perf_counter()
+def run_op(wl, op, tracer=None) -> tuple[list[dict], float]:
+    """One operation; returns its samples and its elapsed time with the
+    host's CPU steal taken out (``stats.unstolen``).
+
+    Each sample keeps its measured ``wall`` latency and the share of the
+    CPU time the machine wanted that the host stole meanwhile
+    (``steal_share``); its ``latency`` is the wall time scaled by the
+    share not stolen, after taking out the time of the operation's probes
+    when traced (one-sample operations only)."""
+    import layers
+    import sparkenv
+    from spans import covered
+    from stats import unstolen
+
+    busy0, steal0 = sparkenv.cpu_times()
+    t0 = time.perf_counter()
+    try:
+        if tracer is None:
+            out = op()
+        else:
+            layers.install(tracer)
             try:
-                if tracer is None:
-                    out = op()
-                else:
-                    with tracer.span(getattr(wl, "op_span", wl.op), op=True) as span:
-                        tracer.ambient = span
-                        try:
-                            out = op()
-                        finally:
-                            tracer.ambient = None
-                errors = 0
-            except Exception as e:  # noqa: BLE001 - a failed op is counted, not fatal
-                print(f"op failed: {e!r}", file=sys.stderr)
-                out = [{"latency": time.perf_counter() - t0, "ok": False, "error": repr(e)}]
-                errors += 1
-            samples.extend(out)
-            if errors >= MAX_CONSECUTIVE_ERRORS:
-                return samples
-    return samples
+                with tracer.span(getattr(wl, "op_span", wl.op), op=True) as span:
+                    tracer.ambient = span
+                    try:
+                        out = op()
+                    finally:
+                        tracer.ambient = None
+            finally:
+                tracer.restore()
+            if len(out) == 1:
+                out[0]["probe_s"] = covered(span.start, span.end, tracer.probe_time(span))
+    except Exception as e:  # noqa: BLE001 - a failed op is counted, not fatal
+        print(f"op failed: {e!r}", file=sys.stderr)
+        out = [{"latency": time.perf_counter() - t0, "ok": False, "error": repr(e)}]
+    elapsed = time.perf_counter() - t0
+    busy1, steal1 = sparkenv.cpu_times()
+    busy, steal = busy1 - busy0, steal1 - steal0
+    share = unstolen(1.0, busy, steal)
+    for s in out:
+        s["wall"] = s["latency"]
+        s["steal_share"] = 1.0 - share
+        s["latency"] = (s["wall"] - s.get("probe_s", 0.0)) * share
+        for k in OTHER_TIMES:
+            if k in s:
+                s[k] *= share
+    return out, unstolen(elapsed, busy, steal)
+
+
+def measure(wl, seconds: float, tracer=None,
+            order: tuple[bool, ...] | None = None) -> tuple[list[dict], list[dict]]:
+    """Closed loop: whole cycles of the workload's operations until they
+    have taken ``seconds`` with the host's CPU steal taken out (at least
+    one cycle; at most ``MAX_STRETCH`` times ``seconds`` of wall time).
+    With a tracer every operation is traced; with an ``order`` too, the
+    loop runs ``len(order)`` operations, traced where ``order`` says so,
+    and may stop after an even number of them once time is up. Returns
+    the untraced and the traced samples."""
+    untraced: list[dict] = []
+    traced: list[dict] = []
+    errors = n = 0
+    spent = 0.0
+    wall_limit = time.perf_counter() + MAX_STRETCH * seconds
+    while True:
+        for op in wl.cycle():
+            use = tracer if order is None or order[n] else None
+            out, elapsed = run_op(wl, op, use)
+            (untraced if use is None else traced).extend(out)
+            n += 1
+            spent += elapsed
+            errors = errors + 1 if any(not s["ok"] for s in out) else 0
+            if errors >= MAX_CONSECUTIVE_ERRORS or (order is not None and n == len(order)):
+                return untraced, traced
+            if order is not None and n % 2 == 0 and time.perf_counter() >= wall_limit:
+                return untraced, traced
+        if order is None and (spent >= seconds or time.perf_counter() >= wall_limit):
+            return untraced, traced
 
 
 def end_to_end(wl, samples: list[dict]) -> dict:
@@ -113,7 +174,7 @@ def end_to_end(wl, samples: list[dict]) -> dict:
         tps = wl.turns_per_s(good)
     else:
         tps = sum(s.get("turns", 0) for s in good) / sum(lat)
-    return {"op_p50_s": percentile(lat, 50), "op_p75_s": percentile(lat, 75), "turns_per_s": tps}
+    return {"op_p50_s": percentile(lat, 50), "turns_per_s": tps}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -133,7 +194,7 @@ def main(argv: list[str] | None = None) -> int:
     import layers
     import sparkenv
     from spans import Tracer, self_times
-    from stats import percentile, supported_percentile
+    from stats import percentile, supported_percentile, unstolen
 
     table = workloads()
     if args.workload not in table:
@@ -167,36 +228,33 @@ def main(argv: list[str] | None = None) -> int:
             report["other_spark_jvms"] = others
             if others:
                 print(f"warning: other Spark JVMs running: {others}", file=sys.stderr)
-            t = time.perf_counter()
-            spark.range(1_000_000).selectExpr("sum(id)").collect()
-            warmup = time.perf_counter() - t
             wl = table[args.workload](ctx)
-            if args.trace:
-                wl.SETUP_REPS = 1  # a traced run reports no setup_s
-            reps = wl.setup()
-            # input generation is untimed; it only runs when the cache is cold
+            wl.setup()
+            # untimed operations while the JIT is still compiling the
+            # engine's hot paths; they are checked like the timed ones
+            t = time.perf_counter()
+            warm = [x for _ in range(wl.WARMUP_OPS) for x in run_op(wl, wl.op_once)[0]]
+            warmup = time.perf_counter() - t
+            # input generation is untimed; it only runs when the cache is
+            # cold. Set-up time has the host's CPU steal taken out as the
+            # operations have.
             setup_wall = time.perf_counter() - T_PROCESS - inputs.build_s
-            # the repeated part of set-up counts once, at its median
-            setup_s = setup_wall - sum(reps) + percentile(reps, 50)
-            limit = TRACED_OPS if args.trace else None
-            untraced = measure(wl, args.seconds, max_ops=limit)
-            traced: list[dict] = []
+            busy, steal = (b - a for a, b in zip(sparkenv.cpu_times(STAT_PROCESS),
+                                                 sparkenv.cpu_times()))
+            setup_s = unstolen(setup_wall, busy, steal)
+            tracer = Tracer(spark.sparkContext) if args.trace else None
+            untraced, traced = measure(
+                wl, args.seconds, tracer, TRACED_ORDER if args.trace else None,
+            )
             swept: list[tuple[object, list[dict]]] = []
-            if args.trace:
-                tracer = Tracer(spark.sparkContext)
-                layers.install(tracer)
-                try:
-                    traced = measure(wl, args.seconds, tracer, limit)
-                finally:
-                    tracer.restore()
-                for cls in wl.sweeps:
-                    sw = table[cls](ctx)
-                    sw.setup()
-                    layers.install(tracer)
-                    try:
-                        swept.append((sw, measure(sw, 0, tracer)))
-                    finally:
-                        tracer.restore()
+            for cls in wl.sweeps if args.trace else ():
+                if time.perf_counter() - T_PROCESS > SWEEP_DEADLINE_S:
+                    print(f"sweep {cls} skipped: the run is too old", file=sys.stderr)
+                    report.setdefault("skipped_sweeps", []).append(cls)
+                    continue
+                sw = table[cls](ctx)
+                sw.setup()
+                swept.append((sw, measure(sw, 0, tracer)[1]))
             for w in [wl] + [sw for sw, _ in swept]:
                 w.verify()
             extras = wl.layer_extras(traced or untraced)
@@ -209,19 +267,21 @@ def main(argv: list[str] | None = None) -> int:
         if spark is not None:
             sparkenv.stop_spark(spark)
 
-    samples = untraced + traced + [x for _, ss in swept for x in ss]
+    samples = warm + untraced + traced + [x for _, ss in swept for x in ss]
     attempted = len(samples)
     failed = sum(1 for s in samples if not s["ok"])
     e2e = {"setup_s": setup_s, **end_to_end(wl, untraced), "peak_rss_mb": peak_rss_mb}
     report.update({
         "host_end": {"loadavg": os.getloadavg(), "cpu_steal_s": sparkenv.cpu_steal_s()},
-        "setup": {"wall_s": setup_wall, "reps_s": reps, "session_start_s": session_start,
-                  "warmup_s": warmup},
+        "setup": {"wall_s": setup_wall, "steal_share": 1.0 - unstolen(1.0, busy, steal),
+                  "session_start_s": session_start, "warmup_s": warmup},
         "end_to_end": e2e,
+        # the same median without the steal correction
+        "op_p50_wall_s": percentile([x["wall"] for x in untraced], 50),
         # the highest percentile this many samples support (None: not even
         # the median has 10 samples beyond it)
         "supported_percentile": supported_percentile(len(untraced)),
-        "samples": {"untraced": _plain(untraced), "traced": _plain(traced),
+        "samples": {"warm": _plain(warm), "untraced": _plain(untraced), "traced": _plain(traced),
                     **{f"sweep:{sw.name}": _plain(ss) for sw, ss in swept}},
     })
     if args.trace:
@@ -258,6 +318,7 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps({"workload": args.workload, "seed": args.seed, "host": facts,
                       "host_end": report["host_end"],
                       "samples": len(untraced), "traced_samples": len(traced),
+                      "setup_steal_share": report["setup"]["steal_share"],
                       "other_spark_jvms": report["other_spark_jvms"]}))
     print(json.dumps({
         "correct": failed == 0,

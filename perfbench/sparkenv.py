@@ -47,13 +47,26 @@ def host_facts(root: Path) -> dict:
     }
 
 
+def cpu_times(line: str | None = None) -> tuple[float, float]:
+    """This machine's CPU seconds since boot, summed over its CPUs, as
+    ``(busy, steal)``: ``busy`` is user, nice, system, irq and softirq
+    time; ``steal`` is time a CPU had work to run but the host ran
+    another guest instead. Read from ``/proc/stat``, or parsed from
+    ``line``, a first line of it read earlier."""
+    if line is None:
+        with open("/proc/stat") as f:
+            line = f.readline()
+    fields = [int(x) for x in line.split()[1:9]]
+    fields += [0] * (8 - len(fields))
+    user, nice, system, _idle, _iowait, irq, softirq, steal = fields
+    tick = os.sysconf("SC_CLK_TCK")
+    return (user + nice + system + irq + softirq) / tick, steal / tick
+
+
 def cpu_steal_s() -> float:
-    """Seconds the host has withheld from this machine's CPUs since boot
-    (``steal`` in ``/proc/stat``); its growth over a run shows contention
-    from other guests on the host."""
-    with open("/proc/stat") as f:
-        fields = f.readline().split()
-    return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 else 0.0
+    """Seconds the host has withheld from this machine's CPUs since boot;
+    its growth over a run shows contention from other guests."""
+    return cpu_times()[1]
 
 
 def spark_jvms(exclude: set[int] = frozenset()) -> list[int]:

@@ -44,3 +44,15 @@ def spread(values: list[float]) -> float:
     judged by."""
     q1, q2, q3 = statistics.quantiles(values, n=4)
     return (q3 - q1) / q2 if q2 else float("inf")
+
+
+def unstolen(wall: float, busy: float, steal: float) -> float:
+    """``wall`` scaled by the share of the CPU time this machine wanted
+    over that interval that it got: ``busy / (busy + steal)``.
+
+    A CPU only accrues steal while it has work, so a stretch of wall time
+    in which a share ``f`` of the wanted CPU time was stolen ran at
+    ``1 - f`` of its speed; an uncontended host (no steal) leaves ``wall``
+    unchanged."""
+    wanted = busy + steal
+    return wall * busy / wanted if wanted > 0 else wall

@@ -1,9 +1,10 @@
-"""The percentile rule: report the highest percentile with at least ten
-samples beyond it."""
+"""The percentile rule (report the highest percentile with at least ten
+samples beyond it), spreads, and taking the host's CPU steal out of a
+wall time."""
 
 import pytest
 
-from stats import percentile, samples_beyond, spread, supported_percentile
+from stats import percentile, samples_beyond, spread, supported_percentile, unstolen
 
 
 def test_percentile_interpolates_between_ranks():
@@ -39,3 +40,11 @@ def test_spread_is_interquartile_share_of_median():
     vals = [float(v) for v in range(1, 11)]
     # statistics.quantiles(n=4), exclusive method: 2.75, 5.5, 8.25
     assert spread(vals) == pytest.approx((8.25 - 2.75) / 5.5)
+
+
+def test_unstolen_scales_by_the_share_of_wanted_cpu_received():
+    # no steal, or no CPU wanted at all: the wall time as measured
+    assert unstolen(5.0, busy=10.0, steal=0.0) == 5.0
+    assert unstolen(5.0, busy=0.0, steal=0.0) == 5.0
+    # a quarter of the wanted CPU time stolen: the work ran at 3/4 speed
+    assert unstolen(8.0, busy=12.0, steal=4.0) == pytest.approx(6.0)

@@ -2,9 +2,10 @@
 
 Engine extras (no rove counterpart; first-class per the build brief):
 exact dedup, MinHash+LSH near-dup, SimHash near-dup, n-gram Jaccard
-verification, and embedding-cosine near-dup. All candidate generation is
-JVM-side (hashes, array ops, band explode + self-join); Python appears
-only in the numpy-vectorized SimHash pandas UDF.
+verification, and embedding-cosine near-dup. Candidate joins are
+JVM-side (band explode + self-join); Python appears only in two
+numpy-vectorized ``mapInPandas`` stages: fused MinHash signatures and
+embedding sign-LSH sketches.
 
 Scale shape (the thing that matters at 100 TB):
 - shingling/minhash signatures are narrow per-row column expressions —
@@ -710,57 +711,18 @@ def dedup_components_collapsed(
 # --------------------------------------------------------------- simhash --
 
 
-def with_simhash(
-    df: DataFrame, text_col: str = "text", out_col: str = "simhash"
-) -> DataFrame:
-    """64-bit SimHash per doc (numpy-vectorized Arrow UDF: token hashes →
-    per-bit ±1 sums → sign bits). The one Python stage in this module —
-    64 bit-planes as SQL aggregates would bloat codegen for no gain."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    import hashlib
-
-    def _stable_hash(w: str) -> int:
-        # process-independent 64-bit token hash (builtin hash() is salted)
-        return int.from_bytes(hashlib.blake2b(w.encode(), digest_size=8).digest(), "little")
-
-    @pandas_udf("long")
-    def simhash(texts):
-        out = np.zeros(len(texts), dtype=np.uint64)
-        for i, t in enumerate(texts):
-            toks = (t or "").lower().split()
-            if not toks:
-                continue
-            hs = np.fromiter(
-                (np.uint64(_stable_hash(w)) for w in set(toks)),
-                dtype=np.uint64,
-            )
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-                np.int32
-            )
-            v = (2 * bits - 1).sum(axis=0)
-            out[i] = np.uint64(((v > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum())
-        return pd.Series(out.view(np.int64))
-
-    return df.withColumn(out_col, simhash(F.col(text_col)))
-
-
 def with_simhash_portable(
     df: DataFrame, text_col: str = "text", out_col: str = "simhash"
 ) -> DataFrame:
-    """Cross-engine-reproducible 64-bit SimHash built entirely from
-    JVM-side column expressions: distinct lowercase whitespace tokens →
-    md5 hex → per-token 64-bit value → per-bit majority vote. A DuckDB
-    twin can recompute the identical signature (md5 + hex-digit
-    arithmetic), which is what makes the driver's simhash query exactly
-    oracle-able — ``with_simhash`` (blake2b UDF) stays the fast default
-    where no oracle is needed.
+    """64-bit SimHash per doc built entirely from JVM-side column
+    expressions: distinct lowercase whitespace tokens → md5 hex →
+    per-token 64-bit value → per-bit majority vote. A DuckDB twin can
+    recompute the identical signature (md5 + hex-digit arithmetic), which
+    is what makes the driver's simhash query exactly oracle-able.
 
     Execution shape: tokens are EXPLODED and the 64 bit-majorities run as
-    one single-pass groupBy with 64 plain sum aggregates (map-side
-    combine). The tempting pure-projection form (token-hash array + 64
+    one single-pass groupBy of packed sum aggregates (map-side combine).
+    The tempting pure-projection form (token-hash array + 64
     ``aggregate`` lambdas) recomputes the md5 chain inside every lambda —
     Catalyst collapses the projection and does not CSE across
     higher-order functions (CLAUDE.md; measured 4× slower at sf0.1)."""
@@ -922,7 +884,6 @@ def simhash_dedup(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 4,
-    portable: bool = False,
     collapse_exact: bool = True,
     expand_members: bool = True,
     max_bucket_size: int | None = None,
@@ -933,19 +894,14 @@ def simhash_dedup(
     function of the text, so rep-level Hamming is exact for every member
     pair), then membership is re-expanded — within-cluster pairs at
     hamming 0, cross-cluster pairs at the rep distance. Returns
-    (id_a, id_b, hamming). ``portable=True`` uses the md5-derived
-    cross-engine signature (oracle-able); default is the blake2b Arrow
-    UDF, measured faster (round 6, interleaved fresh-JVM best-of-2 at
-    sf0.1: UDF 3.05/3.68 s vs portable 3.92/3.98 s end-to-end — the
-    portable form pays a distinct+explode exchange, 64-sum aggregate
-    and a signature join that the one-Arrow-pass UDF avoids)."""
-    sig_fn = with_simhash_portable if portable else with_simhash
+    (id_a, id_b, hamming). Signatures come from ``with_simhash_portable``
+    (md5-derived, so the driver's DuckDB oracle recomputes them exactly)."""
     if collapse_exact:
         reps, members = collapse_exact_duplicates(df, text_col, id_col)
         base = reps
     else:
         base = df
-    signed = sig_fn(base, text_col=text_col)
+    signed = with_simhash_portable(base, text_col=text_col)
     rep_pairs = simhash_near_dup_pairs(
         signed,
         id_col=id_col,
@@ -963,111 +919,6 @@ def simhash_dedup(
 
 
 # ------------------------------------------------------ embedding cosine --
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    bands: int = 12,
-    planes_per_band: int = 4,
-    seed: int = 29,
-    dim: int | None = None,
-) -> DataFrame:
-    """Cosine near-dup via random-hyperplane LSH with OR-amplification:
-    ``bands`` independent sketches of ``planes_per_band`` sign bits each;
-    a pair is a candidate if ANY band matches, then verified with exact
-    cosine. Same banding structure as the MinHash path.
-
-    Recall math (sign-LSH collision prob p = 1 − θ/π): a single 16-bit
-    sketch at cosine 0.95 collides with prob p^16 ≈ 0.18 — the round-1
-    bug. With b bands of r planes the candidate prob is 1 − (1 − p^r)^b:
-    defaults (b=12, r=4) give ≈ 0.99999 at cosine 0.95 and still prune
-    cheaply (p^4 ≈ 0.03 per band for random pairs).
-
-    Plan shape: the banded table is narrow (id, band, sketch) — vectors
-    are NOT duplicated per band; exact cosine joins vectors onto the
-    (small) distinct candidate pair set only, like jaccard_verify.
-    Deterministic hyperplanes from a seeded RNG — identical across runs
-    and cluster sizes."""
-    import numpy as np
-
-    if dim is None:
-        first = df.select(F.size(vec_col)).first()
-        dim = int(first[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((bands * planes_per_band, dim))
-
-    def _dot_with(plane_idx: int):
-        lit_plane = F.array(*[F.lit(float(x)) for x in planes[plane_idx]])
-        prods = F.zip_with(F.col(vec_col), lit_plane, lambda x, y: x * y)
-        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-    def _band_sketch(b: int):
-        return F.concat(
-            *[
-                F.when(_dot_with(b * planes_per_band + p) >= 0, F.lit("1")).otherwise(F.lit("0"))
-                for p in range(planes_per_band)
-            ]
-        )
-
-    banded = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), _band_sketch(b).alias("sk"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("_id", F.col("bs.band").alias("band"), F.col("bs.sk").alias("sk"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.sk") == F.col("b.sk"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col(vec_col), F.col(vec_col), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    vs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"), norm.alias("_n"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        cand.join(
-            vs.select(
-                F.col("_vid").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
-            ),
-            "id_a",
-        )
-        .join(
-            vs.select(
-                F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-            ),
-            "id_b",
-        )
-        .withColumn("cosine", dot / (F.col("_na") * F.col("_nb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-    return pairs
 
 
 def md5_hyperplanes(
@@ -1098,14 +949,22 @@ def embedding_near_dup_pairs_portable(
     planes_per_band: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """Cross-engine-reproducible twin of ``embedding_near_dup_pairs``:
-    md5-derived hyperplanes (``md5_hyperplanes``) instead of a seeded
-    numpy RNG, and a fully relational plan instead of per-plane
-    higher-order-function dot products — posexplode the vector once,
-    broadcast-join the (plane, dim, weight) literal table, and compute
-    all ``bands·planes_per_band`` sketch dots as ONE groupBy with plain
-    sums (HOF lambdas are interpreted per element; the explode+aggregate
-    shape is the measured-fast path, CLAUDE.md).
+    """Cosine near-dup via random-hyperplane LSH with OR-amplification:
+    ``bands`` sketches of ``planes_per_band`` sign bits each; a pair is a
+    candidate if ANY band matches, then verified with exact cosine.
+    Hyperplanes come from ``md5_hyperplanes``, so DuckDB rebuilds the
+    identical planes and the driver's embedding query is exactly
+    oracle-able.
+
+    Recall (sign-LSH collision prob p ≈ 1 − θ/π): with b bands of r
+    planes the candidate prob is 1 − (1 − p^r)^b; the defaults (b=8,
+    r=4) give ≈ 0.9998 at cosine 0.95, where a single 16-bit sketch
+    would collide with prob p^16 ≈ 0.18.
+
+    Plan shape: one ``mapInPandas`` stage computes every sketch as a
+    numpy matmul per Arrow batch; the banded table is narrow (id, band,
+    sketch) and the exact cosine attaches vectors to the distinct
+    candidate pairs only.
 
     Components are cast to DOUBLE before multiplying so both engines do
     f64 arithmetic (DuckDB promotes FLOAT·DOUBLE to f64; a Spark-side

@@ -221,8 +221,8 @@ def extract_features(
     (hashed payload bytes → fixed-dim projection), oracle-able. With
     ``decode_real=True``: real decoded samples pooled into ``dim`` bins
     then centered + normalized. Either way the output plugs straight into
-    ann.py / dedup.embedding_near_dup_pairs — that integration is the
-    real deliverable.
+    ann.py / dedup.embedding_near_dup_pairs_portable — that integration
+    is the real deliverable.
 
     ``partitions`` caps the pre-UDF spread when the caller knows the
     input is small (each Python task costs a worker round trip; 64 tasks

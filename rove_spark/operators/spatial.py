@@ -29,10 +29,11 @@ Transcript domain: conversations get deterministic synthetic coordinates
 
 from __future__ import annotations
 
+import inspect
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rove_spark.model import Flag
@@ -322,14 +323,6 @@ def adj4_statements() -> list[tuple[str, str]]:
     return stmts
 
 
-def z4_solve_statements() -> list[tuple[str, str]]:
-    """Continuation of ``adj4_statements``: mean, innovations and
-    A = B⁻¹·d with fixed summation order over ``v0..v3``. Kept as the
-    named k=4 entry point for the sct_mid oracle; the statement text is
-    exactly ``zk_solve_statements(4)`` (single source — no drift)."""
-    return zk_solve_statements(4)
-
-
 def adjk_statements(k: int) -> list[tuple[str, str]]:
     """General-k companion of ``adj4_statements``: ordered statements for
     the symmetric k×k B = S + eps2·I adjugate/determinant inverse with a
@@ -395,7 +388,10 @@ def adjk_statements(k: int) -> list[tuple[str, str]]:
 
 
 def zk_solve_statements(k: int) -> list[tuple[str, str]]:
-    """General-k companion of ``z4_solve_statements``."""
+    """Continuation of ``adj4_statements`` / ``adjk_statements``: mean,
+    innovations and A = B⁻¹·d with fixed summation order over
+    ``v0..v{k-1}``. Single source for the kernel's k-box solver and the
+    sct_mid / sct_deep oracles."""
     vs = " + ".join(f"v{i}" for i in range(k))
     stmts: list[tuple[str, str]] = [("mm", f"({vs}) / {k}.0")]
     for i in range(k):
@@ -425,7 +421,7 @@ def _build_zk(k: int, statements: list[tuple[str, str]]):
     return ns["_zk"]
 
 
-_z4_closed_form = _build_zk(4, adj4_statements() + z4_solve_statements())
+_z4_closed_form = _build_zk(4, adj4_statements() + zk_solve_statements(4))
 _z5_closed_form = _build_zk(5, adjk_statements(5) + zk_solve_statements(5))
 
 
@@ -865,7 +861,7 @@ def _grouped_spatial(
 def haversine_col(lat_a, lon_a, lat_b, lon_b):
     """Column-expression twin of ``_haversine_block``'s formula (same
     operand tree: 2·R·asin(sqrt(sin²(Δφ/2) + cosφ₁·cosφ₂·sin²(Δλ/2)))) —
-    whole-stage-codegen haversine for the relational spatial paths."""
+    whole-stage-codegen haversine for the relational buddy path."""
     dlat = (F.radians(lat_a) - F.radians(lat_b)) / 2
     dlon = (F.radians(lon_a) - F.radians(lon_b)) / 2
     a = F.pow(F.sin(dlat), 2) + F.cos(F.radians(lat_a)) * F.cos(F.radians(lat_b)) * F.pow(
@@ -1097,249 +1093,11 @@ def buddy_check(
     )
 
 
-def sct_small_relational(
-    df: DataFrame,
-    value_col: str,
-    series_col: str = "conv_id",
-    ts_col: str = "ts",
-    num_min: int = 5,
-    inner_radius: float = 50_000.0,
-    min_horizontal_scale: float = 10_000.0,
-    vertical_scale: float = 200.0,
-    pos: float = 4.0,
-    neg: float = 4.0,
-    eps2: float = 0.5,
-) -> DataFrame:
-    """SCT at num_max=3 as a PURE relational plan — no Python workers
-    (round-5 companion to buddy_check_relational). The num_max=3 mode's
-    whole pipeline is relational math, proven by the exact DuckDB oracle
-    (driver_queries._sql_sct_small): isolation counts are a pair join,
-    the KD median-cut subdivision is an iterated pair of window
-    projections (spread/count, then a rank-split), and the 3x3 adjugate
-    OI solve is the SAME fixed scalar operand tree as
-    ``_small_box_z`` — identical IEEE arithmetic, so flags match the
-    kernel exactly (equality-gated in test_spatial).
-
-    Scale shape: one (ts)-keyed pair join for isolation, ~log2(n/3)
-    window passes over the eligible rows for the KD split, one pivot +
-    codegen solve per 3-station leaf. Like the kernel path, the OI cost
-    per leaf is O(1); unlike it, nothing leaves the JVM."""
-    bd = 1.0 + eps2
-    base = df.select(
-        F.col(series_col).cast("string").alias("series_id"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col("lat").cast("double"),
-        F.col("lon").cast("double"),
-        F.coalesce(F.col("elev"), F.lit(0.0)).cast("double").alias("elev"),
-    ).localCheckpoint(eager=False)
-
-    # isolation: usable (present) neighbors INCLUDING self within
-    # inner_radius — same contract as sct_kernel's inner_counts
-    nbr = base.filter(F.col("value").isNotNull()).select(
-        "ts",
-        F.col("lat").alias("_blat"),
-        F.col("lon").alias("_blon"),
-    )
-    dist = haversine_col(F.col("lat"), F.col("lon"), F.col("_blat"), F.col("_blon"))
-    cnt = (
-        base.select("series_id", "ts", "lat", "lon")
-        .join(nbr, "ts")
-        .filter(dist <= F.lit(inner_radius))
-        .groupBy("series_id", "ts")
-        .agg(F.count(F.lit(1)).alias("n_inner"))
-        # referenced twice (eligibility filter + final flag join): the
-        # pair join is the expensive stage — materialize it once
-        .localCheckpoint(eager=False)
-    )
-
-    elig = (
-        base.join(cnt, ["series_id", "ts"], "left")
-        .filter(F.col("value").isNotNull() & (F.coalesce("n_inner", F.lit(0)) >= num_min))
-        .select("series_id", "ts", "value", "lat", "lon", "elev")
-        .withColumn("path", F.lit(""))
-    )
-    # one PINNED exchange for the whole KD loop: an explicit-count
-    # repartition on ts both survives AQE's byte-based coalescing (40k
-    # rows is "small" by bytes, so AQE would serialize all ~2·log2(n/3)
-    # window stages onto one partition — the parallel_groups trap, here
-    # for windows instead of grouped UDFs) and satisfies every level's
-    # ClusteredDistribution(ts, path) via the subset rule, so the loop
-    # adds per-level sorts but no further shuffles.
-    from rove_spark.operators.util import parallel_groups
-
-    elig = parallel_groups(elig, "ts")
-    mx_row = elig.groupBy("ts").count().agg(F.max("count").alias("mx")).first()
-    mx = int(mx_row["mx"] or 0)
-    levels = max(1, math.ceil(math.log2(max(1.0, mx / 3.0)))) + 1 if mx > 3 else 0
-
-    for _ in range(levels):
-        grp = Window.partitionBy("ts", "path")
-        sized = elig.select(
-            "*",
-            F.count(F.lit(1)).over(grp).alias("_cnt"),
-            (F.max("lat").over(grp) - F.min("lat").over(grp)).alias("_sp_lat"),
-            (F.max("lon").over(grp) - F.min("lon").over(grp)).alias("_sp_lon"),
-        )
-        coord = F.when(F.col("_sp_lat") >= F.col("_sp_lon"), F.col("lat")).otherwise(
-            F.col("lon")
-        )
-        rn = F.row_number().over(
-            Window.partitionBy("ts", "path").orderBy(coord, F.col("series_id"))
-        )
-        elig = sized.select(
-            "series_id",
-            "ts",
-            "value",
-            "lat",
-            "lon",
-            "elev",
-            F.when(F.col("_cnt") <= 3, F.col("path"))
-            .otherwise(
-                F.concat(
-                    "path",
-                    F.when(rn <= F.floor(F.col("_cnt") / 2), F.lit("L")).otherwise(
-                        F.lit("R")
-                    ),
-                )
-            )
-            .alias("path"),
-        )
-        # truncate the plan per level: Catalyst collapses projections, so
-        # without a materialization point every later reference re-inlines
-        # the full nested CASE history of the path column — the plan grew
-        # ~3x per level (688 KB / 21 s at 11 levels before this; the
-        # dedup pointer-doubling lesson, CLAUDE.md)
-        elig = elig.localCheckpoint(eager=False)
-
-    leaf_w = Window.partitionBy("ts", "path")
-    # relational guard (mirrors the DuckDB oracle's error() depth guard):
-    # a leaf that still holds >3 stations after `levels` cuts means the
-    # KD loop under-ran — raise instead of letting the `== 3` filter drop
-    # it silently and PASS every station in it. raise_error is routed
-    # through the filter predicate so column pruning can't elide it.
-    bk_checked = F.when(
-        F.col("_bk") > 3,
-        F.raise_error(
-            F.concat(
-                F.lit("sct_small_relational: KD leaf with >3 stations at ts="),
-                F.col("ts").cast("string"),
-                F.lit(" path="),
-                F.col("path"),
-            )
-        ).cast("long"),
-    ).otherwise(F.col("_bk"))
-    fin = elig.select(
-        "*",
-        F.count(F.lit(1)).over(leaf_w).alias("_bk"),
-        F.row_number()
-        .over(Window.partitionBy("ts", "path").orderBy("series_id"))
-        .alias("_rn"),
-    ).filter(bk_checked == 3)
-    piv = fin.groupBy("ts", "path").agg(
-        *[
-            F.max(F.when(F.col("_rn") == r, F.col(c))).alias(f"{o}{r}")
-            for r in (1, 2, 3)
-            for c, o in [
-                ("series_id", "u"),
-                ("value", "v"),
-                ("lat", "lat"),
-                ("lon", "lon"),
-                ("elev", "e"),
-            ]
-        ]
-    )
-
-    # 3x3 adjugate solve — the SAME operand tree as _small_box_z /
-    # _sql_sct_small, token for token
-    def pair(i: int, j: int):
-        d = haversine_col(
-            F.col(f"lat{i}"), F.col(f"lon{i}"), F.col(f"lat{j}"), F.col(f"lon{j}")
-        )
-        hs, vs = min_horizontal_scale, vertical_scale
-        return F.exp(
-            -0.5 * ((d / hs) * (d / hs))
-            - 0.5 * (((F.col(f"e{i}") - F.col(f"e{j}")) / vs) * ((F.col(f"e{i}") - F.col(f"e{j}")) / vs))
-        )
-
-    mat = piv.select(
-        "ts",
-        "u1",
-        "u2",
-        "u3",
-        "v1",
-        "v2",
-        "v3",
-        pair(1, 2).alias("b01"),
-        pair(1, 3).alias("b02"),
-        pair(2, 3).alias("b12"),
-    )
-    det = (
-        bd * (bd * bd - F.col("b12") * F.col("b12"))
-        - F.col("b01") * (F.col("b01") * bd - F.col("b12") * F.col("b02"))
-        + F.col("b02") * (F.col("b01") * F.col("b12") - bd * F.col("b02"))
-    )
-    inv = mat.select(
-        "*",
-        ((bd * bd - F.col("b12") * F.col("b12")) / det).alias("i00"),
-        ((F.col("b02") * F.col("b12") - F.col("b01") * bd) / det).alias("i01"),
-        ((F.col("b01") * F.col("b12") - F.col("b02") * bd) / det).alias("i02"),
-        ((bd * bd - F.col("b02") * F.col("b02")) / det).alias("i11"),
-        ((F.col("b02") * F.col("b01") - bd * F.col("b12")) / det).alias("i12"),
-        ((bd * bd - F.col("b01") * F.col("b01")) / det).alias("i22"),
-        ((F.col("v1") + F.col("v2") + F.col("v3")) / 3.0).alias("m"),
-    )
-    aa = inv.select(
-        "*",
-        (F.col("v1") - F.col("m")).alias("d1"),
-        (F.col("v2") - F.col("m")).alias("d2"),
-        (F.col("v3") - F.col("m")).alias("d3"),
-    )
-    bb = aa.select(
-        "*",
-        (F.col("i00") * F.col("d1") + F.col("i01") * F.col("d2") + F.col("i02") * F.col("d3")).alias("a1"),
-        (F.col("i01") * F.col("d1") + F.col("i11") * F.col("d2") + F.col("i12") * F.col("d3")).alias("a2"),
-        (F.col("i02") * F.col("d1") + F.col("i12") * F.col("d2") + F.col("i22") * F.col("d3")).alias("a3"),
-    )
-    z0 = bb.select(
-        "*",
-        F.sqrt(
-            F.greatest(
-                F.lit(1e-9),
-                (F.col("d1") * F.col("a1") + F.col("d2") * F.col("a2") + F.col("d3") * F.col("a3")) / 3.0,
-            )
-            * F.lit(bd)
-        ).alias("den"),
-    )
-    zz = None
-    for r, ic in ((1, "i00"), (2, "i11"), (3, "i22")):
-        part = z0.select(
-            "ts",
-            F.col(f"u{r}").alias("series_id"),
-            ((F.col(f"a{r}") / F.greatest(F.col(ic), F.lit(1e-12))) / F.col("den")).alias("z"),
-        )
-        zz = part if zz is None else zz.unionByName(part)
-    bad = zz.filter((F.col("z") > pos) | (F.col("z") < -neg)).select(
-        "ts", "series_id", F.lit(True).alias("_bad")
-    )
-
-    out = (
-        base.join(cnt, ["series_id", "ts"], "left")
-        .join(bad, ["series_id", "ts"], "left")
-        .select(
-            "series_id",
-            "ts",
-            F.when(F.col("value").isNull(), F.lit(int(Flag.DATA_MISSING)))
-            .when(F.col("_bad"), F.lit(int(Flag.FAIL)))
-            .when(
-                F.coalesce("n_inner", F.lit(0)) < num_min, F.lit(int(Flag.ISOLATED))
-            )
-            .otherwise(F.lit(int(Flag.PASS)))
-            .cast("tinyint")
-            .alias("flag_sct"),
-        )
-    )
-    return out
+# keyword parameters ``sct`` forwards to the kernel; ``check_mask`` is
+# set per group by ``_grouped_spatial``, never by the caller
+_SCT_PARAMS = frozenset(inspect.signature(sct_kernel).parameters) - {
+    "values", "lat", "lon", "elev", "check_mask",
+}
 
 
 def sct(
@@ -1354,48 +1112,18 @@ def sct(
     """Spatial Consistency Test (call-site surface ``harness.rs:143-161``,
     defaults ``lib.rs:241-256``). Returns (series_id, ts, flag_sct).
 
-    ``use_relational=True`` routes the bounded-box mode (num_max<=3,
-    single iteration, global group) to ``sct_small_relational`` — pure
-    codegen, no Python workers, flags equality-gated against the kernel.
-    It is NOT the default: the KD subdivision is inherently iterative
-    (~log2(n/3) sequential window passes), and at current scales the
-    per-pass stage overhead (~2.5 s/level measured at sf0.1) loses 4-5x
-    to the kernel's in-memory recursion; the relational shape only wins
-    when a single slice outgrows one Python worker. Measured + documented
-    in BENCH.md round 5."""
-    if params.pop("use_relational", False):
-        # EXACTLY num_min == num_max == 3: the relational path hardcodes
-        # 3-station leaves (bk == 3) and solves every one of them, while
-        # the kernel skips any box with k < num_min and can produce
-        # 1-2-station boxes from odd splits (solved when num_min allows).
-        # Outside this point the two paths provably diverge — the r5
-        # review caught the guard admitting num_min defaults / num_max<3.
-        if not (
-            params.get("num_max", 100) == 3
-            and params.get("num_min", 5) == 3
-            and params.get("num_iterations", 5) <= 1
-            and cell_deg is None
-        ):
-            raise ValueError(
-                "use_relational requires num_min=3, num_max=3, "
-                "num_iterations<=1 and cell_deg=None — the exactly-"
-                "relational bounded-box regime the kernel-equality gate "
-                "and the DuckDB oracle cover"
-            )
-        return sct_small_relational(
-            df,
-            value_col,
-            series_col=series_col,
-            ts_col=ts_col,
-            num_min=params.get("num_min", 5),
-            inner_radius=params.get("inner_radius", 50_000.0),
-            min_horizontal_scale=params.get("min_horizontal_scale", 10_000.0),
-            vertical_scale=params.get("vertical_scale", 200.0),
-            pos=params.get("pos", 4.0),
-            neg=params.get("neg", 4.0),
-            eps2=params.get("eps2", 0.5),
+    Runs ``sct_kernel`` once per (ts[, cell]) group in a grouped pandas
+    UDF; with ``cell_deg`` set, each cell also sees an ``outer_radius``
+    halo of its neighbors. ``params`` are ``sct_kernel``'s keyword
+    parameters (``num_min``, ``num_max``, ``inner_radius``, …); any other
+    key raises ``ValueError`` here, at plan time, instead of failing
+    later inside a Python worker."""
+    unknown = sorted(set(params) - _SCT_PARAMS)
+    if unknown:
+        raise ValueError(
+            f"sct: unknown parameter(s) {unknown}; expected a subset of "
+            f"{sorted(_SCT_PARAMS)}"
         )
-    params.pop("force_kernel", None)  # accepted for symmetry with buddy_check
     return _grouped_spatial(
         df,
         sct_kernel,

@@ -1054,9 +1054,7 @@ def q_simhash_neardup(spark, sf):
 
     _utc(spark)
     docs = read_table(spark, sf, "documents")
-    pairs = simhash_dedup(
-        docs, max_hamming=SIMHASH_MAX_HAMMING, blocks=4, portable=True
-    )
+    pairs = simhash_dedup(docs, max_hamming=SIMHASH_MAX_HAMMING, blocks=4)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -1628,7 +1626,6 @@ def _sql_sct_kd(num_max: int, flag_name: str, levels: int = 7) -> str:
         adjk_statements,
         haversine_sql,
         synthetic_coords_sql,
-        z4_solve_statements,
         zk_solve_statements,
     )
 
@@ -1710,7 +1707,7 @@ def _sql_sct_kd(num_max: int, flag_name: str, levels: int = 7) -> str:
     # to el0.. so the covariance names eIJ stay collision-free.
     def genk_branch(k: int) -> str:
         if k == 4:
-            stmts = adj4_statements() + z4_solve_statements()
+            stmts = adj4_statements() + zk_solve_statements(4)
         else:
             stmts = adjk_statements(k) + zk_solve_statements(k)
         pivk_cols = ",\n  ".join(

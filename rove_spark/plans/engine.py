@@ -160,23 +160,7 @@ class Engine:
                 series_col=series_col,
                 ts_col=order_cols[0],
                 cell_deg=p.get("cell_deg"),
-                **{
-                    k: v
-                    for k, v in p.items()
-                    if k
-                    in (
-                        "num_min",
-                        "num_max",
-                        "inner_radius",
-                        "outer_radius",
-                        "num_iterations",
-                        "min_horizontal_scale",
-                        "vertical_scale",
-                        "pos",
-                        "neg",
-                        "eps2",
-                    )
-                },
+                **{k: v for k, v in p.items() if k != "cell_deg"},
             ).withColumnRenamed("flag_sct", out)
             return _join_spatial_flags(df, flags, series_col, order_cols[0])
         if step.check in self.custom:

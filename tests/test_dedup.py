@@ -62,7 +62,7 @@ def test_minhash_deterministic(spark, docs):
 
 
 def test_simhash_near_dups(spark, docs):
-    sh = dedup.with_simhash(docs)
+    sh = dedup.with_simhash_portable(docs)
     # max_hamming=10 needs ≥11 blocks for pigeonhole completeness → 16
     pairs = dedup.simhash_near_dup_pairs(sh, max_hamming=10, blocks=16).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
@@ -72,7 +72,7 @@ def test_simhash_near_dups(spark, docs):
 
 
 def test_simhash_blocking_contract_enforced(spark, docs):
-    sh = dedup.with_simhash(docs)
+    sh = dedup.with_simhash_portable(docs)
     with pytest.raises(ValueError, match="pigeonhole"):
         dedup.simhash_near_dup_pairs(sh, max_hamming=16, blocks=4)
 
@@ -188,7 +188,7 @@ def test_embedding_near_dup(spark):
     rows.append((100, [float(x) for x in base / np.linalg.norm(base)]))
     rows.append((101, [float(x) for x in near / np.linalg.norm(near)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = dedup.embedding_near_dup_pairs(df, threshold=0.98).collect()
+    pairs = dedup.embedding_near_dup_pairs_portable(df, threshold=0.98).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (100, 101) in got
     assert all({a, b} == {100, 101} for a, b in got)
@@ -225,7 +225,7 @@ def test_embedding_lsh_recall_vs_brute_force(spark):
 
     got = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_near_dup_pairs(df, threshold=0.95).collect()
+        for r in dedup.embedding_near_dup_pairs_portable(df, threshold=0.95).collect()
     }
     # exact brute force over all pairs (numpy)
     V = dict(rows)

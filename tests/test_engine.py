@@ -117,6 +117,25 @@ threshold = 30.0
     assert flags <= {Flag.PASS, Flag.FAIL, Flag.ISOLATED}
 
 
+def test_sct_step_misspelled_param_raises(spark):
+    """A misspelled sct key in a pipeline step fails the pipeline build,
+    naming the key, instead of running with the kernel default."""
+    import pytest
+
+    from rove_spark.operators.spatial import with_synthetic_coords
+
+    toml = """
+[[step]]
+name = "sct"
+[step.sct]
+num_min = 3
+num_mx = 20
+"""
+    df = with_synthetic_coords(_signals(spark))
+    with pytest.raises(ValueError, match="num_mx"):
+        _engine(spark, toml=toml).run_pipeline(df, "ta", value_col="text_len")
+
+
 def test_melt_flags_long_format(spark):
     eng = _engine(spark)
     out = eng.run_pipeline(_signals(spark), "ta", value_col="text_len")

@@ -22,7 +22,7 @@ from datetime import datetime, timedelta
 from pathlib import Path
 from time import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rove_spark.config import KNOWN_CHECKS, Pipeline, PipelineStep, load_pipelines
@@ -213,7 +213,14 @@ class Engine:
         One Spark job per tier covers *only* the not-yet-done partitions
         (input filtered by day), written with dynamic partition overwrite
         (idempotent), then the manifest marks them done with lineage and
-        per-partition metrics. Safe to kill and re-run."""
+        per-partition metrics. Safe to kill and re-run.
+
+        The per-day metrics are ``rows_<tier>`` (the day's ``n_turns`` sum
+        in that tier, observed in the tier's own write — no tier table is
+        read back) and ``elapsed_job_sec``; a day with no rows in a tier
+        has no ``rows_<tier>`` key. The returned dict carries them for the
+        computed days under ``"metrics"`` (empty when nothing was
+        computed)."""
         out_dir = Path(out_dir)
         pipe = self.pipelines[pipeline_name]
         lineage_params = {
@@ -266,6 +273,7 @@ class Engine:
             "skipped": sorted((done & all_days) - set(reflag)),
             "computed": todo,
             "recomputed_context": reflag,
+            "metrics": {},
         }
         if not todo:
             # retention still applies on a fully-resumed run — a killed
@@ -306,30 +314,32 @@ class Engine:
             role_col="role" if "role" in df.columns else None,
         )
         metrics: dict[str, dict] = {d: {} for d in todo}
-        for tier_name, tier_df in tiers.items():
-            # open_table: parquet shim here; real Iceberg when the session
-            # carries the probe-gated catalog (sources/tables.py)
-            table = open_table(self.spark, out_dir / f"tier_{tier_name}", ["day"])
-            tier_out = tier_df.withColumn(
-                "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-            )
-            table.overwrite_partitions(
-                tier_out, lineage={"fingerprint": fp, "tier": tier_name}
-            )
-            # per-partition metrics from the written tier (cheap scan)
-            stats = (
-                table.read(self.spark)
-                .groupBy("day")
-                .agg(F.sum("n_turns").alias("rows"))
-                .collect()
-            )
-            for r in stats:
-                if str(r.day) in metrics:
-                    metrics[str(r.day)][f"rows_{tier_name}"] = r.rows
-        tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
+        # per-day row counts from each tier's write itself: one n_turns sum
+        # per todo day (null for a day with no rows written)
+        day_rows = [F.sum(F.when(F.col("day") == d, F.col("n_turns"))).alias(d) for d in todo]
+        try:
+            for tier_name, tier_df in tiers.items():
+                # open_table: parquet shim here; real Iceberg when the session
+                # carries the probe-gated catalog (sources/tables.py)
+                table = open_table(self.spark, out_dir / f"tier_{tier_name}", ["day"])
+                tier_out = tier_df.withColumn(
+                    "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+                )
+                rows = Observation()
+                table.overwrite_partitions(
+                    tier_out,
+                    lineage={"fingerprint": fp, "tier": tier_name},
+                    observe=(rows, day_rows),
+                )
+                for d, n in rows.get.items():
+                    if n is not None:
+                        metrics[d][f"rows_{tier_name}"] = n
+        finally:
+            tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
         elapsed = time() - t0
         for d in todo:
             metrics[d]["elapsed_job_sec"] = round(elapsed, 3)
+        result["metrics"] = metrics
         manifest.mark_done(todo, fp, lineage=lineage_params, metrics=metrics)
         self._apply_retention(
             retention, result, out_dir, input_path, value_col, series_col,

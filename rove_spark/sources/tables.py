@@ -22,11 +22,23 @@ import json
 import logging
 import time
 import uuid
+from collections.abc import Sequence
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 log = logging.getLogger(__name__)
+
+# an observation and its aggregate columns, as ``DataFrame.observe`` takes them
+Observe = tuple[Observation, Sequence[Column]]
+
+
+def _observed(df: DataFrame, observe: Observe | None) -> DataFrame:
+    """``df`` with ``observe`` attached, for the frame handed to a writer."""
+    if observe is None:
+        return df
+    observation, columns = observe
+    return df.observe(observation, *columns)
 
 TESTDATA_TABLES = [
     "region",
@@ -137,15 +149,25 @@ class PartitionedTable:
         return df.repartition(*[F.col(c) for c in self.partition_by])
 
     def overwrite_partitions(
-        self, df: DataFrame, lineage: dict | None = None, cluster: bool = True
+        self,
+        df: DataFrame,
+        lineage: dict | None = None,
+        cluster: bool = True,
+        observe: Observe | None = None,
     ) -> str:
         """Replace exactly the partitions present in ``df`` (dynamic
         overwrite — Iceberg ``overwritePartitions`` semantics). Returns the
         snapshot id. ``cluster=False`` skips the pre-write re-cluster for
         callers that already repartitioned onto their own write layout
-        (e.g. retention_compact's (day, hash(series) % files_per_day))."""
+        (e.g. retention_compact's (day, hash(series) % files_per_day)).
+        ``observe=(observation, columns)`` collects those aggregates over
+        the written rows in the write itself; read them with
+        ``observation.get`` once this returns. It sits above the
+        re-cluster exchange, in the write's result stage: Spark applies a
+        result stage's accumulator updates exactly once, where a retried
+        shuffle-map task could count its rows twice."""
         (
-            (self._cluster_for_write(df) if cluster else df)
+            _observed(self._cluster_for_write(df) if cluster else df, observe)
             .write.mode("overwrite")
             .partitionBy(*self.partition_by)
             .option("partitionOverwriteMode", "dynamic")
@@ -240,10 +262,16 @@ class IcebergTable:
     def read(self, spark: SparkSession | None = None) -> DataFrame:
         return (spark or self.spark).table(self.name)
 
-    def overwrite_partitions(self, df: DataFrame, lineage: dict | None = None) -> str:
+    def overwrite_partitions(
+        self, df: DataFrame, lineage: dict | None = None, observe: Observe | None = None
+    ) -> str:
+        """``observe`` as in ``PartitionedTable.overwrite_partitions``. It
+        sits on ``df`` itself: Iceberg plans its write distribution above
+        the frame handed to ``writeTo``, so a retried map task before that
+        exchange may count its rows twice here."""
         from pyspark.sql import functions as F
 
-        w = df.writeTo(self.name)
+        w = _observed(df, observe).writeTo(self.name)
         if self.exists():
             w.overwritePartitions()
         else:

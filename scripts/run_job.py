@@ -151,15 +151,17 @@ def main() -> None:
         # (metadata-only) instead of a full scan
         input_path=args.input,
     )
-    n_turns = df.count()
     elapsed = time.time() - t0
+    # turns rolled up by this run, from the job's own per-day metrics
+    # (skipped days count nothing; no second scan of the input)
+    turns_computed = sum(m.get("rows_1m", 0) for m in result["metrics"].values())
     print(
         json.dumps(
             {
                 "partitions": result,
-                "n_turns": n_turns,
+                "turns_computed": turns_computed,
                 "elapsed_sec": round(elapsed, 2),
-                "turns_per_sec": round(n_turns / elapsed, 1),
+                "turns_per_sec": round(turns_computed / elapsed, 1),
                 "out": args.out,
             }
         )

@@ -3,6 +3,7 @@ checkpointed tier job with resume + invalidation semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rove_spark.config import parse_pipeline
@@ -194,7 +195,42 @@ def test_run_job_checkpoint_resume(tmp_path, spark):
     assert set(recs) == set(days)
     any_rec = recs[days[0]]
     assert any_rec["lineage"]["pipeline"] == "ta"
-    assert any_rec["metrics"]["rows_1m"] > 0
+    # rows_<tier> is the day's n_turns sum in that tier: days[0] comes from
+    # the first run, days[1] from the resume's re-flag, the rest from the
+    # resume's first pass; the job returns the same metrics it records
+    for tier in ("1m", "1h", "1d"):
+        sums = {
+            str(r.day): r.rows
+            for r in spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}"))
+            .groupBy("day")
+            .agg(F.sum("n_turns").alias("rows"))
+            .collect()
+        }
+        assert {d: recs[d]["metrics"][f"rows_{tier}"] for d in days} == sums, tier
+    assert r2["metrics"] == {d: recs[d]["metrics"] for d in days[1:]}
+    assert r3["metrics"] == {}
+
+
+def test_run_job_failed_tier_write_releases_1m_cache(tmp_path, spark, monkeypatch):
+    """build_tiers persists the 1m tier for the cascade; a tier write that
+    raises must not leave it cached in a long-lived session, and must
+    leave no day marked done."""
+    from rove_spark.plans.checkpoint import CheckpointManifest
+    from rove_spark.sources.tables import PartitionedTable
+
+    real_write = PartitionedTable.overwrite_partitions
+
+    def fail_1h(self, df, lineage=None, **kw):
+        if (lineage or {}).get("tier") == "1h":
+            raise RuntimeError("injected 1h write failure")
+        return real_write(self, df, lineage, **kw)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_1h)
+    with pytest.raises(RuntimeError, match="injected"):
+        _engine(spark).run_job(_signals(spark), "ta", tmp_path / "out", input_fingerprint="fp1")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert CheckpointManifest(tmp_path / "out" / "_checkpoint.json").records() == {}
 
 
 def test_run_job_backfill_reflags_following_day(tmp_path, spark):

@@ -6,6 +6,8 @@ re-encoding."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -190,6 +192,36 @@ def test_run_job_raw_retention_compacts_and_resumes(tmp_path, spark):
     assert r2["computed"] == []
     assert r2["expired"]["raw"]["compacted"] == []
     assert r2["expired"]["raw"]["expiring"] == []  # already dropped from raw
+
+
+def test_run_job_raw_retention_reads_no_tier_table(tmp_path, spark, monkeypatch):
+    """run_job takes its per-day tier row counts from the tier writes
+    themselves: with raw retention on, the job reads the raw input (to
+    compact it) but never reads back a table under out/tier_*."""
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    df = raw.read(spark).drop("day")
+    reads: list[Path] = []
+    real_read = PartitionedTable.read
+
+    def recording_read(self, spark_):
+        reads.append(Path(self.path))
+        return real_read(self, spark_)
+
+    monkeypatch.setattr(PartitionedTable, "read", recording_read)
+    r = _engine(spark).run_job(
+        df, "ta", tmp_path / "out", value_col="text_len",
+        input_fingerprint="fp1", input_path=tmp_path / "raw",
+        retention={"raw": days[1]},
+    )
+    assert r["computed"] == days
+    assert r["expired"]["raw"]["compacted"] == days[:1]
+    assert tmp_path / "raw" in reads  # the recorder sees the compaction's read
+    tier_reads = [p for p in reads if p.parent == tmp_path / "out" and p.name.startswith("tier_")]
+    assert tier_reads == []
+    assert set(r["metrics"]) == set(days)
+    assert all(r["metrics"][d]["rows_1m"] > 0 for d in days)
 
 
 def test_compact_missing_value_col_raises(tmp_path, spark):

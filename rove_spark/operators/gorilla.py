@@ -554,24 +554,24 @@ def compress_series(
     value_col: str,
     series_col: str = "conv_id",
     ts_col: str = "ts",
-    chunk: str = "day",
-    group_chunk: str = "month",
 ):
     """DataFrame (series, ts, value[, …]) → Gorilla chunk table, one row
-    per (series, ``chunk`` start).
+    per (series, UTC day).
 
-    Two-level chunking: the *shuffle group* is (series, ``group_chunk``)
-    — coarse, so each grouped-UDF invocation amortizes its fixed Arrow/
-    pandas overhead over many points (44k day-groups of ~24 points ran 6×
+    Two-level chunking: the *shuffle group* is (series, month) — coarse,
+    so each grouped-UDF invocation amortizes its fixed Arrow/pandas
+    overhead over many points (44k day-groups of ~24 points ran 6×
     slower than 2k month-groups emitting the same day-chunks) — while the
-    *codec chunk* stays fine-grained (``chunk``) for retention/seek
-    granularity. Group size stays bounded (series × month), which is the
-    hot-key story for this stage (SURVEY §4)."""
+    *codec chunk* is one day, the retention/seek granularity of the cold
+    tier: a chunk lies inside exactly one day partition, which is what
+    lets ``rollup.cold_source`` prune chunks by day. Group size stays
+    bounded (series × month), which is the hot-key story for this stage
+    (SURVEY §4)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     def enc(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # one group = one (series, group_chunk); entry construction AND
+        # one group = one (series, month); entry construction AND
         # bit-packing are vectorized across ALL its codec chunks at once
         # (_ts_entries_grouped/_val_entries_grouped + one _pack_bits via
         # _BatchPacker) — per-chunk numpy calls never amortize at the real
@@ -633,8 +633,8 @@ def compress_series(
 
     prepped = df.select(
         F.col(series_col).cast("string").alias("_series"),
-        F.date_trunc(group_chunk, F.col(ts_col)).alias("_group"),
-        F.date_trunc(chunk, F.col(ts_col)).alias("_chunk"),
+        F.date_trunc("month", F.col(ts_col)).alias("_group"),
+        F.date_trunc("day", F.col(ts_col)).alias("_chunk"),
         F.unix_timestamp(F.col(ts_col)).alias("_epoch"),
         F.col(value_col).cast("float").alias(value_col),
     )

@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rove_spark.model import Flag, flag_col
+from rove_spark.sources.tables import check_day
 
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
-# finer → next coarser
-CASCADE_ORDER = ["1m", "1h", "1d"]
 
 
 def _base_aggs(text_len_col: str, tool_col: str | None) -> list:
@@ -523,15 +522,6 @@ def with_rates(tier_df: DataFrame, checks: Sequence[str] = ()) -> DataFrame:
     return out
 
 
-def retention_expire(table, older_than_day: str, day_col: str = "day") -> int:
-    """Retention policy: drop whole partitions older than a cutoff
-    (partition-level delete — no data rewrite). ``table`` is any tier
-    table from ``sources.tables.open_table`` — the parquet shim
-    (directory drop) or, probe-gated, a real Iceberg table (metadata
-    DELETE aligned to partition boundaries)."""
-    return table.expire_days_before(older_than_day, day_col=day_col)
-
-
 def retention_compact(
     spark,
     raw_table,
@@ -540,11 +530,8 @@ def retention_compact(
     value_col: str,
     series_col: str = "conv_id",
     ts_col: str = "ts",
-    day_col: str = "day",
     manifest=None,
     fingerprint: str = "unfingerprinted",
-    drop_raw: bool = True,
-    files_per_day: int = 1,
 ) -> dict:
     """Cold-tier compaction: before raw day partitions age out, compress
     them into the Gorilla chunk table mandated by SURVEY §1.4 / §2.8
@@ -568,23 +555,18 @@ def retention_compact(
     Scale shape: the encode is ``compress_series``'s grouped-Arrow stage
     (bounded (series, month) groups through ``parallel_groups``); reads
     are day-partition-pruned on both sides; the drop is metadata-only.
-    The chunk write is re-clustered onto day-aligned partitions first:
-    the encode stage leaves many mixed-day partitions, and a bare
+    Both tables are partitioned by ``day``, and ``older_than_day`` must
+    be a ``YYYY-MM-DD`` date (``check_day``). The chunk write goes
+    through the chunk table's own re-cluster on ``day``: the encode
+    stage leaves many mixed-day partitions, and a bare
     ``partitionBy(day)`` write from those emits one tiny file per
     (task, day) pair — measured 1,192 files for 30 day-partitions at
     sf0.01, the exact small-files pathology a cold tier exists to avoid.
-    ``files_per_day`` (default 1 — chunks are compressed, a day is one
-    compact file) trades file count for write parallelism on deployments
-    whose per-day chunk volume is large; the re-cluster key is
-    ``(day, xxhash64(series) % files_per_day)`` so each writer task holds
-    whole output files."""
+    Re-clustered, each expired day is one compact file of chunks."""
     from rove_spark.operators.gorilla import compress_series
 
-    if files_per_day < 1:
-        raise ValueError(
-            f"retention_compact: files_per_day={files_per_day} must be >= 1"
-        )
-    expiring = [d for d in raw_table.partition_days(day_col) if d < older_than_day]
+    check_day(older_than_day)
+    expiring = [d for d in raw_table.partition_days() if d < older_than_day]
     done = manifest.done_partitions(fingerprint) if manifest is not None else set()
     todo = [d for d in expiring if f"compact:{d}" not in done]
     result = {
@@ -594,7 +576,7 @@ def retention_compact(
         "dropped": 0,
     }
     if todo:
-        raw = raw_table.read(spark).filter(F.col(day_col).isin(todo))
+        raw = raw_table.read(spark).filter(F.col("day").isin(todo))
         if value_col not in raw.columns:
             raise ValueError(
                 f"retention_compact: value column {value_col!r} not in raw "
@@ -602,17 +584,12 @@ def retention_compact(
                 "the same signal the job checks"
             )
         chunks = compress_series(
-            raw, value_col, series_col=series_col, ts_col=ts_col, chunk="day"
+            raw, value_col, series_col=series_col, ts_col=ts_col
         ).withColumn(
-            day_col, F.date_format(F.date_trunc("day", "chunk_start"), "yyyy-MM-dd")
-        )
-        chunks = chunks.repartition(
-            F.col(day_col),
-            F.pmod(F.xxhash64(F.col("series_id")), F.lit(files_per_day)),
+            "day", F.date_format(F.date_trunc("day", "chunk_start"), "yyyy-MM-dd")
         )
         chunk_table.overwrite_partitions(
             chunks,
-            cluster=False,  # pre-split above: (day, hash(series) % files_per_day)
             lineage={
                 "operation": "retention_compact",
                 "cutoff": older_than_day,
@@ -627,8 +604,8 @@ def retention_compact(
                 lineage={"operation": "retention_compact", "cutoff": older_than_day},
                 metrics={},
             )
-    if drop_raw and expiring:
-        result["dropped"] = raw_table.expire_days_before(older_than_day, day_col=day_col)
+    if expiring:
+        result["dropped"] = raw_table.expire_days_before(older_than_day)
     return result
 
 
@@ -641,9 +618,7 @@ def read_cold(spark, chunk_table, value_col: str = "value"):
     return cold_source(spark, chunk_table, value_col=value_col)(None, None)
 
 
-def cold_source(
-    spark, chunk_table, value_col: str = "value", day_col: str = "day"
-):
+def cold_source(spark, chunk_table, value_col: str = "value"):
     """Spec-aware DataSwitch source over the cold tier: a
     ``(time_spec, space_spec) -> DataFrame`` callable that prunes chunk
     PARTITIONS (day range from the time spec, series ids from a
@@ -665,7 +640,7 @@ def cold_source(
             # a day chunk overlaps [start, end] iff its day partition is
             # within [day(start), day(end)] — lexicographic on yyyy-MM-dd
             chunks = chunks.filter(
-                F.col(day_col).between(
+                F.col("day").between(
                     time_spec.start.strftime("%Y-%m-%d"),
                     time_spec.end.strftime("%Y-%m-%d"),
                 )
@@ -674,7 +649,7 @@ def cold_source(
             chunks = chunks.filter(
                 F.col("series_id").isin([str(i) for i in space_spec.ids])
             )
-        return decompress_series(chunks.drop(day_col), value_col=value_col)
+        return decompress_series(chunks.drop("day"), value_col=value_col)
 
     src.spec_aware = True  # DataSwitch.register opts it in automatically
     return src
@@ -705,7 +680,7 @@ def _fold_markers(inc_root: Path) -> list[dict]:
     return [json.loads(m.read_text()) for m in sorted(folds_dir.glob("fold-*.json"))]
 
 
-def _visible_batches(inc_table, day_col: str = "day", batch_col: str = "batch") -> list[str]:
+def _visible_batches(inc_table) -> list[str]:
     """The EXACTLY-ONCE read set for an increments table, derived from
     disk leaves + committed fold markers (local metadata, no data scan):
 
@@ -732,8 +707,8 @@ def _visible_batches(inc_table, day_col: str = "day", batch_col: str = "batch") 
     inc_root = Path(inc_table.path)
     on_disk = {
         b.name.split("=", 1)[1]
-        for d in inc_root.glob(f"{day_col}=*")
-        for b in d.glob(f"{batch_col}=*")
+        for d in inc_root.glob("day=*")
+        for b in d.glob("batch=*")
     }
     markers = _fold_markers(inc_root)
     committed = {m["fold_id"] for m in markers}
@@ -830,8 +805,6 @@ def refresh_tier_increment(
     checks: Sequence[str] = (),
     text_len_source: str = "text",
     tool_col: str = "tool",
-    day_col: str = "day",
-    batch_col: str = "batch",
     digest_short_circuit: bool = True,
 ) -> dict:
     """Delta-only, EXACTLY-ONCE tier refresh: the delta's tier rows land
@@ -920,10 +893,10 @@ def refresh_tier_increment(
                 "applied": False,
             }
     out = inc.withColumn(
-        day_col, F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-    ).withColumn(batch_col, F.lit(batch_id))
-    stats = out.groupBy(day_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    days = sorted(str(r[day_col]) for r in stats)
+        "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+    ).withColumn("batch", F.lit(batch_id))
+    stats = out.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
+    days = sorted(str(r["day"]) for r in stats)
     n_rows = int(sum(r["n"] for r in stats))
     if not days:
         return {"batch_id": batch_id, "tier": tier, "days": [], "n_rows": 0, "applied": False}
@@ -949,8 +922,6 @@ def read_tier(
     series_col: str = "conv_id",
     role_col: str | None = "role",
     days: Sequence[str] | None = None,
-    day_col: str = "day",
-    batch_col: str = "batch",
     allow_missing_columns: bool = False,
 ) -> DataFrame:
     """Merge-on-read of base + increments (``merge_tiers`` semantics —
@@ -977,8 +948,8 @@ def read_tier(
     if base_table is not None and base_table.exists():
         df = base_table.read(spark)
         if days is not None:
-            df = df.filter(F.col(day_col).isin(list(days)))
-        base_part = df.drop(day_col)
+            df = df.filter(F.col("day").isin(list(days)))
+        base_part = df.drop("day")
     inc_part = None
     if inc_table is not None and inc_table.exists():
         if allow_missing_columns:
@@ -987,11 +958,10 @@ def read_tier(
             df = spark.read.option("mergeSchema", True).parquet(str(inc_table.path))
         else:
             df = inc_table.read(spark)
-        visible = _visible_batches(inc_table, day_col=day_col, batch_col=batch_col)
-        df = df.filter(F.col(batch_col).isin(visible))
+        df = df.filter(F.col("batch").isin(_visible_batches(inc_table)))
         if days is not None:
-            df = df.filter(F.col(day_col).isin(list(days)))
-        inc_part = df.drop(day_col, batch_col)
+            df = df.filter(F.col("day").isin(list(days)))
+        inc_part = df.drop("day", "batch")
     if base_part is None and inc_part is None:
         raise ValueError("read_tier: neither base nor increments table exists")
     if inc_part is None:
@@ -1065,7 +1035,7 @@ def realtime_tier(
     nothing, ``/root/reference/src/server.rs:104-123``); this completes
     the engine's continuous-aggregate lifecycle: build (``build_tiers``)
     → incremental refresh (``refresh_tier_increment``/``read_tier``) →
-    READ-TIME FRESHNESS (here) → retention (``retention_expire``) → cold
+    READ-TIME FRESHNESS (here) → retention (``expire_days_before``) → cold
     compression (``retention_compact``).
 
     Exactness: ``boundary`` must be aligned to the tier's bucket width
@@ -1284,8 +1254,6 @@ def compact_tier_increments(
     tier: str,
     series_col: str = "conv_id",
     role_col: str | None = "role",
-    day_col: str = "day",
-    batch_col: str = "batch",
 ) -> dict:
     """Fold every increment batch into ONE consolidated batch, keeping
     merge-on-read cost bounded, with NO crash window that double-counts
@@ -1325,8 +1293,8 @@ def compact_tier_increments(
     def _leaves() -> list[tuple[str, str]]:
         return sorted(
             (d.name.split("=", 1)[1], b.name.split("=", 1)[1])
-            for d in inc_root.glob(f"{day_col}=*")
-            for b in d.glob(f"{batch_col}=*")
+            for d in inc_root.glob("day=*")
+            for b in d.glob("batch=*")
         )
 
     markers = _fold_markers(inc_root)
@@ -1351,7 +1319,7 @@ def compact_tier_increments(
     # step 4: drop uncommitted fold partitions (no marker → crashed write)
     committed = {m["fold_id"] for m in markers}
     garbage = [
-        f"{day_col}={d}/{batch_col}={b}"
+        f"day={d}/batch={b}"
         for d, b in _leaves()
         if b.startswith("fold-") and b not in committed
     ]
@@ -1364,13 +1332,13 @@ def compact_tier_increments(
     if len(batches) <= 1:
         return {"fold_id": None, "folded": [], "resumed": False, "dropped": 0}
     fold_id = "fold-" + hashlib.md5("|".join(batches).encode()).hexdigest()[:16]
-    src = inc_table.read(spark).filter(F.col(batch_col).isin(batches))
+    src = inc_table.read(spark).filter(F.col("batch").isin(batches))
     merged = rollup_cascade(
-        src.drop(day_col, batch_col), tier, series_col=series_col, role_col=role_col
+        src.drop("day", "batch"), tier, series_col=series_col, role_col=role_col
     )
     out = merged.withColumn(
-        day_col, F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-    ).withColumn(batch_col, F.lit(fold_id))
+        "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+    ).withColumn("batch", F.lit(fold_id))
     inc_table.overwrite_partitions(
         out,
         lineage={
@@ -1379,7 +1347,7 @@ def compact_tier_increments(
             "batches": batches,
         },
     )
-    source_dirs = [f"{day_col}={d}/{batch_col}={b}" for d, b in pairs]
+    source_dirs = [f"day={d}/batch={b}" for d, b in pairs]
     folds_dir.mkdir(parents=True, exist_ok=True)
     marker = folds_dir / f"{fold_id}.json"
     tmp = marker.with_suffix(".tmp")

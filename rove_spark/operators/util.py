@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def parallel_groups(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
+def parallel_groups(df: DataFrame, *keys: str) -> DataFrame:
     """Explicitly hash-partition on the group keys before a grouped pandas
     UDF. AQE's partition coalescing sizes shuffles by *bytes*, which is
     right for JVM relational operators but wrong for grouped UDFs whose
@@ -13,12 +13,13 @@ def parallel_groups(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
     over a 50 KB group takes ~1 s) — coalescing serializes the stage onto
     one Python worker (measured 5× slowdown on the SCT stage). A
     user-specified repartition pins the exchange; groupBy reuses it because
-    hash(keys) already satisfies the required clustering."""
+    hash(keys) already satisfies the required clustering. Two partitions
+    per core."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * factor, *keys)
+    return df.repartition(sc.defaultParallelism * 2, *keys)
 
 
-def spread_scan(df: DataFrame, factor: int = 2) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition an UNDER-PARTITIONED scan before CPU-dense
     map-only work (regex scans, per-row scoring). Parquet splits at row-
     group granularity, so a one-row-group file scans as ONE task and every
@@ -27,8 +28,9 @@ def spread_scan(df: DataFrame, factor: int = 2) -> DataFrame:
     scan already yields at least the session's parallelism (any real
     multi-file/multi-row-group table), this is a NO-OP, so it never adds
     a shuffle at deployment scale; only deficient scans pay one small
-    round-robin exchange to unlock the cores."""
+    round-robin exchange to unlock the cores, into two partitions per
+    core."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
-    return df.repartition(sc.defaultParallelism * factor)
+    return df.repartition(sc.defaultParallelism * 2)

@@ -31,24 +31,9 @@ from rove_spark.operators import checks as C
 from rove_spark.operators import spatial as SP
 from rove_spark.operators.rollup import build_tiers
 from rove_spark.plans.checkpoint import CheckpointManifest, params_hash
-from rove_spark.sources.tables import open_table
+from rove_spark.sources.tables import PartitionedTable, check_day, open_table
 
 log = logging.getLogger(__name__)
-
-
-def list_day_partitions(path: str | Path) -> set[str] | None:
-    """Day set from a hive-style ``day=YYYY-MM-DD`` directory layout —
-    the metadata-only analog of Iceberg's partition listing. Returns None
-    when the path has no day partitions (caller falls back to a scan)."""
-    root = Path(path)
-    if not root.is_dir():
-        return None
-    days = {
-        p.name.split("=", 1)[1]
-        for p in root.glob("day=*")
-        if p.is_dir() and "=" in p.name
-    }
-    return days or None
 
 
 class Engine:
@@ -220,7 +205,12 @@ class Engine:
         read back) and ``elapsed_job_sec``; a day with no rows in a tier
         has no ``rows_<tier>`` key. The returned dict carries them for the
         computed days under ``"metrics"`` (empty when nothing was
-        computed)."""
+        computed).
+
+        Every ``retention`` cutoff must be a ``YYYY-MM-DD`` date; a bad one
+        raises ``ValueError`` before anything is written or dropped."""
+        for cutoff in (retention or {}).values():
+            check_day(cutoff)
         out_dir = Path(out_dir)
         pipe = self.pipelines[pipeline_name]
         lineage_params = {
@@ -238,10 +228,10 @@ class Engine:
         # METADATA question — read it from the partition directory listing
         # instead of scanning every row (at 100 TB the distinct() below is
         # a full-table pass just to list ~365 strings). Fallback: scan.
-        all_days = None
+        all_days = set()
         if input_path is not None:
-            all_days = list_day_partitions(input_path)
-        if all_days is None:
+            all_days = set(PartitionedTable(input_path, ["day"]).partition_days())
+        if not all_days:
             # r4 verdict: make this fallback LOUD — an API caller composing
             # run_job from a DataFrame alone silently buys a full-table
             # scan (100 TB at deployment scale) just to list ~365 strings
@@ -611,7 +601,7 @@ class Engine:
         without re-encoding."""
         if not retention:
             return
-        from rove_spark.operators.rollup import retention_compact, retention_expire
+        from rove_spark.operators.rollup import retention_compact
 
         result["expired"] = {}
         raw_cutoff = retention.get("raw")
@@ -636,7 +626,7 @@ class Engine:
             if tier_name == "raw":
                 continue
             table = open_table(self.spark, Path(out_dir) / f"tier_{tier_name}", ["day"])
-            result["expired"][tier_name] = retention_expire(table, cutoff)
+            result["expired"][tier_name] = table.expire_days_before(cutoff)
 
 
 def _scalar(v):

@@ -101,20 +101,16 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing is parallelism-first but floors each coalesced
-        # partition at minPartitionSize (1 MB default): a CPU-heavy,
-        # small-byte shuffle can collapse to 1-2 partitions and run
-        # serial. Round 7 first lowered this floor globally, then pinned
-        # every known-heavy operator path explicitly instead
+        # partition at minPartitionSize (Spark's 1 MB default, kept): a
+        # CPU-heavy, small-byte shuffle can collapse to 1-2 partitions and
+        # run serial. Round 7 first lowered this floor globally, then
+        # pinned every known-heavy operator path explicitly instead
         # (parallel_groups before each expensive checkpoint/pipeline);
         # with the pins in place a 16k/64k/1m A/B showed the low floor
         # only added task-scheduling overhead on the many small tier
-        # cascades (rollup_1d +0.5 s at sf0.1), so the default stays
-        # Spark's. The knob remains for deployments with unpinned
-        # CPU-dense small-byte stages.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("ROVE_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        # cascades (rollup_1d +0.5 s at sf0.1). A deployment with
+        # unpinned CPU-dense small-byte stages can set it through
+        # ``extra_conf``.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

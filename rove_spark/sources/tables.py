@@ -14,20 +14,23 @@ On a real cluster, swap ``PartitionedTable`` for ``df.writeTo(table)`` — the
 engine only uses the narrow interface below. Reference analog: rove has no
 persistent sink at all (results stream over gRPC, ``src/server.rs:104-123``);
 persistent tiered storage is a north_rule addition.
+
+The layout is fixed by the store, not chosen per call site: every table
+is partitioned by ``day`` (``yyyy-MM-dd``) first — increment tables add
+``batch`` below it — and every write is re-clustered onto its partition
+values, so a write emits one file per partition value.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
-import logging
 import time
 import uuid
 from collections.abc import Sequence
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
-
-log = logging.getLogger(__name__)
 
 # an observation and its aggregate columns, as ``DataFrame.observe`` takes them
 Observe = tuple[Observation, Sequence[Column]]
@@ -39,6 +42,20 @@ def _observed(df: DataFrame, observe: Observe | None) -> DataFrame:
         return df
     observation, columns = observe
     return df.observe(observation, *columns)
+
+
+def check_day(cutoff: str) -> None:
+    """Raise ``ValueError`` unless ``cutoff`` is a real ``YYYY-MM-DD``
+    date. Retention compares day partitions as strings, which is
+    chronological only in this exact form: ``"2024-1-5"`` would sort
+    after every day from 2024-01-01 to 2024-09-30 and expire them all."""
+    try:
+        ok = datetime.date.fromisoformat(cutoff).isoformat() == cutoff
+    except (TypeError, ValueError):
+        ok = False
+    if not ok:
+        raise ValueError(f"retention cutoff {cutoff!r} is not a YYYY-MM-DD date")
+
 
 TESTDATA_TABLES = [
     "region",
@@ -141,9 +158,7 @@ class PartitionedTable:
         into tasks×partitions tiny files (measured 630 files for 30 day
         partitions at sf0.1). One exchange on the partition columns
         bounds it at one file per partition value (the Iceberg
-        ``write.distribution-mode=hash`` behavior); callers needing
-        more write parallelism per partition pre-split like
-        ``retention_compact`` does (day, hash(series) % files_per_day)."""
+        ``write.distribution-mode=hash`` behavior)."""
         from pyspark.sql import functions as F
 
         return df.repartition(*[F.col(c) for c in self.partition_by])
@@ -152,22 +167,18 @@ class PartitionedTable:
         self,
         df: DataFrame,
         lineage: dict | None = None,
-        cluster: bool = True,
         observe: Observe | None = None,
     ) -> str:
         """Replace exactly the partitions present in ``df`` (dynamic
         overwrite — Iceberg ``overwritePartitions`` semantics). Returns the
-        snapshot id. ``cluster=False`` skips the pre-write re-cluster for
-        callers that already repartitioned onto their own write layout
-        (e.g. retention_compact's (day, hash(series) % files_per_day)).
-        ``observe=(observation, columns)`` collects those aggregates over
-        the written rows in the write itself; read them with
-        ``observation.get`` once this returns. It sits above the
+        snapshot id. ``observe=(observation, columns)`` collects those
+        aggregates over the written rows in the write itself; read them
+        with ``observation.get`` once this returns. It sits above the
         re-cluster exchange, in the write's result stage: Spark applies a
         result stage's accumulator updates exactly once, where a retried
         shuffle-map task could count its rows twice."""
         (
-            _observed(self._cluster_for_write(df) if cluster else df, observe)
+            _observed(self._cluster_for_write(df), observe)
             .write.mode("overwrite")
             .partitionBy(*self.partition_by)
             .option("partitionOverwriteMode", "dynamic")
@@ -184,35 +195,30 @@ class PartitionedTable:
         )
         return snap
 
-    def append(self, df: DataFrame, lineage: dict | None = None, cluster: bool = True) -> str:
-        (self._cluster_for_write(df) if cluster else df).write.mode(
-            "append"
-        ).partitionBy(*self.partition_by).parquet(str(self.path))
+    def append(self, df: DataFrame, lineage: dict | None = None) -> str:
+        self._cluster_for_write(df).write.mode("append").partitionBy(
+            *self.partition_by
+        ).parquet(str(self.path))
         snap = uuid.uuid4().hex[:12]
         self._commit_manifest({"snapshot_id": snap, "operation": "append", "lineage": lineage or {}})
         return snap
 
-    def partition_days(self, day_col: str = "day") -> list[str]:
-        """Partition values currently on disk — a METADATA read (directory
-        listing), never a data scan."""
+    def partition_days(self) -> list[str]:
+        """Values of the leading (day) partition column currently on disk
+        — a METADATA read (directory listing), never a data scan."""
         if not self.path.exists():
             return []
-        return sorted(
-            p.name.split("=", 1)[1] for p in self.path.glob(f"{day_col}=*")
-        )
+        day = self.partition_by[0]
+        return sorted(p.name.split("=", 1)[1] for p in self.path.glob(f"{day}=*"))
 
-    def expire_days_before(
-        self, cutoff: str, day_col: str = "day", lineage: dict | None = None
-    ) -> int:
-        """Retention: drop every ``day_col=<val>`` partition with
-        ``val < cutoff`` (lexicographic ≡ chronological for yyyy-MM-dd).
-        Partition-level delete, no data rewrite."""
-        dirs = [
-            f"{day_col}={d}" for d in self.partition_days(day_col) if d < cutoff
-        ]
-        return self.drop_partitions(
-            dirs, lineage={**(lineage or {}), "retention_cutoff": cutoff}
-        )
+    def expire_days_before(self, cutoff: str) -> int:
+        """Retention: drop every day partition before ``cutoff``, a
+        ``YYYY-MM-DD`` date (``check_day``), for which string order is
+        chronological. Partition-level delete, no data rewrite."""
+        check_day(cutoff)
+        day = self.partition_by[0]
+        dirs = [f"{day}={d}" for d in self.partition_days() if d < cutoff]
+        return self.drop_partitions(dirs, lineage={"retention_cutoff": cutoff})
 
     def drop_partitions(self, predicate_dirs: list[str], lineage: dict | None = None) -> int:
         """Retention expiry: drop whole partition directories (cheap
@@ -282,34 +288,33 @@ class IcebergTable:
         df.writeTo(self.name).append()
         return self._record_lineage(lineage)
 
-    def partition_days(self, day_col: str = "day") -> list[str]:
-        """Partition values from Iceberg's partitions metadata table — a
-        metadata read, no data scan."""
+    def partition_days(self) -> list[str]:
+        """Leading (day) partition values from Iceberg's partitions
+        metadata table — a metadata read, no data scan."""
+        day = self.partition_by[0]
         rows = self.spark.sql(
-            f"SELECT DISTINCT partition.{day_col} AS d FROM {self.name}.partitions"
+            f"SELECT DISTINCT partition.{day} AS d FROM {self.name}.partitions"
         ).collect()
         return sorted(str(r.d) for r in rows)
 
-    def expire_days_before(
-        self, cutoff: str, day_col: str = "day", lineage: dict | None = None
-    ) -> int:
+    def expire_days_before(self, cutoff: str) -> int:
         """Partition-level retention via Iceberg metadata delete: a DELETE
         whose predicate aligns with partition boundaries drops whole
         partitions without rewriting data files. Returns the DROPPED
         PARTITION count — the same unit as the parquet shim (callers like
         ``run_job`` surface it as ``result['expired']``). The count reads
         the pre-delete snapshot; a writer racing between count and DELETE
-        can skew the number (the DELETE itself is snapshot-isolated)."""
+        can skew the number (the DELETE itself is snapshot-isolated).
+        ``cutoff`` must be a ``YYYY-MM-DD`` date (``check_day``), which
+        also makes it safe to splice into the DELETE."""
+        check_day(cutoff)
+        day = self.partition_by[0]
         n_parts = (
-            self.read()
-            .filter(f"{day_col} < '{cutoff}'")
-            .select(day_col)
-            .distinct()
-            .count()
+            self.read().filter(f"{day} < '{cutoff}'").select(day).distinct().count()
         )
-        self.spark.sql(f"DELETE FROM {self.name} WHERE {day_col} < '{cutoff}'")
+        self.spark.sql(f"DELETE FROM {self.name} WHERE {day} < '{cutoff}'")
         if n_parts:
-            self._record_lineage({**(lineage or {}), "retention_cutoff": cutoff})
+            self._record_lineage({"retention_cutoff": cutoff})
         return n_parts
 
     @property
@@ -354,17 +359,6 @@ def _derive_table_name(path: str) -> str:
     return f"rove.db.{leaf}_{digest}"
 
 
-def _derive_table_name_legacy(name_path: str) -> str:
-    """Pre-round-5 identifier (leaf only, no path digest) — kept solely
-    for the ``open_table`` migration probe."""
-    import re as _re
-
-    leaf = _re.sub(r"[^A-Za-z0-9_]", "_", Path(name_path).name)
-    if not leaf or not (leaf[0].isalpha() or leaf[0] == "_"):
-        leaf = "t_" + leaf
-    return "rove.db." + leaf
-
-
 def open_table(spark: SparkSession, path_or_name: str | Path, partition_by: list[str]):
     """Tier-table factory: a real ``IcebergTable`` when the session carries
     the probe-gated ``rove`` Iceberg catalog, else the parquet shim. The
@@ -373,53 +367,10 @@ def open_table(spark: SparkSession, path_or_name: str | Path, partition_by: list
 
     Only an explicit ``rove.``-qualified name is taken verbatim; anything
     else (absolute/relative paths, even ones containing dots) derives a
-    sanitized ``rove.db.<leaf>_<md5(path)[:8]>`` identifier.
-
-    Migration: identifiers before round 5 were plain ``rove.db.<leaf>``
-    (no path digest). A legacy table carries no marker of which out_dir
-    created it, so silently adopting it could cross-wire two out_dirs
-    sharing a leaf name — the exact clobber the digest prevents. If a
-    table exists under the legacy name and none under the digest name,
-    open_table therefore FAILS LOUDLY and demands an explicit choice:
-    set ``ROVE_ADOPT_LEGACY_TABLES=1`` to adopt the legacy table (single
-    pre-round-5 deployment), or rename it to the digest identifier.
-    Proceeding silently either way loses data: adopting can mix
-    out_dirs; ignoring pairs an old checkpoint manifest with a fresh
-    empty table and permanently drops the done days from the tier."""
-    import os
-
+    sanitized ``rove.db.<leaf>_<md5(path)[:8]>`` identifier."""
     name = str(path_or_name)
     if spark.conf.get("spark.sql.catalog.rove", None):
         if not name.startswith("rove."):
             name = _derive_table_name(name)
-            legacy = _derive_table_name_legacy(name_path=str(path_or_name))
-            try:
-                legacy_exists = spark.catalog.tableExists(legacy)
-                digest_exists = spark.catalog.tableExists(name)
-            except AttributeError:
-                legacy_exists = digest_exists = False  # session double (tests)
-            if legacy_exists and not digest_exists:
-                if os.environ.get("ROVE_ADOPT_LEGACY_TABLES") == "1":
-                    log.warning(
-                        "open_table: ROVE_ADOPT_LEGACY_TABLES=1 — adopting "
-                        "pre-round-5 identifier %s for %s (digest name %s). "
-                        "Rename the table to finish the migration.",
-                        legacy,
-                        path_or_name,
-                        name,
-                    )
-                    name = legacy
-                else:
-                    raise RuntimeError(
-                        f"open_table: legacy table {legacy} exists but digest "
-                        f"table {name} does not. A legacy identifier carries no "
-                        "record of its out_dir, so adopting it automatically "
-                        "could cross-wire out_dirs sharing a leaf name, while "
-                        "ignoring it would resume against an empty table with "
-                        "a manifest claiming days done. Set "
-                        "ROVE_ADOPT_LEGACY_TABLES=1 to adopt it (safe for a "
-                        f"single pre-upgrade deployment), or rename {legacy} "
-                        f"to {name}."
-                    )
         return IcebergTable(spark, name, partition_by)
     return PartitionedTable(path_or_name, partition_by)

@@ -331,7 +331,7 @@ def test_run_job_param_change_invalidates(tmp_path, spark):
 def test_day_enumeration_from_partition_listing(tmp_path, spark):
     """Day-partitioned input: run_job enumerates days from the directory
     listing (metadata-only) and produces the same tiers as the scan path."""
-    from rove_spark.plans.engine import list_day_partitions
+    from rove_spark.sources.tables import PartitionedTable
 
     eng = _engine(spark)
     df = _signals(spark)
@@ -339,9 +339,9 @@ def test_day_enumeration_from_partition_listing(tmp_path, spark):
     inp = str(tmp_path / "inp")
     df.withColumn("day", dcol).write.partitionBy("day").parquet(inp)
     days = sorted(r.d for r in df.select(dcol.alias("d")).distinct().collect())
-    assert sorted(list_day_partitions(inp)) == days
-    assert list_day_partitions(str(tmp_path / "nope")) is None
-    assert list_day_partitions(str(tmp_path)) is None  # no day=* dirs
+    assert PartitionedTable(inp, ["day"]).partition_days() == days
+    assert PartitionedTable(str(tmp_path / "nope"), ["day"]).partition_days() == []
+    assert PartitionedTable(str(tmp_path), ["day"]).partition_days() == []  # no day=* dirs
 
     back = spark.read.parquet(inp).drop("day")
     r1 = eng.run_job(back, "ta", tmp_path / "listed", input_fingerprint="fp1", input_path=inp)
@@ -354,6 +354,30 @@ def test_day_enumeration_from_partition_listing(tmp_path, spark):
         ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
         cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
         assert ca == cb, tier
+
+
+def test_run_job_malformed_retention_cutoff_raises(tmp_path, spark):
+    """Retention compares day partitions as strings: a cutoff that is not
+    YYYY-MM-DD ("2024-1-5" sorts after every day from 2024-01-01 to
+    2024-09-30) must raise before anything is written or dropped, not
+    expire the wrong days."""
+    eng = _engine(spark)
+    df = _signals(spark)
+    out = tmp_path / "out"
+    eng.run_job(df, "ta", out, input_fingerprint="fp1")
+
+    def day_dirs():
+        return sorted(p.name for p in (out / "tier_1m").glob("day=*"))
+
+    before = day_dirs()
+    assert before
+    with pytest.raises(ValueError, match="YYYY-MM-DD"):
+        eng.run_job(df, "ta", out, input_fingerprint="fp1", retention={"1m": "2024-1-5"})
+    assert day_dirs() == before
+    # a new input day must not be written either: the policy fails first
+    with pytest.raises(ValueError, match="YYYY-MM-DD"):
+        eng.run_job(df, "ta", tmp_path / "fresh", input_fingerprint="fp1", retention={"raw": "2024-01-5"})
+    assert not (tmp_path / "fresh").exists()
 
 
 def test_homebrew_custom_check(spark, tmp_path):

@@ -79,11 +79,10 @@ def test_iceberg_conf_merge_preserves_caller_entries():
     assert plain["spark.sql.extensions"].endswith("IcebergSparkSessionExtensions")
 
 
-def test_open_table_prefers_existing_legacy_name():
-    """Migration guard (round-5 review): a table created under the
-    pre-digest naming scheme must keep being used — otherwise a resumed
-    job pairs an old checkpoint manifest with a brand-new empty table
-    and silently drops the done days from the tier."""
+def test_open_table_uses_digest_name_only():
+    """Tables are named by the digest of their path alone: a table under
+    the pre-digest leaf-only name (``rove.db.tiers_1d``) is neither
+    adopted nor an error, because no Iceberg runtime ever created one."""
 
     class _FakeConf:
         def get(self, k, d=None):
@@ -102,24 +101,12 @@ def test_open_table_prefers_existing_legacy_name():
         def __init__(self, existing):
             self.catalog = _FakeCatalog(existing)
 
-    import pytest
-
-    # legacy exists, digest does not → HARD ERROR (a legacy identifier
-    # carries no out_dir record; silent adoption could cross-wire
-    # out_dirs, silent ignore pairs an old manifest with an empty table)
-    with pytest.raises(RuntimeError, match="ROVE_ADOPT_LEGACY_TABLES"):
-        open_table(_FakeSpark({"rove.db.tiers_1d"}), "/tmp/tiers-1d", ["day"])
-    # ... unless adoption is explicitly opted into
-    import os
-
-    os.environ["ROVE_ADOPT_LEGACY_TABLES"] = "1"
-    try:
-        t = open_table(_FakeSpark({"rove.db.tiers_1d"}), "/tmp/tiers-1d", ["day"])
-        assert t.name == "rove.db.tiers_1d"
-    finally:
-        del os.environ["ROVE_ADOPT_LEGACY_TABLES"]
-    # digest exists → digest wins even if legacy also exists
     digest_name = open_table(_FakeSpark(set()), "/tmp/tiers-1d", ["day"]).name
+    assert digest_name != "rove.db.tiers_1d"
+    # a leaf-only name on the catalog changes nothing
+    t1 = open_table(_FakeSpark({"rove.db.tiers_1d"}), "/tmp/tiers-1d", ["day"])
+    assert t1.name == digest_name
+    # digest exists → digest even if the leaf-only name also exists
     t2 = open_table(
         _FakeSpark({"rove.db.tiers_1d", digest_name}), "/tmp/tiers-1d", ["day"]
     )
@@ -127,3 +114,37 @@ def test_open_table_prefers_existing_legacy_name():
     # neither exists (fresh deployment) → digest name
     t3 = open_table(_FakeSpark(set()), "/tmp/tiers-1d", ["day"])
     assert t3.name == digest_name
+
+
+def test_table_classes_share_one_surface():
+    """The engine swaps ``PartitionedTable`` for ``IcebergTable`` by
+    config alone (``open_table``), so every method it calls must take the
+    same parameters on both; a keyword only the shim accepts is a
+    TypeError that only an Iceberg session would hit."""
+    import inspect
+
+    for name in (
+        "read", "exists", "overwrite_partitions", "append",
+        "partition_days", "expire_days_before",
+    ):
+        shim = list(inspect.signature(getattr(PartitionedTable, name)).parameters)
+        ice = list(inspect.signature(getattr(IcebergTable, name)).parameters)
+        assert shim == ice, name
+
+
+def test_iceberg_expire_rejects_malformed_cutoff():
+    """The cutoff is spliced into Iceberg's DELETE; anything but a real
+    YYYY-MM-DD date is refused before any SQL runs."""
+    import pytest
+
+    class _NoSql:
+        def sql(self, q):
+            raise AssertionError(f"ran SQL for a malformed cutoff: {q}")
+
+        def table(self, name):
+            raise AssertionError("read the table for a malformed cutoff")
+
+    t = IcebergTable(_NoSql(), "rove.db.t", ["day"])
+    for bad in ("2024-1-5", "2024-01-05' OR '1'='1", "2024-02-30", "20240105"):
+        with pytest.raises(ValueError, match="YYYY-MM-DD"):
+            t.expire_days_before(bad)

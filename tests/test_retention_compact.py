@@ -76,8 +76,8 @@ def test_compact_chunk_files_bounded(tmp_path, spark):
     """The chunk write is re-clustered day-aligned: without it the encode
     stage's mixed-day partitions emit one tiny file per (task, day) —
     measured 1,192 files for 30 day-partitions at sf0.01, the small-files
-    pathology a cold tier exists to avoid. files_per_day bounds the count
-    exactly: <= days * files_per_day data files on disk."""
+    pathology a cold tier exists to avoid. At most one data file per
+    expired day lands on disk."""
     raw, days = _raw_table(spark, tmp_path / "raw")
     cutoff = days[-1]  # expire all but the last day
     n_expired = len(days) - 1
@@ -88,21 +88,6 @@ def test_compact_chunk_files_bounded(tmp_path, spark):
     )
     files = list((tmp_path / "cold").rglob("*.parquet"))
     assert 0 < len(files) <= n_expired
-
-    raw2, days2 = _raw_table(spark, tmp_path / "raw2")
-    chunks2 = PartitionedTable(tmp_path / "cold2", ["day"])
-    retention_compact(
-        spark, raw2, chunks2, days2[-1], value_col="text_len",
-        series_col="conv_id", files_per_day=4,
-    )
-    files2 = list((tmp_path / "cold2").rglob("*.parquet"))
-    assert 0 < len(files2) <= (len(days2) - 1) * 4
-
-    with pytest.raises(ValueError, match="files_per_day"):
-        retention_compact(
-            spark, raw2, chunks2, days2[-1], value_col="text_len",
-            series_col="conv_id", files_per_day=0,
-        )
 
 
 def test_compact_kill_between_write_and_drop_resumes(tmp_path, spark):

@@ -5,11 +5,12 @@ contract, achieved by keeping additive stats in the integer domain."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rove_spark.operators.rollup import (
     build_tiers,
-    retention_expire,
+    retention_compact,
     rollup_from_raw,
     with_rates,
 )
@@ -68,12 +69,33 @@ def test_retention_expiry(tmp_path, spark):
     days = sorted(r.day for r in t1d.select("day").distinct().collect())
     assert len(days) >= 2
     cutoff = days[1]
-    dropped = retention_expire(table, older_than_day=cutoff, day_col="day")
+    dropped = table.expire_days_before(cutoff)
     assert dropped >= 1
     remaining = table.read(spark).select("day").distinct().collect()
     assert all(str(r.day) >= cutoff for r in remaining)
     # manifest recorded the expiry
     assert any(s["operation"] == "drop_partitions" for s in table.snapshots)
+
+
+def test_retention_rejects_malformed_cutoff(tmp_path, spark):
+    """Day partitions compare as strings, chronological only for
+    YYYY-MM-DD: "2024-1-5" would expire every day up to 2024-09-30.
+    Both retention entry points refuse such a cutoff and drop nothing."""
+    df = synthetic_transcripts(spark, n_conv=5, avg_turns=20)
+    t1d = build_tiers(df)["1d"].withColumn("day", F.date_format("bucket_ts", "yyyy-MM-dd"))
+    table = PartitionedTable(tmp_path / "tier_1d", ["day"])
+    table.overwrite_partitions(t1d)
+    days = table.partition_days()
+    for bad in ("2024-1-5", "2024-01-5", "2024-13-01", "2024-01-01T00:00", ""):
+        with pytest.raises(ValueError, match="YYYY-MM-DD"):
+            table.expire_days_before(bad)
+        with pytest.raises(ValueError, match="YYYY-MM-DD"):
+            retention_compact(
+                spark, table, PartitionedTable(tmp_path / "cold", ["day"]), bad,
+                value_col="n_turns",
+            )
+    assert table.partition_days() == days
+    assert not (tmp_path / "cold").exists()
 
 
 def test_hll_sketches_cascade(spark):

@@ -851,8 +851,6 @@ def _grouped_spatial(
             }
         )
 
-    from rove_spark.operators.util import parallel_groups
-
     return parallel_groups(grouped, *group_keys).groupBy(*group_keys).applyInPandas(
         run, f"series_id string, ts timestamp, {flag_name} tinyint"
     )

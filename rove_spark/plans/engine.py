@@ -86,11 +86,19 @@ class Engine:
     def _apply_step(
         self,
         df: DataFrame,
+        src: DataFrame,
         step: PipelineStep,
         value_col: str,
         series_col: str,
         order_cols: Sequence[str],
     ) -> DataFrame:
+        """``df`` plus ``step``'s flag column. ``df`` is the wide frame the
+        earlier steps built; ``src`` is the pipeline's input. Window, range,
+        aggregate-join and custom checks extend ``df``. The spatial checks
+        (buddy_check, sct) compute their flags from ``src`` and only the
+        flags are joined onto ``df``: the earlier steps' joins never reach
+        their inputs, so each spatial check runs once, and the grouped-UDF
+        ones share one exchange of ``src``."""
         p = step.params
         out = flag_col(step.name)
         common = dict(series_col=series_col, order_cols=order_cols, out_col=out)
@@ -124,7 +132,7 @@ class Engine:
             # reference config uses vector params with scalar broadcast
             # (harness.rs:155-159); we accept scalars directly
             flags = SP.buddy_check(
-                df,
+                src,
                 value_col,
                 radius=_scalar(p.get("radii", p.get("radius"))),
                 num_min=int(_scalar(p.get("nums_min", p.get("num_min")))),
@@ -140,7 +148,7 @@ class Engine:
             return _join_spatial_flags(df, flags, series_col, order_cols[0])
         if step.check == "sct":
             flags = SP.sct(
-                df,
+                src,
                 value_col,
                 series_col=series_col,
                 ts_col=order_cols[0],
@@ -170,11 +178,15 @@ class Engine:
         series_col: str = "conv_id",
         order_cols: Sequence[str] = ("ts",),
     ) -> DataFrame:
+        """``df`` plus one flag column per step of ``pipeline_name``. Every
+        step reads ``df``: the spatial checks compute their flags from it
+        directly, and the wide frame only receives those flags (see
+        ``_apply_step``)."""
         if pipeline_name not in self.pipelines:
             raise KeyError(f"TestNotInPipelines: {pipeline_name}")
         out = df
         for step in self.pipelines[pipeline_name].steps:
-            out = self._apply_step(out, step, value_col, series_col, order_cols)
+            out = self._apply_step(out, df, step, value_col, series_col, order_cols)
         return out
 
     def flag_columns(self, pipeline_name: str) -> list[str]:
@@ -637,8 +649,9 @@ def _scalar(v):
 
 def _join_spatial_flags(df: DataFrame, flags: DataFrame, series_col: str, ts_col: str) -> DataFrame:
     """Attach a spatial check's (series_id, ts, flag) output back onto the
-    wide frame — equi-join on the shared keys (sort-merge/shuffle-hash by
-    Catalyst; both sides already hash on the same keys)."""
+    wide frame — left equi-join on the shared keys. At request size AQE
+    broadcasts the flags; larger inputs get a sort-merge or shuffle-hash
+    join."""
     f = flags.withColumnRenamed("series_id", "_sp_id").withColumnRenamed("ts", "_sp_ts")
     joined = df.join(
         f,

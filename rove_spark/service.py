@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import threading
 from collections.abc import Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -37,6 +38,8 @@ from pyspark.sql import functions as F
 from rove_spark.functions.durations import Duration, parse_iso8601
 from rove_spark.plans.engine import Engine, melt_flags
 from rove_spark.sources.switch import DataSwitch, SpaceSpec, TimeSpec
+
+log = logging.getLogger(__name__)
 
 
 class ValidateError(ValueError):
@@ -68,6 +71,8 @@ def _parse_ts(v) -> dt.datetime:
 
 def parse_validate_request(body: dict) -> dict:
     """ValidateRequest (proto fields 1-10) → validated python spec."""
+    if not isinstance(body, dict):
+        raise ValidateError(f"request body must be a JSON object, not {type(body).__name__}")
     try:
         data_source = body["data_source"]
         start = _parse_ts(body["start_time"])
@@ -76,9 +81,12 @@ def parse_validate_request(body: dict) -> dict:
     except KeyError as e:
         raise ValidateError(f"missing required field: {e}") from e
     resolution: Duration | None = None
-    if body.get("time_resolution"):
+    res = body.get("time_resolution")
+    if res is not None and not isinstance(res, str):
+        raise ValidateError(f"time_resolution must be an ISO-8601 string, not {res!r}")
+    if res:
         try:
-            resolution = parse_iso8601(body["time_resolution"])
+            resolution = parse_iso8601(res)
         except ValueError as e:
             raise ValidateError(str(e)) from e
     one, polygon, all_ = body.get("one"), body.get("polygon"), body.get("all")
@@ -190,26 +198,38 @@ class RoveService:
         long = melt_flags(flagged, checks, series_col=self.series_col, ts_col=self.ts_col)
         # request-scoped collect, grouped per test — the same assembly the
         # reference does per streamed message (server.rs:104-123)
-        rows = long.orderBy("test", "identifier", "time").collect()
         by_test: dict[str, list] = {c: [] for c in checks}
-        for r in rows:
-            by_test[r.test].append(
-                {
-                    "time": r.time.isoformat() + "Z",
-                    "identifier": str(r.identifier),
-                    "flag": int(r.flag),
-                }
-            )
+        for r in long.collect():
+            by_test[r.test].append(r)
         for c in checks:  # stream one ValidateResponse per test, in order
-            yield {"test": c, "results": by_test[c]}
+            # sorted on the driver, not by a Spark orderBy (a sampling job
+            # and an exchange per request), into the order
+            # orderBy("identifier", "time") gives: ascending, nulls first.
+            # Python's str order is code-point order, which is Spark's
+            # UTF-8 byte order.
+            rows = sorted(
+                by_test[c],
+                key=lambda r: (r.identifier is not None, r.identifier, r.time is not None, r.time),
+            )
+            yield {
+                "test": c,
+                "results": [
+                    {
+                        "time": r.time.isoformat() + "Z",
+                        "identifier": str(r.identifier),
+                        "flag": int(r.flag),
+                    }
+                    for r in rows
+                ],
+            }
 
 
 def serve(service: RoveService, host: str = "127.0.0.1", port: int = 0):
     """Start the HTTP transport on a daemon thread; returns the server
     (``server.server_address`` has the bound port; ``shutdown()`` stops
     it). POST /validate → chunked NDJSON; errors → 400 (invalid request)
-    / 404 (unknown source or pipeline), mirroring the reference's gRPC
-    status split."""
+    / 404 (unknown source or pipeline) / 500 (any other failure, named by
+    its exception class), mirroring the reference's gRPC status split."""
 
     class Handler(BaseHTTPRequestHandler):
         # chunked transfer framing is an HTTP/1.1 construct — the default
@@ -220,21 +240,37 @@ def serve(service: RoveService, host: str = "127.0.0.1", port: int = 0):
         def log_message(self, *a):  # quiet test output
             pass
 
+        def fail(self, code: int, message: str):
+            # the status line carries the first line of the message,
+            # latin-1 only; the error body carries all of it
+            reason = (message.splitlines() or [""])[0][:200]
+            self.send_error(code, reason.encode("latin-1", "replace").decode("latin-1"), message)
+
         def do_POST(self):
             if self.path != "/validate":
                 self.send_error(404, "unknown endpoint")
                 return
+            length = self.headers.get("Content-Length", "0")
+            if not (length.isascii() and length.isdigit()):
+                self.fail(400, f"invalid Content-Length: {length!r}")
+                return
             try:
-                n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n) or b"{}")
+                body = json.loads(self.rfile.read(int(length)) or b"{}")
                 responses = service.validate(body)
                 first = next(responses, None)
             except ValidateError as e:
                 code = 404 if ("InvalidDataSource" in str(e) or "TestNotInPipelines" in str(e)) else 400
-                self.send_error(code, str(e))
+                self.fail(code, str(e))
                 return
-            except json.JSONDecodeError as e:
-                self.send_error(400, f"invalid JSON: {e}")
+            except (json.JSONDecodeError, UnicodeDecodeError) as e:
+                self.fail(400, f"invalid JSON: {e}")
+                return
+            except Exception as e:
+                # an engine failure (a failed Spark job, a bug in a check)
+                # still answers before any chunk is sent: never drop the
+                # connection without a status
+                log.exception("validate request failed")
+                self.fail(500, f"{type(e).__name__}: {e}")
                 return
             self.send_response(200)
             self.send_header("Content-Type", "application/x-ndjson")

@@ -137,6 +137,101 @@ num_mx = 20
         _engine(spark, toml=toml).run_pipeline(df, "ta", value_col="text_len")
 
 
+SPATIAL_PIPE = """
+[[step]]
+name = "buddy_check"
+[step.buddy_check]
+radius = 60000.0
+num_min = 3
+threshold = 2.0
+num_iterations = 2
+
+[[step]]
+name = "sct"
+[step.sct]
+num_min = 5
+num_max = 30
+inner_radius = 50000.0
+outer_radius = 120000.0
+num_iterations = 2
+pos = 2.0
+neg = 2.0
+"""
+
+
+def _stations(spark, n=16, steps=3, extra_rows=()):
+    """``n`` stations ~50 km apart at ``steps`` timestamps, one planted
+    outlier per timestamp; ``extra_rows`` are appended as given."""
+    import datetime as dt
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    lat, lon = rng.uniform(59.8, 60.2, n), rng.uniform(9.6, 10.4, n)
+    rows = [
+        (f"s{i:02d}", dt.datetime(2024, 1, 1, k), 5.0 + float(rng.normal(0, 0.4))
+         + (15.0 if i == k else 0.0), float(lat[i]), float(lon[i]), 0.0)
+        for k in range(steps) for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows + list(extra_rows),
+        "conv_id string, ts timestamp, value double, lat double, lon double, elev double",
+    )
+
+
+def _plan_nodes(df):
+    """Node names in ``df``'s executed plan (AQE's final plan once ``df``
+    has run). An Exchange that ``repartition`` placed counts as
+    ``Exchange REPARTITION_BY_NUM``."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes = Counter()
+    for line in plan.toString().splitlines():
+        name, rest = re.match(r"[\s:+-]*(?:\*\(\d+\) )?(\w+)(.*)", line).groups()
+        if name == "Exchange" and "REPARTITION_BY_NUM" in rest:
+            name = "Exchange REPARTITION_BY_NUM"
+        nodes[name] += 1
+    return nodes
+
+
+def test_spatial_checks_run_once_on_one_shared_exchange(spark):
+    """buddy_check (kernel path: num_iterations=2) and sct both read the
+    pipeline input, so the executed plan runs each grouped UDF once and
+    both read one repartition(ts) exchange, the second time reused. Fed
+    the cumulative frame, sct's input re-ran buddy_check's UDF (3 UDF
+    nodes)."""
+    out = _engine(spark, toml=SPATIAL_PIPE).run_pipeline(_stations(spark), "ta", value_col="value")
+    assert len(out.collect()) == 16 * 3
+    nodes = _plan_nodes(out)
+    assert nodes["FlatMapGroupsInPandas"] == 2
+    assert nodes["Exchange REPARTITION_BY_NUM"] == 1
+    assert nodes["ReusedExchange"] == 1
+
+
+def test_spatial_check_on_duplicate_keys_reads_the_input(spark):
+    """With a duplicated (series, ts) key, sct through the pipeline flags
+    what sct alone flags on the input. This is the one intended change
+    from feeding sct the cumulative frame: there it saw the row copies
+    that buddy_check's flag join makes for a duplicated key. (The join
+    still multiplies the duplicated key's output rows.)"""
+    import datetime as dt
+
+    from rove_spark.operators import spatial as SP
+
+    h1 = dt.datetime(2024, 1, 1, 1)
+    df = _stations(spark, extra_rows=[("dup", h1, 9.0, 60.0, 10.0, 0.0),
+                                      ("dup", h1, 1.0, 60.0, 10.0, 0.0)])
+    out = _engine(spark, toml=SPATIAL_PIPE).run_pipeline(df, "ta", value_col="value")
+    got = {tuple(r) for r in out.select("conv_id", "ts", "flag_sct").distinct().collect()}
+    params = parse_pipeline("ta", SPATIAL_PIPE).steps[1].params
+    alone = {tuple(r) for r in SP.sct(df, "value", **params).distinct().collect()}
+    assert got == alone
+
+
 def test_melt_flags_long_format(spark):
     eng = _engine(spark)
     out = eng.run_pipeline(_signals(spark), "ta", value_col="text_len")

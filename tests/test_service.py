@@ -5,14 +5,19 @@ dispatch, per-test streaming, HTTP transport + error-status split
 from __future__ import annotations
 
 import datetime as dt
+import http.client
 import json
 import urllib.error
 import urllib.request
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from rove_spark.config import Pipeline, PipelineStep
-from rove_spark.plans.engine import Engine
+from rove_spark.model import Flag
+from rove_spark.operators import spatial as SP
+from rove_spark.plans.engine import Engine, melt_flags
 from rove_spark.service import (
     RoveService,
     ValidateError,
@@ -62,6 +67,14 @@ def test_parse_request_errors():
         parse_validate_request({"data_source": "mem"})
     with pytest.raises(ValidateError, match="invalid ISO-8601"):
         parse_validate_request(_request(time_resolution="garbage"))
+
+
+def test_parse_request_rejects_non_object_body_and_non_string_resolution():
+    for body in ([], "qc", 5, None):
+        with pytest.raises(ValidateError, match="JSON object"):
+            parse_validate_request(body)
+    with pytest.raises(ValidateError, match="time_resolution"):
+        parse_validate_request(_request(time_resolution=5))
 
 
 # ------------------------------------------------------------ end-to-end --
@@ -194,3 +207,143 @@ def test_malformed_timestamp_and_backing_schema_are_400s(service, spark):
     service.switch.register("badcols", lambda: bad)
     with pytest.raises(ValidateError, match="schema mismatch"):
         list(service.validate(_request(backing_sources=["badcols"])))
+
+
+# ------------------------------------------------- HTTP failure statuses --
+
+
+def _post(server, payload: bytes, content_length: str | None = None):
+    """POST /validate with a hand-set Content-Length; (status, reason)."""
+    host, port = server.server_address[:2]
+    conn = http.client.HTTPConnection(host, port, timeout=120)
+    try:
+        conn.putrequest("POST", "/validate")
+        conn.putheader("Content-Length", content_length or str(len(payload)))
+        conn.endheaders(payload)
+        resp = conn.getresponse()
+        resp.read()
+        return resp.status, resp.reason
+    finally:
+        conn.close()
+
+
+def _check_raises_type_error(df, **kw):
+    raise TypeError("custom check built with a bad argument")
+
+
+def _check_fails_in_job(df, value_col, out_col, **kw):
+    boom = F.udf(lambda v: 1 // 0, "int")
+    return df.withColumn(out_col, boom(F.col(value_col)).cast("tinyint"))
+
+
+def test_http_bad_requests_and_engine_failures_get_a_status(service):
+    """Every failure before the first chunk answers with a status: a body
+    that is not an object, a non-string time_resolution and a bad
+    Content-Length are 400s; an exception from the pipeline (plan-time
+    TypeError, failed Spark job) is a 500 naming the exception class.
+    None of them drops the connection, and the server keeps serving."""
+    engine = Engine(
+        service.engine.spark,
+        pipelines={
+            "qc": service.engine.pipelines["qc"],
+            "plan_error": Pipeline("plan_error", (PipelineStep("p", "raises_type_error"),)),
+            "job_error": Pipeline("job_error", (PipelineStep("j", "fails_in_job"),)),
+        },
+        custom_checks={
+            "raises_type_error": _check_raises_type_error,
+            "fails_in_job": _check_fails_in_job,
+        },
+    )
+    server = serve(RoveService(service.switch, engine))
+    try:
+        assert _post(server, b"[]")[0] == 400
+        assert _post(server, json.dumps(_request(time_resolution=5)).encode())[0] == 400
+        assert _post(server, b"{}", content_length="abc")[0] == 400
+        assert _post(server, b"{}", content_length="-1")[0] == 400
+        status, reason = _post(server, json.dumps(_request(pipeline="plan_error")).encode())
+        assert (status, reason.split(":")[0]) == (500, "TypeError")
+        status, reason = _post(server, json.dumps(_request(pipeline="job_error")).encode())
+        assert (status, reason.split(":")[0]) == (500, "PythonException")
+        assert _post(server, json.dumps(_request()).encode())[0] == 200
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+# ------------------------------- spatial checks read the pipeline input --
+
+BUDDY = {"radius": 60000.0, "num_min": 3, "threshold": 2.0, "num_iterations": 2}
+SCT = {"num_min": 5, "num_max": 30, "inner_radius": 50000.0, "outer_radius": 120000.0,
+       "num_iterations": 2, "pos": 2.0, "neg": 2.0}
+SPATIAL_QC = Pipeline(
+    "spatial_qc",
+    (
+        PipelineStep("step_check", "step_check", {"max": 6.0}),
+        PipelineStep("spike_check", "spike_check", {"max": 6.0}),
+        PipelineStep("flatline_check", "flatline_check", {"max": 2}),
+        PipelineStep("buddy_check", "buddy_check", BUDDY),
+        PipelineStep("sct", "sct", SCT),
+    ),
+)
+# ids whose orderBy order a wrong sort key would break: numeric vs
+# lexicographic ("stn-10" < "stn-9" < "stn-90"), and code point vs UTF-16
+# (U+FF21 sorts before U+1F600 in Spark's UTF-8 byte order)
+STATION_IDS = {
+    "string": ["stn-9", "stn-10", "stn-90", "stn-1", "stn-ø", "stn-\uff21", "stn-\U0001f600",
+               "STN-2", "stn-", "stn-33", "stn-4", "stn-05"],
+    "int": [9, 10, 90, 1, -3, 0, 100, 2, 33, 4, 5, 1000],
+}
+
+
+def _stations(spark, ids, series_type: str):
+    """One row per (station, 10-minute step): unique keys, a planted
+    outlier per step, stations within ~50 km of each other."""
+    rng = np.random.default_rng(11)
+    lat = rng.uniform(59.8, 60.2, len(ids))
+    lon = rng.uniform(9.6, 10.4, len(ids))
+    elev = rng.uniform(0.0, 300.0, len(ids))
+    rows = []
+    for k in range(4):
+        for i, sid in enumerate(ids):
+            v = 5.0 + float(rng.normal(0, 0.4)) + (12.0 if i == (3 * k) % len(ids) else 0.0)
+            rows.append((sid, T0 + dt.timedelta(minutes=10 * k), v,
+                         float(lat[i]), float(lon[i]), float(elev[i])))
+    return spark.createDataFrame(
+        rows,
+        f"conv_id {series_type}, ts timestamp, value double, lat double, lon double, elev double",
+    )
+
+
+@pytest.mark.parametrize("series_type", ["string", "int"])
+def test_validate_spatial_checks_equal_each_check_alone(spark, series_type):
+    """Through RoveService.validate, buddy_check and sct flag exactly what
+    each check alone flags on the fetched input, and every test's results
+    come in the order orderBy("identifier", "time") gives."""
+    df = _stations(spark, STATION_IDS[series_type], series_type)
+    switch = DataSwitch()
+    switch.register("stations", lambda: df)
+    engine = Engine(spark, pipelines={"spatial_qc": SPATIAL_QC})
+    out = list(RoveService(switch, engine).validate(_request(data_source="stations",
+                                                             pipeline="spatial_qc")))
+    checks = [s.name for s in SPATIAL_QC.steps]
+    assert [o["test"] for o in out] == checks
+    got = {o["test"]: [(r["identifier"], r["time"], r["flag"]) for r in o["results"]]
+           for o in out}
+
+    def iso(t):
+        return t.isoformat() + "Z"
+
+    long = melt_flags(engine.run_pipeline(df, "spatial_qc", value_col="value"), checks)
+    for c in checks:
+        ordered = long.filter(F.col("test") == c).orderBy("identifier", "time").collect()
+        assert got[c] == [(str(r.identifier), iso(r.time), r.flag) for r in ordered], c
+        assert len(got[c]) == df.count()
+    alone = {
+        "buddy_check": {(r.series_id, iso(r.ts)): r.flag_buddy_check
+                        for r in SP.buddy_check(df, "value", **BUDDY).collect()},
+        "sct": {(r.series_id, iso(r.ts)): r.flag_sct for r in SP.sct(df, "value", **SCT).collect()},
+    }
+    for c, want in alone.items():
+        assert {(i, t): f for i, t, f in got[c]} == want, c
+    # the planted outliers do fail
+    assert all(Flag.FAIL in {f for i, t, f in got[c]} for c in alone)

@@ -540,6 +540,14 @@ def retention_compact(
     keeps the expired raw signal queryable in compressed chunks
     (``read_cold``), not /dev/null (round-5 verdict item 1).
 
+    Two steps, callable apart: ``compact_raw_days`` encodes and writes
+    the chunks (and marks them in the manifest) without touching the raw
+    table; ``drop_compacted`` then drops the expiring raw days. This
+    function runs one right after the other. ``Engine.run_job`` runs the
+    compact step beside its tier writes, and the drop only once those
+    writes are done, because they read the expiring days as window
+    context until then.
+
     Resume contract (same idempotence class as tier writes):
     - expiring days come from a partition-METADATA listing, never a scan;
     - each day's chunks land via dynamic partition overwrite — a crashed
@@ -563,6 +571,30 @@ def retention_compact(
     (task, day) pair — measured 1,192 files for 30 day-partitions at
     sf0.01, the exact small-files pathology a cold tier exists to avoid.
     Re-clustered, each expired day is one compact file of chunks."""
+    result = compact_raw_days(
+        spark, raw_table, chunk_table, older_than_day, value_col,
+        series_col=series_col, ts_col=ts_col, manifest=manifest,
+        fingerprint=fingerprint,
+    )
+    return drop_compacted(raw_table, result, older_than_day)
+
+
+def compact_raw_days(
+    spark,
+    raw_table,
+    chunk_table,
+    older_than_day: str,
+    value_col: str,
+    series_col: str = "conv_id",
+    ts_col: str = "ts",
+    manifest=None,
+    fingerprint: str = "unfingerprinted",
+) -> dict:
+    """The compact step of ``retention_compact``: encode the raw days
+    before ``older_than_day`` that the manifest has not marked
+    ``compact:<day>``, write their chunks and mark them. Reads the raw
+    table and drops nothing; the result's ``dropped`` stays 0 until
+    ``drop_compacted`` fills it in."""
     from rove_spark.operators.gorilla import compress_series
 
     check_day(older_than_day)
@@ -604,7 +636,15 @@ def retention_compact(
                 lineage={"operation": "retention_compact", "cutoff": older_than_day},
                 metrics={},
             )
-    if expiring:
+    return result
+
+
+def drop_compacted(raw_table, result: dict, older_than_day: str) -> dict:
+    """The drop step of ``retention_compact``: once ``compact_raw_days``
+    returned ``result``, drop every raw day partition before
+    ``older_than_day`` (metadata-only) and record the count in
+    ``result["dropped"]``."""
+    if result["expiring"]:
         result["dropped"] = raw_table.expire_days_before(older_than_day)
     return result
 

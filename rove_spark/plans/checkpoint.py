@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
+import uuid
 from pathlib import Path
 
 from rove_spark import __version__
@@ -32,6 +34,11 @@ def params_hash(params: dict) -> str:
     return hashlib.sha256(json.dumps(params, sort_keys=True, default=str).encode()).hexdigest()[
         :16
     ]
+
+
+# serializes every load-modify-store in this process: a job's compaction
+# thread marks its days while the job itself may mark its own
+_update_lock = threading.Lock()
 
 
 class CheckpointManifest:
@@ -45,7 +52,7 @@ class CheckpointManifest:
 
     def _store(self, doc: dict) -> None:
         self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".tmp")
+        tmp = self.path.with_suffix(f".{uuid.uuid4().hex}.tmp")
         tmp.write_text(json.dumps(doc, indent=1, sort_keys=True))
         tmp.replace(self.path)
 
@@ -60,17 +67,18 @@ class CheckpointManifest:
     def mark_done(
         self, keys: list[str], fingerprint: str, lineage: dict, metrics: dict[str, dict]
     ) -> None:
-        doc = self._load()
         now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        for k in keys:
-            doc["partitions"][k] = {
-                "status": "done",
-                "fingerprint": fingerprint,
-                "completed_at": now,
-                "lineage": {"code_version": __version__, **lineage},
-                "metrics": metrics.get(k, {}),
-            }
-        self._store(doc)
+        with _update_lock:
+            doc = self._load()
+            for k in keys:
+                doc["partitions"][k] = {
+                    "status": "done",
+                    "fingerprint": fingerprint,
+                    "completed_at": now,
+                    "lineage": {"code_version": __version__, **lineage},
+                    "metrics": metrics.get(k, {}),
+                }
+            self._store(doc)
 
     def records(self) -> dict:
         return self._load()["partitions"]

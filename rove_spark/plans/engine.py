@@ -18,10 +18,13 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor, wait
 from datetime import datetime, timedelta
+from functools import partial
 from pathlib import Path
 from time import time
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,11 +32,14 @@ from rove_spark.config import KNOWN_CHECKS, Pipeline, PipelineStep, load_pipelin
 from rove_spark.model import Flag, flag_col
 from rove_spark.operators import checks as C
 from rove_spark.operators import spatial as SP
-from rove_spark.operators.rollup import build_tiers
+from rove_spark.operators.rollup import build_tiers, compact_raw_days, drop_compacted
 from rove_spark.plans.checkpoint import CheckpointManifest, params_hash
 from rove_spark.sources.tables import PartitionedTable, check_day, open_table
 
 log = logging.getLogger(__name__)
+
+# the keys of run_job's retention policy: the raw input and the three tiers
+RETENTION_KEYS = ("raw", "1m", "1h", "1d")
 
 
 class Engine:
@@ -207,10 +213,23 @@ class Engine:
     ) -> dict:
         """Flag + roll up + write all tiers, checkpointed by UTC day.
 
-        One Spark job per tier covers *only* the not-yet-done partitions
-        (input filtered by day), written with dynamic partition overwrite
-        (idempotent), then the manifest marks them done with lineage and
-        per-partition metrics. Safe to kill and re-run.
+        Only the not-yet-done days are computed (input filtered by day)
+        and written with dynamic partition overwrite (idempotent); then
+        the manifest marks them done with lineage and per-day metrics.
+        Safe to kill and re-run.
+
+        Write order: with a ``raw`` retention cutoff, the raw-day
+        compaction (``compact_raw_days``) starts on a driver thread as
+        soon as the todo days are known. ``tier_1m`` is written on the
+        calling thread, since that write fills the cached 1m tier that
+        the 1h/1d cascade reads; then ``tier_1h`` and ``tier_1d`` are
+        written concurrently. Threads carry the caller's job group and
+        tags. Only after every thread has joined are the todo days marked
+        done, the expiring raw days dropped (the tier writes read them as
+        window context until then) and the tier days expired. A failed
+        tier write re-raises with no day marked and nothing dropped; a
+        failed compaction re-raises after the days are marked, with
+        nothing dropped.
 
         The per-day metrics are ``rows_<tier>`` (the day's ``n_turns`` sum
         in that tier, observed in the tier's own write — no tier table is
@@ -219,10 +238,21 @@ class Engine:
         computed days under ``"metrics"`` (empty when nothing was
         computed).
 
-        Every ``retention`` cutoff must be a ``YYYY-MM-DD`` date; a bad one
-        raises ``ValueError`` before anything is written or dropped."""
-        for cutoff in (retention or {}).values():
+        ``retention`` maps ``raw``, ``1m``, ``1h`` or ``1d`` to a
+        ``YYYY-MM-DD`` cutoff; ``raw`` also needs ``input_path``. A policy
+        breaking either rule raises ``ValueError`` before anything is
+        written or dropped."""
+        for key, cutoff in (retention or {}).items():
+            if key not in RETENTION_KEYS:
+                raise ValueError(
+                    f"retention key {key!r} is not one of {', '.join(RETENTION_KEYS)}"
+                )
             check_day(cutoff)
+        if retention and "raw" in retention and input_path is None:
+            raise ValueError(
+                "retention['raw'] compaction requires input_path — "
+                "the day-partitioned raw table to compact"
+            )
         out_dir = Path(out_dir)
         pipe = self.pipelines[pipeline_name]
         lineage_params = {
@@ -277,76 +307,87 @@ class Engine:
             "recomputed_context": reflag,
             "metrics": {},
         }
+        compact = self._raw_compaction(
+            retention, out_dir, input_path, value_col, series_col, ts_col, manifest, fp
+        )
         if not todo:
             # retention still applies on a fully-resumed run — a killed
             # compaction (tiers done, raw drop pending) must finish here,
             # not silently skip to the early return
-            self._apply_retention(
-                retention, result, out_dir, input_path, value_col, series_col,
-                ts_col, manifest, fp,
-            )
+            self._expire(retention, result, out_dir, input_path, compact() if compact else None)
             return result
 
-        # context widening: window checks need neighboring rows, so a
-        # resumed run must see one day of context on each side of the todo
-        # set — otherwise flags at day boundaries differ from a from-scratch
-        # run (lag rows missing ⇒ spurious INCONCLUSIVE/DATA_MISSING).
-        # One day covers any sane leading/trailing requirement (≤ minutes
-        # of context at PT1M); flagged rows outside todo are dropped again
-        # before the rollup so tiers cover exactly the todo partitions.
-        ctx_days = set(todo)
-        for d in todo:
-            base = datetime.strptime(d, "%Y-%m-%d")
-            ctx_days.add((base - timedelta(days=1)).strftime("%Y-%m-%d"))
-            ctx_days.add((base + timedelta(days=1)).strftime("%Y-%m-%d"))
-        work = df.withColumn("day", day).filter(F.col("day").isin(sorted(ctx_days)))
-        flagged = self.run_pipeline(work, pipeline_name, value_col, series_col, (ts_col,))
-        flagged = flagged.filter(F.col("day").isin(todo))
-        check_names = [s.name for s in pipe.steps]
-        t0 = time()
-        # tier text stats follow the frame's columns: use real text when
-        # present, otherwise the checked signal; tool column is optional
-        tiers = build_tiers(
-            flagged,
-            series_col=series_col,
-            ts_col=ts_col,
-            checks=check_names,
-            text_len_source="text" if "text" in df.columns else value_col,
-            tool_col="tool" if "tool" in df.columns else None,
-            role_col="role" if "role" in df.columns else None,
-        )
         metrics: dict[str, dict] = {d: {} for d in todo}
         # per-day row counts from each tier's write itself: one n_turns sum
         # per todo day (null for a day with no rows written)
         day_rows = [F.sum(F.when(F.col("day") == d, F.col("n_turns"))).alias(d) for d in todo]
-        try:
-            for tier_name, tier_df in tiers.items():
-                # open_table: parquet shim here; real Iceberg when the session
-                # carries the probe-gated catalog (sources/tables.py)
-                table = open_table(self.spark, out_dir / f"tier_{tier_name}", ["day"])
-                tier_out = tier_df.withColumn(
-                    "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-                )
-                rows = Observation()
-                table.overwrite_partitions(
-                    tier_out,
-                    lineage={"fingerprint": fp, "tier": tier_name},
-                    observe=(rows, day_rows),
-                )
-                for d, n in rows.get.items():
-                    if n is not None:
-                        metrics[d][f"rows_{tier_name}"] = n
-        finally:
-            tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
-        elapsed = time() - t0
+
+        def write_tier(tier_name: str, tier_df: DataFrame) -> None:
+            # open_table: parquet shim here; real Iceberg when the session
+            # carries the probe-gated catalog (sources/tables.py)
+            table = open_table(self.spark, out_dir / f"tier_{tier_name}", ["day"])
+            tier_out = tier_df.withColumn(
+                "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+            )
+            rows = Observation()
+            table.overwrite_partitions(
+                tier_out,
+                lineage={"fingerprint": fp, "tier": tier_name},
+                observe=(rows, day_rows),
+            )
+            for d, n in rows.get.items():
+                if n is not None:
+                    metrics[d][f"rows_{tier_name}"] = n
+
+        # one thread per overlapped write (the compaction, 1h and 1d);
+        # leaving the block joins them all, also after a failed write
+        with ThreadPoolExecutor(max_workers=2 + (compact is not None)) as pool:
+            compacting = pool.submit(self._in_thread(compact)) if compact else None
+            # context widening: window checks need neighboring rows, so a
+            # resumed run must see one day of context on each side of the todo
+            # set — otherwise flags at day boundaries differ from a from-scratch
+            # run (lag rows missing ⇒ spurious INCONCLUSIVE/DATA_MISSING).
+            # One day covers any sane leading/trailing requirement (≤ minutes
+            # of context at PT1M); flagged rows outside todo are dropped again
+            # before the rollup so tiers cover exactly the todo partitions.
+            ctx_days = set(todo)
+            for d in todo:
+                base = datetime.strptime(d, "%Y-%m-%d")
+                ctx_days.add((base - timedelta(days=1)).strftime("%Y-%m-%d"))
+                ctx_days.add((base + timedelta(days=1)).strftime("%Y-%m-%d"))
+            work = df.withColumn("day", day).filter(F.col("day").isin(sorted(ctx_days)))
+            flagged = self.run_pipeline(work, pipeline_name, value_col, series_col, (ts_col,))
+            flagged = flagged.filter(F.col("day").isin(todo))
+            t0 = time()
+            # tier text stats follow the frame's columns: use real text when
+            # present, otherwise the checked signal; tool column is optional
+            tiers = build_tiers(
+                flagged,
+                series_col=series_col,
+                ts_col=ts_col,
+                checks=[s.name for s in pipe.steps],
+                text_len_source="text" if "text" in df.columns else value_col,
+                tool_col="tool" if "tool" in df.columns else None,
+                role_col="role" if "role" in df.columns else None,
+            )
+            try:
+                write_tier("1m", tiers["1m"])  # fills the cached 1m tier the cascade reads
+                coarse = [
+                    pool.submit(self._in_thread(write_tier, t, tiers[t])) for t in ("1h", "1d")
+                ]
+                wait(coarse)
+                elapsed = time() - t0
+            finally:
+                tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
+        for f in coarse:
+            f.result()  # a failed tier write: no day is marked, nothing dropped
         for d in todo:
             metrics[d]["elapsed_job_sec"] = round(elapsed, 3)
         result["metrics"] = metrics
         manifest.mark_done(todo, fp, lineage=lineage_params, metrics=metrics)
-        self._apply_retention(
-            retention, result, out_dir, input_path, value_col, series_col,
-            ts_col, manifest, fp,
-        )
+        # a failed compaction raises here: the days stay marked, nothing dropped
+        raw = compacting.result() if compacting else None
+        self._expire(retention, result, out_dir, input_path, raw)
         return result
 
     def ingest_late(
@@ -600,39 +641,49 @@ class Engine:
             role_col=None,
         )
 
-    def _apply_retention(
-        self, retention, result, out_dir, input_path, value_col, series_col,
-        ts_col, manifest, fp,
-    ) -> None:
+    def _in_thread(self, fn, *args):
+        """``fn(*args)`` as a thread target carrying the calling thread's
+        job group, tags and other local properties, copied now: Spark
+        attributes the thread's jobs to the caller's job group."""
+        return partial(inheritable_thread_target(self.spark)(fn), *args)
+
+    def _raw_compaction(
+        self, retention, out_dir, input_path, value_col, series_col, ts_col, manifest, fp,
+    ):
+        """The compact step of the ``raw`` retention cutoff as a zero-arg
+        callable, or None without one: encode the raw input's days
+        before the cutoff into the Gorilla cold tier (out_dir/chunks_raw)
+        through ``rollup.compact_raw_days``. It rides this job's
+        checkpoint manifest (``compact:<day>`` keys), so a killed
+        compaction resumes without re-encoding. ``_expire`` drops those
+        raw days afterwards."""
+        if not retention or "raw" not in retention:
+            return None
+        return partial(
+            compact_raw_days,
+            self.spark,
+            open_table(self.spark, input_path, ["day"]),
+            open_table(self.spark, Path(out_dir) / "chunks_raw", ["day"]),
+            retention["raw"],
+            value_col=value_col,
+            series_col=series_col,
+            ts_col=ts_col,
+            manifest=manifest,
+            fingerprint=fp,
+        )
+
+    def _expire(self, retention, result, out_dir, input_path, raw) -> None:
         """Retention policy: per-tier cutoff day (e.g. {"1m": "2024-02-01"})
-        — whole-partition drops, no data rewrite (rollup.py). The reserved
-        key "raw" compacts expiring raw-input partitions into the Gorilla
-        cold tier (out_dir/chunks_raw) BEFORE dropping them — requires a
-        day-partitioned input_path, and rides this job's checkpoint
-        manifest (compact:<day> keys) so a killed compaction resumes
-        without re-encoding."""
+        — whole-partition drops, no data rewrite (rollup.py). ``raw`` is
+        the compact step's result for the reserved ``raw`` cutoff: the
+        raw input's days before it are dropped only now, after their
+        chunks committed."""
         if not retention:
             return
-        from rove_spark.operators.rollup import retention_compact
-
         result["expired"] = {}
-        raw_cutoff = retention.get("raw")
-        if raw_cutoff is not None:
-            if input_path is None:
-                raise ValueError(
-                    "retention['raw'] compaction requires input_path — "
-                    "the day-partitioned raw table to compact"
-                )
-            result["expired"]["raw"] = retention_compact(
-                self.spark,
-                open_table(self.spark, input_path, ["day"]),
-                open_table(self.spark, Path(out_dir) / "chunks_raw", ["day"]),
-                raw_cutoff,
-                value_col=value_col,
-                series_col=series_col,
-                ts_col=ts_col,
-                manifest=manifest,
-                fingerprint=fp,
+        if raw is not None:
+            result["expired"]["raw"] = drop_compacted(
+                open_table(self.spark, input_path, ["day"]), raw, retention["raw"]
             )
         for tier_name, cutoff in retention.items():
             if tier_name == "raw":

@@ -475,6 +475,47 @@ def test_run_job_malformed_retention_cutoff_raises(tmp_path, spark):
     assert not (tmp_path / "fresh").exists()
 
 
+def test_run_job_bad_retention_policy_raises_before_writing(tmp_path, spark):
+    """A retention key that names no tier ("5m" would open a tier_5m that
+    never exists and expire nothing) and a raw cutoff without the raw
+    input's path both raise before any tier or manifest is written."""
+    eng = _engine(spark)
+    df = _signals(spark)
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="'5m'"):
+        eng.run_job(df, "ta", out, input_fingerprint="fp1", retention={"5m": "2024-01-05"})
+    with pytest.raises(ValueError, match="input_path"):
+        eng.run_job(df, "ta", out, input_fingerprint="fp1", retention={"raw": "2024-01-05"})
+    assert not list(out.glob("tier_*"))
+    assert not (out / "_checkpoint.json").exists()
+
+
+def test_manifest_mark_done_from_threads(tmp_path):
+    """mark_done is safe for concurrent callers in one process: eight
+    threads marking disjoint keys leave every key in the manifest."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rove_spark.plans.checkpoint import CheckpointManifest
+
+    manifest = CheckpointManifest(tmp_path / "_checkpoint.json")
+
+    def mark(i: int) -> None:
+        for j in range(5):
+            manifest.mark_done([f"k{i}-{j}"], "fp", lineage={}, metrics={})
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            list(pool.map(mark, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert set(manifest.records()) == {f"k{i}-{j}" for i in range(8) for j in range(5)}
+    assert manifest.done_partitions("fp") == set(manifest.records())
+    assert [p.name for p in tmp_path.iterdir()] == ["_checkpoint.json"]
+
+
 def test_homebrew_custom_check(spark, tmp_path):
     """The Check protocol (SURVEY §2.7: researcher-written checks, which
     rove left a closed enum): a custom check registers on the Engine,

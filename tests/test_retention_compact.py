@@ -216,3 +216,141 @@ def test_compact_missing_value_col_raises(tmp_path, spark):
         retention_compact(
             spark, raw, chunks, days[-1], value_col="nope", series_col="conv_id"
         )
+
+
+def _rows(spark, path) -> list[tuple]:
+    """Every row of the parquet table at ``path``, columns in name order."""
+    df = spark.read.parquet(str(path))
+    return sorted(tuple(str(x) for x in r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _run(eng, spark, raw_path, out, cutoff):
+    df = spark.read.parquet(str(raw_path)).drop("day")
+    return eng.run_job(
+        df, "ta", out, value_col="text_len", input_fingerprint="fp1",
+        input_path=raw_path, retention={"raw": cutoff},
+    )
+
+
+def _assert_store_equal(spark, a: Path, b: Path) -> None:
+    for name in ("tier_1m", "tier_1h", "tier_1d", "chunks_raw"):
+        assert _rows(spark, a / name) == _rows(spark, b / name), name
+
+
+def _pool_threads() -> set:
+    import threading
+
+    return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+
+def test_run_job_failed_coarse_write_beside_compaction(tmp_path, spark, monkeypatch):
+    """A tier_1h write that raises while the compaction runs beside it:
+    run_job re-raises it once every thread has joined, marks no day done,
+    drops no raw day and releases the 1m cache. A rerun then equals a
+    clean run."""
+    import shutil
+
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
+    real_write = PartitionedTable.overwrite_partitions
+
+    def fail_1h(self, df, lineage=None, **kw):
+        if (lineage or {}).get("tier") == "1h":
+            raise RuntimeError("injected 1h write failure")
+        return real_write(self, df, lineage, **kw)
+
+    spark.catalog.clearCache()
+    threads = _pool_threads()
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_1h)
+    eng = _engine(spark)
+    with pytest.raises(RuntimeError, match="injected 1h"):
+        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    assert _pool_threads() <= threads
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted
+    recs = CheckpointManifest(tmp_path / "out" / "_checkpoint.json").records()
+    assert not set(recs) & set(days)
+    assert raw.partition_days() == days
+
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", real_write)
+    r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    clean = _run(eng, spark, tmp_path / "raw_clean", tmp_path / "clean", days[1])
+    assert r["computed"] == clean["computed"] == days
+    assert r["metrics"].keys() == clean["metrics"].keys()
+    for d in days:
+        rows = {k: v for k, v in r["metrics"][d].items() if k != "elapsed_job_sec"}
+        assert rows == {k: v for k, v in clean["metrics"][d].items() if k != "elapsed_job_sec"}
+    assert r["expired"]["raw"]["dropped"] == clean["expired"]["raw"]["dropped"] == 1
+    assert raw.partition_days() == days[1:]
+    _assert_store_equal(spark, tmp_path / "out", tmp_path / "clean")
+
+
+def test_run_job_failed_compaction_marks_tiers_keeps_raw(tmp_path, spark, monkeypatch):
+    """A compaction that raises: the tier days are marked done as written,
+    no raw day is dropped and the error is re-raised. A rerun skips the
+    tiers and completes the compaction."""
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    expired_rows = _slice_rows(spark, raw, days[:1])
+    real_write = PartitionedTable.overwrite_partitions
+
+    def fail_chunks(self, df, lineage=None, **kw):
+        if (lineage or {}).get("operation") == "retention_compact":
+            raise RuntimeError("injected chunk write failure")
+        return real_write(self, df, lineage, **kw)
+
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_chunks)
+    eng = _engine(spark)
+    with pytest.raises(RuntimeError, match="injected chunk"):
+        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    recs = CheckpointManifest(tmp_path / "out" / "_checkpoint.json").records()
+    assert set(recs) == set(days)  # tiers done; no compact:<day> key
+    assert raw.partition_days() == days
+    assert not (tmp_path / "out" / "chunks_raw").exists()
+
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", real_write)
+    r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    assert r["computed"] == []
+    assert r["expired"]["raw"]["compacted"] == days[:1]
+    assert r["expired"]["raw"]["dropped"] == 1
+    assert raw.partition_days() == days[1:]
+    chunks = PartitionedTable(tmp_path / "out" / "chunks_raw", ["day"])
+    decoded = sorted(
+        (r.series_id, r.ts, float(r.value))
+        for r in read_cold(spark, chunks).filter(~F.col("is_gap")).collect()
+    )
+    assert decoded == expired_rows
+
+
+def test_run_job_jobs_carry_the_callers_job_group(tmp_path, spark):
+    """Every Spark job run_job starts, on its own thread or on the
+    compaction and tier-write threads, is in the caller's job group: a
+    benchmark or scheduler attributing work by job group sees all of it."""
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job_id() -> int:
+        sc.setJobGroup("marker", "marker")
+        spark.range(1).count()
+        return max(tracker.getJobIdsForGroup("marker"))
+
+    eng = _engine(spark)
+    try:
+        before = last_job_id()
+        sc.setJobGroup("daily", "run_job")
+        r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+        after = last_job_id()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert r["expired"]["raw"]["compacted"] == days[:1]
+    started = set(range(before + 1, after + 1)) - set(tracker.getJobIdsForGroup("marker"))
+    assert started
+    assert started == set(tracker.getJobIdsForGroup("daily"))

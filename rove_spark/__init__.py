@@ -25,3 +25,7 @@ multimodal plumbing) for large-scale pipelines.
 __version__ = "0.1.0"
 
 from rove_spark.model import Flag  # noqa: F401
+from rove_spark.zipcache import install_in_worker as _install_in_worker
+
+# Spark workers import this package when they unpickle an engine UDF.
+_install_in_worker()

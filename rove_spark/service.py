@@ -54,11 +54,13 @@ def _epoch_utc(seconds) -> dt.datetime:
 
 def _parse_ts(v) -> dt.datetime:
     try:
+        # bool is an int: a JSON true must not read as 1970-01-01T00:00:01
         if isinstance(v, dict) and "seconds" in v:  # protobuf Timestamp shape
-            return _epoch_utc(int(v["seconds"]))
-        if isinstance(v, (int, float)):
+            if not isinstance(v["seconds"], bool):
+                return _epoch_utc(int(v["seconds"]))
+        elif isinstance(v, (int, float)) and not isinstance(v, bool):
             return _epoch_utc(v)
-        if isinstance(v, str):
+        elif isinstance(v, str):
             from rove_spark.functions.durations import parse_rfc3339
 
             return parse_rfc3339(v)

@@ -197,10 +197,10 @@ def test_malformed_timestamp_and_backing_schema_are_400s(service, spark):
 
     from rove_spark.service import ValidateError
 
-    with pytest.raises(ValidateError, match="unparseable timestamp"):
-        list(service.validate(_request(start_time="yesterday")))
-    with pytest.raises(ValidateError, match="unparseable timestamp"):
-        list(service.validate(_request(start_time={"seconds": "abc"})))
+    # JSON booleans are ints to Python; true is not epoch second 1
+    for bad_ts in ("yesterday", {"seconds": "abc"}, True, {"seconds": True}):
+        with pytest.raises(ValidateError, match="unparseable timestamp"):
+            list(service.validate(_request(start_time=bad_ts)))
     with pytest.raises(ValidateError, match="malformed polygon"):
         list(service.validate(_request(polygon=[{"latitude": 1.0}])))
     bad = spark.createDataFrame([("x", T0)], "conv_id string, ts timestamp")
@@ -258,6 +258,7 @@ def test_http_bad_requests_and_engine_failures_get_a_status(service):
     try:
         assert _post(server, b"[]")[0] == 400
         assert _post(server, json.dumps(_request(time_resolution=5)).encode())[0] == 400
+        assert _post(server, json.dumps(_request(start_time=True)).encode())[0] == 400
         assert _post(server, b"{}", content_length="abc")[0] == 400
         assert _post(server, b"{}", content_length="-1")[0] == 400
         status, reason = _post(server, json.dumps(_request(pipeline="plan_error")).encode())

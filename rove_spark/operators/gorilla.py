@@ -9,7 +9,7 @@ plain ``Vec<Option<f32>>`` in memory, ``/root/reference/src/data_switch.rs:
   variable-length classes: ``0`` (D=0), ``10``+7b (−63..64), ``110``+9b
   (−255..256), ``1110``+12b (−2047..2048), ``1111``+64b (the paper uses
   32-bit for the first delta and the fallback; this codec widens both to
-  64 so it is total over int64 timestamps — see encode_timestamps);
+  64 so it is total over int64 timestamps — see _ts_entries_grouped);
 - float32 values: XOR with the previous value; ``0`` (xor=0), ``10`` +
   meaningful bits when they fit the previous leading/length window,
   ``11`` + 5b leading + 6b length + meaningful bits;
@@ -20,23 +20,23 @@ plain ``Vec<Option<f32>>`` in memory, ``/root/reference/src/data_switch.rs:
 Dtype is float32 end-to-end (reference f32 semantics); NaN round-trips
 bit-exactly since XOR works on raw bits.
 
-Execution shape (round-3 verdict item 2 — the bigint-accumulator hot
-loop is gone): encoders build per-element ``(code, nbits)`` ENTRY
-arrays, and the bit-packing itself is one vectorized pass
-(``np.repeat`` bit expansion + ``np.packbits``; `_pack_bits`). Entry
-construction dispatches on size: big arrays (≥ ``_VEC_MIN``) use pure
-numpy (class selection via masks, a block-fixed ``11``-window policy —
-one header per 16 nonzero XORs — so the stream is branch-free and
-array-expressible); small chunks (the real engine regime: ~24-point
-day chunks) use a plain-int scalar loop with the paper's adaptive
-window policy (numpy per-call overhead would dominate at that size).
-Both emit valid Gorilla streams — the decoder is policy-agnostic.
-``compress_series`` additionally amortizes packing across a whole
-(series, month) group: every chunk's entries append into one
-`_BatchPacker`, ONE `_pack_bits` call packs the group, and per-chunk
-blobs are sliced out at byte-aligned offsets. Chunks are bounded and
-encode inside ``applyInPandas``, so the cost parallelizes across
-executors and never touches the driver.
+Execution shape: one entry builder per stream,
+`_ts_entries_grouped` / `_val_entries_grouped`, builds per-element
+``(code, nbits)`` ENTRY arrays for MANY segments in one pure-numpy pass
+(class selection via masks; values use a block-fixed ``11``-window
+policy — one window header per 16 nonzero XORs — so the stream is
+branch-free and array-expressible), and the bit-packing itself is one
+vectorized pass (``np.repeat`` bit expansion + ``np.packbits``;
+`_pack_bits`). ``encode_timestamps``/``encode_values`` are the
+one-segment call of the same builders, so every blob the codec writes
+comes from one implementation. The decoder is policy-agnostic: it reads
+any valid Gorilla stream, the paper's adaptive-window one included.
+``compress_series`` passes every codec chunk of a (series, month) group
+to the builders at once, appends their entries into one `_BatchPacker`,
+packs the group with ONE `_pack_bits` call, and slices per-chunk blobs
+out at byte-aligned offsets. Chunks are bounded and encode inside
+``applyInPandas``, so the cost parallelizes across executors and never
+touches the driver.
 """
 
 from __future__ import annotations
@@ -52,7 +52,6 @@ _TS_CLASSES = (
 )
 
 _VALUE_BLOCK = 16  # nonzero-XOR window block size (one '11' header per block)
-_VEC_MIN = 4096  # below this, scalar entry-building beats numpy per-call overhead
 _M64 = 0xFFFFFFFFFFFFFFFF
 
 
@@ -143,66 +142,12 @@ class _BitReader:
         return out
 
 
-def _ts_entries(ts: np.ndarray) -> tuple:
-    """int64 seconds → delta-of-delta (codes, nbits) entry arrays/lists.
-    The 68-bit fallback class splits into a 4-bit prefix + 64-bit payload
-    entry so every entry fits 64 bits."""
-    ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    if n == 0:
-        return [0], [32]
-    if n < _VEC_MIN:
-        return _ts_entries_scalar(ts, n)
-    return _ts_entries_vec(ts, n)
-
-
-def _ts_entries_scalar(ts: np.ndarray, n: int) -> tuple:
-    codes = [n & 0xFFFFFFFF, int(ts[0]) & _M64]
-    nbits = [32, 64]
-    if n == 1:
-        return codes, nbits
-    tl = ts.tolist()
-    # 64-bit first delta + 64-bit fallback class: the codec is total over
-    # int64 (the paper's 32-bit fallback assumes bounded wall-clock deltas;
-    # a batch engine must not crash on pathological input)
-    prev_delta = tl[1] - tl[0]
-    codes.append(prev_delta & _M64)
-    nbits.append(64)
-    cap = codes.append
-    nap = nbits.append
-    for i in range(2, n):
-        delta = tl[i] - tl[i - 1]
-        d = delta - prev_delta
-        prev_delta = delta
-        if d == 0:
-            cap(0)
-            nap(1)
-        elif -63 <= d <= 64:
-            cap((0b10 << 7) | (d + 63))
-            nap(9)
-        elif -255 <= d <= 256:
-            cap((0b110 << 9) | (d + 255))
-            nap(12)
-        elif -2047 <= d <= 2048:
-            cap((0b1110 << 12) | (d + 2047))
-            nap(16)
-        else:
-            cap(0b1111)
-            nap(4)
-            cap(d & _M64)
-            nap(64)
-    return codes, nbits
-
-
-def _ts_entries_vec(ts: np.ndarray, n: int) -> tuple:
-    # one-segment view of the grouped builder (same policy, no duplication)
-    codes, nbits, _off = _ts_entries_grouped(ts, np.asarray([n], np.int64))
-    return codes, nbits
-
-
 def encode_timestamps(ts: np.ndarray) -> bytes:
-    """int64 seconds → delta-of-delta bitstream."""
-    return _pack_bits(*_ts_entries(ts))
+    """int64 seconds → delta-of-delta bitstream (one-segment call of
+    `_ts_entries_grouped`)."""
+    ts = np.asarray(ts, dtype=np.int64)
+    codes, nbits, _off = _ts_entries_grouped(ts, np.asarray([len(ts)], np.int64))
+    return _pack_bits(codes, nbits)
 
 
 def _s64(x: int) -> int:
@@ -246,60 +191,13 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
     return out
 
 
-def _val_entries(values: np.ndarray) -> tuple:
-    """float32 array → XOR-stream (codes, nbits) entries (Gorilla §4.2,
-    32-bit variant: 5-bit leading-zero count, 6-bit meaningful length)."""
-    v = np.ascontiguousarray(np.asarray(values, dtype=np.float32)).view(np.uint32)
-    n = len(v)
-    if n == 0:
-        return [0], [32]
-    if n < _VEC_MIN:
-        return _val_entries_scalar(v, n)
-    return _val_entries_vec(v, n)
-
-
-def _val_entries_scalar(v: np.ndarray, n: int) -> tuple:
-    """Adaptive-window policy (the paper's): reuse the previous '11'
-    window while the XOR fits it."""
-    codes = [n & 0xFFFFFFFF, int(v[0])]
-    nbits = [32, 32]
-    if n == 1:
-        return codes, nbits
-    xs = (v[1:] ^ v[:-1]).tolist()
-    cap = codes.append
-    nap = nbits.append
-    prev_lead, prev_mlen = -1, -1
-    for x in xs:
-        if x == 0:
-            cap(0)
-            nap(1)
-            continue
-        lz = 32 - x.bit_length()
-        if lz > 31:
-            lz = 31  # 5-bit field
-        tz = (x & -x).bit_length() - 1
-        if prev_lead >= 0 and lz >= prev_lead and (32 - prev_lead - prev_mlen) <= tz:
-            cap((0b10 << prev_mlen) | (x >> (32 - prev_lead - prev_mlen)))
-            nap(2 + prev_mlen)
-        else:
-            mlen = 32 - lz - tz
-            cap(((((0b11 << 5) | lz) << 6) | (mlen - 1)) << mlen | (x >> tz))
-            nap(13 + mlen)
-            prev_lead, prev_mlen = lz, mlen
-    return codes, nbits
-
-
-def _val_entries_vec(v: np.ndarray, n: int) -> tuple:
-    # one-segment view of the grouped builder (same policy, no duplication)
-    codes, nbits, _off = _val_entries_grouped(
-        v.view(np.float32), np.asarray([n], np.int64)
-    )
-    return codes, nbits
-
-
 def encode_values(values: np.ndarray) -> bytes:
-    """float32 array → XOR bitstream (Gorilla §4.2, 32-bit variant)."""
-    return _pack_bits(*_val_entries(values))
+    """float32 array → XOR bitstream (Gorilla §4.2, 32-bit variant:
+    5-bit leading-zero count, 6-bit meaningful length); one-segment call
+    of `_val_entries_grouped`."""
+    v = np.asarray(values, dtype=np.float32)
+    codes, nbits, _off = _val_entries_grouped(v, np.asarray([len(v)], np.int64))
+    return _pack_bits(codes, nbits)
 
 
 def _scatter_entries(hdr_codes, hdr_bits, hdr_counts, e_codes, e_bits, e_seg, K):
@@ -333,8 +231,11 @@ def _ts_entries_grouped(T: np.ndarray, seg_lens: np.ndarray) -> tuple:
     pass (`compress_series`' real regime is ~24-point day chunks, far too
     small to amortize per-chunk numpy calls). ``T`` is the segment-major
     concatenation; returns (codes, nbits, entry_offsets[K+1]) where slice
-    ``codes[off[k]:off[k+1]]`` packs to EXACTLY ``encode_timestamps`` of
-    segment k (same class policy as the scalar path)."""
+    ``codes[off[k]:off[k+1]]`` packs to exactly ``encode_timestamps`` of
+    segment k. The first delta and the fallback class are 64-bit, so the
+    codec is total over int64 (the paper's 32-bit fallback assumes
+    bounded wall-clock deltas; a batch engine must not crash on
+    pathological input)."""
     T = np.asarray(T, dtype=np.int64)
     seg_lens = np.asarray(seg_lens, dtype=np.int64)
     K = len(seg_lens)

@@ -801,39 +801,6 @@ def merge_tiers(
     )
 
 
-def refresh_tiers_incremental(
-    existing: dict[str, DataFrame],
-    delta_raw: DataFrame,
-    series_col: str = "conv_id",
-    ts_col: str = "ts",
-    role_col: str | None = "role",
-    checks: Sequence[str] = (),
-    text_len_source: str = "text",
-    tool_col: str = "tool",
-) -> dict[str, DataFrame]:
-    """In-memory delta refresh: aggregate ONLY the new raw rows (the
-    delta is small — no persist, the triple raw→1m recompute is over
-    delta-sized input) and merge into each existing tier frame. Never
-    re-reads raw history. The table-backed, crash-safe form is
-    ``refresh_tier_increment`` + ``read_tier``."""
-    delta = build_tiers(
-        delta_raw,
-        series_col=series_col,
-        ts_col=ts_col,
-        role_col=role_col,
-        checks=checks,
-        text_len_source=text_len_source,
-        tool_col=tool_col,
-        persist=False,
-    )
-    return {
-        t: merge_tiers(
-            existing[t], delta[t], t, series_col=series_col, role_col=role_col
-        )
-        for t in existing
-    }
-
-
 def refresh_tier_increment(
     inc_table,
     delta_raw: DataFrame,

@@ -23,8 +23,9 @@ Spark-first execution shape (the scale story):
   instead of panicking (``harness.rs:100,141``).
 
 Transcript domain: conversations get deterministic synthetic coordinates
-(``with_synthetic_coords``) — the "neighborhood" abstraction of SURVEY §1.4
-— so buddy-style cross-conversation consistency runs on the same machinery.
+(``with_synthetic_coords_portable``) — the "neighborhood" abstraction of
+SURVEY §1.4 — so buddy-style cross-conversation consistency runs on the
+same machinery.
 """
 
 from __future__ import annotations
@@ -655,28 +656,16 @@ def sct_kernel(
 # ---------------------------------------------------------- spark layer --
 
 
-def with_synthetic_coords(
-    df: DataFrame, series_col: str = "conv_id", seed: int = 7, box_deg: float = 3.0
-) -> DataFrame:
-    """Deterministic per-series pseudo-coordinates (≈330×330 km box around
-    60N 10E, elevation 0–500 m) — the transcript-domain neighborhood."""
-    lat = 58.0 + (F.pmod(F.xxhash64(F.lit(seed), F.col(series_col)), 100000) / 100000.0) * box_deg
-    lon = 8.0 + (
-        F.pmod(F.xxhash64(F.lit(seed + 1), F.col(series_col)), 100000) / 100000.0
-    ) * box_deg
-    elev = (F.pmod(F.xxhash64(F.lit(seed + 2), F.col(series_col)), 500)).cast("double")
-    return df.withColumns({"lat": lat, "lon": lon, "elev": elev})
-
-
 def with_synthetic_coords_portable(
     df: DataFrame, series_col: str = "conv_id", box_deg: float = 3.0
 ) -> DataFrame:
-    """Cross-engine-reproducible synthetic coordinates: md5-derived
-    uniform u32 → [0,1) → same ≈330×330 km box as
-    ``with_synthetic_coords``, but recomputable exactly in DuckDB (see
-    ``synthetic_coords_sql``) so spatial driver queries can carry full
-    value oracles. u/2³² and the affine map are exact-dominated double
-    ops with identical operand trees on both engines."""
+    """Deterministic per-series pseudo-coordinates (≈330×330 km box
+    around 60N 10E, elevation 0–500 m): the transcript-domain
+    neighborhood. md5-derived uniform u32 → [0,1) → the box, so DuckDB
+    recomputes the same values exactly (see ``synthetic_coords_sql``)
+    and spatial driver queries can carry full value oracles. u/2³² and
+    the affine map are exact-dominated double ops with identical operand
+    trees on both engines."""
 
     def u32(tag: str):
         h = F.md5(F.concat(F.lit(tag + "|"), F.col(series_col).cast("string")))
@@ -689,7 +678,7 @@ def with_synthetic_coords_portable(
 
 
 def synthetic_coords_sql(series_expr: str, box_deg: float = 3.0) -> dict[str, str]:
-    """DuckDB twins of ``with_synthetic_coords_portable`` columns, as SQL
+    """The ``with_synthetic_coords_portable`` columns in DuckDB, as SQL
     snippets over ``series_expr`` (a VARCHAR-castable column). The u32 is
     rebuilt from the first 8 md5 hex digits with a strpos polynomial —
     no hex-parse builtin needed."""

@@ -114,40 +114,21 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.drop("_qw", "_ql", "_qn", "_qa", "_qp", "_qs", "_qd")
 
 
-def with_fingerprint(
-    df: DataFrame, text_col: str = "text", k_smallest: int = 8
-) -> DataFrame:
-    """Document fingerprints:
-    - ``fp_exact``: 64-bit content hash (byte-identity);
-    - ``fp_robust``: hash of the k smallest word-trigram hashes (a
-      winnowing-style sketch — stable under small edits)."""
-    words = _words(text_col)
-    n = F.greatest(F.size(words) - 2, F.lit(0))
-    # sequence(1, 0) would *descend* — guard short/empty docs explicitly
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, 3))))
-    smallest = F.slice(F.array_sort(F.array_distinct(grams)), 1, k_smallest)
-    return df.withColumns(
-        {
-            "fp_exact": F.xxhash64(F.col(text_col)),
-            "fp_robust": F.xxhash64(F.concat_ws(",", F.transform(smallest, lambda x: x.cast("string")))),
-        }
-    )
-
-
 def with_fingerprint_portable(
     df: DataFrame,
     text_col: str = "text",
     k_smallest: int = 8,
     id_col: str | None = None,
 ) -> DataFrame:
-    """``with_fingerprint``'s cross-engine twin: md5-based trigram hashes
-    (15-hex-digit prefix → int64, the repo's portable-hash idiom — see
-    with_simhash_portable) instead of Spark-only xxhash64, with empty
-    words filtered on both sides so the split-semantics edge cases can't
-    diverge between engines. Sketch semantics unchanged: fp_robust =
-    digest of the k smallest distinct word-trigram hashes (winnowing-
-    style, stable under small edits); fp_exact = md5 of the raw text.
+    """Document fingerprints, reproducible in DuckDB:
+    - ``fp_exact``: md5 of the raw text (byte-identity);
+    - ``fp_robust``: md5 of the k smallest distinct word-trigram hashes
+      (a winnowing-style sketch — stable under small edits).
+
+    Trigram hashes are md5 15-hex-digit prefixes → int64 (the repo's
+    portable-hash idiom — see with_simhash_portable), with empty words
+    filtered on both sides so the split-semantics edge cases can't
+    diverge between engines.
 
     Splits on an EXPLICIT ASCII whitespace class instead of ``\\s``: Java
     ``\\s`` includes vertical tab \\x0B, RE2's does not, and a hash-exact

@@ -11,27 +11,33 @@ production target describes (~35k obs/min, flag latency < 5 min,
   streaming 1m tier cascades into the batch 1h/1d tiers unchanged. Late
   data within the watermark updates its window; windows close when the
   watermark passes (append mode = finalized-window semantics).
-- ``stream_step_check``: custom stateful operator via
-  ``applyInPandasWithState`` — per-series state carries (last_ts,
-  last_value) across micro-batches, so the first row of a batch is checked
-  against the last row of the previous batch exactly like the batch
-  operator checks against ``lag(1)``. State is tiny (two scalars per
-  series) and partitioned by series key — scales with #series, not rows.
+- ``stream_step_check``, ``stream_spike_check``, ``stream_flatline_check``:
+  custom stateful operators on one driver, ``_stream_check``. It sets the
+  watermark, projects ``(_sid, _epoch, _v)``, groups by series and runs
+  ``applyInPandasWithState``; per call it concatenates the series'
+  micro-batch rows, sorts them by ts and hands them, with the series'
+  state, to the check's numpy step ``(T, V, state) -> (ts, values,
+  flags, new_state)``. State is a few scalars per series (the last row,
+  the buffered lookahead pair, the current run), so the first row of a
+  micro-batch is checked against the previous batch's rows exactly like
+  the batch operator checks against ``lag(1)``. State is partitioned by
+  series key — it scales with #series, not rows.
+
+Stream and batch flags agree when each series' rows arrive in ts order
+across micro-batches. A row that arrives behind its series' state (late
+but inside the watermark) is sorted only within its own micro-batch, so
+it is flagged against the later neighbour the state holds, and its
+stream flag can differ from the batch flag for that row.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from rove_spark.model import Flag
 
@@ -76,29 +82,67 @@ def stream_rollup(
     return agg.select(*out_cols, *stat_cols)
 
 
-_STEP_STATE = StructType(
-    [StructField("last_ts", DoubleType()), StructField("last_value", DoubleType())]
-)
-
+_STEP_STATE = "last_ts double, last_value double"
 # spike needs one row of lookahead: state buffers the not-yet-emittable
 # latest point (cur) plus its predecessor (prev)
-_SPIKE_STATE = StructType(
-    [
-        StructField("prev_ts", DoubleType()),
-        StructField("prev_value", DoubleType()),
-        StructField("cur_ts", DoubleType()),
-        StructField("cur_value", DoubleType()),
-    ]
-)
+_SPIKE_STATE = "prev_ts double, prev_value double, cur_ts double, cur_value double"
+_FLAT_STATE = "last_value double, run_len long, rn long"
 
-_STEP_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("flag_step_check", LongType()),
-    ]
-)
+
+def _present(x) -> bool:
+    return x is not None and not math.isnan(x)
+
+
+def _stream_check(
+    stream_df: DataFrame,
+    step,
+    flag_name: str,
+    state_schema: str,
+    value_col: str,
+    series_col: str,
+    ts_col: str,
+    watermark: str,
+) -> DataFrame:
+    """The shared driver of the stateful stream checks. ``step(T, V,
+    state)`` gets one series' micro-batch rows sorted by ts (epoch
+    seconds ``T``, values ``V`` with NaN for NULL) and the series' state
+    tuple (None before its first batch); it returns the rows to emit as
+    ``(ts, values, flags)`` arrays plus the state to keep. Flags are
+    computed with the same vector arithmetic as the batch check's
+    lag/lead frame — no per-row Python (guide §4)."""
+    def fn(key, pdf_iter, state: GroupState):
+        import pandas as pd
+
+        chunks = [c for c in pdf_iter if len(c)]
+        if not chunks:
+            return
+        batch = pd.concat(chunks).sort_values("_epoch")
+        T = batch["_epoch"].to_numpy(float)
+        V = batch["_v"].to_numpy(float)
+        ts, values, flags, new_state = step(T, V, state.get if state.exists else None)
+        state.update(new_state)
+        yield pd.DataFrame(
+            {
+                "series_id": key[0],
+                "ts": pd.to_datetime((ts * 1e6).round().astype("int64"), unit="us"),
+                "value": values,
+                flag_name: flags.astype(np.int64),
+            }
+        )
+
+    prepped = (
+        stream_df.withWatermark(ts_col, watermark)
+        .filter(F.col(ts_col).isNotNull())  # unordered rows cannot be checked
+        .select(
+            F.col(series_col).cast("string").alias("_sid"),
+            (F.unix_micros(F.col(ts_col).cast("timestamp")).cast("double") / 1e6).alias("_epoch"),
+            F.col(value_col).cast("double").alias("_v"),
+        )
+    )
+    out_schema = f"series_id string, ts timestamp, value double, {flag_name} long"
+    return prepped.groupBy("_sid").applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
 
 
 def stream_step_check(
@@ -111,85 +155,33 @@ def stream_step_check(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Stateful streaming step_check: SPEC.md semantics, state = the last
-    (ts, value) per series. Rows inside a micro-batch are sorted by ts;
-    cross-batch continuity comes from the state store. Flags are computed
-    with the same vector arithmetic as the batch check's lag frame (shift
-    by one, np.select) — no per-row Python (round 7; the stream operators
-    must stay guide-§4 vectorized like every other pandas kernel)."""
-    import numpy as np
-    import pandas as pd
+    (ts, value) per series, so the first row of a micro-batch is checked
+    against the last row of the previous one."""
 
-    def fn(key, pdf_iter, state: GroupState):
-        prev_exists = False
-        p_v = float("nan")
-        if state.exists:
-            p_ts, p_v_raw = state.get
-            if p_ts is not None:
-                prev_exists = True
-                p_v = float("nan") if p_v_raw is None else float(p_v_raw)
-        chunks = list(pdf_iter)
-        batch = (
-            pd.concat(chunks).sort_values("_epoch")
-            if chunks
-            else pd.DataFrame({"_epoch": [], "_v": []})
-        )
-        T = batch["_epoch"].to_numpy(float)
-        V = batch["_v"].to_numpy(float)
-        n = len(T)
-        if n:
-            prev = np.empty(n)
-            prev[0] = p_v if prev_exists else np.nan
-            prev[1:] = V[:-1]
-            no_prev = np.zeros(n, dtype=bool)
-            no_prev[0] = not prev_exists
-            with np.errstate(invalid="ignore"):
-                d = np.abs(V - prev)
-                flags = np.select(
-                    [no_prev, np.isnan(V) | np.isnan(prev), d >= max_, d >= high],
-                    [
-                        int(Flag.INCONCLUSIVE),
-                        int(Flag.DATA_MISSING),
-                        int(Flag.FAIL),
-                        int(Flag.WARN),
-                    ],
-                    default=int(Flag.PASS),
-                )
-            state.update((float(T[-1]), float(V[-1])))
-            yield pd.DataFrame(
-                {
-                    "series_id": key[0],
-                    "ts": pd.to_datetime((T * 1e6).round().astype("int64"), unit="us"),
-                    "value": batch["_v"].to_numpy(),
-                    "flag_step_check": flags.astype(np.int64),
-                }
+    def step(T, V, state):
+        has_prev = state is not None and state[0] is not None
+        prev = np.empty(len(V))
+        prev[0] = state[1] if has_prev and state[1] is not None else np.nan
+        prev[1:] = V[:-1]
+        no_prev = np.zeros(len(V), dtype=bool)
+        no_prev[0] = not has_prev
+        with np.errstate(invalid="ignore"):
+            d = np.abs(V - prev)
+            flags = np.select(
+                [no_prev, np.isnan(V) | np.isnan(prev), d >= max_, d >= high],
+                [
+                    int(Flag.INCONCLUSIVE),
+                    int(Flag.DATA_MISSING),
+                    int(Flag.FAIL),
+                    int(Flag.WARN),
+                ],
+                default=int(Flag.PASS),
             )
-        else:
-            if state.exists:
-                state.update(state.get)
-            yield pd.DataFrame(columns=[f.name for f in _STEP_OUT])
+        return T, V, flags, (float(T[-1]), float(V[-1]))
 
-    prepped = (
-        stream_df.withWatermark(ts_col, watermark)
-        .filter(F.col(ts_col).isNotNull())  # unordered rows cannot be checked
-        .select(
-            F.col(series_col).cast("string").alias("_sid"),
-            (F.unix_micros(F.col(ts_col).cast("timestamp")).cast("double") / 1e6).alias("_epoch"),
-            F.col(value_col).cast("double").alias("_v"),
-        )
+    return _stream_check(
+        stream_df, step, "flag_step_check", _STEP_STATE, value_col, series_col, ts_col, watermark
     )
-    return prepped.groupBy("_sid").applyInPandasWithState(
-        fn, _STEP_OUT, _STEP_STATE, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-_SPIKE_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("flag_spike_check", LongType()),
-    ]
-)
 
 
 def stream_spike_check(
@@ -207,113 +199,42 @@ def stream_spike_check(
     final point stays pending until more data arrives — exactly the batch
     operator's trailing-context INCONCLUSIVE, deferred instead of
     emitted."""
-    import math
 
-    import numpy as np
-    import pandas as pd
-
-    def fn(key, pdf_iter, state: GroupState):
-        # vectorized lookahead: stitch (state.prev, state.cur) in front of
-        # the sorted micro-batch, then flag the interior points with the
-        # SAME vector arithmetic as the batch check's lag/lead frame —
-        # no per-row Python in the stream path.
-        prev_exists = False
-        pre_t: list[float] = []
-        pre_v: list[float] = []
-        if state.exists:
-            p_ts, p_v, c_ts, c_v = state.get
-            if p_ts is not None and not math.isnan(p_ts):
-                prev_exists = True
-                pre_t.append(p_ts)
-                pre_v.append(p_v if p_v is not None else float("nan"))
-            if c_ts is not None and not math.isnan(c_ts):
-                pre_t.append(c_ts)
-                pre_v.append(c_v if c_v is not None else float("nan"))
-        chunks = list(pdf_iter)
-        batch = (
-            pd.concat(chunks).sort_values("_epoch")
-            if chunks
-            else pd.DataFrame({"_epoch": [], "_v": []})
-        )
-        T = np.concatenate([np.asarray(pre_t, float), batch["_epoch"].to_numpy(float)])
-        V = np.concatenate([np.asarray(pre_v, float), batch["_v"].to_numpy(float)])
+    def step(T, V, state):
+        # stitch the buffered (prev, cur) in front of the sorted batch
+        p_ts, p_v, c_ts, c_v = state if state is not None else (None,) * 4
+        pre = [(t, v) for t, v in ((p_ts, p_v), (c_ts, c_v)) if _present(t)]
+        T = np.concatenate([np.asarray([t for t, _ in pre], float), T])
+        V = np.concatenate([np.asarray([np.nan if v is None else v for _, v in pre], float), V])
         n = len(T)
-
-        rows_t: list[np.ndarray] = []
-        rows_v: list[np.ndarray] = []
-        rows_f: list[np.ndarray] = []
-        if n >= 2:
-            if not prev_exists:
-                # seq[0] is the series' first-ever point: no predecessor
-                rows_t.append(T[0:1])
-                rows_v.append(V[0:1])
-                rows_f.append(np.array([int(Flag.INCONCLUSIVE)], dtype=np.int64))
-            if n >= 3:
-                a, b, c = V[:-2], V[1:-1], V[2:]
-                missing = np.isnan(a) | np.isnan(b) | np.isnan(c)
-                d1, d2 = b - a, b - c
-                with np.errstate(invalid="ignore"):
-                    same_side = d1 * d2 > 0
-                    m = np.minimum(np.abs(d1), np.abs(d2))
-                    flags = np.select(
-                        [missing, same_side & (m >= max_), same_side & (m >= high)],
-                        [int(Flag.DATA_MISSING), int(Flag.FAIL), int(Flag.WARN)],
-                        default=int(Flag.PASS),
-                    )
-                rows_t.append(T[1:-1])
-                rows_v.append(V[1:-1])
-                rows_f.append(flags.astype(np.int64))
-
-        new_prev_t = T[-2] if n >= 2 else float("nan")
-        new_prev_v = V[-2] if n >= 2 else float("nan")
-        new_cur_t = T[-1] if n >= 1 else float("nan")
-        new_cur_v = V[-1] if n >= 1 else float("nan")
-        state.update((float(new_prev_t), float(new_prev_v), float(new_cur_t), float(new_cur_v)))
-
-        if rows_t:
-            t_all = np.concatenate(rows_t)
-            df = pd.DataFrame(
-                {
-                    "series_id": key[0],
-                    "ts": pd.to_datetime((t_all * 1e6).round().astype("int64"), unit="us"),
-                    "value": np.concatenate(rows_v),
-                    "flag_spike_check": np.concatenate(rows_f),
-                }
+        a, b, c = V[:-2], V[1:-1], V[2:]
+        missing = np.isnan(a) | np.isnan(b) | np.isnan(c)
+        d1, d2 = b - a, b - c
+        with np.errstate(invalid="ignore"):
+            same_side = d1 * d2 > 0
+            m = np.minimum(np.abs(d1), np.abs(d2))
+            flags = np.select(
+                [missing, same_side & (m >= max_), same_side & (m >= high)],
+                [int(Flag.DATA_MISSING), int(Flag.FAIL), int(Flag.WARN)],
+                default=int(Flag.PASS),
             )
-            yield df
-        else:
-            yield pd.DataFrame(columns=[f.name for f in _SPIKE_OUT])
-
-    prepped = (
-        stream_df.withWatermark(ts_col, watermark)
-        .filter(F.col(ts_col).isNotNull())  # unordered rows cannot be checked
-        .select(
-            F.col(series_col).cast("string").alias("_sid"),
-            (F.unix_micros(F.col(ts_col).cast("timestamp")).cast("double") / 1e6).alias("_epoch"),
-            F.col(value_col).cast("double").alias("_v"),
+        # the series' first-ever point has no predecessor: INCONCLUSIVE,
+        # emitted once its successor has arrived
+        lo = 1
+        if n >= 2 and not _present(p_ts):
+            lo = 0
+            flags = np.concatenate([[int(Flag.INCONCLUSIVE)], flags])
+        new_state = (
+            float(T[-2]) if n >= 2 else math.nan,
+            float(V[-2]) if n >= 2 else math.nan,
+            float(T[-1]),
+            float(V[-1]),
         )
+        return T[lo:-1], V[lo:-1], flags, new_state
+
+    return _stream_check(
+        stream_df, step, "flag_spike_check", _SPIKE_STATE, value_col, series_col, ts_col, watermark
     )
-    return prepped.groupBy("_sid").applyInPandasWithState(
-        fn, _SPIKE_OUT, _SPIKE_STATE, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-_FLAT_STATE = StructType(
-    [
-        StructField("last_value", DoubleType()),
-        StructField("run_len", LongType()),
-        StructField("rn", LongType()),
-    ]
-)
-
-_FLAT_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("flag_flatline_check", LongType()),
-    ]
-)
 
 
 def stream_flatline_check(
@@ -328,35 +249,14 @@ def stream_flatline_check(
     (last_value, current run length, rows seen) per series — constant
     memory, exact continuity across micro-batches. Run lengths are
     computed vectorized (new-run boundaries → running-max start index →
-    position in run), no per-row Python (round 7)."""
-    import math
+    position in run)."""
 
-    import numpy as np
-    import pandas as pd
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            lv, run0, rn0 = state.get
-            last = float("nan") if lv is None or math.isnan(lv) else float(lv)
-            run0, rn0 = int(run0), int(rn0)
-        else:
-            last, run0, rn0 = float("nan"), 0, 0
-        chunks = list(pdf_iter)
-        batch = (
-            pd.concat(chunks).sort_values("_epoch")
-            if chunks
-            else pd.DataFrame({"_epoch": [], "_v": []})
-        )
-        T = batch["_epoch"].to_numpy(float)
-        V = batch["_v"].to_numpy(float)
-        n = len(T)
-        if not n:
-            if state.exists:
-                state.update(state.get)
-            yield pd.DataFrame(columns=[f.name for f in _FLAT_OUT])
-            return
+    def step(T, V, state):
+        last, run0, rn0 = state if state is not None else (None, 0, 0)
+        run0, rn0 = int(run0), int(rn0)
+        n = len(V)
         prev = np.empty(n)
-        prev[0] = last
+        prev[0] = last if _present(last) else np.nan
         prev[1:] = V[:-1]
         # a run continues only when both sides are present and equal
         # (NaN != x covers missing rows and the no-last-value start)
@@ -366,32 +266,21 @@ def stream_flatline_check(
         starts = np.maximum.accumulate(np.where(~continues, idx, -1))
         # starts == -1: still inside the run carried over from state
         run_len = np.where(starts == -1, run0 + idx + 1, idx - starts + 1)
-        rn_arr = rn0 + idx + 1
         flags = np.select(
-            [np.isnan(V), run_len >= max_ + 1, rn_arr <= max_],
+            [np.isnan(V), run_len >= max_ + 1, rn0 + idx + 1 <= max_],
             [int(Flag.DATA_MISSING), int(Flag.FAIL), int(Flag.INCONCLUSIVE)],
             default=int(Flag.PASS),
         )
         final_run = 0 if np.isnan(V[-1]) else int(run_len[-1])
-        state.update((float(V[-1]), final_run, int(rn0 + n)))
-        yield pd.DataFrame(
-            {
-                "series_id": key[0],
-                "ts": pd.to_datetime((T * 1e6).round().astype("int64"), unit="us"),
-                "value": pd.Series(V).where(~np.isnan(V), None),
-                "flag_flatline_check": flags.astype(np.int64),
-            }
-        )
+        return T, V, flags, (float(V[-1]), final_run, rn0 + n)
 
-    prepped = (
-        stream_df.withWatermark(ts_col, watermark)
-        .filter(F.col(ts_col).isNotNull())  # unordered rows cannot be checked
-        .select(
-            F.col(series_col).cast("string").alias("_sid"),
-            (F.unix_micros(F.col(ts_col).cast("timestamp")).cast("double") / 1e6).alias("_epoch"),
-            F.col(value_col).cast("double").alias("_v"),
-        )
-    )
-    return prepped.groupBy("_sid").applyInPandasWithState(
-        fn, _FLAT_OUT, _FLAT_STATE, "append", GroupStateTimeout.NoTimeout
+    return _stream_check(
+        stream_df,
+        step,
+        "flag_flatline_check",
+        _FLAT_STATE,
+        value_col,
+        series_col,
+        ts_col,
+        watermark,
     )

@@ -46,7 +46,7 @@ def main() -> None:
     from rove_spark.operators.dedup import minhash_dedup
     from rove_spark.operators.gorilla import compress_series
     from rove_spark.operators.rollup import build_tiers
-    from rove_spark.operators.spatial import buddy_check, with_synthetic_coords
+    from rove_spark.operators.spatial import buddy_check, with_synthetic_coords_portable
     from rove_spark.session import get_spark
     from rove_spark.sources.synthetic import synthetic_transcripts
     from rove_spark.sources.tables import write_bucketed
@@ -106,7 +106,9 @@ def main() -> None:
         )
     )
 
-    located = with_synthetic_coords(base.groupBy("conv_id").agg(F.avg("text_len").alias("v")))
+    located = with_synthetic_coords_portable(
+        base.groupBy("conv_id").agg(F.avg("text_len").alias("v"))
+    )
     located = located.withColumn("ts", F.to_timestamp(F.lit("2024-01-01")))
     sections.append(
         (

@@ -96,7 +96,7 @@ on = ["conv_id", "ts"]
 
 
 def test_buddy_step_through_engine(spark):
-    from rove_spark.operators.spatial import with_synthetic_coords
+    from rove_spark.operators.spatial import with_synthetic_coords_portable
 
     toml = """
 [[step]]
@@ -106,7 +106,7 @@ radii = [500000.0]
 nums_min = [2]
 threshold = 30.0
 """
-    df = with_synthetic_coords(_signals(spark))
+    df = with_synthetic_coords_portable(_signals(spark))
     # one shared time slice so every conversation is a buddy candidate
     df = df.withColumn("ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
     df = df.groupBy("conv_id", "ts", "lat", "lon", "elev").agg(
@@ -123,7 +123,7 @@ def test_sct_step_misspelled_param_raises(spark):
     naming the key, instead of running with the kernel default."""
     import pytest
 
-    from rove_spark.operators.spatial import with_synthetic_coords
+    from rove_spark.operators.spatial import with_synthetic_coords_portable
 
     toml = """
 [[step]]
@@ -132,7 +132,7 @@ name = "sct"
 num_min = 3
 num_mx = 20
 """
-    df = with_synthetic_coords(_signals(spark))
+    df = with_synthetic_coords_portable(_signals(spark))
     with pytest.raises(ValueError, match="num_mx"):
         _engine(spark, toml=toml).run_pipeline(df, "ta", value_col="text_len")
 

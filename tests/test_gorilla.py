@@ -65,10 +65,11 @@ def test_values_constant_compresses_to_bits():
 @given(st.data())
 @settings(max_examples=25, deadline=None)
 def test_grouped_entry_builders_equal_per_chunk_encoders(data):
-    """The segmented group encoders must slice into byte-identical
-    timestamp blobs (same class policy as the scalar path) and
-    decode-identical value blobs, across random segment structures
-    including empty and 1-point segments."""
+    """Entries of K segments built in one call must slice into the
+    timestamp blobs of the one-segment calls (``encode_timestamps``),
+    byte for byte, and into value blobs that decode bit-exactly (NaN and
+    ±inf included), across random segment structures including empty
+    and 1-point segments."""
     n_seg = data.draw(st.integers(1, 12))
     lens = [data.draw(st.integers(0, 40)) for _ in range(n_seg)]
     ts_chunks = [
@@ -91,7 +92,13 @@ def test_grouped_entry_builders_equal_per_chunk_encoders(data):
         assert blob == gorilla.encode_timestamps(c), k
     v_chunks = [
         np.asarray(
-            data.draw(st.lists(st.floats(width=32, allow_nan=False), min_size=ln, max_size=ln)),
+            data.draw(
+                st.lists(
+                    st.floats(width=32, allow_nan=True, allow_infinity=True),
+                    min_size=ln,
+                    max_size=ln,
+                )
+            ),
             dtype=np.float32,
         )
         for ln in lens

@@ -23,7 +23,6 @@ from rove_spark.operators.rollup import (
     merge_tiers,
     read_tier,
     refresh_tier_increment,
-    refresh_tiers_incremental,
     rollup_from_raw,
 )
 from rove_spark.sources.synthetic import synthetic_transcripts
@@ -77,15 +76,6 @@ def test_merge_with_flags_and_hll(spark):
         F.hll_sketch_estimate("role_hll").alias("role_est"),
     )
     assert _canon(est(merged)) == _canon(est(full))
-
-
-def test_refresh_tiers_incremental_dict(spark):
-    df = synthetic_transcripts(spark, n_conv=20, avg_turns=30, period_s=60)
-    full = build_tiers(df, persist=False)
-    existing = build_tiers(_split(df, 0), persist=False)
-    refreshed = refresh_tiers_incremental(existing, _split(df, 1))
-    for tier in ("1m", "1h", "1d"):
-        assert _canon(refreshed[tier]) == _canon(full[tier]), tier
 
 
 # ------------------------------------------------------------------ table --

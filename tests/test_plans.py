@@ -265,12 +265,12 @@ def test_relational_buddy_has_no_python_stages(spark, parquet_transcripts):
     """The single-iteration buddy path (round 5) is whole-JVM: no
     ArrowEval/FlatMapGroupsInPandas stages, and neighbor moments come
     from a hash aggregate over the pair join."""
-    from rove_spark.operators.spatial import buddy_check, with_synthetic_coords
+    from rove_spark.operators.spatial import buddy_check, with_synthetic_coords_portable
 
     df = spark.read.parquet(parquet_transcripts).select(
         "conv_id", "ts", F.length("text").cast("double").alias("tl")
     )
-    located = with_synthetic_coords(df)
+    located = with_synthetic_coords_portable(df)
     out = buddy_check(
         located, "tl", radius=30000, num_min=2, threshold=3.0, cell_deg=0.5
     )

@@ -177,7 +177,11 @@ def test_synthetic_coords_deterministic(spark):
     from rove_spark.sources.synthetic import synthetic_transcripts
 
     df = synthetic_transcripts(spark, n_conv=10, avg_turns=5)
-    a = spatial.with_synthetic_coords(df).select("conv_id", "lat", "lon", "elev").distinct()
+    a = (
+        spatial.with_synthetic_coords_portable(df)
+        .select("conv_id", "lat", "lon", "elev")
+        .distinct()
+    )
     rows = a.collect()
     assert len(rows) == 10
     assert all(58.0 <= r.lat <= 61.0 and 8.0 <= r.lon <= 11.0 for r in rows)

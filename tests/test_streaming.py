@@ -173,3 +173,61 @@ def test_stream_flatline_check(tmp_path, spark):
     assert got[t0 + dt.timedelta(minutes=2)] == Flag.INCONCLUSIVE  # rn <= max
     assert got[t0 + dt.timedelta(minutes=3)] == Flag.FAIL  # 4th equal value
     assert got[t0 + dt.timedelta(minutes=4)] == Flag.PASS  # run broken
+
+
+def test_stream_checks_null_at_batch_boundary_match_batch(tmp_path, spark):
+    """A NULL value as the last row of one micro-batch and the first row of
+    the next: each stream check's flags over three micro-batches equal
+    the batch check's flags on the union of the rows (spike's last row
+    per series stays pending, so it is left out)."""
+    from rove_spark.operators import checks
+    from rove_spark.streaming.rollup_stream import stream_flatline_check, stream_spike_check
+
+    t0 = dt.datetime(2024, 1, 1)
+    values = {
+        "c1": [
+            [10.0, 10.0, 10.0, None],
+            [None, 10.0, 10.0, 100.0, 10.0, 10.0, None],
+            [None, 10.0, 10.0, 10.0, 10.0, 40.0, 10.0],
+        ],
+        "c2": [[1.0, 1.0, None], [None, 1.0, 20.0, 1.0], [1.0, 1.0, 1.0]],
+    }
+    batches = [[] for _ in range(3)]
+    for sid, parts in values.items():
+        i = 0
+        for b, part in enumerate(parts):
+            for v in part:
+                batches[b].append((sid, t0 + dt.timedelta(minutes=i), v))
+                i += 1
+    schema = "conv_id string, ts timestamp, value double"
+    src = tmp_path / "src"
+    stream_checks = {
+        "step_check": lambda s: stream_step_check(s, "value", max_=50.0, high=10.0),
+        "spike_check": lambda s: stream_spike_check(s, "value", max_=50.0, high=10.0),
+        "flatline_check": lambda s: stream_flatline_check(s, "value", max_=2),
+    }
+    for rows in batches:
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(str(src))
+        for name, check in stream_checks.items():
+            stream = spark.readStream.schema(schema).parquet(str(src))
+            _run_stream(check(stream), tmp_path / name, tmp_path / f"ckpt_{name}")
+
+    union = spark.createDataFrame([r for rows in batches for r in rows], schema)
+    batch_checks = {
+        "step_check": checks.step_check(union, "value", max_=50.0, high=10.0),
+        "spike_check": checks.spike_check(union, "value", max_=50.0, high=10.0),
+        "flatline_check": checks.flatline_check(union, "value", max_=2),
+    }
+    last = {sid: max(ts for s, ts, _ in batches[2] if s == sid) for sid in values}
+    for name, out in batch_checks.items():
+        want = {
+            (r.conv_id, r.ts): (r.value, r[f"flag_{name}"])
+            for r in out.collect()
+            if name != "spike_check" or r.ts != last[r.conv_id]
+        }
+        got = {
+            (r.series_id, r.ts): (r.value, r[f"flag_{name}"])
+            for r in spark.read.parquet(str(tmp_path / name)).collect()
+        }
+        assert got == want, name
+        assert Flag.DATA_MISSING in {f for _, f in want.values()}, name

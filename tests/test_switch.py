@@ -72,12 +72,14 @@ def test_switch_context_widening(spark):
 
 
 def test_polygon_spec(spark):
-    from rove_spark.operators.spatial import with_synthetic_coords
+    from rove_spark.operators.spatial import with_synthetic_coords_portable
 
     sw = DataSwitch()
     sw.register(
         "t",
-        lambda: with_synthetic_coords(synthetic_transcripts(spark, n_conv=50, avg_turns=5)),
+        lambda: with_synthetic_coords_portable(
+            synthetic_transcripts(spark, n_conv=50, avg_turns=5)
+        ),
     )
     box = [(8.0, 58.0), (9.5, 58.0), (9.5, 61.0), (8.0, 61.0)]  # (lon, lat)
     inside = sw.fetch("t", space_spec=SpaceSpec.poly(box))

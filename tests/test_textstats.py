@@ -53,27 +53,12 @@ def test_quality_score(spark, docs):
     assert out[1].stopword_ratio > 0.2
 
 
-def test_fingerprints(spark, docs):
-    out = textstats.with_fingerprint(docs)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert rows[1].fp_exact != rows[2].fp_exact
-    # robust fingerprint is stable under a tiny suffix edit, exact is not
-    edited = spark.createDataFrame(
-        [(1, rows[1].text if hasattr(rows[1], "text") else None)], "doc_id long, text string"
-    )
-    base = docs.filter(F.col("doc_id") == 1).select("text").first()[0]
-    pair = spark.createDataFrame(
-        [(1, base), (2, base + " extra")], "doc_id long, text string"
-    )
-    fps = {r.doc_id: r for r in textstats.with_fingerprint(pair, k_smallest=4).collect()}
-    assert fps[1].fp_exact != fps[2].fp_exact
-    assert fps[1].fp_robust == fps[2].fp_robust
-
-
 def test_fingerprint_portable_matches_semantics(spark, docs):
-    """Portable (md5) variant keeps the winnowing property — robust fp
-    stable under a tiny suffix edit, exact fp not — and differs from the
-    xxhash variant only in the hash family."""
+    """Distinct documents get distinct exact fps, and the winnowing
+    property holds: robust fp stable under a tiny suffix edit, exact fp
+    not."""
+    rows = {r.doc_id: r for r in textstats.with_fingerprint_portable(docs).collect()}
+    assert len({r.fp_exact for r in rows.values()}) == len(rows)
     base = docs.filter(F.col("doc_id") == 1).select("text").first()[0]
     pair = spark.createDataFrame(
         [(1, base), (2, base + " extra")], "doc_id long, text string"

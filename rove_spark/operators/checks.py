@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rove_spark.model import Flag, flag_col
+from rove_spark.operators.util import built_once
 
 DEFAULT_HIGH = 2.0  # harness.rs:47-48 hardcoded "high" threshold
 
@@ -65,18 +66,23 @@ def step_check(
     series head (no previous row); DATA_MISSING if either value is NULL.
     Reference: ``harness.rs:58-84`` (slice 70-71, window of 2 at 73).
     """
+    return df.withColumn(
+        out_col or flag_col("step_check"),
+        _step_flag(value_col, max_, high, series_col, tuple(order_cols)),
+    )
+
+
+@built_once
+def _step_flag(value_col, max_, high, series_col, order_cols) -> Column:
     w = _series_window(series_col, order_cols)
     v, pv = F.col(value_col), F.lag(value_col, 1).over(w)
     prev_exists = F.lag(order_cols[0], 1).over(w).isNotNull()
     diff = F.abs(v - pv)
-    return df.withColumn(
-        out_col or flag_col("step_check"),
-        _flag(
-            (~prev_exists, Flag.INCONCLUSIVE),
-            (v.isNull() | pv.isNull(), Flag.DATA_MISSING),
-            (diff >= max_, Flag.FAIL),
-            (diff >= high, Flag.WARN),
-        ),
+    return _flag(
+        (~prev_exists, Flag.INCONCLUSIVE),
+        (v.isNull() | pv.isNull(), Flag.DATA_MISSING),
+        (diff >= max_, Flag.FAIL),
+        (diff >= high, Flag.WARN),
     )
 
 
@@ -95,6 +101,14 @@ def spike_check(
     and min(|d1|,|d2|) ≥ threshold. Reference: ``harness.rs:29-57`` (slice
     43-44, window of 3 at 45; olympian calls it dip_check).
     """
+    return df.withColumn(
+        out_col or flag_col("spike_check"),
+        _spike_flag(value_col, max_, high, series_col, tuple(order_cols)),
+    )
+
+
+@built_once
+def _spike_flag(value_col, max_, high, series_col, order_cols) -> Column:
     w = _series_window(series_col, order_cols)
     v = F.col(value_col)
     pv, nv = F.lag(value_col, 1).over(w), F.lead(value_col, 1).over(w)
@@ -103,14 +117,11 @@ def spike_check(
     d1, d2 = v - pv, v - nv
     same_sign = (d1 * d2) > 0
     m = F.least(F.abs(d1), F.abs(d2))
-    return df.withColumn(
-        out_col or flag_col("spike_check"),
-        _flag(
-            (~prev_exists | ~next_exists, Flag.INCONCLUSIVE),
-            (v.isNull() | pv.isNull() | nv.isNull(), Flag.DATA_MISSING),
-            (same_sign & (m >= max_), Flag.FAIL),
-            (same_sign & (m >= high), Flag.WARN),
-        ),
+    return _flag(
+        (~prev_exists | ~next_exists, Flag.INCONCLUSIVE),
+        (v.isNull() | pv.isNull() | nv.isNull(), Flag.DATA_MISSING),
+        (same_sign & (m >= max_), Flag.FAIL),
+        (same_sign & (m >= high), Flag.WARN),
     )
 
 
@@ -134,23 +145,31 @@ def flatline_check(
     ``max_`` preceding rows in the series can never FAIL and flags
     INCONCLUSIVE.
     """
+    run_grp, run_len, rn, flag = _flatline_stages(value_col, max_, series_col, tuple(order_cols))
+    out = (
+        df.withColumn("_run_grp", run_grp)
+        .withColumn("_run_len", run_len)
+        .withColumn("_rn", rn)
+        .withColumn(out_col or flag_col("flatline_check"), flag)
+    )
+    return out.drop("_run_grp", "_run_len", "_rn")
+
+
+@built_once
+def _flatline_stages(value_col, max_, series_col, order_cols) -> tuple[Column, ...]:
+    """The three staged columns (run group id, run length, row number),
+    then the flag that reads them."""
     w = _series_window(series_col, order_cols)
     v, pv = F.col(value_col), F.lag(value_col, 1).over(w)
     changed = (~v.eqNullSafe(pv)).cast("int")  # IS DISTINCT FROM
-    df2 = df.withColumn("_run_grp", F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    run_grp = F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
     wr = Window.partitionBy(series_col, "_run_grp").orderBy(*order_cols)
-    df2 = df2.withColumn("_run_len", F.row_number().over(wr)).withColumn(
-        "_rn", F.row_number().over(w)
+    flag = _flag(
+        (v.isNull(), Flag.DATA_MISSING),
+        (F.col("_run_len") >= max_ + 1, Flag.FAIL),
+        (F.col("_rn") <= max_, Flag.INCONCLUSIVE),
     )
-    out = df2.withColumn(
-        out_col or flag_col("flatline_check"),
-        _flag(
-            (v.isNull(), Flag.DATA_MISSING),
-            (F.col("_run_len") >= max_ + 1, Flag.FAIL),
-            (F.col("_rn") <= max_, Flag.INCONCLUSIVE),
-        ),
-    )
-    return out.drop("_run_grp", "_run_len", "_rn")
+    return run_grp, F.row_number().over(wr), F.row_number().over(w), flag
 
 
 def range_check(
@@ -163,13 +182,15 @@ def range_check(
     """Stateless bounds check (``pipeline.rs:70-74``; sample [−55, 50] at
     ``sample_pipelines/fresh/TA_PT1H.toml:13-17``). Pure projection — no
     shuffle, fully pushdown-friendly."""
+    return df.withColumn(out_col or flag_col("range_check"), _range_flag(value_col, min_, max_))
+
+
+@built_once
+def _range_flag(value_col, min_, max_) -> Column:
     v = F.col(value_col)
-    return df.withColumn(
-        out_col or flag_col("range_check"),
-        _flag(
-            (v.isNull(), Flag.DATA_MISSING),
-            ((v < min_) | (v > max_), Flag.FAIL),
-        ),
+    return _flag(
+        (v.isNull(), Flag.DATA_MISSING),
+        ((v < min_) | (v > max_), Flag.FAIL),
     )
 
 
@@ -181,13 +202,18 @@ def special_value_check(
 ) -> DataFrame:
     """Flag exact sentinel values (``pipeline.rs:65-68``; sample list at
     ``TA_PT1H.toml:8-11``). Stateless projection."""
-    v = F.col(value_col)
     return df.withColumn(
         out_col or flag_col("special_value_check"),
-        _flag(
-            (v.isNull(), Flag.DATA_MISSING),
-            (v.isin(list(special_values)), Flag.FAIL),
-        ),
+        _special_value_flag(value_col, tuple(special_values)),
+    )
+
+
+@built_once
+def _special_value_flag(value_col, special_values) -> Column:
+    v = F.col(value_col)
+    return _flag(
+        (v.isNull(), Flag.DATA_MISSING),
+        (v.isin(list(special_values)), Flag.FAIL),
     )
 
 

@@ -31,41 +31,65 @@ import re
 from collections.abc import Sequence
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rove_spark.model import Flag, flag_col
+from rove_spark.operators.util import built_once
 from rove_spark.sources.tables import check_day
 
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 
-def _base_aggs(text_len_col: str, tool_col: str | None) -> list:
+@built_once
+def _base_aggs(text_len_col: str, tool_col: str | None) -> tuple:
     tool_calls = (
         F.sum(F.col(tool_col).isNotNull().cast("long"))
         if tool_col
         else F.sum(F.lit(0).cast("long"))
     )
-    return [
+    return (
         F.count(F.lit(1)).alias("n_turns"),
         F.sum(F.col(text_len_col).cast("long")).alias("text_len_sum"),
         F.min(F.col(text_len_col).cast("long")).alias("text_len_min"),
         F.max(F.col(text_len_col).cast("long")).alias("text_len_max"),
         tool_calls.alias("n_tool_calls"),
-    ]
+    )
 
 
 def _flag_aggs(checks: Sequence[str]) -> list:
-    out = []
-    for c in checks:
-        fc = F.col(flag_col(c))
-        out.append(F.sum((fc == int(Flag.FAIL)).cast("long")).alias(f"n_fail_{c}"))
-        out.append(
-            F.sum(fc.isin(int(Flag.FAIL), int(Flag.WARN), int(Flag.INVALID)).cast("long")).alias(
-                f"n_flagged_{c}"
-            )
-        )
-    return out
+    return [agg for c in checks for agg in _check_aggs(c)]
+
+
+@built_once
+def _check_aggs(check: str) -> tuple:
+    fc = F.col(flag_col(check))
+    return (
+        F.sum((fc == int(Flag.FAIL)).cast("long")).alias(f"n_fail_{check}"),
+        F.sum(fc.isin(int(Flag.FAIL), int(Flag.WARN), int(Flag.INVALID)).cast("long")).alias(
+            f"n_flagged_{check}"
+        ),
+    )
+
+
+@built_once
+def _tier_keys(tier: str, series_col: str, ts_col: str, role_col: str | None) -> tuple:
+    """Group keys of ``tier``: the series, ``ts_col`` truncated to the
+    tier's bucket as ``bucket_ts``, and the role when there is one."""
+    keys = (F.col(series_col), F.date_trunc(TIERS[tier], F.col(ts_col)).alias("bucket_ts"))
+    return keys + (F.col(role_col),) if role_col else keys
+
+
+def _is_string(df: DataFrame, col: str) -> bool:
+    return dict(df.dtypes).get(col) == "string"
+
+
+@built_once
+def _text_len(text_len_source: str, is_text: bool) -> Column:
+    """The int-domain text length: taken here from a string column,
+    cast from a precomputed length otherwise."""
+    src = F.length(text_len_source) if is_text else F.col(text_len_source)
+    return src.cast("long")
 
 
 def rollup_from_raw(
@@ -82,22 +106,14 @@ def rollup_from_raw(
     """Raw turns (+ flag columns) → one tier. ``text_len_source`` may be the
     ``text`` column itself (length taken here, int domain) or a precomputed
     integer length column."""
-    trunc = TIERS[tier]
-    dtypes = dict(df.dtypes)
     tl = "_tl"
-    if dtypes.get(text_len_source) == "string":
-        df = df.withColumn(tl, F.length(text_len_source).cast("long"))
-    else:
-        df = df.withColumn(tl, F.col(text_len_source).cast("long"))
-    keys = [F.col(series_col), F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts")]
-    if role_col:
-        keys.append(F.col(role_col))
+    df = df.withColumn(tl, _text_len(text_len_source, _is_string(df, text_len_source)))
     sketches = [
         F.hll_sketch_agg(src).alias(f"{name}_hll")
         for name, src in (sketch_cols or {}).items()
     ]
-    out = df.groupBy(*keys).agg(*_base_aggs(tl, tool_col), *_flag_aggs(checks), *sketches)
-    return out
+    keys = _tier_keys(tier, series_col, ts_col, role_col)
+    return df.groupBy(*keys).agg(*_base_aggs(tl, tool_col), *_flag_aggs(checks), *sketches)
 
 
 def rollup_cascade(
@@ -108,10 +124,7 @@ def rollup_cascade(
 ) -> DataFrame:
     """Finer tier → coarser tier. Sums of sums / min of mins / max of maxes;
     every stat column composes without touching raw data."""
-    trunc = TIERS[to_tier]
-    keys = [F.col(series_col), F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts")]
-    if role_col:
-        keys.append(F.col(role_col))
+    keys = _tier_keys(to_tier, series_col, "bucket_ts", role_col)
     aggs = _suffix_aggs(tier_df.dtypes, skip={series_col, "bucket_ts", role_col})
     return tier_df.groupBy(*keys).agg(*aggs)
 
@@ -120,21 +133,20 @@ def _suffix_aggs(dtypes, skip) -> list:
     """The engine's ONE definition of how tier stats compose (cascade ≡
     merge ≡ cross-segment combine): counts/sums additive, ``*_min`` /
     ``*_max`` idempotent-combining, ``*_hll`` sketch union."""
-    aggs = []
-    for name, _dtype in dtypes:
-        if name in skip:
-            continue
-        if name.endswith("_min"):
-            aggs.append(F.min(name).alias(name))
-        elif name.endswith("_max"):
-            aggs.append(F.max(name).alias(name))
-        elif name.endswith("_hll"):
-            # mergeable distinct sketches: union composes exactly like sums
-            # (the continuous-aggregate primitive for COUNT DISTINCT)
-            aggs.append(F.hll_union_agg(name).alias(name))
-        else:  # counts and sums are additive
-            aggs.append(F.sum(name).alias(name))
-    return aggs
+    return [_suffix_agg(name) for name, _dtype in dtypes if name not in skip]
+
+
+@built_once
+def _suffix_agg(name: str) -> Column:
+    if name.endswith("_min"):
+        return F.min(name).alias(name)
+    if name.endswith("_max"):
+        return F.max(name).alias(name)
+    if name.endswith("_hll"):
+        # mergeable distinct sketches: union composes exactly like sums
+        # (the continuous-aggregate primitive for COUNT DISTINCT)
+        return F.hll_union_agg(name).alias(name)
+    return F.sum(name).alias(name)  # counts and sums are additive
 
 
 def build_tiers(
@@ -203,12 +215,8 @@ def build_tiers_onepass(
     Sketch columns (HLL) are cascade-only — merge them through
     ``rollup_cascade``, which is their model anyway."""
     trunc_cols = {"_m": "minute", "_h": "hour", "_d": "day"}
-    dtypes = dict(df.dtypes)
     tl = "_tl"
-    if dtypes.get(text_len_source) == "string":
-        d = df.withColumn(tl, F.length(text_len_source).cast("long"))
-    else:
-        d = df.withColumn(tl, F.col(text_len_source).cast("long"))
+    d = df.withColumn(tl, _text_len(text_len_source, _is_string(df, text_len_source)))
     for c, unit in trunc_cols.items():
         d = d.withColumn(c, F.date_trunc(unit, F.col(ts_col)))
     keys = [series_col] + ([role_col] if role_col else [])

@@ -1,8 +1,23 @@
-"""Shared physical-plan helpers for grouped-UDF stages."""
+"""Shared plan-building helpers: expression memoization and the
+physical-plan pins for grouped-UDF stages."""
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame
+
+#: Memoize a private ``Column`` builder on its (hashable) arguments, so an
+#: expression is built once per process instead of on every plan: each
+#: ``F.*`` call is a py4j round trip to the JVM, and planning the daily
+#: job's checks and tiers made ~2,500 of them. Catalyst ``Column``s are
+#: immutable and bound to no session (``SparkContext.stop()`` keeps the
+#: py4j gateway), so a cached expression is valid in every later plan.
+#: The key must hold every argument the expression depends on; ``typed``
+#: keeps ``5`` and ``5.0`` apart, as their literals differ in the plan.
+#: Builders return tuples, never lists, so a caller cannot mutate a
+#: cached result.
+built_once = lru_cache(maxsize=256, typed=True)
 
 
 def parallel_groups(df: DataFrame, *keys: str) -> DataFrame:

@@ -361,14 +361,15 @@ class Engine:
             t0 = time()
             # tier text stats follow the frame's columns: use real text when
             # present, otherwise the checked signal; tool column is optional
+            cols = df.columns
             tiers = build_tiers(
                 flagged,
                 series_col=series_col,
                 ts_col=ts_col,
                 checks=[s.name for s in pipe.steps],
-                text_len_source="text" if "text" in df.columns else value_col,
-                tool_col="tool" if "tool" in df.columns else None,
-                role_col="role" if "role" in df.columns else None,
+                text_len_source="text" if "text" in cols else value_col,
+                tool_col="tool" if "tool" in cols else None,
+                role_col="role" if "role" in cols else None,
             )
             try:
                 write_tier("1m", tiers["1m"])  # fills the cached 1m tier the cascade reads
@@ -420,6 +421,7 @@ class Engine:
             delta_df, pipeline_name, value_col, series_col, (ts_col,)
         )
         check_names = [s.name for s in pipe.steps]
+        cols = delta_df.columns
         out: dict[str, dict] = {}
         for tier_name in ("1m", "1h", "1d"):
             inc = open_table(
@@ -433,9 +435,9 @@ class Engine:
                 series_col=series_col,
                 ts_col=ts_col,
                 checks=check_names,
-                text_len_source="text" if "text" in delta_df.columns else value_col,
-                tool_col="tool" if "tool" in delta_df.columns else None,
-                role_col="role" if "role" in delta_df.columns else None,
+                text_len_source="text" if "text" in cols else value_col,
+                tool_col="tool" if "tool" in cols else None,
+                role_col="role" if "role" in cols else None,
             )
         return out
 

@@ -82,6 +82,15 @@ def parse_validate_request(body: dict) -> dict:
         pipeline = body["pipeline"]
     except KeyError as e:
         raise ValidateError(f"missing required field: {e}") from e
+    # names are lookup keys: a list here would reach a dict lookup as an
+    # unhashable key (a 500), and a string of backing sources would be
+    # iterated as one source name per character
+    for field, v in (("data_source", data_source), ("pipeline", pipeline)):
+        if not isinstance(v, str):
+            raise ValidateError(f"{field} must be a string, not {v!r}")
+    backing = body.get("backing_sources", [])
+    if not (isinstance(backing, list) and all(isinstance(b, str) for b in backing)):
+        raise ValidateError(f"backing_sources must be a list of strings, not {backing!r}")
     resolution: Duration | None = None
     res = body.get("time_resolution")
     if res is not None and not isinstance(res, str):
@@ -107,7 +116,7 @@ def parse_validate_request(body: dict) -> dict:
         space = SpaceSpec()  # all (proto field 8 / unset)
     return {
         "data_source": data_source,
-        "backing_sources": list(body.get("backing_sources", [])),
+        "backing_sources": backing,
         "time_spec": TimeSpec(start=start, end=end, resolution=resolution),
         "space_spec": space,
         "pipeline": pipeline,

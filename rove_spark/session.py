@@ -132,6 +132,14 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", os.environ["OMP_NUM_THREADS"])
         .config("spark.executorEnv.MKL_NUM_THREADS", os.environ["MKL_NUM_THREADS"])
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture: with it on, pyspark wraps every
+        # F.* / Column call in _with_origin, which makes ~4 extra py4j
+        # round trips per call (active session, a conf read, origin
+        # set/clear) and tries `import IPython` each time. Planning the
+        # daily job made ~2,500 round trips with it on. It only adds
+        # the Python call site to analysis error messages;
+        # ``extra_conf`` can turn it back on for debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # shuffle spill dir: prefer tmpfs — on a real cluster each executor has
     # local NVMe, so shuffle IO scales with nodes; on this single box the

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import functions as F
+
 from rove_spark.model import Flag
 from rove_spark.operators import checks
 
@@ -26,9 +28,24 @@ def _flags(df, col):
     return [r[col] for r in df.orderBy("ts").collect()]
 
 
+def _with_zeros(df):
+    """A second value column, ``zero``, constant 0.0. The checks build
+    their expressions once per argument set, so each golden test below
+    also checks its frame with a second threshold and on ``zero`` in the
+    same plan: a cache key missing an argument would hand one of those
+    calls another call's flags."""
+    return df.withColumn("zero", F.lit(0.0))
+
+
 def test_step_check_golden(spark):
-    df = _series(spark, [10.0, 10.5, 13.0, 20.0, None, 8.0])
+    df = _with_zeros(_series(spark, [10.0, 10.5, 13.0, 20.0, None, 8.0]))
     out = checks.step_check(df, "value", max_=5.0, high=2.0)
+    out = checks.step_check(out, "value", max_=2.4, high=2.0, out_col="tight")
+    out = checks.step_check(out, "zero", max_=5.0, high=2.0, out_col="zero_flag")
+    assert _flags(out, "tight") == [
+        Flag.INCONCLUSIVE, Flag.PASS, Flag.FAIL, Flag.FAIL, Flag.DATA_MISSING, Flag.DATA_MISSING
+    ]
+    assert _flags(out, "zero_flag") == [Flag.INCONCLUSIVE] + [Flag.PASS] * 5
     assert _flags(out, "flag_step_check") == [
         Flag.INCONCLUSIVE,  # no previous row
         Flag.PASS,  # |0.5|
@@ -40,8 +57,17 @@ def test_step_check_golden(spark):
 
 
 def test_spike_check_golden(spark):
-    df = _series(spark, [10, 10, 20, 10, 10, 12, 10, None, 10])
+    df = _with_zeros(_series(spark, [10, 10, 20, 10, 10, 12, 10, None, 10]))
     out = checks.spike_check(df, "value", max_=4.0, high=2.0)
+    out = checks.spike_check(out, "value", max_=1.5, high=1.0, out_col="tight")
+    out = checks.spike_check(out, "zero", max_=4.0, high=2.0, out_col="zero_flag")
+    assert _flags(out, "tight") == [
+        Flag.INCONCLUSIVE, Flag.PASS, Flag.FAIL, Flag.PASS, Flag.PASS, Flag.FAIL,
+        Flag.DATA_MISSING, Flag.DATA_MISSING, Flag.INCONCLUSIVE,
+    ]
+    assert _flags(out, "zero_flag") == [Flag.INCONCLUSIVE] + [Flag.PASS] * 7 + [
+        Flag.INCONCLUSIVE
+    ]
     assert _flags(out, "flag_spike_check") == [
         Flag.INCONCLUSIVE,  # no prev row
         Flag.PASS,  # d1=0 → not a local extremum
@@ -56,8 +82,15 @@ def test_spike_check_golden(spark):
 
 
 def test_flatline_check_golden(spark):
-    df = _series(spark, [5, 5, 5, 5, 7, 7, 7, 7, None, 7, 7])
+    df = _with_zeros(_series(spark, [5, 5, 5, 5, 7, 7, 7, 7, None, 7, 7]))
     out = checks.flatline_check(df, "value", max_=3)
+    out = checks.flatline_check(out, "value", max_=1, out_col="tight")
+    out = checks.flatline_check(out, "zero", max_=3, out_col="zero_flag")
+    assert _flags(out, "tight") == [
+        Flag.INCONCLUSIVE, Flag.FAIL, Flag.FAIL, Flag.FAIL, Flag.PASS, Flag.FAIL,
+        Flag.FAIL, Flag.FAIL, Flag.DATA_MISSING, Flag.PASS, Flag.FAIL,
+    ]
+    assert _flags(out, "zero_flag") == [Flag.INCONCLUSIVE] * 3 + [Flag.FAIL] * 8
     assert _flags(out, "flag_flatline_check") == [
         Flag.INCONCLUSIVE,  # fewer than max_ preceding rows
         Flag.INCONCLUSIVE,
@@ -74,8 +107,12 @@ def test_flatline_check_golden(spark):
 
 
 def test_range_check_golden(spark):
-    df = _series(spark, [-1, 0, 25, 50, 51, None])
+    df = _with_zeros(_series(spark, [-1, 0, 25, 50, 51, None]))
     out = checks.range_check(df, "value", min_=0.0, max_=50.0)
+    out = checks.range_check(out, "value", min_=-5.0, max_=60.0, out_col="wide")
+    out = checks.range_check(out, "zero", min_=0.0, max_=50.0, out_col="zero_flag")
+    assert _flags(out, "wide") == [Flag.PASS] * 5 + [Flag.DATA_MISSING]
+    assert _flags(out, "zero_flag") == [Flag.PASS] * 6
     assert _flags(out, "flag_range_check") == [
         Flag.FAIL,
         Flag.PASS,
@@ -87,8 +124,14 @@ def test_range_check_golden(spark):
 
 
 def test_special_value_check_golden(spark):
-    df = _series(spark, [1.0, -999.0, 0.0, None])
+    df = _with_zeros(_series(spark, [1.0, -999.0, 0.0, None]))
     out = checks.special_value_check(df, "value", special_values=[-999.0, 0.0])
+    out = checks.special_value_check(out, "value", special_values=[1.0], out_col="ones")
+    out = checks.special_value_check(
+        out, "zero", special_values=[-999.0, 0.0], out_col="zero_flag"
+    )
+    assert _flags(out, "ones") == [Flag.FAIL, Flag.PASS, Flag.PASS, Flag.DATA_MISSING]
+    assert _flags(out, "zero_flag") == [Flag.FAIL] * 4
     assert _flags(out, "flag_special_value_check") == [
         Flag.PASS,
         Flag.FAIL,

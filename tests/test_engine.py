@@ -232,6 +232,40 @@ def test_spatial_check_on_duplicate_keys_reads_the_input(spark):
     assert got == alone
 
 
+def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
+    """Building run_job's 1m tier plan (the transcripts_pt1m checks, then
+    build_tiers) makes at most 400 py4j round trips once the check and
+    tier expressions are built. With call-site capture on and every
+    expression rebuilt per plan it made ~2,600, each a blocking call into
+    the JVM on the daily job's critical path."""
+    from pathlib import Path
+
+    from py4j.clientserver import ClientServerConnection
+
+    from rove_spark.operators.rollup import build_tiers
+
+    eng = Engine(spark, pipeline_dir=Path(__file__).resolve().parents[1] / "pipelines")
+    df = _signals(spark)
+    checks = [s.name for s in eng.pipelines["transcripts_pt1m"].steps]
+
+    def build():
+        flagged = eng.run_pipeline(df, "transcripts_pt1m", value_col="text_len")
+        return build_tiers(flagged, checks=checks, persist=False)
+
+    build()  # fills the expression caches
+    calls = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(
+        ClientServerConnection,
+        "send_command",
+        lambda self, command, *a, **kw: calls.append(command) or send(self, command, *a, **kw),
+    )
+    tiers = build()
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 400, len(calls)
+    assert tiers["1d"].columns[:3] == ["conv_id", "bucket_ts", "role"]
+
+
 def test_melt_flags_long_format(spark):
     eng = _engine(spark)
     out = eng.run_pipeline(_signals(spark), "ta", value_col="text_len")

@@ -77,6 +77,22 @@ def test_parse_request_rejects_non_object_body_and_non_string_resolution():
         parse_validate_request(_request(time_resolution=5))
 
 
+def test_parse_request_rejects_non_string_names_and_backing_sources():
+    """A pipeline or data_source that is not a string and backing_sources
+    that is not a list of strings are invalid requests. Before, a list
+    reached the pipeline lookup as an unhashable key (a 500), and the
+    string "aux" fetched the sources "a", "u" and "x" (a 404 naming 'a')."""
+    for field in ("pipeline", "data_source"):
+        for bad in (["spatial_qc"], {"name": "qc"}, 7, None):
+            with pytest.raises(ValidateError, match=f"{field} must be a string"):
+                parse_validate_request(_request(**{field: bad}))
+    for bad in ("aux", ["aux", 3], {"aux": 1}, None):
+        with pytest.raises(ValidateError, match="backing_sources must be a list of strings"):
+            parse_validate_request(_request(backing_sources=bad))
+    assert parse_validate_request(_request(backing_sources=["aux"]))["backing_sources"] == ["aux"]
+    assert parse_validate_request(_request())["backing_sources"] == []
+
+
 # ------------------------------------------------------------ end-to-end --
 
 
@@ -261,6 +277,8 @@ def test_http_bad_requests_and_engine_failures_get_a_status(service):
         assert _post(server, json.dumps(_request(start_time=True)).encode())[0] == 400
         assert _post(server, b"{}", content_length="abc")[0] == 400
         assert _post(server, b"{}", content_length="-1")[0] == 400
+        assert _post(server, json.dumps(_request(pipeline=["qc"])).encode())[0] == 400
+        assert _post(server, json.dumps(_request(backing_sources="mem")).encode())[0] == 400
         status, reason = _post(server, json.dumps(_request(pipeline="plan_error")).encode())
         assert (status, reason.split(":")[0]) == (500, "TypeError")
         status, reason = _post(server, json.dumps(_request(pipeline="job_error")).encode())

@@ -24,6 +24,11 @@ Edge semantics (SPEC.md): a point whose required context *rows* fall outside
 the series ⇒ INCONCLUSIVE (the reference simply emits no flag for context
 points — batch output keeps the row, so the gap in coverage is explicit);
 context row present but value NULL ⇒ DATA_MISSING.
+
+The five window and projection checks build their flag ``Column`` once
+per argument set (``operators.util.built_once``); each call only
+attaches it to the frame, so planning a pipeline costs a few py4j round
+trips per step instead of dozens.
 """
 
 from __future__ import annotations

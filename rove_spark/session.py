@@ -11,8 +11,12 @@ Scale posture (designed for 1000-executor clusters, tested on local[N]):
 from __future__ import annotations
 
 import glob as _glob
+import hashlib
 import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -30,16 +34,7 @@ def probe_iceberg() -> str | None:
     if explicit and os.path.isfile(explicit):
         log.info("iceberg probe: using $ROVE_ICEBERG_JAR=%s", explicit)
         return explicit
-    candidates = []
-    spark_home = os.environ.get("SPARK_HOME")
-    if spark_home:
-        candidates.append(os.path.join(spark_home, "jars"))
-    try:
-        import pyspark
-
-        candidates.append(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
-    except ImportError:
-        pass
+    candidates = _spark_jar_dirs()
     for d in candidates:
         hits = sorted(_glob.glob(os.path.join(d, "iceberg-spark-runtime*.jar")))
         if hits:
@@ -81,13 +76,101 @@ def _pin_blas_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
+#: Local file system for a local-mode session (``jvm/NioLocalFileSystem.java``):
+#: Hadoop's own spawns ``chmod`` from the JVM for every file and directory
+#: it creates when the native hadoop library is missing (Spark's builds
+#: ship none) — ~25 processes per daily ``run_job``, each a clone of the
+#: multi-GB driver until it execs. The class sets the same modes in-process.
+_NIO_FS_CLASS = "rove_spark.jvm.NioLocalFileSystem"
+_NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
+
+
+def _spark_jar_dirs() -> list[str]:
+    """$SPARK_HOME/jars, then pyspark's bundled jars dir."""
+    dirs = []
+    spark_home = os.environ.get("SPARK_HOME")
+    if spark_home:
+        dirs.append(os.path.join(spark_home, "jars"))
+    try:
+        import pyspark
+
+        dirs.append(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
+    except ImportError:
+        pass
+    return dirs
+
+
+def _nio_fs_classes(pkg_root: str) -> str | None:
+    """Directory with the compiled ``NioLocalFileSystem``, compiled with
+    ``javac`` against Spark's Hadoop API jar on first use and kept under
+    ``<pkg_root>/.rove_jvm/<digest of source and javac command>``; None when
+    there is no ``javac`` or jar, or the compile fails."""
+    java_home = os.environ.get("JAVA_HOME")
+    javac = os.path.join(java_home, "bin", "javac") if java_home else None
+    if not (javac and os.path.isfile(javac)):
+        javac = shutil.which("javac")
+    jars = [j for d in _spark_jar_dirs() for j in sorted(_glob.glob(os.path.join(d, "hadoop-client-api-*.jar")))]
+    if not javac or not jars:
+        return None
+    # Spark 4 runs on Java 17+: class files any of its JVMs load
+    cmd = [os.path.realpath(javac), "-nowarn", "--release", "17", "-cp", jars[-1]]
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read() + "\0".join(cmd).encode()).hexdigest()[:16]
+    out = os.path.join(pkg_root, ".rove_jvm", digest)
+    if os.path.isdir(out):
+        return out
+    try:
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
+        r = subprocess.run(
+            cmd + ["-d", tmp, _NIO_FS_SOURCE], capture_output=True, text=True, timeout=300
+        )
+        if r.returncode != 0:
+            log.warning("NioLocalFileSystem did not compile; keeping Hadoop's local file system: %s", r.stderr)
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
+        try:
+            os.rename(tmp, out)
+        except OSError:  # a concurrent session compiled it first
+            shutil.rmtree(tmp, ignore_errors=True)
+    except (OSError, subprocess.SubprocessError) as e:
+        log.warning("NioLocalFileSystem not compiled (%s); keeping Hadoop's local file system", e)
+        return None
+    return out
+
+
+def _nio_fs_confs(master: str, pkg_root: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """``file:`` through ``NioLocalFileSystem`` in a local-mode session,
+    whose tasks run in the driver JVM. A JVM that is already up keeps its
+    class path, so there the class is used only if it is on it; a caller
+    ``spark.driver.extraClassPath`` popped from ``extra_conf`` is appended."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None:
+        try:
+            SparkContext._gateway.jvm.java.lang.Class.forName(_NIO_FS_CLASS)
+        except Exception:  # noqa: BLE001 - py4j error: the class is not on the class path
+            return {}
+        return {"spark.hadoop.fs.file.impl": _NIO_FS_CLASS}
+    classes = _nio_fs_classes(pkg_root)
+    if classes is None:
+        return {}
+    caller_cp = extra_conf.pop("spark.driver.extraClassPath", None)
+    return {
+        "spark.driver.extraClassPath": f"{classes}{os.pathsep}{caller_cp}" if caller_cp else classes,
+        "spark.hadoop.fs.file.impl": _NIO_FS_CLASS,
+    }
+
+
 def get_spark(
     app_name: str = "rove_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    _export_pythonpath()
+    pkg_root = _export_pythonpath()
     _pin_blas_threads()
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if shuffle_partitions is None:
@@ -149,6 +232,8 @@ def get_spark(
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         b = b.config("spark.local.dir", os.path.join(shm, "rove_spark_local"))
     extra_conf = dict(extra_conf or {})
+    for k, v in _nio_fs_confs(master, pkg_root, extra_conf).items():
+        b = b.config(k, v)
     iceberg_jar = probe_iceberg()
     if iceberg_jar:
         for k, v in _iceberg_confs(iceberg_jar, extra_conf).items():

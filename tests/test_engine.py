@@ -238,6 +238,7 @@ def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
     tier expressions are built. With call-site capture on and every
     expression rebuilt per plan it made ~2,600, each a blocking call into
     the JVM on the daily job's critical path."""
+    import threading
     from pathlib import Path
 
     from py4j.clientserver import ClientServerConnection
@@ -253,13 +254,18 @@ def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
         return build_tiers(flagged, checks=checks, persist=False)
 
     build()  # fills the expression caches
+    # this thread's calls only: py4j's finalizer thread sends the deletes
+    # of earlier tests' garbage through the same method whenever it wakes
     calls = []
+    me = threading.get_ident()
     send = ClientServerConnection.send_command
-    monkeypatch.setattr(
-        ClientServerConnection,
-        "send_command",
-        lambda self, command, *a, **kw: calls.append(command) or send(self, command, *a, **kw),
-    )
+
+    def counted(self, command, *a, **kw):
+        if threading.get_ident() == me:
+            calls.append(command)
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     tiers = build()
     monkeypatch.undo()
     assert 0 < len(calls) <= 400, len(calls)

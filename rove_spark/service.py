@@ -29,6 +29,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import logging
+import math
 import threading
 from collections.abc import Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -71,6 +72,24 @@ def _parse_ts(v) -> dt.datetime:
     raise ValidateError(f"unparseable timestamp: {v!r}")
 
 
+def _vertex(p) -> tuple[float, float]:
+    """A polygon vertex ``{"lat": .., "lon": ..}`` as finite reals: a
+    string, null, bool or NaN coordinate would match no station and
+    answer 200 with zero results."""
+    try:
+        lat, lon = p["lat"], p["lon"]
+        ok = all(
+            isinstance(c, (int, float)) and not isinstance(c, bool) and math.isfinite(c)
+            for c in (lat, lon)
+        )
+    except (KeyError, TypeError, OverflowError):
+        ok = False
+    if not ok:
+        # invalid spec → InvalidArgument (400), never a socket abort
+        raise ValidateError(f"malformed polygon vertex: {p!r} (lat and lon must be finite numbers)")
+    return float(lat), float(lon)
+
+
 def parse_validate_request(body: dict) -> dict:
     """ValidateRequest (proto fields 1-10) → validated python spec."""
     if not isinstance(body, dict):
@@ -105,13 +124,14 @@ def parse_validate_request(body: dict) -> dict:
     if n_specs > 1:
         raise ValidateError("SpaceSpec is a oneof: pass at most one of one/polygon/all")
     if one is not None:
-        space = SpaceSpec.one(str(one))
+        # an id, not anything str() can print: ["a"] would select "['a']"
+        if not isinstance(one, str):
+            raise ValidateError(f"one must be a string, not {one!r}")
+        space = SpaceSpec.one(one)
     elif polygon is not None:
-        try:
-            space = SpaceSpec.poly([(p["lat"], p["lon"]) for p in polygon])
-        except (KeyError, TypeError) as e:
-            # invalid spec → InvalidArgument (400), never a socket abort
-            raise ValidateError(f"malformed polygon vertex: {e}") from e
+        if not isinstance(polygon, list):
+            raise ValidateError(f"polygon must be a list of vertices, not {polygon!r}")
+        space = SpaceSpec.poly([_vertex(p) for p in polygon])
     else:
         space = SpaceSpec()  # all (proto field 8 / unset)
     return {

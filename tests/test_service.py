@@ -93,6 +93,25 @@ def test_parse_request_rejects_non_string_names_and_backing_sources():
     assert parse_validate_request(_request())["backing_sources"] == []
 
 
+def test_parse_request_rejects_non_string_one_and_non_numeric_vertices():
+    """``one`` is a series id and a polygon vertex is two finite numbers.
+    Before, ``"one": ["a"]`` selected the id "['a']" and a vertex such as
+    ``{"lat": "x", "lon": null}`` matched nothing: both answered 200 with
+    zero results."""
+    for bad in (["a"], 7, {"id": "a"}, True):
+        with pytest.raises(ValidateError, match="one must be a string"):
+            parse_validate_request(_request(one=bad))
+    ok = {"lat": 59.0, "lon": 10}
+    for vertex in ({"lat": "x", "lon": None}, {"lat": None, "lon": 10.0}, {"lat": True, "lon": 10.0},
+                   {"lat": 59.0, "lon": "10"}, {"lat": float("nan"), "lon": 10.0},
+                   {"lat": 59.0, "lon": float("inf")}, {"lat": 10**400, "lon": 1.0}, {"lat": 1.0}, [59.0, 10.0]):
+        with pytest.raises(ValidateError, match="malformed polygon vertex"):
+            parse_validate_request(_request(polygon=[ok, vertex]))
+    with pytest.raises(ValidateError, match="polygon must be a list"):
+        parse_validate_request(_request(polygon={"lat": 59.0, "lon": 10.0}))
+    assert parse_validate_request(_request(polygon=[ok]))["space_spec"].polygon == ((59.0, 10.0),)
+
+
 # ------------------------------------------------------------ end-to-end --
 
 
@@ -254,8 +273,8 @@ def _check_fails_in_job(df, value_col, out_col, **kw):
 
 def test_http_bad_requests_and_engine_failures_get_a_status(service):
     """Every failure before the first chunk answers with a status: a body
-    that is not an object, a non-string time_resolution and a bad
-    Content-Length are 400s; an exception from the pipeline (plan-time
+    that is not an object, a non-string time_resolution or ``one``, a
+    non-numeric polygon vertex and a bad Content-Length are 400s; an exception from the pipeline (plan-time
     TypeError, failed Spark job) is a 500 naming the exception class.
     None of them drops the connection, and the server keeps serving."""
     engine = Engine(
@@ -279,6 +298,9 @@ def test_http_bad_requests_and_engine_failures_get_a_status(service):
         assert _post(server, b"{}", content_length="-1")[0] == 400
         assert _post(server, json.dumps(_request(pipeline=["qc"])).encode())[0] == 400
         assert _post(server, json.dumps(_request(backing_sources="mem")).encode())[0] == 400
+        assert _post(server, json.dumps(_request(one=["a"])).encode())[0] == 400
+        vertices = [{"lat": 59.0, "lon": 10.0}, {"lat": "x", "lon": None}]
+        assert _post(server, json.dumps(_request(polygon=vertices)).encode())[0] == 400
         status, reason = _post(server, json.dumps(_request(pipeline="plan_error")).encode())
         assert (status, reason.split(":")[0]) == (500, "TypeError")
         status, reason = _post(server, json.dumps(_request(pipeline="job_error")).encode())

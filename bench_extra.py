@@ -7,7 +7,7 @@ round's working numbers (cited in OPTIMIZATION_r07.md).
 
 Usage:
   python bench_extra.py --queries sct buddy_check --reps 3
-  python bench_extra.py --queries sct --plans plans/r07 --tag before
+  python bench_extra.py --queries sct --plans /tmp/rove_plans --tag before
   python bench_extra.py --all --reps 1
 """
 

@@ -24,7 +24,7 @@ check.
 
 100 TB shape: one lag window per conversation — the same single
 exchange+sort every temporal check shares; on the bucketed layout the
-exchange disappears (PLANS.md).
+exchange disappears (tests/test_plans.py).
 """
 
 from __future__ import annotations

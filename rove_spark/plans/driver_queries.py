@@ -2999,9 +2999,9 @@ def _run_stream_query(
     # as a confusing stream≡batch hash mismatch instead of a named error
     target = f"{os.path.abspath(sf).rstrip('/')}/events.parquet"
     if os.path.isdir(target):
-        # multi-file table (e.g. the superlinearity probe's scaled
-        # corpus): FileStreamSource doesn't recurse into a nested dir,
-        # so link each part file into the stream dir directly
+        # multi-file table (a Spark-written directory): FileStreamSource
+        # doesn't recurse into a nested dir, so link each part file into
+        # the stream dir directly
         links = [f_ for f_ in sorted(os.listdir(target)) if f_.endswith(".parquet")]
         for f_ in links:
             os.symlink(os.path.join(target, f_), os.path.join(stream_dir, f_))
@@ -3044,32 +3044,11 @@ def _run_stream_query(
                     f"{prefix}: AvailableNow run exceeded 600 s — refusing to "
                     "return a partially-committed memory table"
                 )
-            _record_stream_state(q)
         finally:
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.table(name).select(*select_cols)
-
-
-#: last finished stream query's peak state-store rows (max over progress
-#: events of the summed stateOperators' row totals) — the scale probe
-#: reads this to show state is O(series)/O(open windows), not O(rows)
-LAST_STREAM_STATE_ROWS: int | None = None
-
-
-def _record_stream_state(q) -> None:
-    global LAST_STREAM_STATE_ROWS
-    try:
-        totals = []
-        for p in q.recentProgress:
-            ops = p.get("stateOperators") or []
-            totals.append(
-                sum(int(op.get("numRowsTotal", op.get("numTotalStateRows", 0))) for op in ops)
-            )
-        LAST_STREAM_STATE_ROWS = max(totals) if totals else None
-    except Exception:  # diagnostics only — never fail the query over it
-        LAST_STREAM_STATE_ROWS = None
 
 
 def q_rollup_1m_stream(spark, sf):

@@ -5,7 +5,8 @@ at 100 TB, asserted on `.explain` output so regressions fail loudly.
 - checks/rollups stay inside whole-stage codegen (no Python eval);
 - small dimension joins broadcast;
 - the temporal check stack shares ONE sort/exchange;
-- grouped-UDF stages keep explicit parallel partitioning.
+- grouped-UDF stages keep explicit parallel partitioning;
+- dedup and the tier sketches keep their shuffle and aggregate counts.
 """
 
 from __future__ import annotations
@@ -286,3 +287,118 @@ def test_relational_buddy_has_no_python_stages(spark, parquet_transcripts):
         )
     )
     assert "FlatMapGroupsInPandas" in kern
+
+
+SHUFFLE = r"\bExchange (?:hashpartitioning|rangepartitioning|SinglePartition)"
+PYTHON = r"\b\w+(?:InPandas|EvalPython)\b"
+
+
+def _minhash_lsh_join(spark, transcripts):
+    """LSH candidates over stored signatures: banding is a narrow
+    Generate, the self-join on (band, band-hash) shuffles the band rows,
+    and the pair distinct adds one exchange on the pair keys."""
+    from rove_spark.operators.dedup import lsh_candidate_pairs
+
+    sigs = spark.createDataFrame(
+        [(i, [(i * 7919 + k * 104729) % 1000 for k in range(64)]) for i in range(50)],
+        "doc_id long, minhash array<bigint>",
+    )
+    expected = {
+        SHUFFLE: 3,
+        r"Exchange hashpartitioning\(band#\d+, bh#": 2,
+        r"SortMergeJoin \[band#\d+, bh#\d+L\], \[band#\d+, bh#\d+L\], Inner": 1,
+        r"Generate explode": 2,
+        PYTHON: 0,
+    }
+    return lsh_candidate_pairs(sigs), expected
+
+
+def _fused_shingle_minhash(spark, transcripts):
+    """Generate (posexplode) -> one Window of lead n-grams -> ONE
+    collect_set aggregate pair with no exchange between its halves; the
+    64 lanes are one numpy MapInPandas pass, the only Python stage."""
+    from rove_spark.operators.dedup import _shingle_minhash_fused
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} " + " ".join(f"w{i}_{j}" for j in range(20))) for i in range(50)],
+        "doc_id long, text string",
+    )
+    expected = {
+        r"Generate posexplode": 1,
+        r"\bWindow \[lead": 1,
+        r"Exchange hashpartitioning\(_sid#": 1,
+        r"ObjectHashAggregate": 2,
+        r"partial_collect_set": 1,
+        r"\bMapInPandas\b": 1,
+        PYTHON: 1,
+        r"lambdafunction": 0,
+    }
+    return _shingle_minhash_fused(docs, "text", "doc_id"), expected
+
+
+def _with_hours(spark, transcripts):
+    return (
+        spark.read.parquet(transcripts)
+        .withColumn("d", F.date_trunc("day", "ts"))
+        .withColumn("h", F.date_trunc("hour", "ts"))
+    )
+
+
+def _heavy_hitters_merge(spark, transcripts):
+    """Hourly top-k build merged to daily: per level a partial+final
+    count/sum HashAggregate pair on (group, key), then a partial+final
+    collect_list pair on the group for the truncation. Two exchanges
+    per level, no Python."""
+    from rove_spark.operators.rollup import merge_topk, topk_summary
+
+    hourly = topk_summary(_with_hours(spark, transcripts), ["conv_id", "d", "h"], "role", cap=8)
+    expected = {
+        SHUFFLE: 4,
+        r"\bHashAggregate\(": 4,
+        r"partial_count\(": 1,
+        r"partial_sum\(": 1,
+        r"ObjectHashAggregate\(": 4,
+        r"partial_collect_list\(": 2,
+        PYTHON: 0,
+    }
+    return merge_topk(hourly, ["conv_id", "d"], cap=8), expected
+
+
+def _quantile_sketch(spark, transcripts):
+    """Value summaries built hourly, merged daily, read as percentiles:
+    per level the (group, value) aggregate pair carries distinct-value
+    partials through the first exchange, one group-keyed exchange feeds
+    the rank-stride windows; the read adds no exchange and answers every
+    percentile in one aggregate. No Python."""
+    from rove_spark.operators.rollup import (
+        merge_value_summaries,
+        summary_quantiles,
+        value_summary,
+    )
+
+    located = _with_hours(spark, transcripts).withColumn("tl", F.length("text").cast("long"))
+    hourly = value_summary(located, ["conv_id", "d", "h"], "tl", cap=64)
+    daily = merge_value_summaries(hourly, ["conv_id", "d"], cap=64)
+    expected = {
+        SHUFFLE: 4,
+        r"\bHashAggregate\(": 10,
+        r"ObjectHashAggregate\(": 4,
+        r"\bWindow \[": 6,
+        r"\bmin\(CASE WHEN": 2,
+        PYTHON: 0,
+    }
+    return summary_quantiles(daily, ["conv_id", "d"], [50, 99]), expected
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_minhash_lsh_join, _fused_shingle_minhash, _heavy_hitters_merge, _quantile_sketch],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_operator_plan_shapes(spark, parquet_transcripts, build):
+    """Exact node counts per operator plan: an extra shuffle, a lost
+    partial aggregate or a new Python stage changes a count."""
+    df, expected = build(spark, parquet_transcripts)
+    plan = _plan(df)
+    got = {pattern: len(re.findall(pattern, plan)) for pattern in expected}
+    assert got == expected, plan

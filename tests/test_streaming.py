@@ -5,6 +5,8 @@ step_check carries state across restarts (cross-batch lag continuity)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +22,7 @@ SCHEMA = (
 
 
 def _run_stream(sdf, out_dir, ckpt):
+    """Run to completion; returns the last micro-batch's progress."""
     q = (
         sdf.writeStream.format("parquet")
         .option("path", str(out_dir))
@@ -28,6 +31,11 @@ def _run_stream(sdf, out_dir, ckpt):
         .start()
     )
     q.awaitTermination(120)
+    return q.lastProgress
+
+
+def _state_ops(progress, key: str) -> int:
+    return sum(int(op[key]) for op in progress["stateOperators"])
 
 
 def test_stream_rollup_matches_batch(tmp_path, spark):
@@ -92,6 +100,55 @@ def test_stream_step_check_state_across_restarts(tmp_path, spark):
     # first row of batch 2 compared against last row of batch 1 via state
     assert got[t0 + dt.timedelta(minutes=3)] == Flag.FAIL
     assert got[t0 + dt.timedelta(minutes=4)] == Flag.PASS
+
+
+def test_stream_rollup_append_evicts_windows(tmp_path, spark):
+    """Append mode closes windows as the watermark passes: over time-ordered
+    files read one per micro-batch, evicted + still-held windows equal the
+    distinct windows, no row is dropped late, and peak state stays well
+    below the window total (state tracks the watermark horizon, not
+    history)."""
+    n_series, minutes, n_files = 3, 60, 6
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (f"s{k}", t0 + dt.timedelta(minutes=m, seconds=sec), float(m))
+        for k in range(n_series)
+        for m in range(minutes)
+        for sec in (10, 40)
+    ]
+    schema = "series string, ts timestamp, value double"
+    src = tmp_path / "src"
+    spark.createDataFrame(rows, schema).repartitionByRange(n_files, "ts").write.parquet(str(src))
+    # the file source takes the oldest files first: stamp strictly
+    # increasing mtimes in part-index (= time-range) order
+    parts = sorted(src.glob("part-*.parquet"))
+    base = time.time() - 3600
+    for k, f in enumerate(parts):
+        os.utime(f, (base + k, base + k))
+
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+    tier = stream_rollup(
+        stream,
+        series_col="series",
+        role_col=None,
+        watermark="2 minutes",
+        aggs=[F.count(F.lit(1)).alias("n"), F.sum("value").alias("value_sum")],
+    )
+    q = tier.writeStream.format("noop").outputMode("append").trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    progress = q.recentProgress
+    assert len(progress) == int(q.lastProgress["batchId"]) + 1  # every batch seen
+    assert sum(p["numInputRows"] for p in progress) == len(rows)
+    assert sum(p["numInputRows"] > 0 for p in progress) == len(parts)
+
+    windows = n_series * minutes
+    held = [_state_ops(p, "numRowsTotal") for p in progress]
+    assert sum(_state_ops(p, "numRowsDroppedByWatermark") for p in progress) == 0
+    assert sum(_state_ops(p, "numRowsRemoved") for p in progress) + held[-1] == windows
+    assert max(held) < windows / 2, held
 
 
 @pytest.mark.parametrize("mode", ["append"])
@@ -179,12 +236,14 @@ def test_stream_checks_null_at_batch_boundary_match_batch(tmp_path, spark):
     """A NULL value as the last row of one micro-batch and the first row of
     the next: each stream check's flags over three micro-batches equal
     the batch check's flags on the union of the rows (spike's last row
-    per series stays pending, so it is left out)."""
+    per series stays pending, so it is left out). At 1x and 10x rows per
+    series, each check's state store holds exactly one row per series
+    after the last micro-batch: check state is O(series), not O(rows)."""
     from rove_spark.operators import checks
     from rove_spark.streaming.rollup_stream import stream_flatline_check, stream_spike_check
 
     t0 = dt.datetime(2024, 1, 1)
-    values = {
+    base = {
         "c1": [
             [10.0, 10.0, 10.0, None],
             [None, 10.0, 10.0, 100.0, 10.0, 10.0, None],
@@ -192,42 +251,48 @@ def test_stream_checks_null_at_batch_boundary_match_batch(tmp_path, spark):
         ],
         "c2": [[1.0, 1.0, None], [None, 1.0, 20.0, 1.0], [1.0, 1.0, 1.0]],
     }
-    batches = [[] for _ in range(3)]
-    for sid, parts in values.items():
-        i = 0
-        for b, part in enumerate(parts):
-            for v in part:
-                batches[b].append((sid, t0 + dt.timedelta(minutes=i), v))
-                i += 1
     schema = "conv_id string, ts timestamp, value double"
-    src = tmp_path / "src"
     stream_checks = {
         "step_check": lambda s: stream_step_check(s, "value", max_=50.0, high=10.0),
         "spike_check": lambda s: stream_spike_check(s, "value", max_=50.0, high=10.0),
         "flatline_check": lambda s: stream_flatline_check(s, "value", max_=2),
     }
-    for rows in batches:
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(str(src))
-        for name, check in stream_checks.items():
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            _run_stream(check(stream), tmp_path / name, tmp_path / f"ckpt_{name}")
+    for scale in (1, 10):
+        root = tmp_path / f"x{scale}"
+        values = {sid: [part * scale for part in parts] for sid, parts in base.items()}
+        batches = [[] for _ in range(3)]
+        for sid, parts in values.items():
+            i = 0
+            for b, part in enumerate(parts):
+                for v in part:
+                    batches[b].append((sid, t0 + dt.timedelta(minutes=i), v))
+                    i += 1
+        src = root / "src"
+        state_rows = {}
+        for rows in batches:
+            spark.createDataFrame(rows, schema).write.mode("append").parquet(str(src))
+            for name, check in stream_checks.items():
+                stream = spark.readStream.schema(schema).parquet(str(src))
+                progress = _run_stream(check(stream), root / name, root / f"ckpt_{name}")
+                state_rows[name] = _state_ops(progress, "numRowsTotal")
+        assert state_rows == dict.fromkeys(stream_checks, len(values)), scale
 
-    union = spark.createDataFrame([r for rows in batches for r in rows], schema)
-    batch_checks = {
-        "step_check": checks.step_check(union, "value", max_=50.0, high=10.0),
-        "spike_check": checks.spike_check(union, "value", max_=50.0, high=10.0),
-        "flatline_check": checks.flatline_check(union, "value", max_=2),
-    }
-    last = {sid: max(ts for s, ts, _ in batches[2] if s == sid) for sid in values}
-    for name, out in batch_checks.items():
-        want = {
-            (r.conv_id, r.ts): (r.value, r[f"flag_{name}"])
-            for r in out.collect()
-            if name != "spike_check" or r.ts != last[r.conv_id]
+        union = spark.createDataFrame([r for rows in batches for r in rows], schema)
+        batch_checks = {
+            "step_check": checks.step_check(union, "value", max_=50.0, high=10.0),
+            "spike_check": checks.spike_check(union, "value", max_=50.0, high=10.0),
+            "flatline_check": checks.flatline_check(union, "value", max_=2),
         }
-        got = {
-            (r.series_id, r.ts): (r.value, r[f"flag_{name}"])
-            for r in spark.read.parquet(str(tmp_path / name)).collect()
-        }
-        assert got == want, name
-        assert Flag.DATA_MISSING in {f for _, f in want.values()}, name
+        last = {sid: max(ts for s, ts, _ in batches[2] if s == sid) for sid in values}
+        for name, out in batch_checks.items():
+            want = {
+                (r.conv_id, r.ts): (r.value, r[f"flag_{name}"])
+                for r in out.collect()
+                if name != "spike_check" or r.ts != last[r.conv_id]
+            }
+            got = {
+                (r.series_id, r.ts): (r.value, r[f"flag_{name}"])
+                for r in spark.read.parquet(str(root / name)).collect()
+            }
+            assert got == want, (scale, name)
+            assert Flag.DATA_MISSING in {f for _, f in want.values()}, name

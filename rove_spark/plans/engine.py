@@ -18,21 +18,28 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Sequence
-from concurrent.futures import ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
 from functools import partial
 from pathlib import Path
 from time import time
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rove_spark.config import KNOWN_CHECKS, Pipeline, PipelineStep, load_pipelines
 from rove_spark.model import Flag, flag_col
 from rove_spark.operators import checks as C
 from rove_spark.operators import spatial as SP
-from rove_spark.operators.rollup import build_tiers, compact_raw_days, drop_compacted
+# build_tiers stays importable from here: perfbench/layers.py patches it
+from rove_spark.operators.rollup import (  # noqa: F401
+    TIERS,
+    build_tiers,
+    build_tiers_onepass,
+    compact_raw_days,
+    drop_compacted,
+)
 from rove_spark.plans.checkpoint import CheckpointManifest, params_hash
 from rove_spark.sources.tables import PartitionedTable, check_day, open_table
 
@@ -220,23 +227,29 @@ class Engine:
 
         Write order: with a ``raw`` retention cutoff, the raw-day
         compaction (``compact_raw_days``) starts on a driver thread as
-        soon as the todo days are known. ``tier_1m`` is written on the
-        calling thread, since that write fills the cached 1m tier that
-        the 1h/1d cascade reads; then ``tier_1h`` and ``tier_1d`` are
-        written concurrently. Threads carry the caller's job group and
-        tags. Only after every thread has joined are the todo days marked
-        done, the expiring raw days dropped (the tier writes read them as
-        window context until then) and the tier days expired. A failed
-        tier write re-raises with no day marked and nothing dropped; a
-        failed compaction re-raises after the days are marked, with
-        nothing dropped.
+        soon as the todo days are known; the thread carries the caller's
+        job group and tags. On the calling thread, all three tiers are
+        built in one GROUPING SETS aggregation (``build_tiers_onepass``,
+        nothing cached) and land with one Spark write, partitioned by
+        (tier, day), in ``out_dir/_tier_staging``. Each staged
+        ``tier=<t>/day=<d>`` directory then replaces ``tier_<t>/day=<d>``
+        by rename, 1m first, each tier table commits one manifest entry,
+        and the staging directory is removed
+        (``PartitionedTable.overwrite_split``; a killed run's staging
+        directory is removed before the next write). Only after the
+        compaction thread has joined are the todo days marked done, the
+        expiring raw days dropped (the tier write reads them as window
+        context until then) and the tier days expired. A failed tier
+        write or swap re-raises with no day marked and nothing dropped,
+        and a rerun recomputes the same days; a failed compaction
+        re-raises after the days are marked, with nothing dropped.
 
         The per-day metrics are ``rows_<tier>`` (the day's ``n_turns`` sum
-        in that tier, observed in the tier's own write — no tier table is
-        read back) and ``elapsed_job_sec``; a day with no rows in a tier
-        has no ``rows_<tier>`` key. The returned dict carries them for the
-        computed days under ``"metrics"`` (empty when nothing was
-        computed).
+        in that tier, observed per (tier, day) in the tier write itself —
+        no tier table is read back) and ``elapsed_job_sec``; a day with no
+        rows in a tier has no ``rows_<tier>`` key. The returned dict
+        carries them for the computed days under ``"metrics"`` (empty
+        when nothing was computed).
 
         ``retention`` maps ``raw``, ``1m``, ``1h`` or ``1d`` to a
         ``YYYY-MM-DD`` cutoff; ``raw`` also needs ``input_path``. A policy
@@ -318,30 +331,22 @@ class Engine:
             return result
 
         metrics: dict[str, dict] = {d: {} for d in todo}
-        # per-day row counts from each tier's write itself: one n_turns sum
-        # per todo day (null for a day with no rows written)
-        day_rows = [F.sum(F.when(F.col("day") == d, F.col("n_turns"))).alias(d) for d in todo]
-
-        def write_tier(tier_name: str, tier_df: DataFrame) -> None:
-            # open_table: parquet shim here; real Iceberg when the session
-            # carries the probe-gated catalog (sources/tables.py)
-            table = open_table(self.spark, out_dir / f"tier_{tier_name}", ["day"])
-            tier_out = tier_df.withColumn(
-                "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+        # open_table: parquet shim here; real Iceberg when the session
+        # carries the probe-gated catalog (sources/tables.py)
+        tables = {t: open_table(self.spark, out_dir / f"tier_{t}", ["day"]) for t in TIERS}
+        staging = open_table(self.spark, out_dir / "_tier_staging", ["tier", "day"])
+        # per-day row counts from the write itself: one n_turns sum per
+        # (tier, todo day), null for a day with no rows in that tier
+        day_rows = [
+            F.sum(F.when((F.col("tier") == t) & (F.col("day") == d), F.col("n_turns"))).alias(
+                f"{t}/{d}"
             )
-            rows = Observation()
-            table.overwrite_partitions(
-                tier_out,
-                lineage={"fingerprint": fp, "tier": tier_name},
-                observe=(rows, day_rows),
-            )
-            for d, n in rows.get.items():
-                if n is not None:
-                    metrics[d][f"rows_{tier_name}"] = n
-
-        # one thread per overlapped write (the compaction, 1h and 1d);
-        # leaving the block joins them all, also after a failed write
-        with ThreadPoolExecutor(max_workers=2 + (compact is not None)) as pool:
+            for t in tables
+            for d in todo
+        ]
+        # the compaction's thread; leaving the block joins it, also after
+        # a failed tier write
+        with ThreadPoolExecutor(max_workers=1) as pool:
             compacting = pool.submit(self._in_thread(compact)) if compact else None
             # context widening: window checks need neighboring rows, so a
             # resumed run must see one day of context on each side of the todo
@@ -362,7 +367,7 @@ class Engine:
             # tier text stats follow the frame's columns: use real text when
             # present, otherwise the checked signal; tool column is optional
             cols = df.columns
-            tiers = build_tiers(
+            tiers = build_tiers_onepass(
                 flagged,
                 series_col=series_col,
                 ts_col=ts_col,
@@ -370,18 +375,16 @@ class Engine:
                 text_len_source="text" if "text" in cols else value_col,
                 tool_col="tool" if "tool" in cols else None,
                 role_col="role" if "role" in cols else None,
+            ).withColumn("day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd"))
+            # a failed write or swap raises here: no day is marked, nothing dropped
+            rows = staging.overwrite_split(
+                tiers, tables, lineage={"fingerprint": fp}, observe=day_rows
             )
-            try:
-                write_tier("1m", tiers["1m"])  # fills the cached 1m tier the cascade reads
-                coarse = [
-                    pool.submit(self._in_thread(write_tier, t, tiers[t])) for t in ("1h", "1d")
-                ]
-                wait(coarse)
-                elapsed = time() - t0
-            finally:
-                tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
-        for f in coarse:
-            f.result()  # a failed tier write: no day is marked, nothing dropped
+            elapsed = time() - t0
+        for name, n in rows.items():
+            if n is not None:
+                tier_name, d = name.split("/")
+                metrics[d][f"rows_{tier_name}"] = n
         for d in todo:
             metrics[d]["elapsed_job_sec"] = round(elapsed, 3)
         result["metrics"] = metrics

@@ -307,15 +307,20 @@ def _cds_confs(master: str, jvm_dir: str, conf: dict[str, str]) -> dict[str, str
 
 def _cds_archive(jvm_dir: str, key: str, keep: set[str]) -> str | None:
     """The archive of ``key`` under ``jvm_dir``, ``cds-<key>.<size>.jsa``;
-    None when there is none yet. An earlier session's finished recording
-    (``cds-<key>.<pid>.part`` with its header written) is adopted, and
-    adopting removes everything else under ``jvm_dir`` but ``keep``:
-    other keys' archives and recordings, and class directories of the
-    earlier layout. An archive that is no longer its recorded size is
+    None when there is none yet. Using an archive stamps its mtime. An
+    earlier session's finished recording (``cds-<key>.<pid>.part`` with
+    its header written) is adopted, and adopting removes everything else
+    under ``jvm_dir`` but ``keep`` and the files of the most recently
+    used other key: older keys' archives and recordings, and class
+    directories of the earlier layout. Two session shapes alternating in
+    one checkout (a test suite's heap and a script's) thus each keep
+    their archive. An archive that is no longer its recorded size is
     removed: HotSpot 17 maps a truncated one and dies of SIGBUS."""
     pattern = os.path.join(_glob.escape(jvm_dir), f"cds-{key}.*")
     for archive in _glob.glob(pattern + ".jsa"):
         if str(os.path.getsize(archive)) == archive.rsplit(".", 2)[1]:
+            with contextlib.suppress(OSError):
+                os.utime(archive)
             return archive
         log.warning("%s is not the size it was recorded at; removed", archive)
         os.unlink(archive)
@@ -328,9 +333,17 @@ def _cds_archive(jvm_dir: str, key: str, keep: set[str]) -> str | None:
         break
     else:
         return None
+    used: dict[str, float] = {}
+    for name in os.listdir(jvm_dir):
+        other = name.split(".")[0]
+        if name.startswith("cds-") and other != f"cds-{key}":
+            with contextlib.suppress(OSError):  # a concurrent session moved it
+                mtime = os.path.getmtime(os.path.join(jvm_dir, name))
+                used[other] = max(used.get(other, mtime), mtime)
+    recent = max(used, key=used.get, default=None)
     for name in os.listdir(jvm_dir):
         path = os.path.join(jvm_dir, name)
-        if path == archive or path in keep:
+        if path == archive or path in keep or name.split(".")[0] == recent:
             continue
         if os.path.isdir(path) and not os.path.islink(path):
             shutil.rmtree(path, ignore_errors=True)

@@ -18,13 +18,16 @@ persistent tiered storage is a north_rule addition.
 The layout is fixed by the store, not chosen per call site: every table
 is partitioned by ``day`` (``yyyy-MM-dd``) first — increment tables add
 ``batch`` below it — and every write is re-clustered onto its partition
-values, so a write emits one file per partition value.
+values, so a write emits one file per partition value. The one table
+that leads with another column is the transient staging table of
+``overwrite_split``, partitioned by the key it splits rows on.
 """
 
 from __future__ import annotations
 
 import datetime
 import json
+import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -98,7 +101,6 @@ def write_bucketed(
     if mode == "overwrite":
         # a previous crashed write can leave an orphaned location with no
         # metastore entry — saveAsTable then fails LOCATION_ALREADY_EXISTS
-        import shutil
         from urllib.parse import urlparse
 
         spark = df.sparkSession
@@ -184,6 +186,9 @@ class PartitionedTable:
             .option("partitionOverwriteMode", "dynamic")
             .parquet(str(self.path))
         )
+        return self._commit_overwrite(lineage)
+
+    def _commit_overwrite(self, lineage: dict | None) -> str:
         snap = uuid.uuid4().hex[:12]
         self._commit_manifest(
             {
@@ -194,6 +199,51 @@ class PartitionedTable:
             }
         )
         return snap
+
+    def overwrite_split(
+        self,
+        df: DataFrame,
+        tables: dict,
+        lineage: dict | None = None,
+        observe: Sequence[Column] = (),
+    ) -> dict:
+        """Overwrite partitions of several tables with one Spark write.
+        ``self`` is a staging table partitioned by a key column, then by
+        the targets' partition columns; ``tables`` maps each key value to
+        its target. ``df`` is written once into the staging directory
+        through ``overwrite_partitions``. Then, in ``tables`` order, each
+        staged ``<key>=<v>/<partition>`` directory replaces the target's
+        ``<partition>`` (delete, then rename, as Spark's dynamic
+        overwrite commits), each target commits one manifest entry with
+        ``lineage`` plus ``{key: v}``, and the staging directory is
+        removed. Returns the ``observe`` aggregates over the written rows
+        by column name ({} without any).
+
+        A killed run's staging directory is removed before the write, so
+        its partitions are never swapped in. A run killed between swaps
+        leaves the earlier targets new and the later ones old: callers
+        mark their work done only after this returns."""
+        key = self.partition_by[0]
+        shutil.rmtree(self.path, ignore_errors=True)
+        rows = Observation()
+        self.overwrite_partitions(df, lineage, observe=(rows, observe) if observe else None)
+        for value, table in tables.items():
+            table._swap_partitions(self.path / f"{key}={value}", {**(lineage or {}), key: value})
+        shutil.rmtree(self.path)
+        return rows.get if observe else {}
+
+    def _swap_partitions(self, staged: Path, lineage: dict) -> None:
+        """Move every partition directory under ``staged`` (laid out like
+        this table) into this table, replacing the one there; then commit
+        the manifest entry."""
+        pattern = "/".join(f"{c}=*" for c in self.partition_by)
+        for src in sorted(staged.glob(pattern)):
+            dst = self.path / src.relative_to(staged)
+            if dst.exists():
+                shutil.rmtree(dst)
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            src.rename(dst)
+        self._commit_overwrite(lineage)
 
     def append(self, df: DataFrame, lineage: dict | None = None) -> str:
         self._cluster_for_write(df).write.mode("append").partitionBy(
@@ -225,8 +275,6 @@ class PartitionedTable:
         metadata-style delete, the parquet analog of Iceberg partition-level
         delete). ``predicate_dirs`` are partition dir names like
         ``day=2024-01-01``."""
-        import shutil
-
         dropped = 0
         for d in predicate_dirs:
             target = self.path / d
@@ -283,6 +331,35 @@ class IcebergTable:
         else:
             w.partitionedBy(*[F.col(c) for c in self.partition_by]).createOrReplace()
         return self._record_lineage(lineage)
+
+    def overwrite_split(
+        self,
+        df: DataFrame,
+        tables: dict,
+        lineage: dict | None = None,
+        observe: Sequence[Column] = (),
+    ) -> dict:
+        """``PartitionedTable.overwrite_split``'s contract without a
+        staging table: Iceberg commits by snapshot, not by directory, so
+        each target gets its own ``overwritePartitions`` of the rows whose
+        key column (``self.partition_by[0]``) holds its value, with its
+        own ``Observation`` of ``observe``. Each of those writes evaluates
+        ``df`` again. Returns each ``observe`` column's non-null value
+        from the target that wrote it."""
+        from pyspark.sql import functions as F
+
+        key = self.partition_by[0]
+        seen: dict = {}
+        for value, table in tables.items():
+            part = df.filter(F.col(key) == value).drop(key)
+            rows = Observation()
+            table.overwrite_partitions(
+                part, {**(lineage or {}), key: value}, (rows, observe) if observe else None
+            )
+            for name, n in (rows.get if observe else {}).items():
+                if seen.get(name) is None:
+                    seen[name] = n
+        return seen
 
     def append(self, df: DataFrame, lineage: dict | None = None) -> str:
         df.writeTo(self.name).append()
@@ -363,7 +440,8 @@ def open_table(spark: SparkSession, path_or_name: str | Path, partition_by: list
     """Tier-table factory: a real ``IcebergTable`` when the session carries
     the probe-gated ``rove`` Iceberg catalog, else the parquet shim. The
     engine only touches the shared surface (read / overwrite_partitions /
-    append / expire_days_before / snapshots), so the swap is config-only.
+    overwrite_split / append / expire_days_before / snapshots), so the
+    swap is config-only.
 
     Only an explicit ``rove.``-qualified name is taken verbatim; anything
     else (absolute/relative paths, even ones containing dots) derives a

@@ -233,17 +233,17 @@ def test_spatial_check_on_duplicate_keys_reads_the_input(spark):
 
 
 def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
-    """Building run_job's 1m tier plan (the transcripts_pt1m checks, then
-    build_tiers) makes at most 400 py4j round trips once the check and
-    tier expressions are built. With call-site capture on and every
-    expression rebuilt per plan it made ~2,600, each a blocking call into
-    the JVM on the daily job's critical path."""
+    """Building run_job's tier plan (the transcripts_pt1m checks, then
+    build_tiers_onepass) makes at most 400 py4j round trips once the
+    check and tier expressions are built. With call-site capture on and
+    every expression rebuilt per plan it made ~2,600, each a blocking
+    call into the JVM on the daily job's critical path."""
     import threading
     from pathlib import Path
 
     from py4j.clientserver import ClientServerConnection
 
-    from rove_spark.operators.rollup import build_tiers
+    from rove_spark.operators.rollup import build_tiers_onepass
 
     eng = Engine(spark, pipeline_dir=Path(__file__).resolve().parents[1] / "pipelines")
     df = _signals(spark)
@@ -251,7 +251,7 @@ def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
 
     def build():
         flagged = eng.run_pipeline(df, "transcripts_pt1m", value_col="text_len")
-        return build_tiers(flagged, checks=checks, persist=False)
+        return build_tiers_onepass(flagged, checks=checks)
 
     build()  # fills the expression caches
     # this thread's calls only: py4j's finalizer thread sends the deletes
@@ -269,7 +269,7 @@ def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
     tiers = build()
     monkeypatch.undo()
     assert 0 < len(calls) <= 400, len(calls)
-    assert tiers["1d"].columns[:3] == ["conv_id", "bucket_ts", "role"]
+    assert tiers.columns[:3] == ["conv_id", "bucket_ts", "role"]
 
 
 def test_melt_flags_long_format(spark):
@@ -346,26 +346,47 @@ def test_run_job_checkpoint_resume(tmp_path, spark):
     assert r3["metrics"] == {}
 
 
-def test_run_job_failed_tier_write_releases_1m_cache(tmp_path, spark, monkeypatch):
-    """build_tiers persists the 1m tier for the cascade; a tier write that
-    raises must not leave it cached in a long-lived session, and must
-    leave no day marked done."""
+def test_run_job_failed_tier_write_leaves_no_cache(tmp_path, spark, monkeypatch):
+    """The one staged tier write raising must leave nothing cached in a
+    long-lived session and no day marked done."""
     from rove_spark.plans.checkpoint import CheckpointManifest
     from rove_spark.sources.tables import PartitionedTable
 
     real_write = PartitionedTable.overwrite_partitions
 
-    def fail_1h(self, df, lineage=None, **kw):
-        if (lineage or {}).get("tier") == "1h":
-            raise RuntimeError("injected 1h write failure")
+    def fail_tiers(self, df, lineage=None, **kw):
+        if self.partition_by[0] == "tier":
+            raise RuntimeError("injected tier write failure")
         return real_write(self, df, lineage, **kw)
 
     spark.catalog.clearCache()
-    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_1h)
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_tiers)
     with pytest.raises(RuntimeError, match="injected"):
         _engine(spark).run_job(_signals(spark), "ta", tmp_path / "out", input_fingerprint="fp1")
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert CheckpointManifest(tmp_path / "out" / "_checkpoint.json").records() == {}
+
+
+def test_run_job_tiers_equal_the_cascade(tmp_path, spark):
+    """Each stored tier equals ``build_tiers``' cascade over the same
+    flagged input, row for row, both ways."""
+    from rove_spark.operators.rollup import build_tiers
+
+    eng = _engine(spark)
+    df = _signals(spark)
+    eng.run_job(df, "ta", tmp_path / "out", input_fingerprint="fp1")
+    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+    flagged = eng.run_pipeline(df.withColumn("day", day), "ta", value_col="text_len")
+    cascade = build_tiers(
+        flagged,
+        checks=[s.name for s in eng.pipelines["ta"].steps],
+        text_len_source="text",
+        persist=False,
+    )
+    for tier, want in cascade.items():
+        got = spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}")).select(*want.columns)
+        assert got.count() == want.count() > 0, tier
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), tier
 
 
 def test_run_job_backfill_reflags_following_day(tmp_path, spark):

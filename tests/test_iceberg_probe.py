@@ -124,7 +124,7 @@ def test_table_classes_share_one_surface():
     import inspect
 
     for name in (
-        "read", "exists", "overwrite_partitions", "append",
+        "read", "exists", "overwrite_partitions", "overwrite_split", "append",
         "partition_days", "expire_days_before",
     ):
         shim = list(inspect.signature(getattr(PartitionedTable, name)).parameters)

@@ -390,9 +390,50 @@ def _quantile_sketch(spark, transcripts):
     return summary_quantiles(daily, ["conv_id", "d"], [50, 99]), expected
 
 
+def _daily_tier_write(spark, transcripts):
+    """The frame ``run_job`` hands its one tier write: the three tiers
+    from one Expand and one partial/final aggregate pair, nothing cached,
+    re-clustered onto the staging table's (tier, day) partition columns.
+    The window checks add their one exchange on the series."""
+    import tempfile
+
+    from rove_spark.operators.signals import derive_signals
+    from rove_spark.sources.tables import PartitionedTable
+    from tests.test_engine import _engine
+
+    written = []
+    real_write = PartitionedTable.overwrite_partitions
+
+    def capture(self, df, lineage=None, observe=None):
+        written.append((self.partition_by, self._cluster_for_write(df)))
+        raise InterruptedError
+
+    PartitionedTable.overwrite_partitions = capture
+    try:
+        with tempfile.TemporaryDirectory() as out, pytest.raises(InterruptedError):
+            raw = derive_signals(spark.read.parquet(transcripts))
+            _engine(spark).run_job(raw, "ta", out, input_fingerprint="plan")
+    finally:
+        PartitionedTable.overwrite_partitions = real_write
+    [(partition_by, df)] = written
+    assert partition_by == ["tier", "day"]
+    expected = {
+        r"\bExpand \[": 1,
+        r"InMemory(?:Relation|TableScan)": 0,
+        r"Exchange hashpartitioning\(tier#\d+, day#\d+, \d+\)": 1,
+        r"\bHashAggregate\(": 2,
+        SHUFFLE: 3,
+        PYTHON: 0,
+    }
+    return df, expected
+
+
 @pytest.mark.parametrize(
     "build",
-    [_minhash_lsh_join, _fused_shingle_minhash, _heavy_hitters_merge, _quantile_sketch],
+    [
+        _minhash_lsh_join, _fused_shingle_minhash, _heavy_hitters_merge, _quantile_sketch,
+        _daily_tier_write,
+    ],
     ids=lambda f: f.__name__.lstrip("_"),
 )
 def test_operator_plan_shapes(spark, parquet_transcripts, build):

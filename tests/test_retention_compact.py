@@ -243,31 +243,22 @@ def _pool_threads() -> set:
     return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
 
 
-def test_run_job_failed_coarse_write_beside_compaction(tmp_path, spark, monkeypatch):
-    """A tier_1h write that raises while the compaction runs beside it:
-    run_job re-raises it once every thread has joined, marks no day done,
-    drops no raw day and releases the 1m cache. A rerun then equals a
+def _fails_on(name: str, real, test):
+    """The table method ``real``, raising an injected ``name`` failure
+    instead on a table for which ``test(table)`` holds."""
+
+    def failing(self, *a, **kw):
+        if test(self):
+            raise RuntimeError(f"injected {name} failure")
+        return real(self, *a, **kw)
+
+    return failing
+
+
+def _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted) -> None:
+    """After a failed run over ``raw``: every thread joined, nothing
+    cached, no day marked, no raw day dropped; a rerun then equals a
     clean run."""
-    import shutil
-
-    from tests.test_engine import _engine
-
-    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
-    shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
-    real_write = PartitionedTable.overwrite_partitions
-
-    def fail_1h(self, df, lineage=None, **kw):
-        if (lineage or {}).get("tier") == "1h":
-            raise RuntimeError("injected 1h write failure")
-        return real_write(self, df, lineage, **kw)
-
-    spark.catalog.clearCache()
-    threads = _pool_threads()
-    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
-    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_1h)
-    eng = _engine(spark)
-    with pytest.raises(RuntimeError, match="injected 1h"):
-        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
     assert _pool_threads() <= threads
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted
@@ -275,7 +266,6 @@ def test_run_job_failed_coarse_write_beside_compaction(tmp_path, spark, monkeypa
     assert not set(recs) & set(days)
     assert raw.partition_days() == days
 
-    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", real_write)
     r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
     clean = _run(eng, spark, tmp_path / "raw_clean", tmp_path / "clean", days[1])
     assert r["computed"] == clean["computed"] == days
@@ -286,6 +276,148 @@ def test_run_job_failed_coarse_write_beside_compaction(tmp_path, spark, monkeypa
     assert r["expired"]["raw"]["dropped"] == clean["expired"]["raw"]["dropped"] == 1
     assert raw.partition_days() == days[1:]
     _assert_store_equal(spark, tmp_path / "out", tmp_path / "clean")
+    assert not (tmp_path / "out" / "_tier_staging").exists()
+
+
+def test_run_job_failed_tier_write_beside_compaction(tmp_path, spark, monkeypatch):
+    """The one tier write raising while the compaction runs beside it:
+    run_job re-raises it once every thread has joined, marks no day done,
+    drops no raw day and leaves nothing cached. A rerun then equals a
+    clean run."""
+    import shutil
+
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
+    real_write = PartitionedTable.overwrite_partitions
+    spark.catalog.clearCache()
+    threads = _pool_threads()
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(
+        PartitionedTable, "overwrite_partitions",
+        _fails_on("tier write", real_write, lambda t: t.partition_by[0] == "tier"),
+    )
+    eng = _engine(spark)
+    with pytest.raises(RuntimeError, match="injected tier write"):
+        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", real_write)
+    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted)
+
+
+def test_run_job_failed_between_tier_swaps(tmp_path, spark, monkeypatch):
+    """A run that dies after the staged 1m days are renamed into tier_1m
+    and before tier_1h's: no day is marked and nothing dropped, and a
+    rerun equals a clean run."""
+    import shutil
+
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
+    real_swap = PartitionedTable._swap_partitions
+    spark.catalog.clearCache()
+    threads = _pool_threads()
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(
+        PartitionedTable, "_swap_partitions",
+        _fails_on("tier_1h swap", real_swap, lambda t: t.path.name == "tier_1h"),
+    )
+    eng = _engine(spark)
+    with pytest.raises(RuntimeError, match="injected tier_1h swap"):
+        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    assert PartitionedTable(tmp_path / "out" / "tier_1m", ["day"]).partition_days() == days
+    assert not (tmp_path / "out" / "tier_1h").exists()
+    monkeypatch.setattr(PartitionedTable, "_swap_partitions", real_swap)
+    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted)
+
+
+def test_run_job_removes_a_killed_runs_staging(tmp_path, spark):
+    """A staging directory left by a killed tier write, with wrong rows
+    for a done day, is never read as tier data and is removed by the next
+    run before it writes: the store then equals a clean run's."""
+    import datetime
+    import shutil
+
+    from rove_spark.operators.rollup import read_tier
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    assert len(days) >= 3
+    shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
+    eng = _engine(spark)
+    out = tmp_path / "out"
+    tier_1m = PartitionedTable(out / "tier_1m", ["day"])
+    # a first run lands the first two days
+    held = tmp_path / "held"
+    held.mkdir()
+    for d in days[2:]:
+        shutil.move(tmp_path / "raw" / f"day={d}", held / f"day={d}")
+    _run(eng, spark, tmp_path / "raw", out, days[0])
+
+    def views():
+        start, end = (datetime.date.fromisoformat(d) for d in days[:2])
+        return (
+            tier_1m.partition_days(),
+            _rows(spark, out / "tier_1m"),
+            sorted(map(tuple, read_tier(spark, tier_1m, None, "1m").collect())),
+            sorted(map(tuple, eng.query_range(out, start, end).collect())),
+        )
+
+    before = views()
+    staged = out / "_tier_staging" / "tier=1m" / f"day={days[0]}"
+    wrong = tier_1m.read(spark).filter(F.col("day") == days[0]).drop("day")
+    wrong.withColumn("n_turns", F.lit(999).cast("long")).write.parquet(str(staged))
+    assert views() == before
+
+    # the next run's todo (days 2.. and the re-flagged day 1) misses day 0
+    for d in days[2:]:
+        shutil.move(held / f"day={d}", tmp_path / "raw" / f"day={d}")
+    r = _run(eng, spark, tmp_path / "raw", out, days[1])
+    assert days[0] not in r["computed"]
+    assert not (out / "_tier_staging").exists()
+    _run(eng, spark, tmp_path / "raw_clean", tmp_path / "clean", days[1])
+    _assert_store_equal(spark, out, tmp_path / "clean")
+
+
+def test_run_job_is_one_tier_write_and_caches_nothing(tmp_path, spark):
+    """A daily run over one new day runs exactly one SQL execution that
+    writes tier rows, beside the compaction's one write, and leaves no
+    persisted RDD behind."""
+    import shutil
+
+    from tests.test_engine import _engine
+
+    raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    assert len(days) >= 3
+    last = tmp_path / "raw" / f"day={days[-1]}"
+    shutil.move(last, tmp_path / "held")
+    eng = _engine(spark)
+    _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[0])
+    shutil.move(tmp_path / "held", last)
+
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs())
+    try:
+        sc.setJobGroup("one-tier-write", "run_job")
+        r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert r["computed"] == days[-2:]
+    assert r["expired"]["raw"]["compacted"] == days[:1]
+    assert set(sc._jsc.getPersistentRDDs()) - persisted == set()
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("one-tier-write")
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    writes = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        plan = e.physicalPlanDescription()
+        if any(e.jobs().contains(j) for j in jobs) and "InsertIntoHadoopFsRelationCommand" in plan:
+            writes.append("_tier_staging" in plan)
+    assert sorted(writes) == [False, True]
 
 
 def test_run_job_failed_compaction_marks_tiers_keeps_raw(tmp_path, spark, monkeypatch):

@@ -245,13 +245,39 @@ def test_cds_archive_adopt_prune_and_truncation(tmp_path):
     (jvm_dir / "cds-k.12.part").write_bytes(body)
     archive = session._cds_archive(str(jvm_dir), "k", keep)
     assert archive == str(jvm_dir / f"cds-k.{len(body)}.jsa")
-    assert sorted(os.listdir(jvm_dir)) == sorted(["abc.jar", "conf", os.path.basename(archive)])
+    # the other key is the most recently used one: its files stay
+    assert sorted(os.listdir(jvm_dir)) == sorted(
+        ["abc.jar", "conf", os.path.basename(archive), "cds-other.9.jsa", "cds-other.77.part"]
+    )
     assert session._cds_archive(str(jvm_dir), "k", keep) == archive
     # an archive cut short is removed, not mapped
     with open(archive, "r+b") as f:
         f.truncate(4)
     assert session._cds_archive(str(jvm_dir), "k", keep) is None
     assert not os.path.exists(archive)
+
+
+def test_cds_archive_keeps_the_last_used_other_key(tmp_path):
+    """Two keys alternating in one ``jvm_dir`` keep their archives: a
+    third key's adoption removes the least recently used key's files and
+    keeps the other's, and using an archive makes its key the recent one."""
+    jvm_dir = tmp_path / ".rove_jvm"
+    jvm_dir.mkdir()
+    body = session._ARCHIVE_MAGIC + b"rest"
+
+    def archive(key: str, age: int) -> str:
+        path = jvm_dir / f"cds-{key}.{len(body)}.jsa"
+        path.write_bytes(body)
+        os.utime(path, (time.time() - age, time.time() - age))
+        return str(path)
+
+    suite = archive("suite", 200)
+    archive("script", 100)
+    assert session._cds_archive(str(jvm_dir), "suite", set()) == suite  # now the recent one
+    (jvm_dir / "cds-probe.12.part").write_bytes(body)
+    probe = session._cds_archive(str(jvm_dir), "probe", set())
+    assert sorted(os.listdir(jvm_dir)) == sorted(os.path.basename(p) for p in (suite, probe))
+    assert session._cds_archive(str(jvm_dir), "suite", set()) == suite
 
 
 def test_cds_confs_off(monkeypatch, tmp_path):

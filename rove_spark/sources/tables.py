@@ -224,7 +224,9 @@ class PartitionedTable:
         leaves the earlier targets new and the later ones old: callers
         mark their work done only after this returns."""
         key = self.partition_by[0]
-        shutil.rmtree(self.path, ignore_errors=True)
+        if self.path.exists():
+            # no ignore_errors: a stale partition left behind would be swapped in
+            shutil.rmtree(self.path)
         rows = Observation()
         self.overwrite_partitions(df, lineage, observe=(rows, observe) if observe else None)
         for value, table in tables.items():
@@ -343,19 +345,23 @@ class IcebergTable:
         staging table: Iceberg commits by snapshot, not by directory, so
         each target gets its own ``overwritePartitions`` of the rows whose
         key column (``self.partition_by[0]``) holds its value, with its
-        own ``Observation`` of ``observe``. Each of those writes evaluates
-        ``df`` again. Returns each ``observe`` column's non-null value
-        from the target that wrote it."""
+        own ``Observation`` of ``observe``, attached while the rows still
+        carry the key column. Returns each ``observe`` column's non-null
+        value from the target that wrote it.
+
+        Nothing is cached, so each of those writes evaluates ``df`` (for
+        ``run_job``: the raw scan, the checks and the tier aggregation)
+        again, once per target; that cost has not been measured."""
         from pyspark.sql import functions as F
 
         key = self.partition_by[0]
         seen: dict = {}
         for value, table in tables.items():
-            part = df.filter(F.col(key) == value).drop(key)
             rows = Observation()
-            table.overwrite_partitions(
-                part, {**(lineage or {}), key: value}, (rows, observe) if observe else None
-            )
+            part = _observed(
+                df.filter(F.col(key) == value), (rows, observe) if observe else None
+            ).drop(key)
+            table.overwrite_partitions(part, {**(lineage or {}), key: value})
             for name, n in (rows.get if observe else {}).items():
                 if seen.get(name) is None:
                     seen[name] = n

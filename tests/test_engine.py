@@ -346,27 +346,6 @@ def test_run_job_checkpoint_resume(tmp_path, spark):
     assert r3["metrics"] == {}
 
 
-def test_run_job_failed_tier_write_leaves_no_cache(tmp_path, spark, monkeypatch):
-    """The one staged tier write raising must leave nothing cached in a
-    long-lived session and no day marked done."""
-    from rove_spark.plans.checkpoint import CheckpointManifest
-    from rove_spark.sources.tables import PartitionedTable
-
-    real_write = PartitionedTable.overwrite_partitions
-
-    def fail_tiers(self, df, lineage=None, **kw):
-        if self.partition_by[0] == "tier":
-            raise RuntimeError("injected tier write failure")
-        return real_write(self, df, lineage, **kw)
-
-    spark.catalog.clearCache()
-    monkeypatch.setattr(PartitionedTable, "overwrite_partitions", fail_tiers)
-    with pytest.raises(RuntimeError, match="injected"):
-        _engine(spark).run_job(_signals(spark), "ta", tmp_path / "out", input_fingerprint="fp1")
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert CheckpointManifest(tmp_path / "out" / "_checkpoint.json").records() == {}
-
-
 def test_run_job_tiers_equal_the_cascade(tmp_path, spark):
     """Each stored tier equals ``build_tiers``' cascade over the same
     flagged input, row for row, both ways."""

@@ -132,6 +132,46 @@ def test_table_classes_share_one_surface():
         assert shim == ice, name
 
 
+def test_iceberg_overwrite_split_observes_each_tier(spark):
+    """Iceberg's ``overwrite_split`` writes each target the rows of its
+    key without the key column, and still returns run_job's per-(tier,
+    day) sums, which name the key column: the observation is attached
+    before the column is dropped. Stub targets stand in for Iceberg
+    tables; each collects its frame, as a write would."""
+    from pyspark.sql import functions as F
+
+    from rove_spark.sources.tables import _observed
+
+    written = {}
+
+    class _Target:
+        def __init__(self, tier):
+            self.tier = tier
+
+        def overwrite_partitions(self, df, lineage=None, observe=None):
+            written[self.tier] = (df.columns, lineage, len(_observed(df, observe).collect()))
+            return ""
+
+    df = spark.createDataFrame(
+        [("1m", "d1", 2), ("1m", "d1", 3), ("1m", "d2", 4), ("1h", "d1", 5)],
+        "tier string, day string, n_turns long",
+    )
+    sums = [
+        F.sum(F.when((F.col("tier") == t) & (F.col("day") == d), F.col("n_turns"))).alias(f"{t}/{d}")
+        for t in ("1m", "1h", "1d")
+        for d in ("d1", "d2")
+    ]
+    tables = {t: _Target(t) for t in ("1m", "1h", "1d")}
+    got = IcebergTable(spark, "x", ["tier", "day"]).overwrite_split(
+        df, tables, lineage={"fingerprint": "fp"}, observe=sums
+    )
+    assert got == {"1m/d1": 5, "1m/d2": 4, "1h/d1": 5, "1h/d2": None, "1d/d1": None, "1d/d2": None}
+    assert written == {
+        t: (["day", "n_turns"], {"fingerprint": "fp", "tier": t}, n)
+        for t, n in (("1m", 3), ("1h", 1), ("1d", 0))
+    }
+
+
 def test_iceberg_expire_rejects_malformed_cutoff():
     """The cutoff is spliced into Iceberg's DELETE; anything but a real
     YYYY-MM-DD date is refused before any SQL runs."""

@@ -225,15 +225,18 @@ def _rows(spark, path) -> list[tuple]:
 
 
 def _run(eng, spark, raw_path, out, cutoff):
+    """run_job over the parquet input at ``raw_path``, with a ``raw``
+    retention cutoff unless ``cutoff`` is None."""
     df = spark.read.parquet(str(raw_path)).drop("day")
     return eng.run_job(
         df, "ta", out, value_col="text_len", input_fingerprint="fp1",
-        input_path=raw_path, retention={"raw": cutoff},
+        input_path=raw_path, retention={"raw": cutoff} if cutoff else None,
     )
 
 
-def _assert_store_equal(spark, a: Path, b: Path) -> None:
-    for name in ("tier_1m", "tier_1h", "tier_1d", "chunks_raw"):
+def _assert_store_equal(spark, a: Path, b: Path, compacted: bool = True) -> None:
+    names = ("tier_1m", "tier_1h", "tier_1d") + (("chunks_raw",) if compacted else ())
+    for name in names:
         assert _rows(spark, a / name) == _rows(spark, b / name), name
 
 
@@ -255,10 +258,12 @@ def _fails_on(name: str, real, test):
     return failing
 
 
-def _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted) -> None:
-    """After a failed run over ``raw``: every thread joined, nothing
-    cached, no day marked, no raw day dropped; a rerun then equals a
-    clean run."""
+def _assert_failed_run_left_nothing(
+    spark, tmp_path, eng, raw, days, threads, persisted, cutoff
+) -> None:
+    """After a failed run over ``raw`` with the raw retention ``cutoff``
+    (or none): every thread joined, nothing cached, no day marked, no raw
+    day dropped; a rerun then equals a clean run."""
     assert _pool_threads() <= threads
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted
@@ -266,29 +271,34 @@ def _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, pe
     assert not set(recs) & set(days)
     assert raw.partition_days() == days
 
-    r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
-    clean = _run(eng, spark, tmp_path / "raw_clean", tmp_path / "clean", days[1])
+    r = _run(eng, spark, tmp_path / "raw", tmp_path / "out", cutoff)
+    clean = _run(eng, spark, tmp_path / "raw_clean", tmp_path / "clean", cutoff)
     assert r["computed"] == clean["computed"] == days
     assert r["metrics"].keys() == clean["metrics"].keys()
     for d in days:
         rows = {k: v for k, v in r["metrics"][d].items() if k != "elapsed_job_sec"}
         assert rows == {k: v for k, v in clean["metrics"][d].items() if k != "elapsed_job_sec"}
-    assert r["expired"]["raw"]["dropped"] == clean["expired"]["raw"]["dropped"] == 1
-    assert raw.partition_days() == days[1:]
-    _assert_store_equal(spark, tmp_path / "out", tmp_path / "clean")
+    if cutoff:
+        assert r["expired"]["raw"]["dropped"] == clean["expired"]["raw"]["dropped"] == 1
+        assert raw.partition_days() == days[1:]
+    else:
+        assert "expired" not in r and raw.partition_days() == days
+    _assert_store_equal(spark, tmp_path / "out", tmp_path / "clean", compacted=bool(cutoff))
     assert not (tmp_path / "out" / "_tier_staging").exists()
 
 
-def test_run_job_failed_tier_write_beside_compaction(tmp_path, spark, monkeypatch):
-    """The one tier write raising while the compaction runs beside it:
-    run_job re-raises it once every thread has joined, marks no day done,
-    drops no raw day and leaves nothing cached. A rerun then equals a
-    clean run."""
+@pytest.mark.parametrize("compacting", [True, False], ids=["raw_cutoff", "no_retention"])
+def test_run_job_failed_tier_write(tmp_path, spark, monkeypatch, compacting):
+    """The one tier write raising, with the compaction running beside it
+    or without any retention: run_job re-raises it once every thread has
+    joined, marks no day done, drops no raw day and leaves nothing
+    cached. A rerun then equals a clean run."""
     import shutil
 
     from tests.test_engine import _engine
 
     raw, days = _raw_table(spark, tmp_path / "raw", n_conv=10, avg_turns=40)
+    cutoff = days[1] if compacting else None
     shutil.copytree(tmp_path / "raw", tmp_path / "raw_clean")
     real_write = PartitionedTable.overwrite_partitions
     spark.catalog.clearCache()
@@ -300,9 +310,9 @@ def test_run_job_failed_tier_write_beside_compaction(tmp_path, spark, monkeypatc
     )
     eng = _engine(spark)
     with pytest.raises(RuntimeError, match="injected tier write"):
-        _run(eng, spark, tmp_path / "raw", tmp_path / "out", days[1])
+        _run(eng, spark, tmp_path / "raw", tmp_path / "out", cutoff)
     monkeypatch.setattr(PartitionedTable, "overwrite_partitions", real_write)
-    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted)
+    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted, cutoff)
 
 
 def test_run_job_failed_between_tier_swaps(tmp_path, spark, monkeypatch):
@@ -329,7 +339,7 @@ def test_run_job_failed_between_tier_swaps(tmp_path, spark, monkeypatch):
     assert PartitionedTable(tmp_path / "out" / "tier_1m", ["day"]).partition_days() == days
     assert not (tmp_path / "out" / "tier_1h").exists()
     monkeypatch.setattr(PartitionedTable, "_swap_partitions", real_swap)
-    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted)
+    _assert_failed_run_left_nothing(spark, tmp_path, eng, raw, days, threads, persisted, days[1])
 
 
 def test_run_job_removes_a_killed_runs_staging(tmp_path, spark):

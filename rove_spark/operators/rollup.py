@@ -194,11 +194,11 @@ def build_tiers_onepass(
     text_len_source: str = "text",
     tool_col: str | None = "tool",
 ) -> DataFrame:
-    """All three tiers in ONE aggregation pass via GROUPING SETS — the
-    all-at-once (backfill/bench) strategy beside ``build_tiers``'s
-    cascade. Returns a single frame tagged with ``tier`` ∈ {1m, 1h, 1d};
-    per-tier rows are EXACTLY ``build_tiers``' outputs (integer domain;
-    equality-gated in test_rollup).
+    """All three tiers in ONE aggregation pass via GROUPING SETS — every
+    tier writer's build (``run_job``, ``refresh_tier_increment``) beside
+    ``build_tiers``'s cascade. Returns a single frame tagged with
+    ``tier`` ∈ {1m, 1h, 1d}; per-tier rows are EXACTLY ``build_tiers``'
+    outputs (integer domain; equality-gated in test_rollup).
 
     Why it exists: the cascade is the CONTINUOUS-aggregate model (a
     daily job folds new 1m rows upward from the stored finer tier), but
@@ -214,42 +214,43 @@ def build_tiers_onepass(
 
     Sketch columns (HLL) are cascade-only — merge them through
     ``rollup_cascade``, which is their model anyway."""
-    trunc_cols = {"_m": "minute", "_h": "hour", "_d": "day"}
-    tl = "_tl"
-    d = df.withColumn(tl, _text_len(text_len_source, _is_string(df, text_len_source)))
-    for c, unit in trunc_cols.items():
-        d = d.withColumn(c, F.date_trunc(unit, F.col(ts_col)))
-    keys = [series_col] + ([role_col] if role_col else [])
-    sets = [[*keys, t] for t in trunc_cols]
-    gd = d.groupingSets(
-        [[F.col(c) for c in s] for s in sets],
-        *[F.col(c) for c in (*keys, *trunc_cols)],
+    d = df.withColumn("_tl", _text_len(text_len_source, _is_string(df, text_len_source)))
+    keys = (series_col, role_col) if role_col else (series_col,)
+    truncs, sets, by, markers = _onepass_grouping(ts_col, keys)
+    out = d.withColumns(dict(truncs)).groupingSets(sets, *by).agg(
+        *_base_aggs("_tl", tool_col), *_flag_aggs(checks), *markers
     )
-    out = gd.agg(
-        *_base_aggs(tl, tool_col),
-        *_flag_aggs(checks),
-        F.grouping("_m").alias("_gm"),
-        F.grouping("_h").alias("_gh"),
+    stats = tuple(c for c in out.columns if c not in {*keys, "_m", "_h", "_d", "_gm", "_gh"})
+    return out.select(*_onepass_select(series_col, role_col, stats))
+
+
+@built_once
+def _onepass_grouping(ts_col: str, keys: tuple) -> tuple:
+    """``ts_col`` truncated per tier as (name, column) pairs, one grouping
+    set per tier (``keys`` plus that truncation), the columns grouped by,
+    and the markers of a row's set (``_gm``/``_gh`` 0 where it grouped by
+    ``_m``/``_h``)."""
+    truncs = {"_m": "minute", "_h": "hour", "_d": "day"}
+    return (
+        tuple((c, F.date_trunc(unit, F.col(ts_col))) for c, unit in truncs.items()),
+        tuple(tuple(F.col(c) for c in (*keys, t)) for t in truncs),
+        tuple(F.col(c) for c in (*keys, *truncs)),
+        (F.grouping("_m").alias("_gm"), F.grouping("_h").alias("_gh")),
     )
-    tier = (
-        F.when(F.col("_gm") == 0, F.lit("1m"))
-        .when(F.col("_gh") == 0, F.lit("1h"))
-        .otherwise(F.lit("1d"))
-    )
-    bucket = (
-        F.when(F.col("_gm") == 0, F.col("_m"))
-        .when(F.col("_gh") == 0, F.col("_h"))
-        .otherwise(F.col("_d"))
-    )
-    stat_cols = [
-        c for c in out.columns
-        if c not in {series_col, role_col, "_m", "_h", "_d", "_gm", "_gh"}
-    ]
-    return out.select(
+
+
+@built_once
+def _onepass_select(series_col: str, role_col: str | None, stat_cols: tuple) -> tuple:
+    """The output columns: series, the tier's bucket as ``bucket_ts``,
+    role, the stats and ``tier``."""
+    minute, hour = F.col("_gm") == 0, F.col("_gh") == 0
+    tier = F.when(minute, F.lit("1m")).when(hour, F.lit("1h")).otherwise(F.lit("1d"))
+    bucket = F.when(minute, F.col("_m")).when(hour, F.col("_h")).otherwise(F.col("_d"))
+    return (
         F.col(series_col),
         bucket.alias("bucket_ts"),
-        *([F.col(role_col)] if role_col else []),
-        *[F.col(c) for c in stat_cols],
+        *((F.col(role_col),) if role_col else ()),
+        *(F.col(c) for c in stat_cols),
         tier.alias("tier"),
     )
 
@@ -810,40 +811,43 @@ def merge_tiers(
 
 
 def refresh_tier_increment(
-    inc_table,
+    staging,
+    inc_tables: dict,
     delta_raw: DataFrame,
-    tier: str,
     batch_id: str | None = None,
     series_col: str = "conv_id",
     ts_col: str = "ts",
     role_col: str | None = "role",
     checks: Sequence[str] = (),
     text_len_source: str = "text",
-    tool_col: str = "tool",
+    tool_col: str | None = "tool",
     digest_short_circuit: bool = True,
-) -> dict:
+) -> dict[str, dict]:
     """Delta-only, EXACTLY-ONCE tier refresh: the delta's tier rows land
-    in their own ``day=…/batch=…`` partitions of an increments table via
-    dynamic partition overwrite, so a crashed or replayed ingest REWRITES
-    the same partitions byte-equivalently instead of double-counting
-    (same idempotence class as ``append_to_ivf_index`` batches and the
-    engine's tier writes). The base tier table is never touched;
-    ``read_tier`` merges base + increments on read and
-    ``compact_tier_increments`` keeps the increment count bounded.
+    in their own ``day=…/batch=…`` partitions of each tier's increments
+    table (``inc_tables``, by tier) by partition replacement, so a
+    crashed or replayed ingest REWRITES the same partitions instead of
+    double-counting. The base tiers are never touched; ``read_tier``
+    merges base + increments and ``compact_tier_increments`` bounds the
+    increment count. Returns ``{tier: {batch_id, tier, days, n_rows,
+    applied}}``.
 
-    100 TB cost shape: ONE hash-aggregate over the DELTA (map-side
-    partials; no raw-history scan, no base read) + a partition-scoped
-    write of the touched (day, batch) leaves.
+    Cost shape, the daily job's: ONE GROUPING SETS aggregation of every
+    tier over the DELTA (``build_tiers_onepass``), checkpointed; ONE
+    stats action grouped by tier; ONE Spark write of the pending tiers
+    into ``staging`` (partitioned by tier, day, batch; one writer at a
+    time), whose leaves replace the increments' by rename
+    (``overwrite_split``). Each tier commits its own manifest entry, so
+    a call killed between two tiers' swaps re-applies only the rest.
 
-    The content digest of the delta's tier rows (row count + order-free
-    ``bit_xor(xxhash64(*))``; 64-bit, so an accidental collision is
-    ~2^-64 per pair) is computed and recorded by default: ``batch_id``
-    defaults to it, and the manifest short-circuit matches on id OR
-    digest — so re-ingesting the same delta is a no-op whether the
-    first ingest used an explicit id and the retry did not, or vice
-    versa (the mixed-usage replay would otherwise land the rows twice).
-    Ids must be filesystem-safe; the ``fold-`` prefix is reserved for
-    consolidation batches.
+    A tier's content digest (row count + order-free
+    ``bit_xor(xxhash64(*))`` over ``rollup_from_raw``'s columns; 64-bit,
+    so an accidental collision is ~2^-64 per pair) is recorded by
+    default: its batch id defaults to it, and the manifest short-circuit
+    matches on id OR digest — so re-ingesting the same delta is a no-op
+    whether the first ingest used an explicit id and the retry did not,
+    or vice versa. Ids must be filesystem-safe; the ``fold-`` prefix is
+    reserved for consolidation batches.
 
     ``digest_short_circuit=False`` is for callers whose batch ids are
     AUTHORITATIVE — distinct ids mean distinct batches even when their
@@ -851,8 +855,7 @@ def refresh_tier_increment(
     epochs with byte-identical deltas, e.g. a re-published file; a
     batch recompute over the union counts both, so the merge must too —
     the stream≡batch contract of ``streaming/ingest``). It requires an
-    explicit ``batch_id``, skips the digest job entirely (one fewer
-    Spark action per call), records no digest, and dedups on the id
+    explicit ``batch_id``, records no digest, and dedups on the id
     alone."""
     if batch_id is not None and (
         not _BATCH_ID_RE.fullmatch(batch_id) or batch_id.startswith("fold-")
@@ -867,29 +870,74 @@ def refresh_tier_increment(
             "refresh_tier_increment: digest_short_circuit=False requires an "
             "explicit batch_id (there is no digest to default it from)"
         )
-    inc = rollup_from_raw(
+    tiers = build_tiers_onepass(
         delta_raw,
-        tier,
         series_col=series_col,
         ts_col=ts_col,
         role_col=role_col,
         checks=checks,
         text_len_source=text_len_source,
         tool_col=tool_col,
-    ).localCheckpoint(eager=False)  # referenced by digest + stats + write
-    digest = None
-    if digest_short_circuit:
-        row = inc.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in inc.columns) + "))"
-            ).alias("x"),
-        ).first()
-        if row["n"] == 0:
-            return {"batch_id": batch_id, "tier": tier, "days": [], "n_rows": 0, "applied": False}
-        digest = f"d{row['n']}x{(row['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
-        if batch_id is None:
-            batch_id = digest
+    )
+    if set(inc_tables) != set(TIERS):
+        tiers = tiers.filter(F.col("tier").isin(list(inc_tables)))
+    # referenced by the stats action and the write
+    tiers = tiers.withColumn("day", _day_of_bucket()).localCheckpoint(eager=False)
+    aggs = [F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_set("day")).alias("days")]
+    if digest_short_circuit:  # over rollup_from_raw's columns, in order
+        cols = ", ".join(f"`{c}`" for c in tiers.columns[:-2])
+        aggs.append(F.expr(f"bit_xor(xxhash64({cols}))").alias("x"))
+    stats = {r["tier"]: r for r in tiers.groupBy("tier").agg(*aggs).collect()}
+    out: dict[str, dict] = {}
+    pending: dict[str, dict] = {}  # tier -> its manifest lineage
+    for tier, table in inc_tables.items():
+        row = stats.get(tier)
+        if row is None:  # the delta has no rows at this tier
+            lin, applied = {"batch_id": batch_id, "days": [], "n_rows": 0}, False
+        else:
+            digest = (
+                f"d{row['n']}x{(row['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
+                if digest_short_circuit
+                else None
+            )
+            lin = _applied_increment(table, tier, batch_id or digest, digest)
+            applied = lin is None
+            if applied:
+                lin = pending[tier] = {
+                    "operation": "tier_increment",
+                    "batch_id": batch_id or digest,
+                    "digest": digest,
+                    "tier": tier,
+                    "days": list(row["days"]),
+                    "n_rows": row["n"],
+                }
+        out[tier] = {
+            "batch_id": lin.get("batch_id"),
+            "tier": tier,
+            "days": lin.get("days", []),
+            "n_rows": lin.get("n_rows"),
+            "applied": applied,
+        }
+    if pending:
+        # without an explicit id each tier's batch is its own digest
+        batch = F.create_map(*[F.lit(x) for t, lin in pending.items() for x in (t, lin["batch_id"])])
+        staging.overwrite_split(
+            tiers.filter(F.col("tier").isin(list(pending))).withColumn("batch", batch[F.col("tier")]),
+            {tier: inc_tables[tier] for tier in pending},
+            lineage=pending,
+        )
+    return out
+
+
+@built_once
+def _day_of_bucket() -> Column:
+    """A tier row's ``day`` partition value: its bucket's UTC day."""
+    return F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
+
+
+def _applied_increment(inc_table, tier: str, batch_id: str | None, digest: str | None):
+    """The lineage of the newest increment of ``tier`` in ``inc_table``
+    with this batch id or content digest, else None."""
     for snap in reversed(inc_table.snapshots):
         lin = snap.get("lineage") or {}
         if (
@@ -900,33 +948,8 @@ def refresh_tier_increment(
                 or (digest is not None and lin.get("digest") == digest)
             )
         ):
-            return {
-                "batch_id": lin.get("batch_id"),
-                "tier": tier,
-                "days": lin.get("days", []),
-                "n_rows": lin.get("n_rows"),
-                "applied": False,
-            }
-    out = inc.withColumn(
-        "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-    ).withColumn("batch", F.lit(batch_id))
-    stats = out.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
-    days = sorted(str(r["day"]) for r in stats)
-    n_rows = int(sum(r["n"] for r in stats))
-    if not days:
-        return {"batch_id": batch_id, "tier": tier, "days": [], "n_rows": 0, "applied": False}
-    inc_table.overwrite_partitions(
-        out,
-        lineage={
-            "operation": "tier_increment",
-            "batch_id": batch_id,
-            "digest": digest,
-            "tier": tier,
-            "days": days,
-            "n_rows": n_rows,
-        },
-    )
-    return {"batch_id": batch_id, "tier": tier, "days": days, "n_rows": n_rows, "applied": True}
+            return lin
+    return None
 
 
 def read_tier(
@@ -1351,9 +1374,7 @@ def compact_tier_increments(
     merged = rollup_cascade(
         src.drop("day", "batch"), tier, series_col=series_col, role_col=role_col
     )
-    out = merged.withColumn(
-        "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
-    ).withColumn("batch", F.lit(fold_id))
+    out = merged.withColumn("day", _day_of_bucket()).withColumn("batch", F.lit(fold_id))
     inc_table.overwrite_partitions(
         out,
         lineage={

@@ -25,6 +25,7 @@ import json
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from rove_spark import __version__
@@ -37,8 +38,24 @@ def params_hash(params: dict) -> str:
 
 
 # serializes every load-modify-store in this process: a job's compaction
-# thread marks its days while the job itself may mark its own
+# thread marks its days while the job itself may mark its own, and two
+# streams sharing increment tables commit to the same table manifests
 _update_lock = threading.Lock()
+
+
+def update_json(path: Path, empty: dict, change: Callable[[dict], None], **dumps) -> None:
+    """Apply ``change`` in place to the JSON document at ``path`` (to
+    ``empty`` when there is none) and store it by rename from a unique
+    temporary name, under one process-wide lock: concurrent updates from
+    threads of this process all survive, and no reader sees a torn file.
+    Separate processes are not covered. ``dumps`` go to ``json.dumps``."""
+    with _update_lock:
+        doc = json.loads(path.read_text()) if path.exists() else empty
+        change(doc)
+        path.parent.mkdir(parents=True, exist_ok=True)
+        tmp = path.with_suffix(f".{uuid.uuid4().hex}.tmp")
+        tmp.write_text(json.dumps(doc, indent=1, **dumps))
+        tmp.replace(path)
 
 
 class CheckpointManifest:
@@ -49,12 +66,6 @@ class CheckpointManifest:
         if self.path.exists():
             return json.loads(self.path.read_text())
         return {"version": 1, "partitions": {}}
-
-    def _store(self, doc: dict) -> None:
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(f".{uuid.uuid4().hex}.tmp")
-        tmp.write_text(json.dumps(doc, indent=1, sort_keys=True))
-        tmp.replace(self.path)
 
     def done_partitions(self, fingerprint: str) -> set[str]:
         doc = self._load()
@@ -68,8 +79,8 @@ class CheckpointManifest:
         self, keys: list[str], fingerprint: str, lineage: dict, metrics: dict[str, dict]
     ) -> None:
         now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        with _update_lock:
-            doc = self._load()
+
+        def mark(doc: dict) -> None:
             for k in keys:
                 doc["partitions"][k] = {
                     "status": "done",
@@ -78,7 +89,8 @@ class CheckpointManifest:
                     "lineage": {"code_version": __version__, **lineage},
                     "metrics": metrics.get(k, {}),
                 }
-            self._store(doc)
+
+        update_json(self.path, {"version": 1, "partitions": {}}, mark, sort_keys=True)
 
     def records(self) -> dict:
         return self._load()["partitions"]

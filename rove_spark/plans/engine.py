@@ -35,6 +35,7 @@ from rove_spark.operators import spatial as SP
 # build_tiers stays importable from here: perfbench/layers.py patches it
 from rove_spark.operators.rollup import (  # noqa: F401
     TIERS,
+    _day_of_bucket,
     build_tiers,
     build_tiers_onepass,
     compact_raw_days,
@@ -47,6 +48,15 @@ log = logging.getLogger(__name__)
 
 # the keys of run_job's retention policy: the raw input and the three tiers
 RETENTION_KEYS = ("raw", "1m", "1h", "1d")
+
+
+def _with_neighbours(days: Sequence[str]) -> set[str]:
+    """``days`` (``YYYY-MM-DD``) plus the day before and after each."""
+    out = set(days)
+    for d in days:
+        base = datetime.strptime(d, "%Y-%m-%d")
+        out.update((base + timedelta(days=k)).strftime("%Y-%m-%d") for k in (-1, 1))
+    return out
 
 
 class Engine:
@@ -306,12 +316,8 @@ class Engine:
         # at a done day's head only become decidable once the PREVIOUS
         # day's rows exist — out-of-order backfill (d+1 case). Both are
         # required for resumed ≡ from-scratch to hold on any arrival order.
-        adjacent = set()
-        for d in todo:
-            base = datetime.strptime(d, "%Y-%m-%d")
-            adjacent.add((base - timedelta(days=1)).strftime("%Y-%m-%d"))
-            adjacent.add((base + timedelta(days=1)).strftime("%Y-%m-%d"))
-        reflag = sorted(adjacent & done)
+        # (a todo day is never done, so only its neighbours can match)
+        reflag = sorted(_with_neighbours(todo) & done)
         todo = sorted(set(todo) | set(reflag))
         result = {
             "all": sorted(all_days),
@@ -355,12 +361,8 @@ class Engine:
             # One day covers any sane leading/trailing requirement (≤ minutes
             # of context at PT1M); flagged rows outside todo are dropped again
             # before the rollup so tiers cover exactly the todo partitions.
-            ctx_days = set(todo)
-            for d in todo:
-                base = datetime.strptime(d, "%Y-%m-%d")
-                ctx_days.add((base - timedelta(days=1)).strftime("%Y-%m-%d"))
-                ctx_days.add((base + timedelta(days=1)).strftime("%Y-%m-%d"))
-            work = df.withColumn("day", day).filter(F.col("day").isin(sorted(ctx_days)))
+            ctx_days = sorted(_with_neighbours(todo))
+            work = df.withColumn("day", day).filter(F.col("day").isin(ctx_days))
             flagged = self.run_pipeline(work, pipeline_name, value_col, series_col, (ts_col,))
             flagged = flagged.filter(F.col("day").isin(todo))
             t0 = time()
@@ -375,10 +377,13 @@ class Engine:
                 text_len_source="text" if "text" in cols else value_col,
                 tool_col="tool" if "tool" in cols else None,
                 role_col="role" if "role" in cols else None,
-            ).withColumn("day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd"))
+            ).withColumn("day", _day_of_bucket())
             # a failed write or swap raises here: no day is marked, nothing dropped
             rows = staging.overwrite_split(
-                tiers, tables, lineage={"fingerprint": fp}, observe=day_rows
+                tiers,
+                tables,
+                lineage={t: {"fingerprint": fp, "tier": t} for t in tables},
+                observe=day_rows,
             )
             elapsed = time() - t0
         for name, n in rows.items():
@@ -406,9 +411,10 @@ class Engine:
     ) -> dict:
         """Late-data path beside ``run_job``'s day recompute: flag the
         DELTA through the same pipeline, then land one increment batch
-        per tier (``rollup.refresh_tier_increment`` — exactly-once under
-        crash/replay; read via ``rollup.read_tier`` over
-        ``out_dir/tier_{t}`` + ``out_dir/tier_{t}_inc``).
+        per tier with one ``rollup.refresh_tier_increment`` call, staged
+        under ``out_dir/_inc_staging`` (exactly-once under crash/replay;
+        read via ``rollup.read_tier`` over ``out_dir/tier_{t}`` +
+        ``out_dir/tier_{t}_inc``). Returns ``{tier: result}``.
 
         Trade-off, stated: window checks see the delta IN ISOLATION, so
         flags at the delta's temporal edges can differ from a full
@@ -419,30 +425,23 @@ class Engine:
         Mergeable (non-flag) tier stats are exact either way."""
         from rove_spark.operators.rollup import refresh_tier_increment
 
-        pipe = self.pipelines[pipeline_name]
+        out_dir = Path(out_dir)
         flagged = self.run_pipeline(
             delta_df, pipeline_name, value_col, series_col, (ts_col,)
         )
-        check_names = [s.name for s in pipe.steps]
         cols = delta_df.columns
-        out: dict[str, dict] = {}
-        for tier_name in ("1m", "1h", "1d"):
-            inc = open_table(
-                self.spark, Path(out_dir) / f"tier_{tier_name}_inc", ["day", "batch"]
-            )
-            out[tier_name] = refresh_tier_increment(
-                inc,
-                flagged,
-                tier_name,
-                batch_id=batch_id,
-                series_col=series_col,
-                ts_col=ts_col,
-                checks=check_names,
-                text_len_source="text" if "text" in cols else value_col,
-                tool_col="tool" if "tool" in cols else None,
-                role_col="role" if "role" in cols else None,
-            )
-        return out
+        return refresh_tier_increment(
+            open_table(self.spark, out_dir / "_inc_staging", ["tier", "day", "batch"]),
+            {t: open_table(self.spark, out_dir / f"tier_{t}_inc", ["day", "batch"]) for t in TIERS},
+            flagged,
+            batch_id=batch_id,
+            series_col=series_col,
+            ts_col=ts_col,
+            checks=[s.name for s in self.pipelines[pipeline_name].steps],
+            text_len_source="text" if "text" in cols else value_col,
+            tool_col="tool" if "tool" in cols else None,
+            role_col="role" if "role" in cols else None,
+        )
 
     # stats servable across EVERY storage layer: tiers store them, and a
     # raw/cold sliver can recompute them from the checked signal alone.

@@ -35,6 +35,8 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from rove_spark.plans.checkpoint import update_json
+
 # an observation and its aggregate columns, as ``DataFrame.observe`` takes them
 Observe = tuple[Observation, Sequence[Column]]
 
@@ -128,18 +130,21 @@ class PartitionedTable:
         self.manifest_path = self.path / "_rove_manifest.json"
 
     # -- manifest ---------------------------------------------------------
+    def _empty_manifest(self) -> dict:
+        return {"table": str(self.path), "partition_by": self.partition_by, "snapshots": []}
+
     def _load_manifest(self) -> dict:
         if self.manifest_path.exists():
             return json.loads(self.manifest_path.read_text())
-        return {"table": str(self.path), "partition_by": self.partition_by, "snapshots": []}
+        return self._empty_manifest()
 
     def _commit_manifest(self, entry: dict) -> None:
-        m = self._load_manifest()
-        m["snapshots"].append(entry)
-        self.manifest_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.manifest_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(m, indent=1, default=str))
-        tmp.replace(self.manifest_path)
+        update_json(
+            self.manifest_path,
+            self._empty_manifest(),
+            lambda m: m["snapshots"].append(entry),
+            default=str,
+        )
 
     @property
     def snapshots(self) -> list[dict]:
@@ -210,31 +215,33 @@ class PartitionedTable:
         """Overwrite partitions of several tables with one Spark write.
         ``self`` is a staging table partitioned by a key column, then by
         the targets' partition columns; ``tables`` maps each key value to
-        its target. ``df`` is written once into the staging directory
+        its target and ``lineage`` maps it to that target's manifest
+        lineage. ``df`` is written once into the staging directory
         through ``overwrite_partitions``. Then, in ``tables`` order, each
         staged ``<key>=<v>/<partition>`` directory replaces the target's
         ``<partition>`` (delete, then rename, as Spark's dynamic
         overwrite commits), each target commits one manifest entry with
-        ``lineage`` plus ``{key: v}``, and the staging directory is
-        removed. Returns the ``observe`` aggregates over the written rows
-        by column name ({} without any).
+        its lineage, and the staging directory is removed. Returns the
+        ``observe`` aggregates over the written rows by column name ({}
+        without any).
 
         A killed run's staging directory is removed before the write, so
-        its partitions are never swapped in. A run killed between swaps
-        leaves the earlier targets new and the later ones old: callers
-        mark their work done only after this returns."""
+        its partitions are never swapped in (one writer per staging
+        directory). A run killed between swaps leaves the earlier targets
+        new and committed, the later ones old: callers mark their work
+        done only after this returns."""
         key = self.partition_by[0]
         if self.path.exists():
             # no ignore_errors: a stale partition left behind would be swapped in
             shutil.rmtree(self.path)
         rows = Observation()
-        self.overwrite_partitions(df, lineage, observe=(rows, observe) if observe else None)
+        self.overwrite_partitions(df, observe=(rows, observe) if observe else None)
         for value, table in tables.items():
-            table._swap_partitions(self.path / f"{key}={value}", {**(lineage or {}), key: value})
+            table._swap_partitions(self.path / f"{key}={value}", (lineage or {}).get(value))
         shutil.rmtree(self.path)
         return rows.get if observe else {}
 
-    def _swap_partitions(self, staged: Path, lineage: dict) -> None:
+    def _swap_partitions(self, staged: Path, lineage: dict | None) -> None:
         """Move every partition directory under ``staged`` (laid out like
         this table) into this table, replacing the one there; then commit
         the manifest entry."""
@@ -345,9 +352,10 @@ class IcebergTable:
         staging table: Iceberg commits by snapshot, not by directory, so
         each target gets its own ``overwritePartitions`` of the rows whose
         key column (``self.partition_by[0]``) holds its value, with its
-        own ``Observation`` of ``observe``, attached while the rows still
-        carry the key column. Returns each ``observe`` column's non-null
-        value from the target that wrote it.
+        own lineage from ``lineage`` and its own ``Observation`` of
+        ``observe``, attached while the rows still carry the key column.
+        Returns each ``observe`` column's non-null value from the target
+        that wrote it.
 
         Nothing is cached, so each of those writes evaluates ``df`` (for
         ``run_job``: the raw scan, the checks and the tier aggregation)
@@ -361,7 +369,7 @@ class IcebergTable:
             part = _observed(
                 df.filter(F.col(key) == value), (rows, observe) if observe else None
             ).drop(key)
-            table.overwrite_partitions(part, {**(lineage or {}), key: value})
+            table.overwrite_partitions(part, (lineage or {}).get(value))
             for name, n in (rows.get if observe else {}).items():
                 if seen.get(name) is None:
                     seen[name] = n

@@ -4,24 +4,25 @@ The windowed ``stream_rollup`` keeps open windows in the state store and
 finalizes them when the watermark passes — the right shape for low-latency
 flag feeds, but its answer for a window is only final after eviction and
 its state grows with open-window count. This module is the other half of
-the continuous-aggregate story: each micro-batch lands as ONE increment
-batch per tier via ``rollup.refresh_tier_increment`` (dynamic partition
-overwrite into ``day=…/batch=…`` leaves), and ``rollup.read_tier`` merges
-base + increments exactly on read.
+the continuous-aggregate story: each micro-batch lands as one increment
+batch per tier with ONE ``rollup.refresh_tier_increment`` call (one
+build of all tiers, one staged write into ``day=…/batch=…`` leaves, under
+the stream's own ``out_dir/_inc_staging_<stream_id>``), and
+``rollup.read_tier`` merges base + increments exactly on read.
 
 Exactly-once, stated precisely: Structured Streaming replays a failed
 epoch with the SAME epoch id and (for replayable sources like files) the
 same rows, so the sink-side batch id ``{stream_id}-e{epoch}`` is stable
 across retries — a replayed epoch REWRITES its own (day, batch)
-partitions byte-equivalently, and a fully-committed epoch short-circuits
-off the increment manifest (id or content digest). That is the classic
+partitions byte-equivalently, and each committed tier short-circuits
+off its increment manifest (by id). That is the classic
 idempotent-foreachBatch recipe (Spark structured-streaming guide,
 "foreachBatch — reuse existing batch data sources"), backed here by the
 crash-window kill-tests of ``refresh_tier_increment`` itself.
 
 Why this scales to 10^12 turns where complete-mode aggregation cannot:
 no streaming state AT ALL (the micro-batch is the delta; history lives in
-the tier tables), each epoch costs one delta-sized hash-aggregate plus a
+the tier tables), each epoch costs one delta-sized aggregate plus one
 partition-scoped write, and read amplification stays bounded by
 ``compact_tier_increments``. Reference anchor: rove streams flags and
 stores nothing (``/root/reference/src/server.rs:104-123``); the
@@ -82,34 +83,26 @@ def make_tier_ingest_fn(
     def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
-        # materialize the (possibly QC-flagged) delta ONCE: the per-tier
-        # refreshes would otherwise re-run the source scan and the
-        # transform's shuffle once per tier
-        batch_df = batch_df.localCheckpoint(eager=False)
-        batch_id = f"{stream_id}-e{epoch_id}"
-        for tier in tiers:
-            inc = open_table(
-                batch_df.sparkSession, out_dir / f"tier_{tier}_inc", ["day", "batch"]
-            )
-            res = refresh_tier_increment(
-                inc,
-                batch_df,
-                tier,
-                batch_id=batch_id,
-                series_col=series_col,
-                ts_col=ts_col,
-                role_col=role_col,
-                checks=checks,
-                text_len_source=text_len_source,
-                tool_col=tool_col,
-                # epoch ids are AUTHORITATIVE: two epochs may legally carry
-                # byte-identical deltas (a re-published file) and a batch
-                # recompute over the union counts both — content-digest
-                # dedup would silently drop the second (stream≢batch)
-                digest_short_circuit=False,
-            )
-            if results is not None:
-                results.append({"epoch": epoch_id, **res})
+        spark = batch_df.sparkSession
+        res = refresh_tier_increment(
+            open_table(spark, out_dir / f"_inc_staging_{stream_id}", ["tier", "day", "batch"]),
+            {t: open_table(spark, out_dir / f"tier_{t}_inc", ["day", "batch"]) for t in tiers},
+            batch_df,
+            batch_id=f"{stream_id}-e{epoch_id}",
+            series_col=series_col,
+            ts_col=ts_col,
+            role_col=role_col,
+            checks=checks,
+            text_len_source=text_len_source,
+            tool_col=tool_col,
+            # epoch ids are AUTHORITATIVE: two epochs may legally carry
+            # byte-identical deltas (a re-published file) and a batch
+            # recompute over the union counts both — content-digest
+            # dedup would silently drop the second (stream≢batch)
+            digest_short_circuit=False,
+        )
+        if results is not None:
+            results.extend({"epoch": epoch_id, **r} for r in res.values())
 
     return _ingest
 

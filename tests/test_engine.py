@@ -234,10 +234,12 @@ def test_spatial_check_on_duplicate_keys_reads_the_input(spark):
 
 def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
     """Building run_job's tier plan (the transcripts_pt1m checks, then
-    build_tiers_onepass) makes at most 400 py4j round trips once the
-    check and tier expressions are built. With call-site capture on and
-    every expression rebuilt per plan it made ~2,600, each a blocking
-    call into the JVM on the daily job's critical path."""
+    build_tiers_onepass) makes at most 150 py4j round trips once the
+    check and tier expressions are built (119 on pyspark 4.1; most of
+    them are py4j converting argument lists element by element). With
+    the tier expressions rebuilt per plan it made 278, and with call-site
+    capture on and every expression rebuilt ~2,600, each a blocking call
+    into the JVM on the critical path of every tier writer."""
     import threading
     from pathlib import Path
 
@@ -268,7 +270,7 @@ def test_daily_plan_build_is_a_few_hundred_jvm_round_trips(spark, monkeypatch):
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     tiers = build()
     monkeypatch.undo()
-    assert 0 < len(calls) <= 400, len(calls)
+    assert 0 < len(calls) <= 150, len(calls)
     assert tiers.columns[:3] == ["conv_id", "bucket_ts", "role"]
 
 
@@ -554,6 +556,34 @@ def test_manifest_mark_done_from_threads(tmp_path):
     assert set(manifest.records()) == {f"k{i}-{j}" for i in range(8) for j in range(5)}
     assert manifest.done_partitions("fp") == set(manifest.records())
     assert [p.name for p in tmp_path.iterdir()] == ["_checkpoint.json"]
+
+
+def test_table_manifest_commits_from_threads(tmp_path):
+    """A table's manifest commits are safe for concurrent callers in one
+    process (two streams sharing increment tables): eight threads making
+    five commits each leave all forty entries in a parseable manifest.
+    Separate processes are not covered, as for ``CheckpointManifest``."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rove_spark.sources.tables import PartitionedTable
+
+    table = PartitionedTable(tmp_path / "t", ["day"])
+
+    def commit(i: int) -> None:
+        for j in range(5):
+            table._commit_overwrite({"k": f"{i}-{j}"})
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            list(pool.map(commit, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    got = [s["lineage"]["k"] for s in table.snapshots]
+    assert sorted(got) == sorted(f"{i}-{j}" for i in range(8) for j in range(5))
+    assert [p.name for p in table.path.iterdir()] == ["_rove_manifest.json"]
 
 
 def test_homebrew_custom_check(spark, tmp_path):

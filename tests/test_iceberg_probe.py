@@ -163,7 +163,7 @@ def test_iceberg_overwrite_split_observes_each_tier(spark):
     ]
     tables = {t: _Target(t) for t in ("1m", "1h", "1d")}
     got = IcebergTable(spark, "x", ["tier", "day"]).overwrite_split(
-        df, tables, lineage={"fingerprint": "fp"}, observe=sums
+        df, tables, lineage={t: {"fingerprint": "fp", "tier": t} for t in tables}, observe=sums
     )
     assert got == {"1m/d1": 5, "1m/d2": 4, "1h/d1": 5, "1h/d2": None, "1d/d1": None, "1d/d2": None}
     assert written == {

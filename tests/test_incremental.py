@@ -38,6 +38,16 @@ def _split(df, parity: int):
     return df.where(F.pmod(F.xxhash64("conv_id", "ts"), F.lit(2)) == parity)
 
 
+def _staging(root):
+    return PartitionedTable(root / "_inc_staging", ["tier", "day", "batch"])
+
+
+def _refresh(inc, delta, **kw):
+    """``refresh_tier_increment`` of the 1m tier into ``inc``, staged
+    beside it; returns the 1m result."""
+    return refresh_tier_increment(_staging(Path(inc.path).parent), {"1m": inc}, delta, **kw)["1m"]
+
+
 def test_merge_split_equals_full_all_tiers(spark):
     """merge(tier(A), tier(B)) ≡ tier(A ∪ B) bit-exactly for every tier,
     under a row-hash split that lands rows of one bucket in BOTH halves
@@ -102,7 +112,7 @@ def tables(spark, raw, tmp_path):
 
 def test_increment_read_equals_full_rebuild(spark, raw, tables):
     base, inc = tables
-    res = refresh_tier_increment(inc, _split(raw, 1), "1m", batch_id="b1")
+    res = _refresh(inc, _split(raw, 1), batch_id="b1")
     assert res["applied"] and res["n_rows"] > 0 and res["days"]
     got = read_tier(spark, base, inc, "1m")
     assert _canon(got) == _canon(rollup_from_raw(raw, "1m"))
@@ -114,8 +124,8 @@ def test_increment_replay_is_exactly_once(spark, raw, tables):
     manifest without touching data."""
     base, inc = tables
     delta = _split(raw, 1)
-    first = refresh_tier_increment(inc, delta, "1m", batch_id="day-1")
-    again = refresh_tier_increment(inc, delta, "1m", batch_id="day-1")
+    first = _refresh(inc, delta, batch_id="day-1")
+    again = _refresh(inc, delta, batch_id="day-1")
     assert first["applied"] and not again["applied"]
     assert again["days"] == first["days"] and again["n_rows"] == first["n_rows"]
     assert _canon(read_tier(spark, base, inc, "1m")) == _canon(
@@ -124,10 +134,10 @@ def test_increment_replay_is_exactly_once(spark, raw, tables):
     # MIXED usage: the same delta re-ingested WITHOUT an id must be
     # recognized via the recorded content digest (the crashed-retry
     # script that forgot the id would otherwise land the rows twice)
-    by_digest = refresh_tier_increment(inc, delta, "1m")
+    by_digest = _refresh(inc, delta)
     assert not by_digest["applied"] and by_digest["batch_id"] == "day-1"
     # ...and under a DIFFERENT explicit id likewise (digest match)
-    other_id = refresh_tier_increment(inc, delta, "1m", batch_id="day-1-retry")
+    other_id = _refresh(inc, delta, batch_id="day-1-retry")
     assert not other_id["applied"] and other_id["batch_id"] == "day-1"
     assert _canon(read_tier(spark, base, inc, "1m")) == _canon(
         rollup_from_raw(raw, "1m")
@@ -141,12 +151,12 @@ def test_increment_rejects_bad_batch_ids(spark, raw, tables):
     # match the column value — fullmatch rejects it up front
     for bad in ("fold-abc", "a/b", "", "x y", "b1\n"):
         with pytest.raises(ValueError, match="batch_id"):
-            refresh_tier_increment(inc, _split(raw, 1), "1m", batch_id=bad)
+            _refresh(inc, _split(raw, 1), batch_id=bad)
 
 
 def test_empty_delta_is_a_noop(spark, raw, tables):
     _, inc = tables
-    res = refresh_tier_increment(inc, raw.limit(0), "1m")
+    res = _refresh(inc, raw.limit(0))
     assert res == {"batch_id": None, "tier": "1m", "days": [], "n_rows": 0, "applied": False}
     assert not inc.exists()
 
@@ -155,7 +165,7 @@ def test_read_tier_day_pruning_plan(spark, raw, tables):
     """A windowed read must prune BOTH scans to the requested day
     partitions (PartitionFilters), not scan-then-filter."""
     base, inc = tables
-    refresh_tier_increment(inc, _split(raw, 1), "1m", batch_id="b1")
+    _refresh(inc, _split(raw, 1), batch_id="b1")
     day = base.partition_days()[0]
     df = read_tier(spark, base, inc, "1m", days=[day])
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -175,9 +185,7 @@ def test_read_tier_day_pruning_plan(spark, raw, tables):
 def _ingest_three(raw, inc):
     thirds = F.pmod(F.xxhash64("conv_id", "ts"), F.lit(3))
     for k in range(3):
-        refresh_tier_increment(
-            inc, raw.where(thirds == k), "1m", batch_id=f"b{k}"
-        )
+        _refresh(inc, raw.where(thirds == k), batch_id=f"b{k}")
 
 
 def _batches_on_disk(inc):
@@ -205,13 +213,11 @@ def test_compact_preserves_read_and_bounds_batches(spark, raw, tmp_path):
     # are gone but the manifest remembers it — re-landing it would
     # double-count through the consolidated rows)
     thirds = F.pmod(F.xxhash64("conv_id", "ts"), F.lit(3))
-    replay = refresh_tier_increment(
-        inc, raw.where(thirds == 0), "1m", batch_id="b0"
-    )
+    replay = _refresh(inc, raw.where(thirds == 0), batch_id="b0")
     assert not replay["applied"]
     assert _canon(read_tier(spark, None, inc, "1m")) == before
     # a consolidated batch is an ordinary batch: the next fold folds it too
-    refresh_tier_increment(inc, raw.limit(50), "1m", batch_id="late")
+    _refresh(inc, raw.limit(50), batch_id="late")
     before2 = _canon(read_tier(spark, None, inc, "1m"))
     res2 = compact_tier_increments(spark, inc, "1m")
     assert res["fold_id"] in res2["folded"] and "late" in res2["folded"]
@@ -297,7 +303,7 @@ def test_schema_evolution_new_check_without_rebuild(spark, raw, tmp_path):
     delta = qc.step_check(
         delta, "text_len", max_=500.0, series_col="conv_id", order_cols=["ts"]
     )
-    refresh_tier_increment(inc, delta, "1m", batch_id="evolved", checks=["step_check"])
+    _refresh(inc, delta, batch_id="evolved", checks=["step_check"])
 
     with pytest.raises(Exception, match="UNION|column|COLUMN"):
         read_tier(spark, base, inc, "1m")
@@ -360,3 +366,102 @@ def test_read_tier_requires_some_table(spark, tmp_path):
     empty = PartitionedTable(tmp_path / "none", ["day"])
     with pytest.raises(ValueError, match="neither base nor increments"):
         read_tier(spark, empty, None, "1m")
+
+
+# ------------------------------------------------- all tiers in one call --
+
+TIER_NAMES = ("1m", "1h", "1d")
+
+
+def _inc_tables(root):
+    return {t: PartitionedTable(root / f"tier_{t}_inc", ["day", "batch"]) for t in TIER_NAMES}
+
+
+def writing_executions(spark, group, call):
+    """Run ``call`` under job group ``group``; return the physical plans
+    of its SQL executions that write files."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        call()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        plan = e.physicalPlanDescription()
+        if any(e.jobs().contains(j) for j in jobs) and "InsertIntoHadoopFsRelationCommand" in plan:
+            plans.append(plan)
+    return plans
+
+
+def test_increment_digest_and_batch_id_match_single_tier_formula(spark, raw, tmp_path):
+    """Each tier's recorded digest, and its default batch id, is the row
+    count and ``bit_xor(xxhash64(*))`` over ``rollup_from_raw(delta,
+    tier)``'s columns in order — the formula of the per-tier refresh
+    this one replaced — so manifests written by it still short-circuit
+    a replay."""
+    delta = _split(raw, 1)
+    incs = _inc_tables(tmp_path)
+    res = refresh_tier_increment(_staging(tmp_path), incs, delta)
+    assert list(res) == list(TIER_NAMES)
+    for t in TIER_NAMES:
+        want = rollup_from_raw(delta, t)
+        row = want.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in want.columns) + "))").alias("x"),
+        ).first()
+        digest = f"d{row['n']}x{row['x'] & 0xFFFFFFFFFFFFFFFF:016x}"
+        assert res[t]["applied"] and res[t]["batch_id"] == digest, t
+        lin = incs[t].snapshots[-1]["lineage"]
+        assert (lin["digest"], lin["batch_id"], lin["n_rows"]) == (digest, digest, row["n"]), t
+        assert _batches_on_disk(incs[t]) == [digest], t
+    assert not (tmp_path / "_inc_staging").exists()
+
+
+def test_ingest_late_is_one_write(spark, tmp_path):
+    """One ``ingest_late`` lands all three tiers with exactly one writing
+    SQL execution, into its staging table."""
+    from tests.test_engine import _engine, _signals
+
+    plans = writing_executions(
+        spark,
+        "ingest-late",
+        lambda: _engine(spark).ingest_late(_signals(spark), "ta", tmp_path / "out", batch_id="b1"),
+    )
+    assert len(plans) == 1 and "_inc_staging" in plans[0]
+    assert {t: len(_batches_on_disk(PartitionedTable(tmp_path / "out" / f"tier_{t}_inc", ["day", "batch"])))
+            for t in TIER_NAMES} == {t: 1 for t in TIER_NAMES}
+
+
+def test_increment_killed_between_tier_swaps_replays_the_rest(spark, raw, tmp_path):
+    """A call killed after the 1m swap and before the 1h swap: 1m is
+    committed, 1h and 1d are not. The replay skips 1m, applies 1h and
+    1d, and every tier then reads as the full rebuild."""
+    incs = _inc_tables(tmp_path)
+    base = {}
+    for t in TIER_NAMES:
+        base[t] = PartitionedTable(tmp_path / f"tier_{t}", ["day"])
+        half = rollup_from_raw(_split(raw, 0), t)
+        base[t].overwrite_partitions(half.withColumn("day", _day(half)))
+
+    def killed(staged, lineage):
+        raise RuntimeError("killed before the 1h swap")
+
+    incs["1h"]._swap_partitions = killed
+    with pytest.raises(RuntimeError, match="killed"):
+        refresh_tier_increment(_staging(tmp_path), incs, _split(raw, 1), batch_id="late")
+    del incs["1h"]._swap_partitions
+    assert [incs[t].exists() for t in TIER_NAMES] == [True, False, False]
+
+    replay = refresh_tier_increment(_staging(tmp_path), incs, _split(raw, 1), batch_id="late")
+    assert {t: r["applied"] for t, r in replay.items()} == {"1m": False, "1h": True, "1d": True}
+    assert replay["1m"]["batch_id"] == "late" and replay["1m"]["n_rows"] > 0
+    for t in TIER_NAMES:
+        assert _canon(read_tier(spark, base[t], incs[t], t)) == _canon(rollup_from_raw(raw, t)), t
+        assert _batches_on_disk(incs[t]) == ["late"], t
+    assert not (tmp_path / "_inc_staging").exists()

@@ -174,12 +174,44 @@ def test_duplicate_content_epochs_both_apply(tmp_path, spark, raw):
 
 
 def test_digest_short_circuit_off_requires_explicit_id(tmp_path, spark, raw):
-    from rove_spark.operators.rollup import refresh_tier_increment
+    from tests.test_incremental import _refresh
 
     inc = PartitionedTable(tmp_path / "inc", ["day", "batch"])
     with pytest.raises(ValueError, match="digest_short_circuit"):
-        refresh_tier_increment(inc, raw, "1m", digest_short_circuit=False)
+        _refresh(inc, raw, digest_short_circuit=False)
     # same-id replay still dedups on the id alone
-    r1 = refresh_tier_increment(inc, raw, "1m", batch_id="e0", digest_short_circuit=False)
-    r2 = refresh_tier_increment(inc, raw, "1m", batch_id="e0", digest_short_circuit=False)
+    r1 = _refresh(inc, raw, batch_id="e0", digest_short_circuit=False)
+    r2 = _refresh(inc, raw, batch_id="e0", digest_short_circuit=False)
     assert r1["applied"] and not r2["applied"]
+
+
+def test_epoch_is_one_write(tmp_path, spark, raw):
+    """An epoch lands all three tiers with exactly one writing SQL
+    execution, into the stream's own staging table."""
+    from tests.test_incremental import writing_executions
+
+    fn = make_tier_ingest_fn(tmp_path / "out", "s1")
+    plans = writing_executions(spark, "epoch", lambda: fn(raw, 0))
+    assert len(plans) == 1 and "_inc_staging_s1" in plans[0]
+    for tier in ("1m", "1h", "1d"):
+        inc = PartitionedTable(tmp_path / "out" / f"tier_{tier}_inc", ["day", "batch"])
+        assert _canon(read_tier(spark, None, inc, tier)) == _canon(rollup_from_raw(raw, tier))
+
+
+def test_stale_staging_is_never_read(tmp_path, spark, raw):
+    """A stream's staging leaf left by a killed epoch, here with wrong
+    rows under the next epoch's own batch id on a day that epoch does not
+    touch, is never swapped in or read, and the next epoch removes it."""
+    out = tmp_path / "out"
+    stale = out / "_inc_staging_s1" / "tier=1m" / "day=2000-01-01" / "batch=s1-e0"
+    wrong = rollup_from_raw(raw, "1m").limit(5)
+    wrong.write.parquet(str(stale))
+    results: list = []
+    fn = make_tier_ingest_fn(out, "s1", results=results)
+    fn(raw, 0)
+    assert [r["applied"] for r in results] == [True, True, True]
+    assert not (out / "_inc_staging_s1").exists()
+    for tier in ("1m", "1h", "1d"):
+        inc = PartitionedTable(out / f"tier_{tier}_inc", ["day", "batch"])
+        assert "2000-01-01" not in inc.partition_days(), tier
+        assert _canon(read_tier(spark, None, inc, tier)) == _canon(rollup_from_raw(raw, tier))

@@ -209,7 +209,7 @@ class PartitionedTable:
         self,
         df: DataFrame,
         tables: dict,
-        lineage: dict | None = None,
+        lineage: dict,
         observe: Sequence[Column] = (),
     ) -> dict:
         """Overwrite partitions of several tables with one Spark write.
@@ -237,11 +237,11 @@ class PartitionedTable:
         rows = Observation()
         self.overwrite_partitions(df, observe=(rows, observe) if observe else None)
         for value, table in tables.items():
-            table._swap_partitions(self.path / f"{key}={value}", (lineage or {}).get(value))
+            table._swap_partitions(self.path / f"{key}={value}", lineage[value])
         shutil.rmtree(self.path)
         return rows.get if observe else {}
 
-    def _swap_partitions(self, staged: Path, lineage: dict | None) -> None:
+    def _swap_partitions(self, staged: Path, lineage: dict) -> None:
         """Move every partition directory under ``staged`` (laid out like
         this table) into this table, replacing the one there; then commit
         the manifest entry."""
@@ -345,7 +345,7 @@ class IcebergTable:
         self,
         df: DataFrame,
         tables: dict,
-        lineage: dict | None = None,
+        lineage: dict,
         observe: Sequence[Column] = (),
     ) -> dict:
         """``PartitionedTable.overwrite_split``'s contract without a
@@ -369,7 +369,7 @@ class IcebergTable:
             part = _observed(
                 df.filter(F.col(key) == value), (rows, observe) if observe else None
             ).drop(key)
-            table.overwrite_partitions(part, (lineage or {}).get(value))
+            table.overwrite_partitions(part, lineage[value])
             for name, n in (rows.get if observe else {}).items():
                 if seen.get(name) is None:
                     seen[name] = n

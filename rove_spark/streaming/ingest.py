@@ -42,7 +42,6 @@ if a deployment truly never rolls over.
 from __future__ import annotations
 
 import hashlib
-import os
 from pathlib import Path
 from typing import Callable, Sequence
 

@@ -263,47 +263,17 @@ def with_shingles(
     text_col: str = "text",
     n: int = 3,
     out_col: str = "shingles",
-    id_col: str | None = None,
 ) -> DataFrame:
     """Distinct word n-gram shingle hashes (int64) per doc — the set the
-    Jaccard similarity is defined over.
-
-    Two equivalent physical shapes (identical output SETS; the codegen
-    path returns them sorted):
-
-    - ``id_col=None``: pure column expressions (per-row array lambdas).
-      Generic — needs no row key — but higher-order-function lambdas are
-      INTERPRETED per element, so each trigram pays an interpreted
-      slice+concat+hash (the with_simhash_portable lesson, CLAUDE.md).
-    - ``id_col=...``: posexplode words → lead-window n-grams → one
-      codegen hash-aggregate (sort_array ∘ collect_set) → join back.
-      Two narrow shuffles on the id, everything whole-stage codegen —
-      measured ~3× on the 4 s shingle stage at sf0.1. This is the path
-      ``minhash_dedup`` uses (it always has an id)."""
+    Jaccard similarity is defined over. Pure column expressions
+    (per-row array lambdas), so no row key is needed; ``minhash_dedup``
+    builds the same sets, sorted, inside ``_shingle_minhash_fused``."""
     words = F.split(F.lower(F.col(text_col)), r"\s+")
-    if id_col is None:
-        k = F.greatest(F.size(words) - (n - 1), F.lit(0))
-        # sequence(1, 0) would *descend* — short/empty docs get no shingles
-        idx = F.when(k >= 1, F.sequence(F.lit(1), k)).otherwise(F.array().cast("array<int>"))
-        grams = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, n))))
-        return df.withColumn(out_col, F.array_distinct(grams))
-    from pyspark.sql import Window
-
-    exploded = df.select(F.col(id_col).alias("_sid"), F.posexplode_outer(words))
-    win = Window.partitionBy("_sid").orderBy("pos")
-    leads = [F.col("col")] + [F.lead("col", j).over(win) for j in range(1, n)]
-    gram = F.xxhash64(F.concat_ws(" ", *leads))
-    grams = (
-        exploded.withColumn("_g", gram)
-        # the window's last (n-1) positions have no full n-gram
-        .withColumn("_ok", F.lead("col", n - 1).over(win).isNotNull())
-        .filter(F.col("_ok"))
-        .groupBy("_sid")
-        .agg(F.sort_array(F.collect_set("_g")).alias(out_col))
-    )
-    return df.join(
-        grams.withColumnRenamed("_sid", id_col), id_col, "left"
-    ).withColumn(out_col, F.coalesce(F.col(out_col), F.array().cast("array<bigint>")))
+    k = F.greatest(F.size(words) - (n - 1), F.lit(0))
+    # sequence(1, 0) would *descend* — short/empty docs get no shingles
+    idx = F.when(k >= 1, F.sequence(F.lit(1), k)).otherwise(F.array().cast("array<int>"))
+    grams = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, n))))
+    return df.withColumn(out_col, F.array_distinct(grams))
 
 
 def with_minhash(
@@ -351,7 +321,7 @@ def _shingle_minhash_fused(
     shingle_col: str = "shingles",
     minhash_col: str = "minhash",
 ) -> DataFrame:
-    """``with_shingles(id_col=...)`` + ``with_minhash`` in ONE codegen
+    """``with_shingles`` + ``with_minhash`` in ONE codegen
     aggregate: the exploded n-gram rows feed 64 ``min(xxhash64(seed_i,
     gram))`` aggregates AND the sorted shingle set in a single groupBy —
     no interpreted array lambdas anywhere (min over non-distinct grams ≡

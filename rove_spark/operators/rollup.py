@@ -29,6 +29,7 @@ import hashlib
 import json
 import re
 from collections.abc import Sequence
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
@@ -856,7 +857,8 @@ def refresh_tier_increment(
     batch recompute over the union counts both, so the merge must too —
     the stream≡batch contract of ``streaming/ingest``). It requires an
     explicit ``batch_id``, records no digest, and dedups on the id
-    alone."""
+    alone: when every tier already holds that id (a replayed epoch) it
+    returns before building anything, with no Spark job."""
     if batch_id is not None and (
         not _BATCH_ID_RE.fullmatch(batch_id) or batch_id.startswith("fold-")
     ):
@@ -865,11 +867,17 @@ def refresh_tier_increment(
             "filesystem-safe ([A-Za-z0-9._-]) and must not use the "
             "reserved 'fold-' prefix (consolidation batches)"
         )
-    if not digest_short_circuit and batch_id is None:
-        raise ValueError(
-            "refresh_tier_increment: digest_short_circuit=False requires an "
-            "explicit batch_id (there is no digest to default it from)"
-        )
+    if not digest_short_circuit:
+        if batch_id is None:
+            raise ValueError(
+                "refresh_tier_increment: digest_short_circuit=False requires an "
+                "explicit batch_id (there is no digest to default it from)"
+            )
+        # an authoritative id needs no data: a replay of a batch every
+        # tier already holds returns before any Spark job
+        done = {t: _applied_increment(tb, t, batch_id, None) for t, tb in inc_tables.items()}
+        if all(done.values()):
+            return {t: _increment_result(t, lin, False) for t, lin in done.items()}
     tiers = build_tiers_onepass(
         delta_raw,
         series_col=series_col,
@@ -911,13 +919,7 @@ def refresh_tier_increment(
                     "days": list(row["days"]),
                     "n_rows": row["n"],
                 }
-        out[tier] = {
-            "batch_id": lin.get("batch_id"),
-            "tier": tier,
-            "days": lin.get("days", []),
-            "n_rows": lin.get("n_rows"),
-            "applied": applied,
-        }
+        out[tier] = _increment_result(tier, lin, applied)
     if pending:
         # without an explicit id each tier's batch is its own digest
         batch = F.create_map(*[F.lit(x) for t, lin in pending.items() for x in (t, lin["batch_id"])])
@@ -927,6 +929,17 @@ def refresh_tier_increment(
             lineage=pending,
         )
     return out
+
+
+def _increment_result(tier: str, lineage: dict, applied: bool) -> dict:
+    """``refresh_tier_increment``'s result for one tier."""
+    return {
+        "batch_id": lineage.get("batch_id"),
+        "tier": tier,
+        "days": lineage.get("days", []),
+        "n_rows": lineage.get("n_rows"),
+        "applied": applied,
+    }
 
 
 @built_once
@@ -958,7 +971,6 @@ def read_tier(
     inc_table,
     tier: str,
     series_col: str = "conv_id",
-    role_col: str | None = "role",
     days: Sequence[str] | None = None,
     allow_missing_columns: bool = False,
 ) -> DataFrame:
@@ -967,7 +979,9 @@ def read_tier(
     partitions before any aggregation (PartitionFilters — plan-gated in
     tests), so a windowed read over a 10^12-turn table touches only the
     requested days of tier rows. Either side may be absent (a brand-new
-    table has only increments; a quiet one only base).
+    table has only increments; a quiet one only base). Rows group by
+    ``role`` as well when the first table read (the base, else the
+    increments) has that column.
 
     Crash-exactness: the increments scan is filtered to
     ``_visible_batches`` — committed fold markers supersede any source
@@ -1004,6 +1018,8 @@ def read_tier(
         raise ValueError("read_tier: neither base nor increments table exists")
     if inc_part is None:
         return base_part
+    first = inc_part if base_part is None else base_part
+    role_col = "role" if "role" in first.columns else None
     if base_part is None:
         # increment batches may overlap buckets — combine them
         return rollup_cascade(inc_part, tier, series_col=series_col, role_col=role_col)
@@ -1048,6 +1064,21 @@ def _as_datetime(boundary) -> datetime.datetime:
         return datetime.datetime(boundary.year, boundary.month, boundary.day)
     raise TypeError(
         f"boundary must be a datetime.date/datetime, got {type(boundary).__name__}"
+    )
+
+
+def _tail_rollup(tier, series_col, ts_col, role_col, checks, text_len_source, tool_col):
+    """The default ``rollup_fn`` of ``realtime_tier`` and
+    ``range_aggregate``: ``rollup_from_raw`` at ``tier``."""
+    return partial(
+        rollup_from_raw,
+        tier=tier,
+        series_col=series_col,
+        ts_col=ts_col,
+        role_col=role_col,
+        checks=checks,
+        text_len_source=text_len_source,
+        tool_col=tool_col,
     )
 
 
@@ -1107,17 +1138,9 @@ def realtime_tier(
             "across the materialized and fresh sides and double-counts it"
         )
     if rollup_fn is None:
-        def rollup_fn(tail: DataFrame) -> DataFrame:
-            return rollup_from_raw(
-                tail,
-                tier,
-                series_col=series_col,
-                ts_col=ts_col,
-                role_col=role_col,
-                checks=checks,
-                text_len_source=text_len_source,
-                tool_col=tool_col,
-            )
+        rollup_fn = _tail_rollup(
+            tier, series_col, ts_col, role_col, checks, text_len_source, tool_col
+        )
     # Cast the LITERAL to the raw ts column's exact type (the testdata
     # parquet is TIMESTAMP_NTZ): a cast on the column side would wrap the
     # scan attribute and block parquet predicate pushdown — a constant
@@ -1236,17 +1259,9 @@ def range_aggregate(
         raise ValueError("range_aggregate: need a raw frame or at least one tier")
     start, end = _as_datetime(start), _as_datetime(end)
     if rollup_fn is None:
-        def rollup_fn(sliver: DataFrame) -> DataFrame:
-            return rollup_from_raw(
-                sliver,
-                "1m",
-                series_col=series_col,
-                ts_col=ts_col,
-                role_col=role_col,
-                checks=checks,
-                text_len_source=text_len_source,
-                tool_col=tool_col,
-            )
+        rollup_fn = _tail_rollup(
+            "1m", series_col, ts_col, role_col, checks, text_len_source, tool_col
+        )
     segs = route_range(start, end, levels=tuple(levels))
     if not segs:  # empty range: typed empty frame, no raw source required
         segs = [("raw", start, start)] if raw is not None else []

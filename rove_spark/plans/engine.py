@@ -59,6 +59,16 @@ def _with_neighbours(days: Sequence[str]) -> set[str]:
     return out
 
 
+def _days_in(start: datetime, end: datetime) -> list[str]:
+    """The days (``YYYY-MM-DD``) that ``[start, end)`` touches, in order;
+    none for an empty range."""
+    if start >= end:
+        return []
+    first, last = start.date(), (end - timedelta(microseconds=1)).date()
+    n = (last - first).days + 1
+    return [(first + timedelta(days=k)).strftime("%Y-%m-%d") for k in range(n)]
+
+
 class Engine:
     """Composes configured pipelines over series DataFrames.
 
@@ -315,7 +325,8 @@ class Engine:
         # rows exist (d-1 case), and lag-based checks (step/spike/flatline)
         # at a done day's head only become decidable once the PREVIOUS
         # day's rows exist — out-of-order backfill (d+1 case). Both are
-        # required for resumed ≡ from-scratch to hold on any arrival order.
+        # needed for resumed ≡ from-scratch; they are not enough where a
+        # check's context reaches past the adjacent day (see below).
         # (a todo day is never done, so only its neighbours can match)
         reflag = sorted(_with_neighbours(todo) & done)
         todo = sorted(set(todo) | set(reflag))
@@ -355,12 +366,13 @@ class Engine:
         with ThreadPoolExecutor(max_workers=1) as pool:
             compacting = pool.submit(self._in_thread(compact)) if compact else None
             # context widening: window checks need neighboring rows, so a
-            # resumed run must see one day of context on each side of the todo
-            # set — otherwise flags at day boundaries differ from a from-scratch
-            # run (lag rows missing ⇒ spurious INCONCLUSIVE/DATA_MISSING).
-            # One day covers any sane leading/trailing requirement (≤ minutes
-            # of context at PT1M); flagged rows outside todo are dropped again
+            # resumed run sees one calendar day of context on each side of
+            # the todo set; flagged rows outside todo are dropped again
             # before the rollup so tiers cover exactly the todo partitions.
+            # Checks count their context in ROWS, not days: a series whose
+            # previous row is two days back, or a flatline run longer than
+            # the adjacent day's rows, is flagged differently from a
+            # from-scratch run (xfail in test_engine; ROADMAP open item).
             ctx_days = sorted(_with_neighbours(todo))
             work = df.withColumn("day", day).filter(F.col("day").isin(ctx_days))
             flagged = self.run_pipeline(work, pipeline_name, value_col, series_col, (ts_col,))
@@ -516,27 +528,19 @@ class Engine:
 
         out_dir = Path(out_dir)
         start, end = _as_datetime(start), _as_datetime(end)
-        days: list[str] = []
-        if start < end:
-            cur = start.date()
-            last = (end - timedelta(microseconds=1)).date()
-            while cur <= last:
-                days.append(cur.strftime("%Y-%m-%d"))
-                cur += timedelta(days=1)
+        days = _days_in(start, end)
         tiers: dict[str, DataFrame] = {}
         for t in ("1m", "1h", "1d"):
             base = open_table(self.spark, out_dir / f"tier_{t}", ["day"])
             inc = open_table(self.spark, out_dir / f"tier_{t}_inc", ["day", "batch"])
             if not (base.exists() or inc.exists()):
                 continue
-            probe = (base if base.exists() else inc).read(self.spark)
             frame = read_tier(
                 self.spark,
                 base,
                 inc,
                 t,
                 series_col=series_col,
-                role_col="role" if "role" in probe.columns else None,
                 days=days,  # [] for an empty range prunes EVERY partition
             )
             if series_ids is not None:
@@ -552,19 +556,10 @@ class Engine:
                 start, end, levels=tuple(lv for lv in ("1d", "1h", "1m") if lv in tiers)
             )
             slivers = [(s, e) for lv, s, e in segs if lv == "raw"]
-        sliver_day_set: set[str] = set()
-        for s, e in slivers:
-            cur, last = s.date(), (e - timedelta(microseconds=1)).date()
-            while cur <= last:  # a tier-less store's sliver spans many days
-                sliver_day_set.add(cur.strftime("%Y-%m-%d"))
-                cur += timedelta(days=1)
-        sliver_days = sorted(sliver_day_set)
+        # the days the slivers touch (a tier-less store's one sliver spans many)
+        sliver_days = {d for s, e in slivers for d in _days_in(s, e)}
         chunks = open_table(self.spark, out_dir / "chunks_raw", ["day"])
-        cold_days = (
-            sorted(set(chunks.partition_days()) & set(sliver_days))
-            if chunks.exists()
-            else []
-        )
+        cold_days = sorted(set(chunks.partition_days()) & sliver_days) if chunks.exists() else []
         raw_parts = []
         need_raw = bool(slivers) or (start >= end and not tiers)
         if hot_df is not None and need_raw:

@@ -64,25 +64,22 @@ class DataSwitch:
     sources: dict[str, Callable[..., DataFrame]] = field(default_factory=dict)
     _spec_aware: set = field(default_factory=set)
 
-    def register(
-        self, name: str, source: Callable[..., DataFrame], spec_aware: bool = False
-    ) -> None:
+    def register(self, name: str, source: Callable[..., DataFrame]) -> None:
         """A source is either ``() -> DataFrame`` (plain scan — the specs
-        become post-hoc Catalyst predicates, pushdown is free) or, with
-        ``spec_aware=True``, ``(time_spec, space_spec) -> DataFrame``.
+        become post-hoc Catalyst predicates, pushdown is free) or, when it
+        carries a truthy ``spec_aware`` attribute (e.g.
+        ``rollup.cold_source``'s), ``(time_spec, space_spec) -> DataFrame``.
         Spec-aware sources mirror the reference connectors, which
         receive the specs and push them into the remote query
         (``fetch.rs:184-211``) — needed whenever a Python decode stage
         (e.g. the Gorilla cold tier) would otherwise block Catalyst from
         pushing predicates down to the scan. ``fetch`` still applies the
         exact predicates on the returned frame, so a spec-aware source
-        only has to PRUNE, never to filter exactly. The flag is an
+        only has to PRUNE, never to filter exactly. The attribute is an
         explicit opt-in (a callable's arity is not a routing signal — a
-        plain ``lambda *a: df`` must not receive specs by accident); a
-        source carrying a truthy ``spec_aware`` attribute (e.g.
-        ``rollup.cold_source``'s) opts in implicitly."""
+        plain ``lambda *a: df`` must not receive specs by accident)."""
         self.sources[name] = source
-        if spec_aware or getattr(source, "spec_aware", False):
+        if getattr(source, "spec_aware", False):
             self._spec_aware.add(name)
 
     def fetch(

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from rove_spark.model import Flag
+from rove_spark.operators.rollup import _base_aggs, _is_string, _text_len
 
 
 def stream_rollup(
@@ -65,15 +66,9 @@ def stream_rollup(
     if role_col:
         keys.append(F.col(role_col))
     src = stream_df.withWatermark(ts_col, watermark)
-    if aggs is None:
-        src = src.withColumn("_tl", F.length(text_col).cast("long"))
-        aggs = [
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("_tl").alias("text_len_sum"),
-            F.min("_tl").alias("text_len_min"),
-            F.max("_tl").alias("text_len_max"),
-            F.sum(F.col(tool_col).isNotNull().cast("long")).alias("n_tool_calls"),
-        ]
+    if aggs is None:  # the batch tier's stats, one definition
+        src = src.withColumn("_tl", _text_len(text_col, _is_string(src, text_col)))
+        aggs = _base_aggs("_tl", tool_col)
     agg = src.groupBy(*keys).agg(*aggs)
     out_cols = [F.col(series_col), F.col("w.start").alias("bucket_ts")]
     if role_col:

@@ -377,9 +377,9 @@ def _inc_tables(root):
     return {t: PartitionedTable(root / f"tier_{t}_inc", ["day", "batch"]) for t in TIER_NAMES}
 
 
-def writing_executions(spark, group, call):
-    """Run ``call`` under job group ``group``; return the physical plans
-    of its SQL executions that write files."""
+def group_jobs(spark, group, call):
+    """Run ``call`` under job group ``group``; return the ids of the
+    Spark jobs it started."""
     sc = spark.sparkContext
     try:
         sc.setJobGroup(group, group)
@@ -388,7 +388,13 @@ def writing_executions(spark, group, call):
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def writing_executions(spark, group, call):
+    """Run ``call`` under job group ``group``; return the physical plans
+    of its SQL executions that write files."""
+    jobs = group_jobs(spark, group, call)
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     plans = []
     for i in range(executions.size()):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from rove_spark.sources.synthetic import synthetic_transcripts
 from rove_spark.sources.tables import PartitionedTable
 from tests.test_engine import _engine
+from tests.test_incremental import group_jobs
 
 
 def _raw_frame(spark, n_conv=12, avg_turns=60):
@@ -152,3 +153,20 @@ def test_query_range_tier_only_store(spark, tmp_path):
     assert _canon(got) == _canon(_direct(original, start, end))
     with pytest.raises(ValueError, match="needs raw rows"):
         eng.query_range(tmp_path / "out", start, end + dt.timedelta(seconds=30))
+
+
+def test_query_range_plans_with_one_read_per_tier_table(spark, tmp_path):
+    """Building the read over a three-tier store without increments reads
+    each tier table once (one schema-inference job each) and nothing
+    else: no separate probe for the role column."""
+    eng, original, raw, days = _store(spark, tmp_path, retention_days=0)
+    start = dt.datetime.strptime(days[0], "%Y-%m-%d") + dt.timedelta(minutes=3)
+    end = dt.datetime.strptime(days[-1], "%Y-%m-%d") + dt.timedelta(hours=1)
+    built = []
+
+    def build():
+        built.append(eng.query_range(tmp_path / "out", start, end))
+
+    jobs = group_jobs(spark, "query-range-plan", build)
+    assert len(jobs) <= 3, jobs
+    assert _canon(built[0]) == _canon(_direct(original, start, end))

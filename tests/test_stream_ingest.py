@@ -215,3 +215,30 @@ def test_stale_staging_is_never_read(tmp_path, spark, raw):
         inc = PartitionedTable(out / f"tier_{tier}_inc", ["day", "batch"])
         assert "2000-01-01" not in inc.partition_days(), tier
         assert _canon(read_tier(spark, None, inc, tier)) == _canon(rollup_from_raw(raw, tier))
+
+
+def test_replayed_epoch_starts_no_job(tmp_path, spark, raw):
+    """A replay of an epoch every tier already holds is answered from the
+    increment manifests before the transform's plan or the tier build
+    runs: no Spark job, and the same per-tier results as the first
+    application, marked not applied."""
+    from tests.test_incremental import group_jobs
+
+    def flag(df):
+        return checks.step_check(
+            df.withColumn("text_len", F.length("text").cast("double")),
+            "text_len",
+            max_=120.0,
+            series_col="conv_id",
+            order_cols=["ts"],
+        )
+
+    results: list = []
+    fn = make_tier_ingest_fn(
+        tmp_path / "out", "s1", transform=flag, checks=["step_check"], results=results
+    )
+    fn(raw, 0)
+    first = [dict(r, applied=False) for r in results]
+    assert [r["applied"] for r in results] == [True, True, True]
+    assert group_jobs(spark, "replay", lambda: fn(raw, 0)) == []
+    assert results[3:] == first

@@ -45,6 +45,17 @@ def _engine(spark, toml=PIPE, **kw):
     return Engine(spark, pipelines={"ta": parse_pipeline("ta", toml)}, **kw)
 
 
+def _assert_same_tiers(spark, a_dir, b_dir):
+    """The tier tables under ``a_dir`` and ``b_dir`` hold the same rows."""
+    for tier in ("1m", "1h", "1d"):
+        a = spark.read.parquet(str(a_dir / f"tier_{tier}"))
+        b = spark.read.parquet(str(b_dir / f"tier_{tier}"))
+        cols = sorted(a.columns)
+        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
+        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
+        assert ca == cb, tier
+
+
 def _signals(spark, **kw):
     df = synthetic_transcripts(spark, n_conv=20, avg_turns=40, **kw)
     return derive_signals(df)
@@ -317,13 +328,7 @@ def test_run_job_checkpoint_resume(tmp_path, spark):
     # resumed output ≡ from-scratch output
     r_fresh = eng.run_job(df, "ta", tmp_path / "fresh", input_fingerprint="fp1")
     assert r_fresh["computed"] == days
-    for tier in ("1m", "1h", "1d"):
-        a = spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}"))
-        b = spark.read.parquet(str(tmp_path / "fresh" / f"tier_{tier}"))
-        cols = sorted(a.columns)
-        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
-        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
-        assert ca == cb, tier
+    _assert_same_tiers(spark, tmp_path / "out", tmp_path / "fresh")
 
     # manifest carries lineage + metrics
     from rove_spark.plans.checkpoint import CheckpointManifest
@@ -394,13 +399,7 @@ def test_run_job_backfill_reflags_following_day(tmp_path, spark):
     # resumed-out-of-order ≡ from-scratch, byte-identical tier contents
     r_fresh = eng.run_job(df, "ta", tmp_path / "fresh", input_fingerprint="fp1")
     assert r_fresh["computed"] == days
-    for tier in ("1m", "1h", "1d"):
-        a = spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}"))
-        b = spark.read.parquet(str(tmp_path / "fresh" / f"tier_{tier}"))
-        cols = sorted(a.columns)
-        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
-        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
-        assert ca == cb, tier
+    _assert_same_tiers(spark, tmp_path / "out", tmp_path / "fresh")
 
 
 def test_run_job_resume_with_interleaved_backfill_writer(tmp_path, spark):
@@ -438,13 +437,7 @@ def test_run_job_resume_with_interleaved_backfill_writer(tmp_path, spark):
     # merged interleaved history ≡ from-scratch, byte-identical tiers
     r_fresh = _engine(spark).run_job(df, "ta", tmp_path / "fresh", input_fingerprint="fp1")
     assert r_fresh["computed"] == days
-    for tier in ("1m", "1h", "1d"):
-        a = spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}"))
-        b = spark.read.parquet(str(tmp_path / "fresh" / f"tier_{tier}"))
-        cols = sorted(a.columns)
-        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
-        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
-        assert ca == cb, tier
+    _assert_same_tiers(spark, tmp_path / "out", tmp_path / "fresh")
 
     # every day recorded exactly once in the shared manifest, with lineage
     from rove_spark.plans.checkpoint import CheckpointManifest
@@ -483,13 +476,7 @@ def test_run_job_resume_over_sparse_days_equals_from_scratch(tmp_path, spark):
     eng.run_job(first, "ta", tmp_path / "out", input_fingerprint="fp1")
     eng.run_job(df, "ta", tmp_path / "out", input_fingerprint="fp1")
     eng.run_job(df, "ta", tmp_path / "fresh", input_fingerprint="fp1")
-    for tier in ("1m", "1h", "1d"):
-        a = spark.read.parquet(str(tmp_path / "out" / f"tier_{tier}"))
-        b = spark.read.parquet(str(tmp_path / "fresh" / f"tier_{tier}"))
-        cols = sorted(a.columns)
-        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
-        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
-        assert ca == cb, tier
+    _assert_same_tiers(spark, tmp_path / "out", tmp_path / "fresh")
 
 
 def test_run_job_param_change_invalidates(tmp_path, spark):
@@ -523,13 +510,7 @@ def test_day_enumeration_from_partition_listing(tmp_path, spark):
     r1 = eng.run_job(back, "ta", tmp_path / "listed", input_fingerprint="fp1", input_path=inp)
     assert r1["all"] == days
     r2 = eng.run_job(df, "ta", tmp_path / "scanned", input_fingerprint="fp1")
-    for tier in ("1m", "1h", "1d"):
-        a = spark.read.parquet(str(tmp_path / "listed" / f"tier_{tier}"))
-        b = spark.read.parquet(str(tmp_path / "scanned" / f"tier_{tier}"))
-        cols = sorted(a.columns)
-        ca = sorted(tuple(str(x) for x in r) for r in a.select(*cols).collect())
-        cb = sorted(tuple(str(x) for x in r) for r in b.select(*cols).collect())
-        assert ca == cb, tier
+    _assert_same_tiers(spark, tmp_path / "listed", tmp_path / "scanned")
 
 
 def test_run_job_malformed_retention_cutoff_raises(tmp_path, spark):

@@ -29,9 +29,6 @@ class Flag(enum.IntEnum):
         return [f.name for f in cls]
 
 
-# Canonical transcript input schema (BASELINE.json input_hint).
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
 # Default check-flag column prefix: flag_<check_name>.
 FLAG_PREFIX = "flag_"
 

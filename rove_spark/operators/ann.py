@@ -168,12 +168,9 @@ def assign_to_centroids(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_sim: bool = False,
 ) -> DataFrame:
     """Inverted lists: each vector joins its max-cosine centroid.
-    Centroids are tiny → broadcast; one narrow pass over the table.
-    ``keep_sim`` retains the winning cosine as ``assign_sim`` — the
-    quantization-quality signal the drift metric aggregates."""
+    Centroids are tiny → broadcast; one narrow pass over the table."""
     c = F.broadcast(centroids)
     scored = vectors.crossJoin(c).select(
         F.col(id_col),
@@ -182,188 +179,7 @@ def assign_to_centroids(
         cosine(F.col(vec_col), F.col("centroid")).alias("_sim"),
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.asc("centroid_id"))
-    out = scored.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1).drop("_r")
-    if keep_sim:
-        return out.withColumnRenamed("_sim", "assign_sim")
-    return out.drop("_sim")
-
-
-def persist_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 4096,
-    lloyd_iters: int = 5,
-    seed: int = 17,
-) -> None:
-    """Materialize the IVF index on disk: inverted lists PARTITIONED BY
-    centroid_id + a tiny centroid table. Probing a persisted index reads
-    ONLY the probed lists' partitions — the probe→list join is a
-    broadcast on centroid_id, so dynamic partition pruning turns
-    n_probe/n_centroids into a physical scan reduction, not just a row
-    filter. This is the realistic shape at 100 TB: the quantizer trains
-    once, assignment is one pass, and every query batch afterwards is a
-    pruned scan + per-list exact scoring."""
-    centroids = build_ivf_centroids(
-        vectors, n_centroids, id_col, vec_col, sample_size, lloyd_iters, seed
-    )
-    assigned = assign_to_centroids(vectors, centroids, id_col, vec_col, keep_sim=True)
-    # consumed twice (parquet write + stats agg): materialize the
-    # crossJoin + window assignment once (the CLAUDE.md N-references
-    # lesson), instead of re-scoring the whole corpus for a count/sum
-    assigned = assigned.withColumn("batch", F.lit("base")).localCheckpoint(eager=False)
-    # lists are partitioned (batch, centroid_id): centroid pruning still
-    # applies, and every batch owns disjoint partitions so appends can be
-    # replayed idempotently via dynamic partition overwrite
-    assigned.write.mode("overwrite").partitionBy("batch", "centroid_id").parquet(
-        f"{path}/lists"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    stats = assigned.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("assign_sim").alias("s")
-    ).first()
-    _write_index_stats(
-        path,
-        {
-            "n_vectors": int(stats["n"]),
-            "sum_assign_sim": float(stats["s"]),
-            "appends": [],
-        },
-    )
-
-
-def _stats_path(path: str) -> str:
-    return f"{path}/_ivf_stats.json"
-
-
-def _write_index_stats(path: str, doc: dict) -> None:
-    import json
-    from pathlib import Path
-
-    p = Path(_stats_path(path))
-    p.parent.mkdir(parents=True, exist_ok=True)
-    tmp = p.with_suffix(".tmp")
-    tmp.write_text(json.dumps(doc, indent=1))
-    tmp.replace(p)
-
-
-def _read_index_stats(path: str) -> dict:
-    import json
-    from pathlib import Path
-
-    return json.loads(Path(_stats_path(path)).read_text())
-
-
-def append_to_ivf_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    drift_threshold: float = 0.05,
-    batch_id: str | None = None,
-) -> dict:
-    """Incremental IVF maintenance (round-5 verdict item 7): a
-    daily-append pipeline can't retrain k-means per batch, so new
-    vectors are assigned to the NEAREST PERSISTED centroid and appended
-    to the inverted lists — one broadcast-join pass, partitioned append,
-    no reshuffle of the existing index.
-
-    Crash/retry safety (same idempotence class as tier writes): each
-    batch lands in its own ``batch=<id>`` partition level via DYNAMIC
-    partition overwrite, so a replay rewrites the same partitions
-    instead of duplicating rows (duplicated vec_ids would occupy two
-    top-k slots and break the full-probe-exact contract). ``batch_id``
-    defaults to a content digest of the batch (one narrow
-    count+sum(xxhash64(id, vec)) pass), so an accidental re-append of
-    the same batch is a no-op even without an explicit id; a daily
-    pipeline should pass its natural id (e.g. the day). A batch already
-    recorded in the sidecar returns its recorded result without
-    touching data.
-
-    Quality guard: the quantizer gradually mismatches a drifting corpus,
-    so each append records its mean assignment cosine and compares it
-    against the index's lifetime mean. ``drift = (mean_life −
-    mean_batch) / mean_life`` (clamped at 0); ``needs_retrain`` fires
-    when it exceeds ``drift_threshold``. Approximate (n_probe <
-    n_centroids) recall degrades exactly when assignment similarity
-    degrades — full probe stays exact regardless (tested: appended
-    index ≡ fresh index ≡ brute force at full probe), so a missed
-    retrain costs recall at partial probe, never correctness at full.
-
-    Returns {batch_id, n_appended, mean_sim_batch, mean_sim_life,
-    drift, needs_retrain}. Stats ride a JSON sidecar next to the lists
-    (the Iceberg-properties analog, same pattern as the table
-    manifests)."""
-    if batch_id == "base":
-        raise ValueError(
-            "batch_id 'base' is reserved for the initial persist_ivf_index "
-            "write — an append under it would dynamic-overwrite (and "
-            "silently truncate) the base index partitions"
-        )
-    if batch_id is None:
-        # order-free xor fold — summing hashes overflows under ANSI mode
-        fp = new_vectors.select(
-            F.xxhash64(F.col(id_col), F.col(vec_col)).alias("_h")
-        ).agg(
-            F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("h")
-        ).first()
-        batch_id = f"auto-{fp['n']}-{(fp['h'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
-    stats = _read_index_stats(path)
-    for prior in stats["appends"]:
-        if prior.get("batch_id") == batch_id:
-            return prior  # already fully applied (data + sidecar)
-    assigned = assign_to_centroids(
-        new_vectors,
-        spark.read.parquet(f"{path}/centroids"),
-        id_col,
-        vec_col,
-        keep_sim=True,
-    )
-    # consumed twice (write + stats agg) — materialize once
-    assigned = assigned.withColumn("batch", F.lit(batch_id)).localCheckpoint(eager=False)
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(f"{path}/lists")
-    )
-    agg = assigned.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("assign_sim").alias("s")
-    ).first()
-    n_new, s_new = int(agg["n"]), float(agg["s"] or 0.0)
-    mean_life = stats["sum_assign_sim"] / max(stats["n_vectors"], 1)
-    mean_batch = s_new / max(n_new, 1)
-    if n_new == 0:
-        # an empty batch carries no drift evidence — without this guard
-        # mean_batch=0 reads as drift=1.0 and a spurious retrain signal
-        drift = 0.0
-    else:
-        drift = max(0.0, (mean_life - mean_batch) / max(abs(mean_life), 1e-12))
-    result = {
-        "batch_id": batch_id,
-        "n_appended": n_new,
-        "mean_sim_batch": round(mean_batch, 6),
-        "mean_sim_life": round(mean_life, 6),
-        "drift": round(drift, 6),
-        "needs_retrain": drift > drift_threshold,
-    }
-    stats["n_vectors"] += n_new
-    stats["sum_assign_sim"] += s_new
-    stats["appends"].append(result)
-    _write_index_stats(path, stats)
-    return result
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(centroids, assigned) from a persisted index — pass both to
-    ``ivf_topk`` to skip the build."""
-    return (
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/lists"),
-    )
+    return scored.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1).drop("_r", "_sim")
 
 
 def ivf_topk(
@@ -377,16 +193,13 @@ def ivf_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     centroids: DataFrame | None = None,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """IVF search: probe the n_probe nearest inverted lists per query,
-    exact cosine within the probed lists. Pass precomputed
-    ``centroids``/``assigned`` to amortize index build across query
-    batches (the realistic usage at scale)."""
+    exact cosine within the probed lists. Pass precomputed ``centroids``
+    to skip training the quantizer."""
     if centroids is None:
         centroids = build_ivf_centroids(vectors, n_centroids, id_col, vec_col)
-    if assigned is None:
-        assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
+    assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
 
     q = queries.select(F.col(query_id_col).alias("_qid"), F.col(query_vec_col).alias("_qv"))
     qc = q.crossJoin(F.broadcast(centroids)).select(

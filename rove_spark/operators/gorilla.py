@@ -410,26 +410,6 @@ def decode_values(blob: bytes) -> np.ndarray:
     return out.view(np.float32)
 
 
-def encode_chunk_masked(ts_seconds: np.ndarray, values: np.ndarray, present: np.ndarray) -> dict:
-    """Encode a chunk: all slot timestamps, presence bitmap, and the XOR
-    stream over *present* values only."""
-    ts_blob = encode_timestamps(ts_seconds)
-    present = np.asarray(present, dtype=bool)
-    val_blob = encode_values(np.asarray(values, dtype=np.float32)[present])
-    presence = np.packbits(present).tobytes()
-    raw = np.asarray(ts_seconds, dtype=np.int64).tobytes() + np.asarray(
-        values, dtype=np.float32
-    )[present].tobytes()
-    return {
-        "n_points": int(len(ts_seconds)),
-        "n_present": int(present.sum()),
-        "ts_codec": ts_blob,
-        "val_codec": val_blob,
-        "presence": presence,
-        "checksum": zlib.crc32(raw) & 0xFFFFFFFF,
-    }
-
-
 def decode_chunk_masked(chunk: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """→ (ts_seconds int64[n], values float32[n] with NaN at gaps,
     present bool[n])."""

@@ -47,28 +47,6 @@ def _window_moments(df, value_col, frame_lo, frame_hi, series_col, order_cols, s
     return df2, n, mean, var
 
 
-def with_rolling_stats(
-    df: DataFrame,
-    value_col: str,
-    window_rows: int,
-    series_col: str = "conv_id",
-    order_cols: Sequence[str] = ("ts",),
-    scale: int = 100,
-    prefix: str = "roll_",
-) -> DataFrame:
-    """Trailing-window (current row + ``window_rows-1`` predecessors)
-    count/mean/variance via exact integer sums of scaled values."""
-    df2, n, mean, var = _window_moments(
-        df, value_col, -(window_rows - 1), 0, series_col, order_cols, scale
-    )
-    return (
-        df2.withColumn(f"{prefix}n", n)
-        .withColumn(f"{prefix}mean", mean)
-        .withColumn(f"{prefix}var", F.greatest(var, F.lit(0.0)))
-        .drop("_c")
-    )
-
-
 def zscore_check(
     df: DataFrame,
     value_col: str,

@@ -522,16 +522,6 @@ def with_sketch_estimates(tier_df: DataFrame) -> DataFrame:
     return out
 
 
-def with_rates(tier_df: DataFrame, checks: Sequence[str] = ()) -> DataFrame:
-    """Derived read-time rate columns from the stored integer sums."""
-    out = tier_df.withColumn(
-        "tool_call_rate", F.col("n_tool_calls") / F.col("n_turns")
-    ).withColumn("text_len_avg", F.col("text_len_sum") / F.col("n_turns"))
-    for c in checks:
-        out = out.withColumn(f"fail_density_{c}", F.col(f"n_fail_{c}") / F.col("n_turns"))
-    return out
-
-
 def retention_compact(
     spark,
     raw_table,

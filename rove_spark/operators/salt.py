@@ -9,7 +9,7 @@ therefore on us, two complementary ways:
 
 1. **Structural salting** (preferred): make the group key
    (series, calendar_chunk) — a conversation becomes many bounded chunks.
-   Used by gorilla.compress_series; ``chunk_key`` exposes it generically.
+   Used by gorilla.compress_series.
    Semantics-preserving for chunk-local operators (codec, per-chunk stats).
 
 2. **Explicit hash salting** (for operators that can do partial→final
@@ -18,8 +18,7 @@ therefore on us, two complementary ways:
    with a second tiny aggregation. ``salted_agg`` wires the two-phase plan
    and is exact for decomposable aggregates (sum/count/min/max).
 
-Hot keys are detected with a cheap sampled count (no full shuffle) —
-at 100 TB the sample is a narrow scan; the hot set is tiny and broadcast.
+The caller names the hot keys (``hot_keys``); ``None`` salts every key.
 """
 
 from __future__ import annotations
@@ -28,28 +27,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    key_col: str,
-    threshold_rows: int,
-    sample_fraction: float | None = None,
-) -> list:
-    """Keys whose (estimated) row count exceeds ``threshold_rows``.
-
-    With ``sample_fraction`` the count runs on a Bernoulli sample and is
-    scaled back up — at scale, pass ~1e-3; exact by default for tests."""
-    if sample_fraction:
-        est = (
-            df.sample(fraction=sample_fraction, seed=1)
-            .groupBy(key_col)
-            .count()
-            .withColumn("count", (F.col("count") / sample_fraction).cast("long"))
-        )
-    else:
-        est = df.groupBy(key_col).count()
-    return [r[0] for r in est.filter(F.col("count") > threshold_rows).collect()]
 
 
 def with_salt(
@@ -82,12 +59,6 @@ def with_salt(
     else:
         expr = F.when(F.col(key_col).isin(list(hot_keys)), salted).otherwise(F.lit(0))
     return df.withColumn(salt_col, expr)
-
-
-def chunk_key(ts_col: str = "ts", chunk: str = "day") -> Column:
-    """Structural salt: calendar chunk of the timestamp — bounded groups
-    for per-series grouped-UDF stages."""
-    return F.date_trunc(chunk, F.col(ts_col))
 
 
 def salted_agg(

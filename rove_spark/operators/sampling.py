@@ -1,4 +1,4 @@
-"""Deterministic sampling & dataset mixing for training-data pipelines.
+"""Deterministic sampling for training-data pipelines.
 
 Unlike ``df.sample`` (RNG per task → partitioning-dependent), these are
 pure hash functions of row keys: the same row is always in or out, across
@@ -50,21 +50,3 @@ def stratified_sample(
     for value, f in fractions.items():
         frac = F.when(F.col(strata_col) == value, F.lit(float(f))).otherwise(frac)
     return df.filter(_hash_unit(*key_cols, salt=salt) < frac)
-
-
-def weighted_mixture(
-    sources: Sequence[tuple[DataFrame, float]],
-    key_cols: Sequence[str],
-    salt: str = "",
-    source_col: str = "mix_source",
-) -> DataFrame:
-    """Dataset mixing: union of sources, each hash-downsampled to its
-    weight (weights ≤ 1 are keep-fractions). Adds a provenance column.
-    Columns are aligned by name (unionByName, missing allowed as nulls)."""
-    out = None
-    for idx, (df, weight) in enumerate(sources):
-        part = hash_sample(df, key_cols, weight, salt=f"{salt}:{idx}").withColumn(
-            source_col, F.lit(idx)
-        )
-        out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-    return out

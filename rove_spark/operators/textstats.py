@@ -1,5 +1,5 @@
-"""Text analysis for training-data pipelines: token counting, language ID,
-quality scoring, document fingerprinting. All pure column expressions
+"""Text analysis for training-data pipelines: language ID, quality
+scoring, document fingerprinting. All pure column expressions
 (whole-stage codegen; no Python in the hot path).
 
 Engine extras (no rove counterpart; the reference's scalar-function surface
@@ -22,29 +22,9 @@ LANG_MARKERS = {
 
 EN_STOPWORDS = LANG_MARKERS["en"] + ["a", "an", "on", "at", "by", "be", "as", "are", "was"]
 
-_BPE_ISH_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
-
 
 def _words(text_col: str) -> Column:
     return F.split(F.lower(F.col(text_col)), r"\s+")
-
-
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace tokens + a BPE-ish segmentation count (letters runs,
-    digit runs, single punctuation — the pre-tokenizer shape most BPE
-    vocabularies assume)."""
-    ws = F.size(F.filter(_words(text_col), lambda w: F.length(w) > 0))
-    bpe = F.regexp_count(F.col(text_col), F.lit(_BPE_ISH_RE))
-    return df.withColumns(
-        {
-            "n_tokens_ws": ws.cast("long"),
-            "n_tokens_bpe": bpe.cast("long"),
-            "avg_token_len": F.when(
-                ws > 0,
-                (F.length(F.regexp_replace(text_col, r"\s+", "")) / ws)
-            ).otherwise(F.lit(0.0)),
-        }
-    )
 
 
 def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -9,10 +9,8 @@ signals.py note); this module *proves* it for any concrete run:
   each (turn_idx, text) pair folded order-independently per conv via
   bit_xor, PLUS a strict order-sensitive digest from a sorted
   collect_list. Any dropped, duplicated, reordered, or mutated turn
-  changes the digest.
-- ``verify_text_equality``: compares input vs output projections and
-  returns the offending conversations (empty = invariant holds). Runs as
-  two aggregations + one join — no text ever moves to the driver.
+  changes the digest. Equal digest tables for a run's input and output
+  prove the invariant for that run.
 """
 
 from __future__ import annotations
@@ -58,38 +56,3 @@ def text_checksums(
             256,
         ).alias("seq_digest"),
     )
-
-
-def verify_text_equality(
-    input_df: DataFrame,
-    output_df: DataFrame,
-    series_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-) -> DataFrame:
-    """Conversations whose text stream differs between input and output
-    (empty DataFrame ⇔ invariant holds). Full-outer join of the two
-    digest tables; NULL side = conversation appeared/disappeared."""
-    a = text_checksums(input_df, series_col, order_col, text_col).alias("a")
-    b = text_checksums(output_df, series_col, order_col, text_col).alias("b")
-    joined = a.join(b, on=series_col, how="full_outer")
-    return joined.filter(
-        ~(
-            F.col("a.n_turns").eqNullSafe(F.col("b.n_turns"))
-            & F.col("a.xor_digest").eqNullSafe(F.col("b.xor_digest"))
-            & F.col("a.seq_digest").eqNullSafe(F.col("b.seq_digest"))
-        )
-    ).select(
-        series_col,
-        F.col("a.n_turns").alias("n_turns_in"),
-        F.col("b.n_turns").alias("n_turns_out"),
-        (~F.col("a.seq_digest").eqNullSafe(F.col("b.seq_digest"))).alias("order_or_text_diff"),
-    )
-
-
-def assert_text_equality(input_df: DataFrame, output_df: DataFrame, **kw) -> None:
-    """Raise AssertionError with sample offenders if the invariant fails."""
-    bad = verify_text_equality(input_df, output_df, **kw)
-    sample = bad.take(5)
-    if sample:
-        raise AssertionError(f"per-turn text equality violated: {sample}")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rove_spark.config import KNOWN_CHECKS, Pipeline, PipelineStep, load_pipelines
-from rove_spark.model import Flag, flag_col
+from rove_spark.model import flag_col
 from rove_spark.operators import checks as C
 from rove_spark.operators import spatial as SP
 # build_tiers stays importable from here: perfbench/layers.py patches it
@@ -726,11 +726,3 @@ def melt_flags(
         F.stack(F.lit(len(check_names)), *pairs).alias("test", "flag"),
     )
     return stacked
-
-
-def flag_name_column(flag_int_col: str = "flag"):
-    """int flag → symbolic name (API edge)."""
-    mapping = F.create_map(
-        *[x for f in Flag for x in (F.lit(int(f)), F.lit(f.name))]
-    )
-    return mapping[F.col(flag_int_col)]

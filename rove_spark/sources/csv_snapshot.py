@@ -8,9 +8,10 @@ passed pre-QC; ``mod.rs:59``), synthesizes the series identifier as
 timestamp (single time slice only).
 
 Spark-first: ``spark.read.csv`` with an explicit schema; the provider/dqc
-filter is a plain predicate Catalyst pushes into the scan; the path
-template + timestamp become a function argument. Reading a *range* of
-hours is the same call with a glob — something the reference cannot do.
+filter is a plain predicate Catalyst pushes into the scan; the caller
+passes the file path (``ts.strftime(template)``) and the timestamp.
+Reading a *range* of hours is the same call with a glob — something the
+reference cannot do.
 """
 
 from __future__ import annotations
@@ -23,13 +24,6 @@ from pyspark.sql import functions as F
 NETATMO_SCHEMA = (
     "lat double, lon double, elev double, value double, prid int, dqc int"
 )
-
-
-def csv_snapshot_path(template: str, ts: dt.datetime) -> str:
-    """Path template → concrete hourly file path, e.g.
-    ``{root}/%Y/%m/%d/obs_%Y%m%dT%HZ.csv`` (reference builds the path from
-    the timestamp the same way, ``mod.rs:30-38``)."""
-    return ts.strftime(template)
 
 
 def read_csv_snapshot(

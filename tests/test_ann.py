@@ -76,26 +76,6 @@ def test_deterministic(spark, vecs):
     assert a == b
 
 
-def test_persisted_index_matches_fresh(spark, vecs, tmp_path):
-    """Persisted inverted lists + centroids reproduce the on-the-fly IVF
-    result exactly, and the probed scan prunes list partitions (dynamic
-    partition pruning on centroid_id)."""
-    from rove_spark.operators.ann import ivf_topk, load_ivf_index, persist_ivf_index
-
-    path = str(tmp_path / "ivf")
-    persist_ivf_index(vecs, path, n_centroids=8)
-    centroids, assigned = load_ivf_index(spark, path)
-    q = _queries(spark, vecs, n=5)
-    fresh = sorted(map(tuple, ivf_topk(vecs, q, k=10, n_centroids=8, n_probe=4).collect()))
-    loaded_df = ivf_topk(
-        vecs, q, k=10, n_centroids=8, n_probe=4, centroids=centroids, assigned=assigned
-    )
-    loaded = sorted(map(tuple, loaded_df.collect()))
-    assert fresh == loaded
-    plan = loaded_df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan or "PartitionFilters: [isnotnull(centroid_id" in plan
-
-
 def test_brute_force_guards_large_query_batches(spark):
     """round-2 verdict item 6: the |vectors|x|queries| crossJoin contract
     is enforced, with an explicit opt-out."""
@@ -113,142 +93,3 @@ def test_brute_force_guards_large_query_batches(spark):
     with pytest.raises(ValueError, match="max_queries"):
         brute_force_topk(vecs, qs, k=2, max_queries=10)
     assert brute_force_topk(vecs, qs, k=2, max_queries=100).count() == 80
-
-
-def test_append_to_ivf_index_full_probe_exact(spark, vecs, tmp_path):
-    """Incremental maintenance (round-5 verdict item 7): build on half
-    the corpus, append the other half to the persisted centroids — at
-    full probe the appended index must reproduce the fresh-on-everything
-    index EXACTLY (both are exact vs brute force regardless of where the
-    quantizer was trained)."""
-    from rove_spark.operators.ann import (
-        append_to_ivf_index,
-        ivf_topk,
-        load_ivf_index,
-        persist_ivf_index,
-    )
-
-    half_a = vecs.filter(F.col("vec_id") % 2 == 0)
-    half_b = vecs.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf_inc")
-    persist_ivf_index(half_a, path, n_centroids=8)
-    res = append_to_ivf_index(spark, path, half_b)
-    assert res["n_appended"] == half_b.count()
-    assert res["drift"] < 0.5  # same distribution, same corpus
-
-    centroids, assigned = load_ivf_index(spark, path)
-    assert assigned.count() == vecs.count()
-    q = _queries(spark, vecs, n=5)
-    appended = sorted(
-        map(tuple, ivf_topk(vecs, q, k=10, n_probe=8, centroids=centroids,
-                            assigned=assigned).collect())
-    )
-    fresh_path = str(tmp_path / "ivf_fresh")
-    persist_ivf_index(vecs, fresh_path, n_centroids=8)
-    fc, fa = load_ivf_index(spark, fresh_path)
-    fresh = sorted(
-        map(tuple, ivf_topk(vecs, q, k=10, n_probe=8, centroids=fc,
-                            assigned=fa).collect())
-    )
-    assert appended == fresh
-
-
-def test_append_drift_trigger(spark, vecs, tmp_path):
-    """A batch from a shifted distribution (orthogonal-ish noise) must
-    push the drift metric over the retrain threshold; a same-distribution
-    batch must not."""
-    from rove_spark.operators.ann import append_to_ivf_index, persist_ivf_index
-
-    path = str(tmp_path / "ivf_drift")
-    persist_ivf_index(vecs, path, n_centroids=8)
-
-    same = vecs.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    res_same = append_to_ivf_index(spark, path, same, drift_threshold=0.05)
-    assert not res_same["needs_retrain"], res_same
-
-    dim = len(vecs.first().embedding)
-    rng = np.random.default_rng(5)
-    rows = [(200000 + i, [float(x) for x in rng.normal(0, 1, dim)]) for i in range(50)]
-    shifted = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    res_shift = append_to_ivf_index(spark, path, shifted, drift_threshold=0.05)
-    assert res_shift["needs_retrain"], res_shift
-    assert res_shift["drift"] > res_same["drift"]
-
-    from rove_spark.operators.ann import _read_index_stats
-
-    stats = _read_index_stats(path)
-    assert len(stats["appends"]) == 2
-    assert stats["n_vectors"] == vecs.count() * 2 + 50
-
-
-def test_append_retry_and_replay_are_idempotent(spark, vecs, tmp_path):
-    """Crash/retry safety (round-6 review): a crash AFTER the lists
-    append but BEFORE the sidecar write must not duplicate the batch on
-    re-run (batch-partitioned dynamic overwrite rewrites the same
-    partitions); a replay of an already-recorded batch is a no-op that
-    returns the recorded result."""
-    from rove_spark.operators import ann
-    from rove_spark.operators.ann import (
-        append_to_ivf_index,
-        load_ivf_index,
-        persist_ivf_index,
-    )
-
-    half_a = vecs.filter(F.col("vec_id") % 2 == 0)
-    half_b = vecs.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf_retry")
-    persist_ivf_index(half_a, path, n_centroids=8)
-
-    class Boom(RuntimeError):
-        pass
-
-    orig = ann._write_index_stats
-    calls = {"n": 0}
-
-    def crashing(p, doc):
-        calls["n"] += 1
-        raise Boom("killed before sidecar write")
-
-    ann._write_index_stats = crashing
-    try:
-        with pytest.raises(Boom):
-            append_to_ivf_index(spark, path, half_b, batch_id="day-1")
-    finally:
-        ann._write_index_stats = orig
-
-    # data landed, sidecar didn't — retry must overwrite, not duplicate
-    res = append_to_ivf_index(spark, path, half_b, batch_id="day-1")
-    assert res["n_appended"] == half_b.count()
-    _c, assigned = load_ivf_index(spark, path)
-    assert assigned.count() == vecs.count()  # no duplicates
-    assert assigned.select("vec_id").distinct().count() == vecs.count()
-
-    # replay of a recorded batch: no-op returning the recorded result
-    res2 = append_to_ivf_index(spark, path, half_b, batch_id="day-1")
-    assert res2 == res
-    assert load_ivf_index(spark, path)[1].count() == vecs.count()
-
-    # auto content digest: re-appending identical content without an id
-    # is also a no-op (digest collides on purpose)
-    r3 = append_to_ivf_index(spark, path, half_b)
-    r4 = append_to_ivf_index(spark, path, half_b)
-    assert r3["batch_id"] == r4["batch_id"]
-    # the digest batch replaced itself, not duplicated
-    assert load_ivf_index(spark, path)[1].count() == vecs.count() + half_b.count()
-
-
-def test_append_reserved_base_id_and_empty_batch(spark, vecs, tmp_path):
-    """Review guards: batch_id='base' must be rejected (it would
-    dynamic-overwrite the initial index partitions), and an empty batch
-    must not read as full drift."""
-    from rove_spark.operators.ann import append_to_ivf_index, persist_ivf_index
-
-    path = str(tmp_path / "ivf_guards")
-    persist_ivf_index(vecs, path, n_centroids=8)
-    with pytest.raises(ValueError, match="reserved"):
-        append_to_ivf_index(spark, path, vecs, batch_id="base")
-    empty = vecs.filter(F.lit(False))
-    res = append_to_ivf_index(spark, path, empty, batch_id="empty-day")
-    assert res["n_appended"] == 0
-    assert res["drift"] == 0.0
-    assert not res["needs_retrain"]

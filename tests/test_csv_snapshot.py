@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from rove_spark.sources.csv_snapshot import csv_snapshot_path, read_csv_snapshot
+from rove_spark.sources.csv_snapshot import read_csv_snapshot
 
 CSV = """lat;lon;elev;value;prid;dqc
 59.9;10.7;90;12.5;3;0
@@ -33,14 +33,6 @@ def test_filter_pushed_to_scan(tmp_path, spark):
     df = read_csv_snapshot(spark, str(p), dt.datetime(2024, 1, 1))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan or "Filter" in plan
-
-
-def test_path_template():
-    ts = dt.datetime(2024, 3, 5, 7, 0)
-    assert (
-        csv_snapshot_path("/data/%Y/%m/%d/obs_%Y%m%dT%HZ.csv", ts)
-        == "/data/2024/03/05/obs_20240305T07Z.csv"
-    )
 
 
 def test_feeds_spatial_checks(tmp_path, spark):

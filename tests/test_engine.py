@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from rove_spark.config import parse_pipeline
 from rove_spark.model import Flag
 from rove_spark.operators.signals import derive_signals
-from rove_spark.plans.engine import Engine, flag_name_column, melt_flags
+from rove_spark.plans.engine import Engine, melt_flags
 from rove_spark.sources.synthetic import synthetic_transcripts
 
 PIPE = """
@@ -293,10 +293,9 @@ def test_melt_flags_long_format(spark):
     assert long.columns == ["identifier", "time", "test", "flag"]
     n_wide = out.count()
     assert long.count() == n_wide * len(names)
-    named = long.withColumn("flag_name", flag_name_column())
-    assert {r.flag_name for r in named.select("flag_name").distinct().collect()} <= set(
-        Flag.names()
-    )
+    # every melted value is a Flag (Flag() raises on an unknown int)
+    flag_names = {Flag(r.flag).name for r in long.select("flag").distinct().collect()}
+    assert flag_names <= set(Flag.names())
 
 
 def test_run_job_checkpoint_resume(tmp_path, spark):

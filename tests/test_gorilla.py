@@ -1,6 +1,7 @@
-"""Gorilla codec: round-trip properties (encode∘decode = id) on timestamps,
-float32 values (incl. NaN, infinities, denormals), gap masks; plus the
-Spark-level chunk table round-trip and compression-ratio sanity."""
+"""Gorilla codec: round-trip properties (encode∘decode = id) on timestamps
+and float32 values (incl. NaN, infinities, denormals); plus the
+Spark-level chunk table round-trip (gap masks, a single-point chunk, an
+all-absent chunk) and compression-ratio sanity."""
 
 from __future__ import annotations
 
@@ -131,43 +132,12 @@ def test_timestamps_pathological_int64_roundtrip():
         np.testing.assert_array_equal(gorilla.decode_timestamps(gorilla.encode_timestamps(a)), a)
 
 
-def test_chunk_roundtrip_with_gaps():
-    ts = np.arange(0, 600, 60, dtype=np.int64)
-    values = np.asarray([1.5, np.nan, 2.5, 3.5, np.nan, 4.0, 4.0, 5.0, 6.0, 7.25], np.float32)
-    present = ~np.isnan(values)
-    c = gorilla.encode_chunk_masked(ts, values, present)
-    ts2, v2, p2 = gorilla.decode_chunk_masked(c)
-    np.testing.assert_array_equal(ts2, ts)
-    np.testing.assert_array_equal(p2, present)
-    np.testing.assert_array_equal(v2[p2], values[present])
-    assert np.isnan(v2[~p2]).all()
-
-
-@given(st.data())
-@settings(max_examples=40, deadline=None)
-def test_chunk_roundtrip_property(data):
-    n = data.draw(st.integers(min_value=1, max_value=120))
-    ts = np.cumsum(
-        np.asarray(data.draw(st.lists(st.integers(1, 3600), min_size=n, max_size=n)))
-    ).astype(np.int64)
-    vals = np.asarray(
-        data.draw(st.lists(st.floats(width=32, allow_nan=False), min_size=n, max_size=n)),
-        dtype=np.float32,
-    )
-    present = np.asarray(data.draw(st.lists(st.booleans(), min_size=n, max_size=n)))
-    c = gorilla.encode_chunk_masked(ts, vals, present)
-    ts2, v2, p2 = gorilla.decode_chunk_masked(c)
-    np.testing.assert_array_equal(ts2, ts)
-    np.testing.assert_array_equal(p2, present)
-    np.testing.assert_array_equal(
-        v2[p2].view(np.uint32), vals[present].view(np.uint32)
-    )
-
-
 # ----------------------------------------------------------- spark level --
 
 
 def test_spark_compress_decompress_roundtrip(spark):
+    import datetime as dt
+
     from pyspark.sql import functions as F
 
     from rove_spark.functions.durations import parse_iso8601
@@ -177,6 +147,14 @@ def test_spark_compress_decompress_roundtrip(spark):
     df = synthetic_transcripts(spark, n_conv=12, avg_turns=80, gap_rate=0.15)
     df = df.withColumn("text_len", F.length("text").cast("float"))
     gridded = grid_fill(df, parse_iso8601("PT1M"), keep_cols=["text_len"])
+    # edge chunks: a single point, and a day with no present value
+    t0 = dt.datetime(2024, 1, 1)
+    edges = spark.createDataFrame(
+        [("edge-one", t0, 3.5, False)]
+        + [("edge-absent", t0 + dt.timedelta(minutes=m), None, True) for m in range(3)],
+        "conv_id string, ts timestamp, text_len float, is_gap boolean",
+    )
+    gridded = gridded.select("conv_id", "ts", "text_len", "is_gap").unionByName(edges)
     chunks = gorilla.compress_series(gridded, "text_len")
     back = gorilla.decompress_series(chunks, value_col="text_len")
 

@@ -5,8 +5,8 @@ and partition-pruned merge-on-read.
 north_rule surface: at 10^12 turns a tier rebuild from raw is
 unaffordable and the raw day may already be cold-tiered — late data must
 merge into built tiers touching only delta-sized data, and a replayed or
-crashed ingest must never double-count (the same discipline as
-append_to_ivf_index batches and the engine's tier writes)."""
+crashed ingest must never double-count (the same discipline as the
+engine's tier writes)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
-"""Multimodal plumbing: schemas, deterministic stub decode/features,
-frame sampling, resize geometry, integration with ANN."""
+"""Multimodal plumbing: synthetic assets, deterministic stub features,
+integration with ANN."""
 
 from __future__ import annotations
 
@@ -27,27 +27,6 @@ def test_schema_and_determinism(spark, assets):
     assert all(len(p) == 256 for p in a.values())
 
 
-def test_decode_stub(spark, assets):
-    out = multimodal.decode_assets(assets, out_pixels=64)
-    rows = out.collect()
-    assert len(rows) == 60
-    assert all(len(r.decoded) == 64 for r in rows)
-    # deterministic: same asset → same pixels
-    again = {r.asset_id: r.decoded for r in multimodal.decode_assets(assets, 64).collect()}
-    assert all(again[r.asset_id] == r.decoded for r in rows)
-
-
-def test_decode_real_boundary_is_explicit(spark, assets):
-    """decode_real never silently falls back to the stub: kinds whose
-    probed decoder is absent raise at execution (video: no ffmpeg here;
-    image always has a real path — PIL or the stdlib PNG decoder)."""
-    if multimodal.DECODER_CAPS["video"]:
-        pytest.skip("ffmpeg present — video decode is real here")
-    vids = assets.filter(F.col("kind") == "video")
-    with pytest.raises(Exception, match="real video decode unavailable"):
-        multimodal.decode_assets(vids, decode_real=True).collect()
-
-
 def test_features_unit_norm_and_ann_integration(spark, assets):
     feats = multimodal.extract_features(assets)
     rows = feats.collect()
@@ -61,241 +40,3 @@ def test_features_unit_norm_and_ann_integration(spark, assets):
     top = ann.brute_force_topk(vec_tbl, q, k=1, id_col="vec_id")
     got = {r.query_id: r.vec_id for r in top.collect()}
     assert all(qid == vid for qid, vid in got.items())  # self is nearest
-
-
-def test_frame_sampling(spark, assets):
-    frames = multimodal.sample_frames(assets, every_n=10)
-    joined = frames.groupBy("asset_id").agg(
-        F.count(F.lit(1)).alias("n_sampled"), F.max("n_frames").alias("nf")
-    )
-    for r in joined.collect():
-        assert r.n_sampled == (r.nf - 1) // 10 + 1
-
-
-def test_resize_geometry(spark, assets):
-    out = multimodal.resize_meta(assets, max_side=128)
-    for r in out.select("meta.width", "meta.height", "resize_w", "resize_h").collect():
-        assert max(r.resize_w, r.resize_h) <= 128
-        ar_in = r.width / r.height
-        ar_out = r.resize_w / r.resize_h
-        assert abs(ar_in - ar_out) / ar_in < 0.05  # aspect preserved (±ceil)
-
-
-# ------------------------- real-decode capability path (round 3) --------
-
-
-def _wav_bytes(samples, sample_rate=16000):
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return buf.getvalue()
-
-
-def test_real_audio_decode_end_to_end(spark):
-    """decode_real=True genuinely decodes PCM WAV (stdlib wave — no
-    external libs): samples round-trip exactly, padding zero-fills."""
-    from rove_spark.operators.multimodal import decode_assets
-
-    s1 = [100, -200, 300, -400, 500]
-    s2 = list(range(-50, 50))
-    df = spark.createDataFrame(
-        [("a1", "audio", bytearray(_wav_bytes(s1))),
-         ("a2", "audio", bytearray(_wav_bytes(s2)))],
-        "asset_id string, kind string, payload binary",
-    )
-    got = {r.asset_id: r.decoded for r in decode_assets(df, out_pixels=8, decode_real=True).collect()}
-    assert got["a1"] == s1 + [0, 0, 0]  # zero-padded to out_pixels
-    assert got["a2"] == s2[:8]
-
-
-def test_real_decode_missing_capability_raises(spark):
-    """Undecodable payloads raise — never a silent fallback to the stub:
-    a payload matching no stdlib decoder's magic fails loudly."""
-    import pytest
-
-    from rove_spark.operators.multimodal import DECODER_CAPS, decode_assets
-
-    if DECODER_CAPS["image"] != "stdlib":
-        pytest.skip("PIL present — it handles corrupt payloads differently")
-    df = spark.createDataFrame(
-        [("i1", "image", bytearray(b"\x89PNG fake not real"))],
-        "asset_id string, kind string, payload binary",
-    )
-    with pytest.raises(Exception, match="not a PNG|bad magic|unrecognized image payload"):
-        decode_assets(df, out_pixels=8, decode_real=True).collect()
-
-
-def _png_bytes(pixels, color_type, filters):
-    """Forward PNG encoder (test-side, independent reimplementation of the
-    spec's filter math) so the decoder's inverse is a genuine kill test.
-    ``pixels``: uint8[h, w, nch]; ``filters``: per-row filter types."""
-    import struct
-    import zlib as _zlib
-
-    import numpy as np
-
-    h, w, nch = pixels.shape
-    raw = bytearray()
-    prev = [0] * (w * nch)
-    for y, f in zip(range(h), filters):
-        line = [int(v) for v in pixels[y].reshape(-1)]
-        raw.append(f)
-        enc = []
-        for x in range(w * nch):
-            a = line[x - nch] if x >= nch else 0
-            b = prev[x]
-            c = prev[x - nch] if x >= nch else 0
-            if f == 0:
-                e = line[x]
-            elif f == 1:
-                e = line[x] - a
-            elif f == 2:
-                e = line[x] - b
-            elif f == 3:
-                e = line[x] - (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                e = line[x] - pred
-            enc.append(e % 256)
-        raw.extend(enc)
-        prev = line
-
-    def chunk(typ, payload):
-        return (
-            struct.pack(">I", len(payload))
-            + typ
-            + payload
-            + struct.pack(">I", _zlib.crc32(typ + payload))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", _zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decoder_roundtrip_all_filters_and_color_types():
-    """Pure-codec kill test: every scanline filter (0-4) and every
-    supported color type round-trips through the stdlib decoder against
-    an independent forward-filter encoder."""
-    import numpy as np
-
-    from rove_spark.operators.png import decode_png, decode_png_gray
-
-    rng = np.random.default_rng(7)
-    for ct, nch in [(0, 1), (2, 3), (4, 2), (6, 4)]:
-        px = rng.integers(0, 256, size=(7, 5, nch), dtype=np.uint8)
-        filters = [0, 1, 2, 3, 4, 2, 4]
-        data = _png_bytes(px, ct, filters)
-        got, w, h = decode_png(data)
-        assert (w, h) == (5, 7)
-        np.testing.assert_array_equal(got, px)
-    # luma fold matches PIL's ITU-R 601-2 integer transform
-    px = rng.integers(0, 256, size=(3, 4, 3), dtype=np.uint8)
-    gray = decode_png_gray(_png_bytes(px, 2, [4, 3, 1]))
-    exp = (
-        (px[:, :, 0].astype(np.int64) * 299
-         + px[:, :, 1].astype(np.int64) * 587
-         + px[:, :, 2].astype(np.int64) * 114) // 1000
-    ).reshape(-1)
-    np.testing.assert_array_equal(gray.astype(np.int64), exp)
-
-
-def test_real_image_decode_stdlib_png(spark):
-    """decode_real=True genuinely decodes PNG images via the stdlib
-    decoder (no PIL in this container): pixels round-trip exactly."""
-    import numpy as np
-
-    from rove_spark.operators.multimodal import decode_assets
-
-    px = np.arange(8, dtype=np.uint8).reshape(2, 4, 1)
-    data = _png_bytes(px, 0, [0, 2])
-    df = spark.createDataFrame(
-        [("i1", "image", bytearray(data))],
-        "asset_id string, kind string, payload binary",
-    )
-    got = decode_assets(df, out_pixels=8, decode_real=True).collect()[0].decoded
-    assert got == list(range(8))
-
-
-def test_real_image_decode_when_pil_present(spark):
-    """Exercised only where PIL exists (skip-marked in this container)."""
-    import pytest
-
-    PIL = pytest.importorskip("PIL.Image")
-    import io
-
-    from rove_spark.operators.multimodal import decode_assets
-
-    img = PIL.new("L", (4, 2))
-    img.putdata(list(range(8)))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    df = spark.createDataFrame(
-        [("i1", "image", bytearray(buf.getvalue()))],
-        "asset_id string, kind string, payload binary",
-    )
-    got = decode_assets(df, out_pixels=8, decode_real=True).collect()[0].decoded
-    assert got == list(range(8))
-
-
-def test_real_feature_extraction_audio(spark):
-    """decode_real feature path: unit-norm, deterministic, right shape."""
-    import numpy as np
-
-    from rove_spark.operators.multimodal import extract_features
-
-    df = spark.createDataFrame(
-        [("a1", "audio", bytearray(_wav_bytes(list(range(-512, 512)))))],
-        "asset_id string, kind string, payload binary",
-    )
-    out = extract_features(df, dim=16, decode_real=True).collect()
-    v = np.array(out[0].feature)
-    assert v.shape == (16,)
-    assert abs(np.linalg.norm(v) - 1.0) < 1e-5
-
-
-def test_real_decode_jpeg_payload(spark):
-    """Baseline-JPEG payloads decode for real through the stdlib router
-    (magic-based PNG/JPEG dispatch in _real_decode_bytes)."""
-    import numpy as np
-    import pytest
-
-    from rove_spark.operators.multimodal import DECODER_CAPS, decode_assets
-    from tests.test_jpeg import QT_ONES, _rand_coefs, encode_baseline
-
-    if DECODER_CAPS["image"] == "pil":
-        pytest.skip("PIL present — stdlib router not in play")
-    rng = np.random.default_rng(23)
-    payload = encode_baseline([_rand_coefs(rng, 1, 1)], [(1, 1)], 8, 8, QT_ONES)
-    df = spark.createDataFrame(
-        [("j1", "image", bytearray(payload)),
-         ("x1", "image", bytearray(b"GIF89a not supported"))],
-        "asset_id string, kind string, payload binary",
-    )
-    from rove_spark.operators.jpeg import decode_jpeg_gray
-
-    expected = [int(v) for v in decode_jpeg_gray(payload)[:8]]
-    got = {
-        r.asset_id: r.decoded
-        for r in decode_assets(
-            df.filter("asset_id = 'j1'"), out_pixels=8, decode_real=True
-        ).collect()
-    }
-    assert got["j1"] == expected
-    with pytest.raises(Exception, match="unrecognized image payload"):
-        decode_assets(
-            df.filter("asset_id = 'x1'"), out_pixels=8, decode_real=True
-        ).collect()

@@ -1,14 +1,12 @@
-"""Rolling stats + z-score check: hand-computed goldens, self-exclusion,
-and edge semantics."""
+"""Rolling z-score check: hand-computed goldens, self-exclusion, and edge
+semantics."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from rove_spark.model import Flag
-from rove_spark.operators.rolling import with_rolling_stats, zscore_check
+from rove_spark.operators.rolling import zscore_check
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -19,16 +17,6 @@ def _series(spark, values, series="s1"):
         for i, v in enumerate(values)
     ]
     return spark.createDataFrame(rows, "conv_id string, ts timestamp, value double")
-
-
-def test_rolling_stats_golden(spark):
-    df = _series(spark, [2.0, 4.0, 6.0, 8.0])
-    out = {r.ts.minute: r for r in with_rolling_stats(df, "value", window_rows=2).collect()}
-    assert out[0].roll_n == 1 and out[0].roll_mean == pytest.approx(2.0)
-    assert out[1].roll_mean == pytest.approx(3.0)  # (2+4)/2
-    assert out[2].roll_mean == pytest.approx(5.0)  # (4+6)/2
-    assert out[1].roll_var == pytest.approx(1.0)  # population var of {2,4}
-    assert out[3].roll_n == 2
 
 
 def test_zscore_flags_outlier(spark):

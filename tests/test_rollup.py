@@ -1,5 +1,5 @@
-"""Rollup tier tests: cascade exactness (1m→1h→1d ≡ direct-from-raw),
-rate derivation, and retention expiry. north_rule: "matching the
+"""Rollup tier tests: cascade exactness (1m→1h→1d ≡ direct-from-raw)
+and retention expiry. north_rule: "matching the
 reference's rolled-up points at each retention tier" — exactness is the
 contract, achieved by keeping additive stats in the integer domain."""
 
@@ -12,7 +12,6 @@ from rove_spark.operators.rollup import (
     build_tiers,
     retention_compact,
     rollup_from_raw,
-    with_rates,
 )
 from rove_spark.sources.synthetic import synthetic_transcripts
 from rove_spark.sources.tables import PartitionedTable
@@ -38,14 +37,6 @@ def test_tier_totals_consistent(spark):
     n_raw = df.count()
     for name, t in tiers.items():
         assert t.agg(F.sum("n_turns")).first()[0] == n_raw, name
-
-
-def test_rates_derived(spark):
-    df = synthetic_transcripts(spark, n_conv=10, avg_turns=30)
-    t = with_rates(build_tiers(df)["1d"])
-    row = t.first()
-    assert 0.0 <= row.tool_call_rate <= 1.0
-    assert row.text_len_avg > 0
 
 
 def test_flag_densities_rolled_up(spark):

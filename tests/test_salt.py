@@ -1,13 +1,17 @@
-"""Salting: hot-key detection, salted two-phase aggregation exactness,
-and group-size bounding for grouped-UDF stages."""
+"""Salting: salted two-phase aggregation exactness, and salt spread on
+the named hot keys only."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from rove_spark.operators.salt import chunk_key, detect_hot_keys, salted_agg, with_salt
+from rove_spark.operators.salt import salted_agg, with_salt
 from rove_spark.sources.synthetic import synthetic_transcripts
+
+
+# the two conversations ``_skewed`` makes hot (hot_frac=0.02 of 100)
+HOT = ["conv-0", "conv-1"]
 
 
 def _skewed(spark):
@@ -16,22 +20,15 @@ def _skewed(spark):
     )
 
 
-def test_detect_hot_keys(spark):
-    df = _skewed(spark)
-    hot = detect_hot_keys(df, "conv_id", threshold_rows=200)
-    assert set(hot) == {"conv-0", "conv-1"}
-
-
 def test_salted_agg_exact(spark):
     df = _skewed(spark).withColumn("text_len", F.length("text").cast("long"))
-    hot = detect_hot_keys(df, "conv_id", threshold_rows=200)
     aggs = {
         "n": ("text_len", "count"),
         "s": ("text_len", "sum"),
         "mn": ("text_len", "min"),
         "mx": ("text_len", "max"),
     }
-    salted = salted_agg(df, ["conv_id"], aggs, n_salt=8, hot_keys=hot, sub_key="turn_idx")
+    salted = salted_agg(df, ["conv_id"], aggs, n_salt=8, hot_keys=HOT, sub_key="turn_idx")
     direct = df.groupBy("conv_id").agg(
         F.count("text_len").alias("n"),
         F.sum("text_len").alias("s"),
@@ -45,25 +42,12 @@ def test_salted_agg_exact(spark):
 
 def test_salt_spreads_hot_only(spark):
     df = _skewed(spark)
-    hot = detect_hot_keys(df, "conv_id", threshold_rows=200)
-    salted = with_salt(df, "conv_id", n_salt=8, hot_keys=hot, sub_key="turn_idx")
+    salted = with_salt(df, "conv_id", n_salt=8, hot_keys=HOT, sub_key="turn_idx")
     per = salted.groupBy("conv_id").agg(F.countDistinct("salt").alias("k")).collect()
     got = {r.conv_id: r.k for r in per}
-    for h in hot:
+    for h in HOT:
         assert got[h] > 1, h
-    assert all(k == 1 for c, k in got.items() if c not in hot)
-
-
-def test_chunk_key_bounds_groups(spark):
-    df = _skewed(spark)
-    sizes = (
-        df.groupBy("conv_id", chunk_key("ts", "hour").alias("chunk"))
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    # one hour of PT1M turns ≤ 60 rows per group regardless of skew
-    assert sizes <= 60
+    assert all(k == 1 for c, k in got.items() if c not in HOT)
 
 
 def test_with_salt_rejects_missing_sub_key(spark):

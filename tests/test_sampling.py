@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rove_spark.operators.sampling import hash_sample, stratified_sample, weighted_mixture
+from rove_spark.operators.sampling import hash_sample, stratified_sample
 
 
 def test_stable_across_partitioning(spark):
@@ -43,18 +43,3 @@ def test_stratified(spark):
     assert counts["error"] == orig["error"]  # kept fully
     assert 0.05 < counts["purchase"] / orig["purchase"] < 0.16
     assert set(counts) == {"error", "purchase"}  # default 0 drops the rest
-
-
-def test_weighted_mixture(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    a = ev.filter(F.col("event_type") == "error")
-    b = ev.filter(F.col("event_type") == "purchase")
-    mix = weighted_mixture([(a, 1.0), (b, 0.5)], key_cols=["event_id"])
-    got = {r.mix_source: r.n for r in mix.groupBy("mix_source").agg(F.count("*").alias("n")).collect()}
-    assert got[0] == a.count()
-    assert 0.3 < got[1] / b.count() < 0.7
-    # deterministic across invocations
-    again = weighted_mixture([(a, 1.0), (b, 0.5)], key_cols=["event_id"])
-    assert sorted(r.event_id for r in mix.select("event_id").collect()) == sorted(
-        r.event_id for r in again.select("event_id").collect()
-    )

@@ -1,4 +1,4 @@
-"""Text analysis operators: token counts, language ID, quality score,
+"""Text analysis operators: language ID, quality score,
 fingerprints — exact expectations on hand-built docs + behavior on the
 driver's documents table."""
 
@@ -22,16 +22,6 @@ def docs(spark):
         (7, "word word word word word word word word"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_token_stats_exact(spark, docs):
-    out = {r.doc_id: r for r in textstats.with_token_stats(docs).collect()}
-    assert out[7].n_tokens_ws == 8
-    assert out[6].n_tokens_ws == 0 and out[6].n_tokens_bpe == 0
-    # "The ... dog and it is happy." → 13 words + trailing period token
-    assert out[1].n_tokens_ws == 13
-    assert out[1].n_tokens_bpe == 14  # 13 word tokens + "."
-    assert out[7].avg_token_len == pytest.approx(4.0)
 
 
 def test_langid(spark, docs):
@@ -98,7 +88,7 @@ def test_fingerprint_portable_codegen_path_equals_lambda_path(spark, docs):
 
 def test_on_documents_table(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = textstats.with_quality(textstats.with_langid(textstats.with_token_stats(docs)))
+    out = textstats.with_quality(textstats.with_langid(docs))
     row = out.agg(
         F.min("quality_score"), F.max("quality_score"), F.countDistinct("lang_pred")
     ).first()
@@ -107,7 +97,7 @@ def test_on_documents_table(spark):
 
 
 def test_plan_stays_jvm_side(spark, docs):
-    out = textstats.with_quality(textstats.with_langid(textstats.with_token_stats(docs)))
+    out = textstats.with_quality(textstats.with_langid(docs))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
 

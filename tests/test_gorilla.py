@@ -132,6 +132,50 @@ def test_timestamps_pathological_int64_roundtrip():
         np.testing.assert_array_equal(gorilla.decode_timestamps(gorilla.encode_timestamps(a)), a)
 
 
+def _masked_chunk(ts: np.ndarray, values: np.ndarray, present: np.ndarray) -> dict:
+    """One chunk row as ``compress_series`` lays it out: every slot's
+    timestamp, the XOR stream over present values only, and the
+    presence bitmap."""
+    present = np.asarray(present, dtype=bool)
+    return {
+        "n_points": len(ts),
+        "ts_codec": gorilla.encode_timestamps(ts),
+        "val_codec": gorilla.encode_values(np.asarray(values, np.float32)[present]),
+        "presence": np.packbits(present).tobytes(),
+    }
+
+
+def test_chunk_roundtrip_with_gaps():
+    ts = np.arange(0, 600, 60, dtype=np.int64)
+    values = np.asarray([1.5, np.nan, 2.5, 3.5, np.nan, 4.0, 4.0, 5.0, 6.0, 7.25], np.float32)
+    present = ~np.isnan(values)
+    ts2, v2, p2 = gorilla.decode_chunk_masked(_masked_chunk(ts, values, present))
+    np.testing.assert_array_equal(ts2, ts)
+    np.testing.assert_array_equal(p2, present)
+    np.testing.assert_array_equal(v2[p2], values[present])
+    assert np.isnan(v2[~p2]).all()
+
+
+@given(st.data())
+@settings(max_examples=40, deadline=None)
+def test_chunk_roundtrip_property(data):
+    n = data.draw(st.integers(min_value=1, max_value=120))
+    ts = np.cumsum(
+        np.asarray(data.draw(st.lists(st.integers(1, 3600), min_size=n, max_size=n)))
+    ).astype(np.int64)
+    vals = np.asarray(
+        data.draw(st.lists(st.floats(width=32, allow_nan=False), min_size=n, max_size=n)),
+        dtype=np.float32,
+    )
+    present = np.asarray(data.draw(st.lists(st.booleans(), min_size=n, max_size=n)))
+    ts2, v2, p2 = gorilla.decode_chunk_masked(_masked_chunk(ts, vals, present))
+    np.testing.assert_array_equal(ts2, ts)
+    np.testing.assert_array_equal(p2, present)
+    np.testing.assert_array_equal(
+        v2[p2].view(np.uint32), vals[present].view(np.uint32)
+    )
+
+
 # ----------------------------------------------------------- spark level --
 
 
